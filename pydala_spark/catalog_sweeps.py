@@ -690,11 +690,12 @@ class LakeSweepsMixin:
             if union_v is not None:
                 meta = union_v.select(
                     F.col("__lid").alias("id"), "__ds", "__doc")
+                verdicts = None
                 if partial_unchanged is not None:
                     # PARTIAL night (round 10; relocated verbatim to
                     # sweeps.semantic_cross_partial in round 13)
-                    sweep_mode = semantic_cross_partial(
-                        self.spark, self._po,
+                    verdicts = semantic_cross_partial(
+                        self.spark,
                         union_v=union_v, union_c=union_c, meta=meta,
                         target=target, sep=sep,
                         tagged_names=tagged_names,
@@ -705,20 +706,21 @@ class LakeSweepsMixin:
                         codebook_rows=int(cb.shape[0]),
                         threshold=threshold,
                     )
-                if sweep_mode == "full":
-                    verdict = semantic_dedup(
+                if verdicts is not None:
+                    sweep_mode = "partial"
+                else:
+                    verdicts = semantic_dedup(
                         union_v, id_col="__lid", vec_col="__vec",
                         threshold=threshold, score_col="__score",
                         cells=union_c,
+                    ).join(meta, "id").select(
+                        F.col("__ds").alias("dataset"),
+                        F.col("__doc").alias("id"),
+                        "cell", "kept",
                     )
-                    commit_verdicts(
-                        self.spark, self._po,
-                        verdict.join(meta, "id").select(
-                            F.col("__ds").alias("dataset"),
-                            F.col("__doc").alias("id"),
-                            "cell", "kept",
-                        ), target)
-                written = self.spark.read.parquet(target)
+                written = commit_verdicts(
+                    self.spark, self._po, verdicts, target,
+                    staged=sweep_mode == "partial")
                 update_report_entries(
                     results, written, target,
                     [F.count("*").alias("n"),
@@ -1108,8 +1110,7 @@ class LakeSweepsMixin:
                 "span_start", "span_end",
             )
             # partial: the carried rows were READ from the table this
-            # replaces — commit_verdicts stages + swaps (a crash
-            # between the two leaves a token mismatch → full rebuild)
+            # replaces — commit_verdicts stages + swaps
             written = commit_verdicts(
                 self.spark, self._po, out_rows, target,
                 staged=sweep_mode == "partial")
@@ -1143,8 +1144,7 @@ class LakeSweepsMixin:
             # blesses them; any crash in between reads as a mismatch
             # and the next night rebuilds full
             if swap_stage is not None:
-                self._po.delete(df_path)
-                self._po.rename(swap_stage, df_path)
+                self._po.commit_stage(df_path, swap_stage)
             write_token(self._po, df_path, new_token)
             write_token(self._po, contrib_path, new_token)
             results["_artifacts"] = new_token

@@ -1,9 +1,10 @@
 """Generation-pointer dataset layout: atomic-ish maintenance on object
 stores.
 
-``compact``/``recluster`` default to a staged rename swap — atomic on
-HDFS/local, but on object stores (s3a/gs/abfs) a directory "rename" is a
-full copy + delete: non-atomic, slow, and double-billed. The
+``compact``/``recluster`` default to a staged swap through
+``PathOps.commit_stage`` (journaled renames, crash-safe), but on object
+stores (s3a/gs/abfs) a directory "rename" is a full copy + delete: slow
+and double-billed. The
 generation swap (``swap="generation"``) avoids renames entirely:
 
 - data lives in ``base/gen-NNNNNN/``;
@@ -73,10 +74,10 @@ ROOT_GEN = ""
 
 
 def _gen_dirs(po: PathOps, local: str) -> list[str]:
-    """Real generation directories only (``gen-`` + digits) — staging
-    leftovers like ``gen-000001__repartition_tmp`` must never win a
-    corrupt-pointer fallback; numeric sort so unpadded names can't
-    misorder."""
+    """Real generation directories only (``gen-`` + digits) — a
+    ``PathOps.commit_stage`` stage or park (``gen-000001__compacting``,
+    ``gen-000001__parked``) must never win a corrupt-pointer fallback;
+    numeric sort so unpadded names can't misorder."""
     gens = [
         d for d in po.list_dir(local)
         if d.startswith(GEN_PREFIX) and d[len(GEN_PREFIX):].isdigit()

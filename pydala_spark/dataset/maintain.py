@@ -54,25 +54,52 @@ def bucketize(
     return table_name
 
 
-def _carry_over_sidecars(ops, old: str, local: str) -> None:
-    """After a staged rename swap, move NON-DATA sidecars (underscore/
-    dot-prefixed entries: ``_signatures/``, ANN codebook JSONs, config
-    sidecars + their .crc twins) from the superseded directory into the
-    new layout — a compact/recluster rewrites the SAME rows, so e.g.
-    signature content markers stay exactly valid (count + xor are
-    order-independent); dropping them with the old directory silently
-    destroyed the sidecars the ingest path paid to build (r8). Spark's
-    own write artifacts are excluded; anything the new layout already
-    has (its own ``_SUCCESS``/.crc) wins."""
-    for name in ops.list_dir(old):
-        if not (name.startswith("_") or name.startswith(".")):
-            continue
-        if name == "_SUCCESS" or name.startswith(("_temporary",
-                                                  "._SUCCESS")):
-            continue
-        target_entry = posixpath.join(local, name)
-        if not ops.exists(target_entry):
-            ops.rename(posixpath.join(old, name), target_entry)
+def _open_rewrite(spark: SparkSession, path: str, swap: str, suffix: str):
+    """Shared head of compact/recluster: resolve the live directory (a
+    generational dataset's active generation), finish any crashed commit
+    there, list its files and name the stage (the next generation, or a
+    ``suffix`` sibling for ``PathOps.commit_stage``)."""
+    from pydala_spark.dataset import generations
+    from pydala_spark.utils.pathops import PathOps, strip_scheme
+
+    if swap not in ("rename", "generation"):
+        raise ValueError("swap must be 'rename' or 'generation'")
+    configure_session(spark)
+    base = strip_scheme(path).rstrip("/")
+    local = strip_scheme(generations.resolve(spark, base)).rstrip("/")
+    ops = PathOps(spark, local)
+    ops.recover(local)
+    files = ops.data_files(local)
+    if not files:
+        raise FileNotFoundError(f"no data files under {path}")
+    if swap == "generation":
+        stage = posixpath.join(base, generations.next_generation(spark, base))
+    else:
+        stage = local + suffix
+    return base, local, ops, files, stage
+
+
+def _commit_rewrite(spark, swap, base, local, ops, stage, rels, keep_previous):
+    """Swap a staged compact/recluster output in; returns the live dir.
+    ``generation`` is ONE pointer PUT; source + input_files let it carry
+    forward any append that landed after the listing (generations.py
+    concurrency contract)."""
+    from pydala_spark.dataset import generations
+
+    if swap == "rename":
+        ops.commit_stage(local, stage)
+        final = local
+    else:
+        generations.commit(
+            spark, base, posixpath.basename(stage), keep_previous=keep_previous,
+            source=(generations.ROOT_GEN if local == base
+                    else posixpath.basename(local)),
+            input_files=rels,
+        )
+        final = stage
+    spark.catalog.refreshByPath(base)
+    spark.catalog.refreshByPath(final)
+    return final
 
 
 def compact(
@@ -96,27 +123,15 @@ def compact(
     salt sized from its own byte count, so big partitions split into
     ~``target_file_mb`` files while small ones still collapse to one.
 
-    Two swap strategies: ``swap="rename"`` stages into a sibling
-    directory and rename-swaps (atomic on HDFS/local; copy+delete on
-    object stores); ``swap="generation"`` writes the next
-    ``gen-NNNNNN/`` directory and commits a single pointer object —
-    the object-store-safe path (see ``dataset/generations.py``),
-    retaining ``keep_previous`` generations for in-flight readers.
+    ``swap="rename"`` stages into a sibling and commits it through
+    ``PathOps.commit_stage``; ``swap="generation"`` writes the next
+    ``gen-NNNNNN/`` and commits one pointer object — the object-store
+    path (``dataset/generations.py``), keeping ``keep_previous``
+    generations for in-flight readers.
     """
-    from pydala_spark.dataset import generations
     from pydala_spark.schema import infer_partitioning
-    from pydala_spark.utils.pathops import PathOps, strip_scheme
 
-    if swap not in ("rename", "generation"):
-        raise ValueError("swap must be 'rename' or 'generation'")
-    configure_session(spark)
-    base = strip_scheme(path).rstrip("/")
-    # a generational dataset's live files sit in the active generation
-    local = strip_scheme(generations.resolve(spark, base)).rstrip("/")
-    ops = PathOps(spark, local)
-    files = [(p, sz) for p, sz in ops.data_files(local)]
-    if not files:
-        raise FileNotFoundError(f"no data files under {path}")
+    base, local, ops, files, tmp = _open_rewrite(spark, path, swap, "__compacting")
     total_bytes = sum(sz for _, sz in files)
     target_bytes = target_file_mb * 1024 * 1024
     n_files = max(1, math.ceil(total_bytes / target_bytes))
@@ -136,11 +151,6 @@ def compact(
     # straggler AND it would be in the compacted output, duplicating
     # its rows. basePath keeps hive partition-column derivation intact.
     df = reader.option("basePath", local).load([p for p, _ in files])
-    if swap == "generation":
-        tmp = posixpath.join(base, generations.next_generation(spark, base))
-    else:
-        tmp = local + "__compacting"
-    ops.delete(tmp)
     if part_cols:
         # per-partition chunk counts from on-disk bytes (metadata already
         # in hand from the file listing — no extra Spark job)
@@ -191,32 +201,7 @@ def compact(
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.save(tmp)
-
-    if swap == "generation":
-        # THE swap is one pointer write (atomic small-object PUT);
-        # superseded generations pruned behind a retention window.
-        # source + input_files let commit carry forward any append that
-        # landed in the superseded generation after the listing above
-        # (generations.py concurrency contract).
-        generations.commit(
-            spark, base, posixpath.basename(tmp), keep_previous=keep_previous,
-            source=(generations.ROOT_GEN if local == base
-                    else posixpath.basename(local)),
-            input_files=rels,
-        )
-        final = tmp
-    else:
-        # staged rename swap (atomic on HDFS/local; copy+delete on object
-        # stores — use swap="generation" there, as the docstring says)
-        old = local + "__precompact"
-        ops.delete(old)
-        ops.rename(local, old)
-        ops.rename(tmp, local)
-        _carry_over_sidecars(ops, old, local)
-        ops.delete(old)
-        final = local
-    spark.catalog.refreshByPath(base)
-    spark.catalog.refreshByPath(final)
+    final = _commit_rewrite(spark, swap, base, local, ops, tmp, rels, keep_previous)
     return {
         "files_before": len(files),
         "files_after": len(ops.data_files(final)),
@@ -323,52 +308,22 @@ def recluster(
 ) -> dict:
     """In-place z-order rewrite of an existing (unpartitioned parquet)
     dataset: read, cluster on the Morton curve over ``cols``, stage, and
-    swap — ``swap="rename"`` (atomic on HDFS/local) or
+    swap — ``swap="rename"`` (``PathOps.commit_stage``) or
     ``swap="generation"`` (object-store-safe pointer commit, see
     :func:`compact`). The periodic-maintenance form of
     :func:`zorder_write` — a streaming sink accretes arrival-ordered
     files; reclustering restores multi-column min/max pruning without
     taking the dataset offline longer than the swap.
     """
-    from pydala_spark.dataset import generations
-    from pydala_spark.utils.pathops import PathOps, strip_scheme
-
-    if swap not in ("rename", "generation"):
-        raise ValueError("swap must be 'rename' or 'generation'")
-    configure_session(spark)
-    base = strip_scheme(path).rstrip("/")
-    local = strip_scheme(generations.resolve(spark, base)).rstrip("/")
-    ops = PathOps(spark, local)
-    files = ops.data_files(local)
-    if not files:
-        raise FileNotFoundError(f"no data files under {path}")
+    base, local, ops, files, tmp = _open_rewrite(spark, path, swap, "__reclustering")
     rels = [p[len(local):].lstrip("/") for p, _ in files]
     # explicit file list == input_files, so a concurrent append can only
     # be a straggler (carried forward by commit), never double-counted
     df = spark.read.option("basePath", local).parquet(*[p for p, _ in files])
-    if swap == "generation":
-        tmp = posixpath.join(base, generations.next_generation(spark, base))
-    else:
-        tmp = local + "__reclustering"
-    ops.delete(tmp)
     stats = zorder_write(
         spark, df, tmp, cols, n_files=n_files, bits=bits, compression=compression
     )
-    if swap == "generation":
-        generations.commit(
-            spark, base, posixpath.basename(tmp), keep_previous=keep_previous,
-            source=(generations.ROOT_GEN if local == base
-                    else posixpath.basename(local)),
-            input_files=rels,
-        )
-    else:
-        old = local + "__precluster"
-        ops.delete(old)
-        ops.rename(local, old)
-        ops.rename(tmp, local)
-        _carry_over_sidecars(ops, old, local)
-        ops.delete(old)
-    spark.catalog.refreshByPath(base)
+    _commit_rewrite(spark, swap, base, local, ops, tmp, rels, keep_previous)
     return stats
 
 

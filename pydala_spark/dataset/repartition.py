@@ -86,10 +86,11 @@ class Repartition:
         return df
 
     def run(self) -> None:
-        """Execute the rewrite. In-place rewrites go through a temp dir
-        (Spark cannot overwrite its own input), optionally preceded by a
-        TimeFly snapshot — mirroring the reference's guarded in-place
-        overwrite + auto pre-snapshot (repartition.py:148-194)."""
+        """Execute the rewrite. In-place rewrites stage into a temp dir
+        (Spark cannot overwrite its own input) swapped in by
+        ``PathOps.commit_stage``, optionally preceded by a TimeFly
+        snapshot — mirroring the reference's guarded in-place overwrite
+        + auto pre-snapshot (repartition.py:148-194)."""
         import posixpath
 
         from pydala_spark.dataset import generations
@@ -102,6 +103,8 @@ class Repartition:
             generations.resolve(self.spark, self.source_path)
         ).rstrip("/")
         ops = PathOps(self.spark, local)
+        if self.in_place:
+            ops.recover(local)
         if self.in_place and ops.is_dir(posixpath.join(local, "current")):
             # rewriting a TimeFly ROOT in place would delete current/ and
             # strand the snapshot layout — regardless of with_snapshot.
@@ -146,38 +149,16 @@ class Repartition:
             compression=self.compression,
             max_records_per_file=self.max_records_per_file,
         ).write(df)
-        # --- swap, crash-safely: nothing is DELETED until the rewrite is
-        # fully in place. Old data files are MOVED out — to the TimeFly
-        # snapshot archive when pointer manifests reference this current/
-        # (deleting them would permanently break every pointer snapshot;
-        # parked files stay resolvable and delete_snapshot's GC reclaims
-        # the unreferenced ones), else to a __prepartition side dir
-        # dropped only after the move-in succeeds. A crash at any point
-        # leaves every byte in local, the side dir, the archive, or tmp.
-        parent = posixpath.dirname(local)
-        snap_dir = posixpath.join(parent, "snapshot")
+        # pointer manifests referencing this current/ need the old files
+        # parked in the snapshot archive (delete_snapshot's GC reclaims)
+        snap_dir = posixpath.join(posixpath.dirname(local), "snapshot")
         has_manifests = posixpath.basename(local) == "current" and any(
             e.endswith(".manifest.json") for e in ops.list_dir(snap_dir)
         )
-        pre = local + "__prepartition"
-        ops.delete(pre)
-        park_root = posixpath.join(snap_dir, "archive") if has_manifests else pre
-        for p, _sz in ops.data_files(local):
-            rel = p[len(local):].lstrip("/")
-            ops.rename(p, posixpath.join(park_root, rel))
-        for entry in ops.list_dir(local):
-            # drop now-empty partition dirs and stale markers; every
-            # sidecar survives (snapshot/, _dataset.*, _pydala.toml, the
-            # generation provenance _inputs.json, ...)
-            if entry == "snapshot" or entry.startswith(("_", ".")):
-                continue
-            ops.delete(posixpath.join(local, entry))
-        for entry in ops.list_dir(tmp):
-            if entry.startswith(("_", ".")):  # tmp's own _SUCCESS marker
-                continue
-            ops.rename(posixpath.join(tmp, entry), posixpath.join(local, entry))
-        ops.delete(pre)
-        ops.delete(tmp)
+        ops.commit_stage(
+            local, tmp,
+            park=posixpath.join(snap_dir, "archive") if has_manifests else None,
+        )
         if self.distinct:
             # the rewrite REMOVED rows — any surviving signature sidecar
             # is stale (pure repartition/sort preserves content and keeps

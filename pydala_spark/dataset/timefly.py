@@ -311,6 +311,7 @@ class TimeFly:
         file-list manifest (no byte copies)."""
         if not self.ops.is_dir(self.current_path):
             self.create_current()
+        self.ops.recover(self.current_path)  # never snapshot a half-swap
         ts_str = self._fresh_stamp(ts)
         if self.snapshot_mode == "pointer":
             self._write_pointer_manifest(ts_str, self._current_rel_datafiles())

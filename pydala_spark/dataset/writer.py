@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -127,9 +126,9 @@ def _hive_escape_partition_value(val) -> str:
     :func:`~pydala_spark.utils.pathops.escape_partition_value` table —
     one copy, so the writer's upsert probes and the catalog's partition
     deletes can never drift) over Spark's value rendering (booleans
-    lowercase, timestamps space-separated). Mismatch here means upsert
-    probes directories that don't exist — guarded by an existence check
-    at the swap, but correct construction is what makes the swap work."""
+    lowercase, timestamps space-separated). A mismatch makes the upsert
+    swap refuse the staged data (``PathOps.commit_stage``'s stray-data
+    check); correct construction is what makes the swap work."""
     import datetime as _dt
 
     from pydala_spark.utils.pathops import escape_partition_value
@@ -333,9 +332,12 @@ class Writer:
         :227-240). Explicit ``end_time`` keeps half-open semantics.
         """
         from pydala_spark.dataset import generations
+        from pydala_spark.utils.pathops import PathOps
 
         # follow any generation advance since construction (one probe)
         self.path = generations.resolve(self.spark, self._orig_path)
+        # finish a crashed staged rewrite before landing anything (one probe)
+        PathOps(self.spark, self.path).recover(self.path)
         df = self._coerce(data)
         if transform_func is not None:
             df = transform_func(df, **(transform_func_kwargs or {}))
@@ -510,14 +512,13 @@ class Writer:
         hive dirs (every prior write dehived them), so every ``col=``
         directory found here belongs to the current write. Metadata-only
         cost: one listing + one rename per new file (object stores:
-        copy+delete, same caveat as compact). For
-        ``overwrite_partitions`` the touched partitions' bare dirs are
-        cleared BEFORE the move — Spark's dynamic overwrite only
-        replaced the hive-side dirs it could see, and merging into the
-        old bare files would resurrect replaced data. That clear+move
-        is NOT atomic (same caveat ``maintain.compact``'s swap and
-        PathOps.rename carry): a crash between the delete and the last
-        rename leaves the new files under ``col=value`` dirs that a
+        copy+delete). For ``overwrite_partitions`` the touched
+        partitions' bare dirs are cleared BEFORE the move — Spark's
+        dynamic overwrite only replaced the hive-side dirs it could see,
+        and merging into the old bare files would resurrect replaced
+        data. That clear+move is NOT journaled (unlike
+        ``PathOps.commit_stage``): a crash between the delete and the
+        last rename leaves the new files under ``col=value`` dirs that a
         flavor reader skips until the next write's dehive pass — rerun
         the write (idempotent: the moves resume) to heal. Appends into
         existing bare dirs are collision-free (Spark part names embed a
@@ -742,8 +743,8 @@ class Writer:
         partition count, not rows), prune the existing read (partition
         pruning keeps it a metadata operation), and name the directories
         to swap. The rewrite stages into a sibling directory and swaps
-        per-partition-directory via rename (atomic on HDFS/local;
-        copy+delete on object stores — same caveat as compact). An
+        the touched partition directories in through
+        ``PathOps.commit_stage`` (crash-safe; a retry converges). An
         unpartitioned dataset is read, merged and swapped whole.
 
         The upsert key should align with the partition key at scale: an
@@ -751,8 +752,6 @@ class Writer:
         partition disagree) is appended, not replaced — documented
         limitation of partition-pruned upserts.
         """
-        import posixpath
-
         from pydala_spark.dataset.reader import Dataset
         from pydala_spark.utils.pathops import PathOps, strip_scheme
 
@@ -800,7 +799,6 @@ class Writer:
         merged = survivors.unionByName(df.select(*survivors.columns))
 
         tmp = local + "__upserting"
-        ops.delete(tmp)
         writer = merged.write.mode("overwrite").format(self.format)
         if self.format in ("parquet", "orc"):
             writer = writer.option("compression", self.compression)
@@ -811,46 +809,7 @@ class Writer:
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.save(tmp)
-
-        if touched_dirs is not None:
-            for rel in touched_dirs:
-                src = posixpath.join(tmp, rel)
-                dst = posixpath.join(local, rel)
-                src_exists = ops.exists(src)
-                if not src_exists and not ops.exists(dst):
-                    # the constructed name matches NEITHER the staged
-                    # output nor the dataset: a partition-value
-                    # formatting mismatch. Raising (with tmp left on
-                    # disk) beats silently discarding the merge.
-                    raise RuntimeError(
-                        f"upsert: partition directory {rel!r} not found "
-                        f"in staging or dataset — partition-value "
-                        f"escaping/formatting mismatch; staged data "
-                        f"preserved at {tmp!r}"
-                    )
-                ops.delete(dst)
-                if src_exists:  # a touched partition can merge to empty
-                    ops.rename(src, dst)
-            # data FILES (not the empty parent dirs multi-level renames
-            # leave behind) still in staging mean Spark named a partition
-            # differently than we constructed it
-            leftover = [p for p, _sz in ops.data_files(tmp)]
-            if leftover:
-                # Spark staged partition dirs under names we did not
-                # construct — deleting tmp would discard merged rows
-                raise RuntimeError(
-                    f"upsert: staged partition dir(s) {leftover} do not "
-                    f"match any constructed touched-partition name; "
-                    f"staged data preserved at {tmp!r}"
-                )
-        else:
-            for p, _ in ops.data_files(local):
-                ops.delete(p)
-            for entry in ops.list_dir(tmp):
-                if entry == "_SUCCESS" or entry.endswith(".crc"):
-                    continue
-                ops.rename(posixpath.join(tmp, entry), posixpath.join(local, entry))
-        ops.delete(tmp)
+        ops.commit_stage(local, tmp, entries=touched_dirs)
         self.spark.catalog.refreshByPath(local)
 
     def _delta_diff(
@@ -900,17 +859,20 @@ class Writer:
         in directory names, not footers, so they are re-attached to the
         projection and the rewrite preserves the partition layout —
         otherwise a partitioned mixed-schema dataset would lose its
-        partition-column values permanently. Local-path implementation
-        (write-aside then swap); on object stores prefer table formats
-        with schema evolution.
+        partition-column values permanently. Writes aside, then swaps in
+        through ``PathOps.commit_stage`` (sidecars stay in place).
         """
         from pydala_spark import schema as schema_mod
         from pydala_spark.dataset.reader import Dataset
+        from pydala_spark.utils.pathops import PathOps, strip_scheme
 
         if self.format != "parquet":
             raise ValueError(
                 f"unify_schema supports parquet datasets only, not {self.format!r}"
             )
+        local = strip_scheme(self.path).rstrip("/")
+        ops = PathOps(self.spark, local)
+        ops.recover(local)
         unified, equal = schema_mod.unified_dataset_schema(self.path)
         if equal:
             return False
@@ -921,15 +883,13 @@ class Writer:
         footer_names = [f.name for f in unified]
         names = footer_names + [c for c in part_cols if c not in footer_names]
         df = df.select(*names)
-        tmp = self.path.rstrip("/") + "__unify_tmp"
+        tmp = local + "__unify_tmp"
         writer = df.write.mode("overwrite").option("compression", self.compression)
         if part_cols:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(tmp)
-        local, local_tmp = self.path.removeprefix("file:"), tmp.removeprefix("file:")
-        shutil.rmtree(local)
-        os.rename(local_tmp, local)
-        # drop cached file listings that still name the deleted parts
+        ops.commit_stage(local, tmp)
+        # drop cached file listings that still name the replaced parts
         self.spark.catalog.refreshByPath(self.path)
         return True
 

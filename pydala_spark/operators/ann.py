@@ -629,9 +629,11 @@ def pq_topk(
     vectors (pass ``codes_col`` over a pre-encoded dataset from
     :func:`pq_encode`); probes (with LUTs) broadcast; scoring is JVM-side
     ``aggregate`` over ``m`` array lookups inside codegen, so the scan is
-    CPU-light and 32× narrower than raw embeddings. No shuffle except
-    the final per-probe top-k, which AQE handles as a broadcast-side
-    window over candidate rows."""
+    CPU-light and 32× narrower than raw embeddings. Exchanges: the
+    final per-probe top-k window over candidate rows, plus — only when
+    the corpus scan is row-group-bound (one task) — one round-robin
+    ``spread_scan`` exchange of the encoded (id, codes) frame before
+    scoring; a healthy multi-task scan skips it."""
     m, n_codes, _ = books.shape
     if codes_col is None:
         c = pq_encode(corpus, books, id_col, vec_col).select(

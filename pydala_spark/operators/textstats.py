@@ -10,6 +10,8 @@ because its hex output is identical across engines (oracle-checkable).
 
 from __future__ import annotations
 
+import numbers
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -950,6 +952,13 @@ def lm_perplexity_score(
     # Lookup semantics are identical to the left join: keys unique,
     # missing or NULL key → NULL. Real LM tables exceed the gate and
     # keep the broadcast join.
+    # integer log-probs on BOTH sides of the gate: the map literal would
+    # silently truncate a float the broadcast side's bigint schema rejects
+    bad = [k for t in (vocab, bigrams or {}) for k, v in t.items()
+           if not isinstance(v, numbers.Integral)]
+    if bad:
+        raise TypeError("lm_perplexity_score: log-prob tables hold integer "
+                        f"millinats; got non-integer values for {bad[:3]}")
     small = 0 < len(vocab) <= _MAP_LITERAL_MAX and (
         bigrams is None or 0 < len(bigrams) <= _MAP_LITERAL_MAX
     )

@@ -111,8 +111,10 @@ def configure_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(key, value)
         except Exception:
             pass
+    # deprecated in Spark 4 (and rejected by this package when true);
+    # booleans are case-insensitive, so "False" is the default too
     esc = "spark.sql.parser.escapedStringLiterals"
-    if spark.conf.get(esc, "false") != "false":
+    if spark.conf.get(esc, "false").lower() != "false":
         raise RuntimeError(
             f"pydala_spark requires {esc}=false (the generated-SQL "
             "surface depends on parser unescaping — see session."

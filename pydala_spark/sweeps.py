@@ -238,6 +238,9 @@ class NightGate:
         completion_key: str, target: str, tagged_names: set,
     ):
         self._spark, self._po = spark, po
+        # finish a crashed staged swap of the report table before any
+        # fast path reads it (one probe)
+        po.recover(target)
         self.results, self.prior = results, prior
         self.key, self.target = completion_key, target
         self.tagged_names = tagged_names
@@ -382,7 +385,6 @@ def counts_intact(
 
 def semantic_cross_partial(
     spark,
-    po,
     *,
     union_v,
     union_c,
@@ -395,20 +397,20 @@ def semantic_cross_partial(
     partial_max_cell_fraction: float,
     codebook_rows: int,
     threshold: float,
-) -> str:
+):
     """The cross-dataset SemDeDup sweep's PARTIAL night (round 10;
     round-13 verbatim relocation out of ``catalog_sweeps.semantic_dedup``
     so the method body is mode dispatch + its unique joins). Recomputes
-    verdicts for TOUCHED cells only and swaps the merged verdict table
-    into ``target``; returns ``"partial"`` when the delta path
-    committed, ``"full"`` when a guard (touched-cell fraction, 2M-id
-    broadcast) refused — correctness never depends on taking the
+    verdicts for TOUCHED cells only and returns the merged verdict
+    table for the caller to stage + swap into ``target`` (it READS the
+    table it replaces), or ``None`` when a guard (touched-cell fraction,
+    2M-id broadcast) refused — correctness never depends on taking the
     partial path. See the call site for the artifact layout and the
     soundness contract (a SemDeDup verdict is a pure function of its
     cell's full membership)."""
     from pyspark.sql import functions as F
 
-    sweep_mode = "full"
+    merged = None
     # PARTIAL (round 10): recompute verdicts only for
     # TOUCHED cells — cells any changed doc lives in
     # now, plus cells changed/removed docs lived in
@@ -461,7 +463,6 @@ def semantic_cross_partial(
         # docs sharing touched cells must broadcast;
         # a huge delta gains nothing from partial
         if frac_ok and sub_ids.count() <= 2_000_000:
-            sweep_mode = "partial"
             cells_sub = sub_ids.localCheckpoint(
                 eager=True)
             # de-cliffed pair join (round 11, VERDICT
@@ -523,32 +524,15 @@ def semantic_cross_partial(
                 .select("dataset", "id", "cell",
                         "kept"))
             merged = prior_keep.unionByName(new_rows)
-            # the merged plan READS the table it
-            # replaces — stage + swap instead of an
-            # in-place overwrite (a crash between the
-            # two leaves no _verdicts, which the next
-            # run's is_dir probe turns into a full
-            # sweep, never a wrong one)
-            stage = target + "_stage"
-            merged.write.mode("overwrite").partitionBy(
-                "dataset").parquet(stage)
-            po.delete(target)
-            po.rename(stage, target)
     else:
         # nothing contributed a delta (e.g. a dataset
         # vanished along with its prior verdicts):
         # prior verdicts of unchanged datasets ARE the
         # answer
-        sweep_mode = "partial"
-        prior_keep = pv.where(
+        merged = pv.where(
             F.col("dataset").isin(partial_unchanged)
         ).select("dataset", "id", "cell", "kept")
-        stage = target + "_stage"
-        prior_keep.write.mode("overwrite").partitionBy(
-            "dataset").parquet(stage)
-        po.delete(target)
-        po.rename(stage, target)
-    return sweep_mode
+    return merged
 
 
 def span_partial_night(
@@ -929,15 +913,13 @@ def commit_verdicts(spark, po, frame, target: str, staged: bool = False):
     """Land a ``dataset=``-partitioned verdict/report table and return
     it re-read from disk (the writeback every lake-global sweep does).
     ``staged=True`` is the partial nights' crash rule: the merged plan
-    READS the table it replaces, so write ``<target>_stage`` then
-    delete + rename — a crash between the two leaves a missing/token-
-    mismatched table that the next night turns into a full rebuild,
-    never a wrong one."""
+    READS the table it replaces, so write ``<target>_stage`` and swap
+    it in through ``PathOps.commit_stage`` — a crash mid-swap is
+    finished forward by the next night's :class:`NightGate`."""
     if staged:
         stage = target + "_stage"
         frame.write.mode("overwrite").partitionBy("dataset").parquet(stage)
-        po.delete(target)
-        po.rename(stage, target)
+        po.commit_stage(target, stage)
     else:
         frame.write.mode("overwrite").partitionBy("dataset").parquet(target)
     return spark.read.parquet(target)

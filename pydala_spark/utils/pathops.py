@@ -15,13 +15,28 @@ Spark reads/writes. Costs scale with file counts, not bytes, except
 ``copy_tree`` (used by TimeFly's copy-on-snapshot backend), which is a
 real byte copy; SCALE.md records manifest-pointer snapshots as the fix.
 
-Caveat: object-store "rename" is copy+delete and not atomic; callers
-that rely on swap semantics (compact, Repartition) document this.
+Every in-place rewrite (upsert, compact/recluster, unify_schema,
+Repartition, the sweeps' staged tables) commits through ONE journaled
+step, :meth:`PathOps.commit_stage`; after a crash at any step,
+:meth:`PathOps.recover` (run by the next mutation of that target) leaves
+it reading as exactly its before or after state. That contract needs
+atomic renames (local, HDFS); object-store "rename" is copy+delete, so
+there ``swap="generation"`` (one pointer PUT) is the maintenance path.
 """
 
 from __future__ import annotations
 
+import json
+import posixpath
+
 from pyspark.sql import SparkSession
+
+COMMIT_JOURNAL = "_commit.json"  # hidden from Spark and data_files
+PARK_SUFFIX = "__parked"
+
+
+def _visible(names: list[str]) -> list[str]:
+    return [n for n in names if not n.startswith(("_", "."))]
 
 
 class PathOps:
@@ -156,6 +171,88 @@ class PathOps:
         """Download one file from this PathOps' filesystem to a LOCAL
         path (the GET half of the driver bridge)."""
         self.fs.copyToLocalFile(False, self._p(src), self._p(local_dst), True)
+
+    # -- the staged-rewrite commit -------------------------------------------------
+
+    def commit_stage(self, target: str, stage: str,
+                     entries: list[str] | None = None, park: str | None = None):
+        """Swap the complete staged output ``stage`` into ``target``:
+        ``entries`` (target-relative, e.g. touched ``col=value`` dirs;
+        ``None`` = every visible top-level entry of either side) are
+        parked under ``park`` (default: a ``__parked`` sibling dropped at
+        the end; a caller-named park, the TimeFly archive, is kept and
+        merged into) and replaced by their staged copies. Target sidecars
+        (``_``/``.`` entries) stay put. Stray staged data is refused
+        before the ``_commit.json`` journal is written; after it, any
+        crash is finished forward by :meth:`recover`. Cost: one journal
+        write + delete, two probes and up to two renames per entry."""
+        target = strip_scheme(target).rstrip("/")
+        stage = strip_scheme(stage).rstrip("/")
+        journal = posixpath.join(target, COMMIT_JOURNAL)
+        if self.exists(journal):
+            raise RuntimeError(f"an earlier commit into {target!r} is "
+                               "unfinished; recover() it before restaging")
+        if entries is None:
+            staged = set(_visible(self.list_dir(stage)))
+            entries = sorted(staged | set(_visible(self.list_dir(target))))
+        else:
+            staged = {rel for rel in entries
+                      if self.exists(posixpath.join(stage, rel))}
+            # a staged partition named differently than the caller's
+            # entries (value escaping/formatting) would be dropped
+            prefixes = tuple(posixpath.join(stage, rel) + "/" for rel in entries)
+            stray = [p for p, _ in self.data_files(stage)
+                     if not p.startswith(prefixes)]
+            if stray:
+                raise RuntimeError(
+                    f"commit into {target!r}: staged file(s) {stray[:3]} lie outside "
+                    f"the entries to replace; staged data preserved at {stage!r}")
+        record = {"stage": stage, "keep_park": park is not None,
+                  "park": strip_scheme(park or target + PARK_SUFFIX).rstrip("/"),
+                  "entries": [[rel, rel in staged] for rel in entries]}
+        self.write_text(journal, json.dumps(record))
+        self._replay(target, record)
+
+    def recover(self, target: str) -> None:
+        """Finish an interrupted :meth:`commit_stage` into ``target`` by
+        replaying its journal forward. Every mutation of a target calls
+        this before reading or staging (one probe when none is pending)."""
+        target = strip_scheme(target).rstrip("/")
+        journal = posixpath.join(target, COMMIT_JOURNAL)
+        if not self.exists(journal):
+            return
+        try:
+            record = json.loads(self.read_text(journal))
+        except ValueError:  # a torn journal write: no move ran after it
+            self.delete(journal)
+            return
+        self._replay(target, record)
+
+    def _replay(self, target: str, record: dict) -> None:
+        stage, park = record["stage"], record["park"]
+        park_move = self._merge_move if record["keep_park"] else self.rename
+        for rel, in_stage in record["entries"]:
+            src, dst = posixpath.join(stage, rel), posixpath.join(target, rel)
+            if in_stage and not self.exists(src):
+                continue  # already moved in
+            if self.exists(dst):
+                park_move(dst, posixpath.join(park, rel))
+            if in_stage:
+                self.rename(src, dst)
+        self.delete(stage)
+        if not record["keep_park"]:
+            self.delete(park)
+        self.delete(posixpath.join(target, COMMIT_JOURNAL))
+
+    def _merge_move(self, src: str, dst: str) -> None:
+        """``rename``, merging into ``dst`` when it is already a directory
+        (renaming onto one would nest ``src`` inside it)."""
+        if self.is_dir(dst) and self.is_dir(src):
+            for name in self.list_dir(src):
+                self._merge_move(posixpath.join(src, name), posixpath.join(dst, name))
+            self.delete(src)
+        else:
+            self.rename(src, dst)
 
     # -- small-text sidecar IO ---------------------------------------------------
 

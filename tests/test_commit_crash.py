@@ -1,0 +1,323 @@
+"""Crash injection for ``PathOps.commit_stage``, the one commit step of
+every in-place lake rewrite.
+
+A monkeypatched ``PathOps`` raises ``OSError`` at the k-th ``rename`` /
+``delete`` / ``write_text`` call. After each crash, ``recover`` must
+leave the target reading as exactly its before or its after state, and
+a retry must converge to the after state. The commit step itself is
+swept over every k on small hand-built trees (no Spark jobs); each lake
+op then takes one end-to-end crash inside its swap.
+"""
+
+import os
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from pydala_spark.dataset.maintain import compact, recluster
+from pydala_spark.dataset.reader import Dataset
+from pydala_spark.dataset.repartition import Repartition
+from pydala_spark.dataset.writer import Writer
+from pydala_spark.utils.pathops import PathOps
+
+MUTATIONS = ("rename", "delete", "write_text")
+
+
+@pytest.fixture
+def arm(monkeypatch):
+    """``arm(k, kinds)``: the k-th call (1-based) to one of ``kinds``
+    raises before touching anything; ``arm(None)`` disarms. Returns the
+    live counter, so ``arm(0)`` counts the steps of a clean run."""
+    state = {"k": None, "n": 0, "kinds": MUTATIONS}
+    for name in MUTATIONS:
+        def wrapped(self, *args, _name=name, _real=getattr(PathOps, name)):
+            if _name in state["kinds"]:
+                state["n"] += 1
+                if state["n"] == state["k"]:
+                    raise OSError(f"injected crash at {_name} #{state['n']}")
+            return _real(self, *args)
+
+        monkeypatch.setattr(PathOps, name, wrapped)
+
+    def _arm(k, kinds=MUTATIONS):
+        state.update(k=k, n=0, kinds=kinds)
+        return state
+
+    return _arm
+
+
+# -- the commit step, every crash point ----------------------------------------
+
+
+def _build(root, files):
+    for rel, text in files.items():
+        path = os.path.join(root, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as fh:
+            fh.write(text)
+
+
+def _tree(root):
+    """{relative path: content} of the visible files under ``root``."""
+    out = {}
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if not name.startswith(("_", ".")):
+                path = os.path.join(dirpath, name)
+                with open(path) as fh:
+                    out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+SIDECARS = {"_sidecar.json": "keep", "_signatures/minhash/p.parquet": "sig",
+            "_SUCCESS": ""}
+
+#: (target, stage, entries, after, archive-before, archive-after); the
+#: archive columns are None for the default (dropped) park
+SCENARIOS = {
+    # compact / unify / recluster: every visible entry replaced
+    "whole": (
+        {"a=1/x.parquet": "old1", "a=2/y.parquet": "old2"},
+        {"a=1/z.parquet": "new1", "a=3/w.parquet": "new3", "_SUCCESS": ""},
+        None,
+        {"a=1/z.parquet": "new1", "a=3/w.parquet": "new3"},
+        None, None,
+    ),
+    # partitioned upsert: named nested partitions, one merged to empty
+    "entries": (
+        {"a=1/b=1/x.parquet": "old11", "a=1/b=2/y.parquet": "old12",
+         "a=2/b=1/u.parquet": "old21"},
+        {"a=1/b=1/z.parquet": "new11", "a=3/b=1/w.parquet": "new31"},
+        ["a=1/b=1", "a=2/b=1", "a=3/b=1"],
+        {"a=1/b=1/z.parquet": "new11", "a=1/b=2/y.parquet": "old12",
+         "a=3/b=1/w.parquet": "new31"},
+        None, None,
+    ),
+    # in-place Repartition under pointer snapshots: old files are
+    # merged into an existing archive that is kept
+    "archive": (
+        {"a=1/x.parquet": "old1", "y.parquet": "old0"},
+        {"a=1/z.parquet": "new1"},
+        None,
+        {"a=1/z.parquet": "new1"},
+        {"a=1/v.parquet": "arch"},
+        {"a=1/v.parquet": "arch", "a=1/x.parquet": "old1",
+         "y.parquet": "old0"},
+    ),
+}
+
+
+def _fixture(root, name):
+    target_files, stage_files, _, _, archive_files, _ = SCENARIOS[name]
+    target, stage = os.path.join(root, "ds"), os.path.join(root, "ds__stage")
+    _build(target, {**target_files, **SIDECARS})
+    _build(stage, stage_files)
+    archive = None
+    if archive_files is not None:
+        archive = os.path.join(root, "snapshot", "archive")
+        _build(archive, archive_files)
+    return target, stage, archive
+
+
+def _check(ops, root, name):
+    """Recover, then the target must read as its before or after state
+    with its sidecars in place; returns which one."""
+    target_files, _, _, after, archive_before, archive_after = SCENARIOS[name]
+    target = os.path.join(root, "ds")
+    ops.recover(target)
+    got = _tree(target)
+    assert got in (target_files, after), got
+    state = "after" if got == after else "before"
+    for rel, text in SIDECARS.items():
+        with open(os.path.join(target, rel)) as fh:
+            assert fh.read() == text
+    assert not os.path.exists(os.path.join(target, "_commit.json"))
+    if archive_before is not None:
+        archive = _tree(os.path.join(root, "snapshot", "archive"))
+        assert archive == (archive_after if state == "after"
+                           else archive_before), archive
+    else:
+        assert not os.path.exists(target + "__parked")
+    return state
+
+
+@pytest.mark.parametrize("name", sorted(SCENARIOS))
+def test_commit_stage_every_crash_point(spark, tmp_path, arm, name):
+    entries = SCENARIOS[name][2]
+    template = str(tmp_path / "template")
+    _, _, archive = _fixture(template, name)
+    ops = PathOps(spark, template)
+
+    def commit(root):
+        park = archive and archive.replace(template, root)
+        ops.commit_stage(os.path.join(root, "ds"),
+                         os.path.join(root, "ds__stage"),
+                         entries=entries, park=park)
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(template, clean)
+    steps = arm(0)
+    commit(clean)
+    n_steps = steps["n"]
+    arm(None)
+    assert _check(ops, clean, name) == "after"
+    assert not os.path.exists(os.path.join(clean, "ds__stage"))
+    assert n_steps >= 5
+
+    seen = set()
+    for k in range(1, n_steps + 1):
+        # the crash, then a crash inside the first recovery's j-th step
+        # (j=0: no second crash) — replay must be idempotent either way
+        for j in range(0, n_steps - k + 2):
+            root = str(tmp_path / f"k{k}_j{j}")
+            shutil.copytree(template, root)
+            arm(k)
+            with pytest.raises(OSError, match="injected crash"):
+                commit(root)
+            if j:
+                arm(j)
+                try:
+                    ops.recover(os.path.join(root, "ds"))
+                except OSError:
+                    pass
+            arm(None)
+            state = _check(ops, root, name)
+            seen.add(state)
+            if state == "before":
+                # no journal was written: the retry restages and commits
+                shutil.rmtree(os.path.join(root, "ds__stage"),
+                              ignore_errors=True)
+                _build(os.path.join(root, "ds__stage"), SCENARIOS[name][1])
+                commit(root)
+                assert _check(ops, root, name) == "after"
+    assert seen == {"before", "after"}
+
+
+def test_commit_stage_refuses_stray_stage_data(spark, tmp_path):
+    # staged data outside the named entries (a partition-name mismatch)
+    # is refused before anything destructive runs, stage preserved
+    root = str(tmp_path)
+    _build(os.path.join(root, "ds"), {"a=1/x.parquet": "old"})
+    _build(os.path.join(root, "ds__stage"),
+           {"a=1/y.parquet": "new", "a=%31/z.parquet": "odd"})
+    ops = PathOps(spark, root)
+    with pytest.raises(RuntimeError, match="outside the entries"):
+        ops.commit_stage(os.path.join(root, "ds"),
+                         os.path.join(root, "ds__stage"), entries=["a=1"])
+    assert _tree(os.path.join(root, "ds")) == {"a=1/x.parquet": "old"}
+    assert len(_tree(os.path.join(root, "ds__stage"))) == 2
+
+
+# -- one end-to-end crash per lake op ------------------------------------------
+
+
+def _state(spark, path):
+    """(sorted rows, (count, xxhash64 checksum)) of the dataset."""
+    df = Dataset(spark, path).load()
+    cols = sorted(df.columns)
+    check = df.agg(
+        F.count("*"),
+        F.sum(F.xxhash64(*[F.col(c).cast("string") for c in cols])
+              .cast("decimal(38,0)")),
+    ).first()
+    return sorted(map(tuple, df.select(*cols).collect())), tuple(check)
+
+
+def _crash_recover_retry(spark, arm, path, op, before, after, rename_k):
+    arm(rename_k, ("rename",))
+    with pytest.raises(OSError, match="injected crash"):
+        op()
+    arm(None)
+    PathOps(spark, path).recover(path)
+    assert _state(spark, path) in (before, after)
+    op()
+    assert _state(spark, path) == after
+    leftovers = [e for e in os.listdir(os.path.dirname(path))
+                 if e.startswith(os.path.basename(path) + "__")]
+    assert leftovers == []
+
+
+def _upsert_case(spark, tmp_path, partitioned):
+    path = str(tmp_path / "ds")
+    base = spark.createDataFrame(
+        [(i, i % 3, "old") for i in range(12)], "id long, p long, v string")
+    Writer(spark, path, partition_by=["p"] if partitioned else None).write(base)
+    batch = spark.createDataFrame(
+        [(1, 1, "new"), (4, 1, "new"), (12, 0, "new")],
+        "id long, p long, v string")
+    expect = spark.createDataFrame(
+        [(i, i % 3, "new" if i in (1, 4, 12) else "old") for i in range(13)],
+        "id long, p long, v string")
+    expect_path = str(tmp_path / "expect")
+    expect.write.parquet(expect_path)
+    return path, _state(spark, path), _state(spark, expect_path), (
+        lambda: Writer(spark, path).write(
+            batch, mode="upsert", delta_subset=["id"]))
+
+
+@pytest.mark.parametrize("partitioned", [True, False])
+def test_upsert_crash_mid_swap_converges(spark, tmp_path, arm, partitioned):
+    # the first rename of the swap: a delete-then-rename swap has
+    # already deleted the touched partition (or every data file) there,
+    # and a retry that clears the stage loses the only copy of its rows
+    path, before, after, op = _upsert_case(spark, tmp_path, partitioned)
+    _crash_recover_retry(spark, arm, path, op, before, after, rename_k=1)
+
+
+def test_compact_crash_mid_swap_converges(spark, tmp_path, arm):
+    # the second rename: a whole-directory swap has moved the dataset
+    # aside and not yet moved the compacted copy in — no dataset at all
+    path = str(tmp_path / "ds")
+    spark.range(40).withColumn("p", F.col("id") % 2).repartition(8).write \
+        .partitionBy("p").parquet(path)
+    rows = _state(spark, path)
+    _crash_recover_retry(spark, arm, path, lambda: compact(spark, path),
+                         rows, rows, rename_k=2)
+    part = os.listdir(os.path.join(path, "p=0"))
+    assert len([f for f in part if not f.startswith(".")]) == 1  # compacted
+
+
+def test_recluster_crash_mid_swap_converges(spark, tmp_path, arm):
+    path = str(tmp_path / "ds")
+    spark.range(60).withColumn("a", F.col("id") % 7).repartition(6) \
+        .write.parquet(path)
+    rows = _state(spark, path)
+    _crash_recover_retry(
+        spark, arm, path,
+        lambda: recluster(spark, path, ["id", "a"], n_files=2),
+        rows, rows, rename_k=2)
+
+
+def test_unify_schema_crash_mid_swap_converges(spark, tmp_path, arm):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "ds"
+    out.mkdir()
+    pq.write_table(pa.table({"id": pa.array([1, 3], pa.int32())}),
+                   out / "a.parquet")
+    pq.write_table(pa.table({"id": pa.array([2], pa.int64()), "v": ["x"]}),
+                   out / "b.parquet")
+    path = str(out)
+    before = _state(spark, path)
+    _crash_recover_retry(
+        spark, arm, path, lambda: Writer(spark, path).unify_schema(),
+        before, before, rename_k=1)
+    schemas = {str(pq.read_schema(str(f))) for f in out.glob("*.parquet")}
+    assert len(schemas) == 1
+
+
+def test_repartition_in_place_crash_mid_swap_converges(spark, tmp_path, arm):
+    path = str(tmp_path / "ds")
+    spark.range(30).withColumn("g", F.col("id") % 3).repartition(5) \
+        .write.parquet(path)
+    rows = _state(spark, path)
+    _crash_recover_retry(
+        spark, arm, path,
+        lambda: Repartition(spark, path, partition_by=["g"], sort_by="id",
+                            with_snapshot=False).run(),
+        rows, rows, rename_k=1)
+    assert sorted(e for e in os.listdir(path) if not e.startswith(("_", "."))) \
+        == ["g=0", "g=1", "g=2"]

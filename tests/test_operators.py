@@ -1866,6 +1866,23 @@ def test_lm_perplexity_map_literal_equals_join(spark, monkeypatch):
     ) == uni_small
 
 
+def test_lm_perplexity_float_table_raises_on_both_sides(spark, monkeypatch):
+    # ADVICE r17: a float log-prob fails the same way whether the table
+    # inlines as a map literal or broadcasts as a relation (the literal
+    # side used to truncate it silently)
+    import pydala_spark.operators.textstats as ts
+
+    df = spark.createDataFrame([(1, "the cat")], ["doc_id", "text"])
+    for gate in (8192, 0):
+        monkeypatch.setattr(ts, "_MAP_LITERAL_MAX", gate)
+        with pytest.raises(TypeError, match="integer millinats"):
+            ts.lm_perplexity_score(df, {"the": -1000, "cat": -1500.7}, -9000)
+        with pytest.raises(TypeError, match="integer millinats"):
+            ts.lm_perplexity_score(
+                df, {"the": -1000}, -9000, bigrams={"the cat": -0.5}
+            )
+
+
 def test_winnowing_contamination(spark):
     # round 5: robust-hash decontamination — a contained benchmark
     # passage is caught through punctuation/casing edits AND on

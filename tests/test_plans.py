@@ -30,39 +30,31 @@ def test_q03_broadcasts_dimension(spark, sf_dir):
     assert "c_mktsegment" in pushed  # dimension filter reached its scan
 
 
-def test_q01_single_shuffle(spark, sf_dir):
+def test_q01_single_shuffle(spark, sf_dir, monkeypatch):
     # round 16: q01 spreads its scan when the input is row-group-bound
     # (the sf test tables are — guide §2.5), adding one round-robin
     # exchange BELOW the aggregation. The core shape stays partial agg
     # -> one exchange -> final agg, pinned with the spread forced off;
     # auto mode on the deficient test scan must add exactly the one
     # spread exchange and nothing else.
-    import os
-
-    os.environ["PYDALA_SPREAD"] = "off"
-    try:
-        df = QUERIES["q01_pricing_summary"](spark, sf_dir)
-        assert shuffle_count(df) == 1  # partial agg -> one exchange
-    finally:
-        os.environ.pop("PYDALA_SPREAD", None)
+    monkeypatch.setenv("PYDALA_SPREAD", "off")
+    df = QUERIES["q01_pricing_summary"](spark, sf_dir)
+    assert shuffle_count(df) == 1  # partial agg -> one exchange
+    monkeypatch.delenv("PYDALA_SPREAD")  # auto mode
     assert shuffle_count(QUERIES["q01_pricing_summary"](spark, sf_dir)) == 2
 
 
-def test_q_stats_summary_selective_spread(spark, sf_dir):
+def test_q_stats_summary_selective_spread(spark, sf_dir, monkeypatch):
     # round 16 second pass: only the sums branch (q01-shaped decimal
     # partial aggs) and the ppl branch (per-token bigram scoring) are
     # spread — pcts/thr/qcut ship their collect_list state through the
     # exchange whole, so spreading them measured 0.82x. Off keeps the
     # 5-exchange split shape; auto adds exactly the two spread
     # exchanges on the deficient test scans and nothing else.
-    import os
-
-    os.environ["PYDALA_SPREAD"] = "off"
-    try:
-        df = QUERIES["q_stats_summary"](spark, sf_dir)
-        assert shuffle_count(df) == 5
-    finally:
-        os.environ.pop("PYDALA_SPREAD", None)
+    monkeypatch.setenv("PYDALA_SPREAD", "off")
+    df = QUERIES["q_stats_summary"](spark, sf_dir)
+    assert shuffle_count(df) == 5
+    monkeypatch.delenv("PYDALA_SPREAD")  # auto mode
     assert shuffle_count(QUERIES["q_stats_summary"](spark, sf_dir)) == 7
 
 
@@ -285,7 +277,7 @@ def test_read_schema_columns_decimal(spark, sf_dir):
     ), cols
 
 
-def test_pq_topk_broadcasts_probes_one_shuffle(spark, sf_dir):
+def test_pq_topk_broadcasts_probes_one_shuffle(spark, sf_dir, monkeypatch):
     # r4: the PQ scan must stay a broadcast map-side job — probes (with
     # LUTs) broadcast against the corpus; the only exchange is the final
     # per-probe top-k window. Round 17: on a row-group-bound scan the
@@ -293,39 +285,31 @@ def test_pq_topk_broadcasts_probes_one_shuffle(spark, sf_dir):
     # vectors) is spread before the scoring NLJ — auto adds exactly that
     # one round-robin exchange; off keeps the historical single-shuffle
     # shape (and a healthy production scan makes auto a no-op).
-    import os
-
-    os.environ["PYDALA_SPREAD"] = "off"
-    try:
-        df = QUERIES["q_pq_topk"](spark, sf_dir)
-        assert has_broadcast_join(df)
-        assert shuffle_count(df) == 1
-        pushed = " ".join(pushed_filters(df))
-        assert "LessThan(vec_id,10)" in pushed  # probe filter reached its scan
-    finally:
-        os.environ.pop("PYDALA_SPREAD", None)
+    monkeypatch.setenv("PYDALA_SPREAD", "off")
+    df = QUERIES["q_pq_topk"](spark, sf_dir)
+    assert has_broadcast_join(df)
+    assert shuffle_count(df) == 1
+    pushed = " ".join(pushed_filters(df))
+    assert "LessThan(vec_id,10)" in pushed  # probe filter reached its scan
+    monkeypatch.delenv("PYDALA_SPREAD")  # auto mode
     df = QUERIES["q_pq_topk"](spark, sf_dir)
     assert has_broadcast_join(df)
     assert shuffle_count(df) == 2
 
 
-def test_semantic_dedup_no_cartesian(spark, sf_dir):
+def test_semantic_dedup_no_cartesian(spark, sf_dir, monkeypatch):
     # r4: the in-cell pair comparison must stay an equi-join on cell —
     # never a cross join over the corpus. Round 17: both families spread
     # the corpus side of a row-group-bound scan (the Arrow matmul +
     # in-cell self-join and the decon NLJ were single-task); auto adds
     # the round-robin spread exchanges (one per lineage replay of the
     # shared emb_s frame), off keeps the historical shape.
-    import os
-
-    os.environ["PYDALA_SPREAD"] = "off"
-    try:
-        df = QUERIES["q_semantic_dedup"](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert shuffle_count(df) <= 2
-    finally:
-        os.environ.pop("PYDALA_SPREAD", None)
+    monkeypatch.setenv("PYDALA_SPREAD", "off")
+    df = QUERIES["q_semantic_dedup"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert shuffle_count(df) <= 2
+    monkeypatch.delenv("PYDALA_SPREAD")  # auto mode
     df = QUERIES["q_semantic_dedup"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

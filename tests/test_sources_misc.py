@@ -355,3 +355,22 @@ def test_orc_roundtrip(spark, tmp_path):
     assert any("GreaterThan(id,10)" in f for f in filters), filters
     w.write(df.where("id < 3"), mode="append")
     assert Dataset(spark, out, format="orc").count() == 23
+
+
+def test_escaped_string_literals_check_is_case_insensitive(spark, monkeypatch):
+    # ADVICE r17: booleans are case-insensitive, so a session that pins
+    # "False" holds the required value; only a true setting is rejected.
+    # Dropping the key from the defaults simulates an external session
+    # that refuses the runtime override.
+    import pydala_spark.session as S
+
+    esc = "spark.sql.parser.escapedStringLiterals"
+    monkeypatch.delitem(S.RUNTIME_DEFAULTS, esc)
+    try:
+        spark.conf.set(esc, "False")
+        assert S.configure_session(spark) is spark
+        spark.conf.set(esc, "TRUE")
+        with pytest.raises(RuntimeError, match="escapedStringLiterals"):
+            S.configure_session(spark)
+    finally:
+        spark.conf.set(esc, "false")

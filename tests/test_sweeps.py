@@ -33,6 +33,9 @@ class FakePO:
     def is_dir(self, path: str) -> bool:
         return path in self.dirs
 
+    def recover(self, path: str) -> None:
+        pass  # no interrupted commit pending in the fake
+
 
 def test_load_prior_summary_rules():
     good = {"_config": {"k": 1}, "da": {"n_docs": 2}}
