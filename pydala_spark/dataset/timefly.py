@@ -40,7 +40,7 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 
 from pydala_spark.session import configure_session
-from pydala_spark.utils.pathops import PathOps, strip_scheme
+from pydala_spark.utils.pathops import COMMIT_JOURNAL, PathOps, strip_scheme
 
 TS_FMT = "%Y%m%d_%H%M%S"
 DATA_EXTS = (".parquet", ".csv", ".json", ".feather", ".arrow", ".ipc",
@@ -451,7 +451,9 @@ class TimeFly:
         src = self.snapshot_path(ts_key)
         if not self.ops.is_dir(src):
             raise FileNotFoundError(f"snapshot {ts_str} not found")
-        if self.ops.is_dir(self.current_path):
+        current = self.current_path
+        if self.ops.is_dir(current):
+            self.ops.recover(current)
             if self.snapshot_mode == "pointer":
                 # preserve the replaced current as a manifest whose files
                 # move to the archive — deleting current/ outright would
@@ -467,13 +469,20 @@ class TimeFly:
                     )
             else:
                 self.add_snapshot()
-            self.ops.delete(self.current_path)
-        # the copy restore replaces current/ WHOLESALE with the snapshot
-        # tree — if the snapshot carried `_signatures`, they describe
-        # exactly the restored content and stay; if not, none survive.
-        # Only the POINTER restore above needs explicit invalidation
-        # (it renames data files around a sidecar dir it never touches).
-        self.ops.copy_tree(src, self.current_path)
+        else:
+            self.ops.mkdirs(current)
+        # the copy restore replaces current/ WHOLESALE, sidecars included:
+        # if the snapshot carried `_signatures`, they describe exactly the
+        # restored content; if not, none survive (only the POINTER restore
+        # above needs explicit invalidation). Staged, then swapped in by
+        # one journaled commit: a crash leaves current/ before or after,
+        # and an unjournaled leftover stage (a partial copy) is dropped.
+        stage = posixpath.join(self.base_path, "_restoring")
+        self.ops.delete(stage)
+        self.ops.copy_tree(src, stage)
+        entries = set(self.ops.list_dir(stage) + self.ops.list_dir(current))
+        self.ops.commit_stage(current, stage,
+                              entries=sorted(entries - {COMMIT_JOURNAL}))
 
     def _invalidate_signatures(self) -> None:
         """A pointer restore replaces current/'s DATA files in place;

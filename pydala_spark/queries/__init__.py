@@ -2,8 +2,8 @@
 SURVEY.md §2, each with a DuckDB oracle SQL equivalent.
 
 ``QUERIES[name](spark, sf_dir) -> DataFrame`` and ``ORACLE[name] -> str``
-are consumed by ``/root/repo/__spark_entry__.py`` (the correctness-driver
-contract) and by ``bench.py``.
+are consumed by ``__spark_entry__.py`` (the query and oracle contract),
+``tools/check_oracle.py`` and ``tools/plan_report.py``.
 
 Cross-engine exactness strategy (so the driver's value-hash compare is
 bit-exact, not "close"):

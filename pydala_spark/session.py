@@ -50,12 +50,6 @@ RUNTIME_DEFAULTS: dict[str, str] = {
     # pinned by tests/test_timestamp_boundary.py::test_ntz_write_roundtrip.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # The generated-SQL surface (textstats._ASCII_STRIP_SQL \\uXXXX
-    # escapes, '\\s+' split patterns, _sql_str-escaped map literals)
-    # requires the default parser unescaping; a session that flips this
-    # would silently change every lang/token stat (ADVICE r16). Set it
-    # explicitly and fail fast below if an external session rejects it.
-    "spark.sql.parser.escapedStringLiterals": "false",
 }
 
 
@@ -111,16 +105,25 @@ def configure_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(key, value)
         except Exception:
             pass
-    # deprecated in Spark 4 (and rejected by this package when true);
-    # booleans are case-insensitive, so "False" is the default too
+    # The generated-SQL surface (textstats._ASCII_STRIP_SQL \\uXXXX
+    # escapes, '\\s+' split patterns, _sql_str-escaped map literals)
+    # requires the default parser unescaping; a session that flips this
+    # would silently change every lang/token stat (ADVICE r16). The conf
+    # is deprecated in Spark 4 and every set of it logs a WARN, so it is
+    # only set when a session pins it on (booleans are case-insensitive),
+    # and the session is refused if it rejects the override.
     esc = "spark.sql.parser.escapedStringLiterals"
     if spark.conf.get(esc, "false").lower() != "false":
-        raise RuntimeError(
-            f"pydala_spark requires {esc}=false (the generated-SQL "
-            "surface depends on parser unescaping — see session."
-            "RUNTIME_DEFAULTS); this session pins it true and rejects "
-            "the override"
-        )
+        try:
+            spark.conf.set(esc, "false")
+        except Exception:
+            pass
+        if spark.conf.get(esc, "false").lower() != "false":
+            raise RuntimeError(
+                f"pydala_spark requires {esc}=false (the generated-SQL "
+                "surface depends on parser unescaping); this session "
+                "pins it true and rejects the override"
+            )
     _ship_package(spark)
     return spark
 

@@ -177,12 +177,13 @@ class PathOps:
     def commit_stage(self, target: str, stage: str,
                      entries: list[str] | None = None, park: str | None = None):
         """Swap the complete staged output ``stage`` into ``target``:
-        ``entries`` (target-relative, e.g. touched ``col=value`` dirs;
-        ``None`` = every visible top-level entry of either side) are
-        parked under ``park`` (default: a ``__parked`` sibling dropped at
-        the end; a caller-named park, the TimeFly archive, is kept and
-        merged into) and replaced by their staged copies. Target sidecars
-        (``_``/``.`` entries) stay put. Stray staged data is refused
+        ``entries`` (target-relative dirs or files, e.g. touched
+        ``col=value`` dirs; ``None`` = every visible top-level entry of
+        either side) are parked under ``park`` (default: a ``__parked``
+        sibling dropped at the end; a caller-named park, the TimeFly
+        archive, is kept and merged into) and replaced by their staged
+        copies. Target sidecars (``_``/``.`` entries) stay put unless
+        ``entries`` names them. Stray staged data is refused
         before the ``_commit.json`` journal is written; after it, any
         crash is finished forward by :meth:`recover`. Cost: one journal
         write + delete, two probes and up to two renames per entry."""
@@ -202,7 +203,7 @@ class PathOps:
             # entries (value escaping/formatting) would be dropped
             prefixes = tuple(posixpath.join(stage, rel) + "/" for rel in entries)
             stray = [p for p, _ in self.data_files(stage)
-                     if not p.startswith(prefixes)]
+                     if not (p + "/").startswith(prefixes)]
             if stray:
                 raise RuntimeError(
                     f"commit into {target!r}: staged file(s) {stray[:3]} lie outside "

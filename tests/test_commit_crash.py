@@ -2,11 +2,12 @@
 every in-place lake rewrite.
 
 A monkeypatched ``PathOps`` raises ``OSError`` at the k-th ``rename`` /
-``delete`` / ``write_text`` call. After each crash, ``recover`` must
-leave the target reading as exactly its before or its after state, and
-a retry must converge to the after state. The commit step itself is
+``delete`` / ``write_text`` / ``copy_tree`` call. After each crash,
+``recover`` must leave the target reading as exactly its before or its
+after state, and a retry must converge to the after state. The commit step itself is
 swept over every k on small hand-built trees (no Spark jobs); each lake
-op then takes one end-to-end crash inside its swap.
+op then takes one end-to-end crash inside its swap, and the TimeFly copy
+restore one at every step.
 """
 
 import os
@@ -18,10 +19,11 @@ from pyspark.sql import functions as F
 from pydala_spark.dataset.maintain import compact, recluster
 from pydala_spark.dataset.reader import Dataset
 from pydala_spark.dataset.repartition import Repartition
+from pydala_spark.dataset.timefly import TimeFly
 from pydala_spark.dataset.writer import Writer
 from pydala_spark.utils.pathops import PathOps
 
-MUTATIONS = ("rename", "delete", "write_text")
+MUTATIONS = ("rename", "delete", "write_text", "copy_tree")
 
 
 @pytest.fixture
@@ -31,12 +33,13 @@ def arm(monkeypatch):
     live counter, so ``arm(0)`` counts the steps of a clean run."""
     state = {"k": None, "n": 0, "kinds": MUTATIONS}
     for name in MUTATIONS:
-        def wrapped(self, *args, _name=name, _real=getattr(PathOps, name)):
+        def wrapped(self, *args, _name=name, _real=getattr(PathOps, name),
+                    **kwargs):
             if _name in state["kinds"]:
                 state["n"] += 1
                 if state["n"] == state["k"]:
                     raise OSError(f"injected crash at {_name} #{state['n']}")
-            return _real(self, *args)
+            return _real(self, *args, **kwargs)
 
         monkeypatch.setattr(PathOps, name, wrapped)
 
@@ -321,3 +324,64 @@ def test_repartition_in_place_crash_mid_swap_converges(spark, tmp_path, arm):
         rows, rows, rename_k=1)
     assert sorted(e for e in os.listdir(path) if not e.startswith(("_", "."))) \
         == ["g=0", "g=1", "g=2"]
+
+
+def _files(root):
+    """{relative path: bytes} of every non-checksum file under ``root``."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".crc"):
+                path = os.path.join(dirpath, name)
+                with open(path, "rb") as fh:
+                    out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def test_timefly_copy_restore_every_crash_point(spark, tmp_path, arm):
+    # a delete-then-copy restore leaves current/ missing or partial when
+    # the copy fails; the staged restore leaves it before or after, and
+    # the snapshot's sidecar comes back with its data, never the stale one
+    template = str(tmp_path / "template")
+    spark.range(6).coalesce(1).write.parquet(template)
+    sig = os.path.join("_signatures", "minhash", "s.txt")
+    tf = TimeFly(spark, template)
+    tf.new()
+    tf.create_current()
+    _build(tf.current_path, {sig: "snap"})
+    snap = tf.add_snapshot()
+    expected = _files(tf.snapshot_path(snap))
+    Writer(spark, tf.current_path).write(spark.range(6, 9).coalesce(1))
+    _build(tf.current_path, {sig: "live"})
+    before = _files(tf.current_path)
+    assert expected[sig] == b"snap" and before[sig] == b"live"
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(template, clean)
+    steps = arm(0)
+    TimeFly(spark, clean).load_snapshot(snap)
+    n_steps = steps["n"]
+    arm(None)
+    assert _files(os.path.join(clean, "current")) == expected
+    assert n_steps >= 4
+
+    seen = set()
+    for k in range(1, n_steps + 1):
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(template, root)
+        tf = TimeFly(spark, root)
+        arm(k)
+        with pytest.raises(OSError, match="injected crash"):
+            tf.load_snapshot(snap)
+        arm(None)
+        tf.ops.recover(tf.current_path)
+        got = _files(tf.current_path)
+        assert got in (before, expected), (k, sorted(got))
+        seen.add("after" if got == expected else "before")
+        tf.load_snapshot(snap)
+        assert _files(tf.current_path) == expected, k
+        left = sorted(e for e in os.listdir(root) if not e.endswith(".crc"))
+        assert left == ["_dataset.json", "current", "snapshot"], k
+    assert seen == {"before", "after"}
+    assert _state(spark, tf.current_path) == _state(
+        spark, tf.snapshot_path(snap))

@@ -360,12 +360,16 @@ def test_orc_roundtrip(spark, tmp_path):
 def test_escaped_string_literals_check_is_case_insensitive(spark, monkeypatch):
     # ADVICE r17: booleans are case-insensitive, so a session that pins
     # "False" holds the required value; only a true setting is rejected.
-    # Dropping the key from the defaults simulates an external session
-    # that refuses the runtime override.
+    # A conf.set that ignores the key simulates an external session that
+    # refuses the runtime override.
     import pydala_spark.session as S
 
     esc = "spark.sql.parser.escapedStringLiterals"
-    monkeypatch.delitem(S.RUNTIME_DEFAULTS, esc)
+    real_set = spark.conf.set
+    monkeypatch.setattr(
+        spark.conf, "set",
+        lambda key, value: None if key == esc and value == "false"
+        else real_set(key, value))
     try:
         spark.conf.set(esc, "False")
         assert S.configure_session(spark) is spark
@@ -373,4 +377,31 @@ def test_escaped_string_literals_check_is_case_insensitive(spark, monkeypatch):
         with pytest.raises(RuntimeError, match="escapedStringLiterals"):
             S.configure_session(spark)
     finally:
-        spark.conf.set(esc, "false")
+        real_set(esc, "false")
+
+
+def test_escaped_string_literals_set_only_when_on(spark, monkeypatch):
+    # the conf is deprecated in Spark 4 and every set of it logs a WARN:
+    # a default session never sets it, a session that pins it on is
+    # switched back to false
+    import pydala_spark.session as S
+
+    esc = "spark.sql.parser.escapedStringLiterals"
+    assert esc not in S.RUNTIME_DEFAULTS  # the builder never sets it
+    real_set = spark.conf.set
+    calls = []
+
+    def recording_set(key, value):
+        calls.append(key)
+        real_set(key, value)
+
+    monkeypatch.setattr(spark.conf, "set", recording_set)
+    try:
+        S.configure_session(spark)
+        assert calls and esc not in calls
+        real_set(esc, "true")
+        S.configure_session(spark)
+        assert spark.conf.get(esc) == "false"
+        assert calls.count(esc) == 1
+    finally:
+        real_set(esc, "false")

@@ -17,7 +17,7 @@ combined counts at the end. Exit code is non-zero if ANY shard fails.
     python tools/partest.py -n 1      # serial (same as plain pytest)
 
 Pass-count invariant: ``sum(shard passes) == plain pytest passes`` —
-pinned by tests/test_bench.py::test_partest_shards_cover_every_file.
+pinned by tests/test_partest.py::test_partest_shards_cover_every_file.
 """
 
 from __future__ import annotations
