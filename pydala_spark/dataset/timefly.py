@@ -150,9 +150,6 @@ class TimeFly:
         index hides underscore-prefixed path components)."""
         return posixpath.join(self.base_path, "snapshot", "archive")
 
-    def _archive_file(self, rel: str) -> str:
-        return posixpath.join(self.archive_path, rel)
-
     def _read_snapshot_manifest(self, ts: str) -> dict | None:
         mpath = self.manifest_path(ts)
         if self.ops.exists(mpath):
@@ -227,11 +224,11 @@ class TimeFly:
 
     def create_current(self, **properties) -> None:
         """Move root-level data files into ``current/`` and record the
-        current metadata (reference timefly.py:150-217)."""
-        self.ops.mkdirs(self.current_path)
-        for src in self._datafiles_in_root():
-            rel = self._rel_to_base(src)
-            self.ops.rename(src, posixpath.join(self.current_path, rel))
+        current metadata (reference timefly.py:150-217). The move is one
+        journaled commit that the next mutation finishes after a crash."""
+        self.ops.recover(self.current_path)
+        self.ops.commit_stage(self.current_path, self.base_path, entries=[
+            self._rel_to_base(p) for p in self._datafiles_in_root()])
         # sweep spark markers and emptied partition-dir shells off the root
         for p, _ in self.ops.list_files(self.base_path):
             rel = self._rel_to_base(p)
@@ -284,16 +281,15 @@ class TimeFly:
     def _fresh_stamp(self, ts: dt.datetime | None) -> str:
         """Format ``ts`` (or now) as a stamp; auto stamps landing on a
         taken second bump forward instead of failing (back-to-back
-        restores), explicit stamps raise."""
-        auto = ts is None
+        restores), explicit stamps raise once registered (an unregistered
+        one is a crashed call's leftover, which the retry replaces)."""
         t = ts or dt.datetime.utcnow()
         ts_str = t.strftime(TS_FMT)
-        if self._stamp_taken(ts_str):
-            if not auto:
-                raise FileExistsError(f"snapshot {ts_str} already exists")
-            while self._stamp_taken(ts_str):
-                t += dt.timedelta(seconds=1)
-                ts_str = t.strftime(TS_FMT)
+        if ts is not None and ts_str in self.snapshots():
+            raise FileExistsError(f"snapshot {ts_str} already exists")
+        while ts is None and self._stamp_taken(ts_str):
+            t += dt.timedelta(seconds=1)
+            ts_str = t.strftime(TS_FMT)
         return ts_str
 
     def _register_snapshot(self, ts_str: str) -> None:
@@ -316,7 +312,13 @@ class TimeFly:
         if self.snapshot_mode == "pointer":
             self._write_pointer_manifest(ts_str, self._current_rel_datafiles())
         else:
-            self.ops.copy_tree(self.current_path, self.snapshot_path(ts_str))
+            # a partial copy never sits at snapshot/<ts>: copy into a
+            # hidden stage (dropping a crashed call's), then one rename
+            stage = posixpath.join(self.base_path, "snapshot", "_adding")
+            self.ops.delete(stage)
+            self.ops.copy_tree(self.current_path, stage)
+            self.ops.delete(self.snapshot_path(ts_str))  # unregistered leftover
+            self.ops.rename(stage, self.snapshot_path(ts_str))
         self._register_snapshot(ts_str)
         return ts_str
 
@@ -409,22 +411,18 @@ class TimeFly:
         if ts_str == "current":
             return
         ts_key = ts_str.removeprefix("snapshot/")
+        current = self.current_path
+        self.ops.recover(current)
         manifest = self._read_snapshot_manifest(ts_key)
         if manifest is not None:
-            # pointer restore — pure renames, no byte copies, nothing
-            # deleted: wanted files not in current/ come back from the
-            # archive; current files the manifest doesn't list are parked
-            # in the archive (where every other manifest can still find
-            # them). The replaced current is preserved first as a new
-            # manifest, which stays valid precisely because trimmed files
-            # are archived rather than deleted.
+            # pointer restore — one journaled commit, no byte copies:
+            # wanted files come in from the archive, unlisted ones are
+            # parked there. The replaced current is kept as a manifest
+            # first; every manifest stays readable at every step.
             want = set(manifest["files"])
             cur = set(self._current_rel_datafiles())
-            missing = [
-                r
-                for r in sorted(want - cur)
-                if not self.ops.exists(self._archive_file(r))
-            ]
+            missing = [r for r in sorted(want - cur) if not self.ops.exists(
+                posixpath.join(self.archive_path, r))]
             if missing:
                 raise FileNotFoundError(
                     f"pointer snapshot {ts_key} references {len(missing)} "
@@ -437,40 +435,25 @@ class TimeFly:
                 replaced = self._fresh_stamp(None)
                 self._write_pointer_manifest(replaced, sorted(cur))
                 self._register_snapshot(replaced)
-            for rel in sorted(want - cur):
-                self.ops.rename(
-                    self._archive_file(rel), posixpath.join(self.current_path, rel)
-                )
-            for rel in sorted(cur - want):
-                self.ops.rename(
-                    posixpath.join(self.current_path, rel), self._archive_file(rel)
-                )
-            if cur != want:  # content actually changed under the sidecars
-                self._invalidate_signatures()
+                self._invalidate_signatures()  # first, so a crash cannot skip it
+                self.ops.commit_stage(current, self.archive_path,
+                                      entries=sorted(want ^ cur),
+                                      park=self.archive_path)
             return
         src = self.snapshot_path(ts_key)
         if not self.ops.is_dir(src):
             raise FileNotFoundError(f"snapshot {ts_str} not found")
-        current = self.current_path
-        if self.ops.is_dir(current):
-            self.ops.recover(current)
-            if self.snapshot_mode == "pointer":
-                # preserve the replaced current as a manifest whose files
-                # move to the archive — deleting current/ outright would
-                # leave that manifest (and any older one) dangling
-                cur = sorted(self._current_rel_datafiles())
-                replaced = self._fresh_stamp(None)
-                self._write_pointer_manifest(replaced, cur)
-                self._register_snapshot(replaced)
-                for rel in cur:
-                    self.ops.rename(
-                        posixpath.join(self.current_path, rel),
-                        self._archive_file(rel),
-                    )
-            else:
-                self.add_snapshot()
-        else:
-            self.ops.mkdirs(current)
+        park = None
+        if self.ops.is_dir(current) and self.snapshot_mode == "pointer":
+            # keep the replaced current as a manifest whose files the
+            # commit below parks in the archive (deleting them would
+            # leave that manifest, and any older one, dangling)
+            replaced = self._fresh_stamp(None)
+            self._write_pointer_manifest(replaced, self._current_rel_datafiles())
+            self._register_snapshot(replaced)
+            park = self.archive_path
+        elif self.ops.is_dir(current):
+            self.add_snapshot()
         # the copy restore replaces current/ WHOLESALE, sidecars included:
         # if the snapshot carried `_signatures`, they describe exactly the
         # restored content; if not, none survive (only the POINTER restore
@@ -482,7 +465,8 @@ class TimeFly:
         self.ops.copy_tree(src, stage)
         entries = set(self.ops.list_dir(stage) + self.ops.list_dir(current))
         self.ops.commit_stage(current, stage,
-                              entries=sorted(entries - {COMMIT_JOURNAL}))
+                              entries=sorted(entries - {COMMIT_JOURNAL}),
+                              park=park)
 
     def _invalidate_signatures(self) -> None:
         """A pointer restore replaces current/'s DATA files in place;
@@ -568,7 +552,7 @@ class TimeFly:
                     if r in cur_set:
                         in_cur.append(posixpath.join(self.current_path, r))
                     elif r in arc_set:
-                        in_arc.append(self._archive_file(r))
+                        in_arc.append(posixpath.join(arc, r))
                     else:
                         missing.append(r)
                 if missing or not (in_cur or in_arc):

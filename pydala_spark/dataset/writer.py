@@ -677,13 +677,7 @@ class Writer:
         # materializes on the driver, so enforce the docstring's
         # sidecar/interchange-only caveat instead of trusting it — a
         # misuse at data scale should fail HERE, loudly, not as a
-        # driver OOM. The cap is rows (the cheap pre-collect signal);
-        # override via SPARK_GRAFT_FEATHER_BRIDGE_MAX_ROWS for hosts
-        # with known-larger driver headroom.
-        max_rows = int(
-            os.environ.get("SPARK_GRAFT_FEATHER_BRIDGE_MAX_ROWS", "")
-            or FEATHER_BRIDGE_MAX_ROWS
-        )
+        # driver OOM. The cap is rows (the cheap pre-collect signal).
         # A plain count() is the scale-safe probe here, measured against
         # the two alternatives: count prunes every unused projection
         # (a wide sha2 column costs 0.21 s to count vs 0.39 s through a
@@ -695,10 +689,10 @@ class Writer:
         # that falls over at misuse scale; persist() before counting
         # forces full column materialization that count alone avoids.
         n_rows = df.count()
-        if n_rows > max_rows:
+        if n_rows > FEATHER_BRIDGE_MAX_ROWS:
             raise ValueError(
                 f"single-file feather write of {n_rows} rows exceeds the "
-                f"driver-bridge cap ({max_rows}); this path is for sidecar/"
+                f"driver-bridge cap ({FEATHER_BRIDGE_MAX_ROWS}); this path is for sidecar/"
                 "interchange files only — write to a DIRECTORY target for "
                 "the distributed feather dataset form "
                 "(write_feather_dataset), or use parquet"

@@ -209,8 +209,7 @@ def spread_scan(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     table pays the probe once per session, not once per query build.
 
     ``PYDALA_SPREAD=off`` disables spreading (measurement hook for
-    A/B-ing the exchange itself); ``force`` skips the probe and always
-    repartitions (the historical round-3 ``_spread`` behavior).
+    A/B-ing the exchange itself).
 
     ``probe`` (round 17): probe THAT frame's partition count instead of
     ``df``'s — for spreading a frame derived from a base scan by narrow
@@ -219,24 +218,22 @@ def spread_scan(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     one planning pass per session; probing the derived frame would
     re-plan on every query build.
     """
-    mode = os.environ.get("PYDALA_SPREAD", "auto")
-    if mode == "off":
+    if os.environ.get("PYDALA_SPREAD", "auto") == "off":
         return df
     want = df.sparkSession.sparkContext.defaultParallelism
-    if mode != "force":
-        src = probe if probe is not None else df
-        parts = getattr(src, "_pydala_scan_parts", None)
-        if parts is None:
-            try:
-                parts = src.rdd.getNumPartitions()
-            except Exception:
-                parts = None  # Connect sessions: no RDD handle; spread
-            try:
-                src._pydala_scan_parts = parts
-            except Exception:
-                pass
-        if parts is not None and parts >= want:
-            return df
+    src = probe if probe is not None else df
+    parts = getattr(src, "_pydala_scan_parts", None)
+    if parts is None:
+        try:
+            parts = src.rdd.getNumPartitions()
+        except Exception:
+            parts = None  # Connect sessions: no RDD handle; spread
+        try:
+            src._pydala_scan_parts = parts
+        except Exception:
+            pass
+    if parts is not None and parts >= want:
+        return df
     return df.repartition(want)
 
 

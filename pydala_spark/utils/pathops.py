@@ -1,27 +1,30 @@
 """Filesystem-agnostic path operations through Hadoop's FileSystem API.
 
-The maintenance/metadata layer (Writer probes, compact's staged swap,
-TimeFly snapshots, Repartition's in-place rewrite) needs exists/list/
-rename/copy/delete plus small-text sidecar IO. Round 1 did these with
-``os``/``shutil``, hard-coupling them to local POSIX paths; at the 100 TB
-target the data lives behind s3a://, gs://, abfs://, ... Routing the same
-operations through ``FileSystem.get`` (reached via ``spark._jvm``) makes
-them work against any scheme the Spark conf can resolve — the reference
-gets the same property from fsspec (src/pydala/filesystem/fs.py:7-139).
-
-These are driver-side METADATA operations (file moves, sidecar JSON,
-directory listings), not data movement — the data path stays distributed
-Spark reads/writes. Costs scale with file counts, not bytes, except
-``copy_tree`` (used by TimeFly's copy-on-snapshot backend), which is a
-real byte copy; SCALE.md records manifest-pointer snapshots as the fix.
+The maintenance/metadata layer needs exists/list/rename/copy/delete plus
+small-text sidecar IO on any scheme the Spark conf resolves (s3a://,
+gs://, abfs://, ...), so they go through ``FileSystem.get`` via
+``spark._jvm`` — the reference gets the same from fsspec
+(src/pydala/filesystem/fs.py:7-139). They are driver-side METADATA
+operations: cost scales with file counts, not bytes, except
+``copy_tree`` (TimeFly's copy-on-snapshot backend), a real byte copy.
 
 Every in-place rewrite (upsert, compact/recluster, unify_schema,
-Repartition, the sweeps' staged tables) commits through ONE journaled
-step, :meth:`PathOps.commit_stage`; after a crash at any step,
-:meth:`PathOps.recover` (run by the next mutation of that target) leaves
-it reading as exactly its before or after state. That contract needs
-atomic renames (local, HDFS); object-store "rename" is copy+delete, so
-there ``swap="generation"`` (one pointer PUT) is the maintenance path.
+Repartition, the sweeps' staged tables) and every TimeFly move into or
+out of ``current/`` (copy and pointer restore, ``create_current``)
+commits through ONE journaled step, :meth:`PathOps.commit_stage`; after
+a crash at any step, :meth:`PathOps.recover` (run by the next mutation
+of that target) leaves it reading as exactly its before or after state.
+That needs atomic renames (local, HDFS). Off the step, and why:
+
+- ``swap="generation"``: on object stores rename is copy+delete, so it
+  commits one pointer PUT instead.
+- The distributed feather commit: ``write_feather_dataset`` promises a
+  rollback to the old data, which a forward-only replay cannot give.
+- The directory-flavor dehive: its own repair pass heals a stranded
+  layout on the next write.
+- ``normalize_filenames`` and ``Datalake.remove_dataset``'s sidecar
+  rename: one atomic rename per file, so a crash leaves valid data and
+  a rerun converges.
 """
 
 from __future__ import annotations
@@ -37,6 +40,11 @@ PARK_SUFFIX = "__parked"
 
 def _visible(names: list[str]) -> list[str]:
     return [n for n in names if not n.startswith(("_", "."))]
+
+
+def _survives(target: str, stage: str, park: str) -> bool:
+    """Whether a commit's stage is a source kept past it."""
+    return stage == park or target.startswith(stage + "/")
 
 
 class PathOps:
@@ -82,8 +90,6 @@ class PathOps:
     def data_files(self, path: str) -> list[tuple[str, int]]:
         """Like :meth:`list_files`, skipping sidecars/markers (leading
         ``_`` or ``.`` in any path component under ``path``)."""
-        import posixpath
-
         base = strip_scheme(path).rstrip("/")
         # listings come back QUALIFIED (absolute, scheme-resolved); a
         # relative ``path`` (or a scheme-less one against a non-local
@@ -183,12 +189,18 @@ class PathOps:
         sibling dropped at the end; a caller-named park, the TimeFly
         archive, is kept and merged into) and replaced by their staged
         copies. Target sidecars (``_``/``.`` entries) stay put unless
-        ``entries`` names them. Stray staged data is refused
-        before the ``_commit.json`` journal is written; after it, any
-        crash is finished forward by :meth:`recover`. Cost: one journal
-        write + delete, two probes and up to two renames per entry."""
+        ``entries`` names them (then dropped, never kept in a park).
+        Stray staged data is refused before the ``_commit.json`` journal
+        is written; after it, any crash is finished forward by
+        :meth:`recover`. A stage that is the park (the pointer restore's
+        archive) or an ancestor of ``target`` (``create_current``'s
+        dataset root) holds data outside ``entries``: it skips the stray
+        check and survives the commit. Cost: one journal write + delete,
+        two probes and up to two renames per entry."""
         target = strip_scheme(target).rstrip("/")
         stage = strip_scheme(stage).rstrip("/")
+        keep_park = park is not None
+        park = strip_scheme(park or target + PARK_SUFFIX).rstrip("/")
         journal = posixpath.join(target, COMMIT_JOURNAL)
         if self.exists(journal):
             raise RuntimeError(f"an earlier commit into {target!r} is "
@@ -199,17 +211,20 @@ class PathOps:
         else:
             staged = {rel for rel in entries
                       if self.exists(posixpath.join(stage, rel))}
+            if stage == park:  # a target entry goes out, whatever the park holds
+                staged = {rel for rel in staged
+                          if not self.exists(posixpath.join(target, rel))}
             # a staged partition named differently than the caller's
             # entries (value escaping/formatting) would be dropped
             prefixes = tuple(posixpath.join(stage, rel) + "/" for rel in entries)
-            stray = [p for p, _ in self.data_files(stage)
-                     if not (p + "/").startswith(prefixes)]
+            stray = [] if _survives(target, stage, park) else [
+                p for p, _ in self.data_files(stage)
+                if not (p + "/").startswith(prefixes)]
             if stray:
                 raise RuntimeError(
                     f"commit into {target!r}: staged file(s) {stray[:3]} lie outside "
                     f"the entries to replace; staged data preserved at {stage!r}")
-        record = {"stage": stage, "keep_park": park is not None,
-                  "park": strip_scheme(park or target + PARK_SUFFIX).rstrip("/"),
+        record = {"stage": stage, "keep_park": keep_park, "park": park,
                   "entries": [[rel, rel in staged] for rel in entries]}
         self.write_text(journal, json.dumps(record))
         self._replay(target, record)
@@ -231,28 +246,38 @@ class PathOps:
 
     def _replay(self, target: str, record: dict) -> None:
         stage, park = record["stage"], record["park"]
-        park_move = self._merge_move if record["keep_park"] else self.rename
+        keep_park = record["keep_park"]
         for rel, in_stage in record["entries"]:
             src, dst = posixpath.join(stage, rel), posixpath.join(target, rel)
             if in_stage and not self.exists(src):
                 continue  # already moved in
             if self.exists(dst):
-                park_move(dst, posixpath.join(park, rel))
+                if not keep_park:
+                    self.rename(dst, posixpath.join(park, rel))
+                elif rel.startswith(("_", ".")):
+                    self.delete(dst)  # a kept park (the archive) holds data only
+                else:
+                    self._merge_move(dst, posixpath.join(park, rel))
             if in_stage:
                 self.rename(src, dst)
-        self.delete(stage)
-        if not record["keep_park"]:
+        if not _survives(target, stage, park):
+            self.delete(stage)
+        if not keep_park:
             self.delete(park)
         self.delete(posixpath.join(target, COMMIT_JOURNAL))
 
     def _merge_move(self, src: str, dst: str) -> None:
         """``rename``, merging into ``dst`` when it is already a directory
-        (renaming onto one would nest ``src`` inside it)."""
+        (renaming onto one would nest ``src`` inside it) and replacing a
+        same-named file there (a byte copy: archive names identify files,
+        and a rename onto an existing file fails)."""
         if self.is_dir(dst) and self.is_dir(src):
             for name in self.list_dir(src):
                 self._merge_move(posixpath.join(src, name), posixpath.join(dst, name))
             self.delete(src)
         else:
+            if self.is_file(dst):
+                self.delete(dst)
             self.rename(src, dst)
 
     # -- small-text sidecar IO ---------------------------------------------------

@@ -6,11 +6,17 @@ A monkeypatched ``PathOps`` raises ``OSError`` at the k-th ``rename`` /
 ``recover`` must leave the target reading as exactly its before or its
 after state, and a retry must converge to the after state. The commit step itself is
 swept over every k on small hand-built trees (no Spark jobs); each lake
-op then takes one end-to-end crash inside its swap, and the TimeFly copy
-restore one at every step.
+op then takes one end-to-end crash inside its swap, and every TimeFly
+move into or out of current/ (copy and pointer restore,
+``create_current``, ``add_snapshot``) one at every step.
+``normalize_filenames`` stays off the journal (one atomic rename per
+file): a crash at every rename, then a rerun, must still converge.
 """
 
+import datetime as dt
+import json
 import os
+import re
 import shutil
 
 import pytest
@@ -213,6 +219,22 @@ def test_commit_stage_refuses_stray_stage_data(spark, tmp_path):
     assert len(_tree(os.path.join(root, "ds__stage"))) == 2
 
 
+def test_commit_stage_park_as_stage_keeps_it(spark, tmp_path):
+    # the pointer restore's shape: wanted files come in from the archive,
+    # a trimmed file goes out even when the archive has a same-named
+    # copy, and the archive's other files and the target's sidecar stay
+    root = str(tmp_path)
+    target, archive = os.path.join(root, "ds"), os.path.join(root, "archive")
+    _build(target, {"a.parquet": "live", "keep.parquet": "k", **SIDECARS})
+    _build(archive, {"a.parquet": "copy", "b.parquet": "in", "o.parquet": "o"})
+    PathOps(spark, root).commit_stage(target, archive, park=archive,
+                                      entries=["a.parquet", "b.parquet"])
+    assert _tree(target) == {"b.parquet": "in", "keep.parquet": "k"}
+    assert _tree(archive) == {"a.parquet": "live", "o.parquet": "o"}
+    with open(os.path.join(target, "_sidecar.json")) as fh:
+        assert fh.read() == "keep"
+
+
 # -- one end-to-end crash per lake op ------------------------------------------
 
 
@@ -385,3 +407,207 @@ def test_timefly_copy_restore_every_crash_point(spark, tmp_path, arm):
     assert seen == {"before", "after"}
     assert _state(spark, tf.current_path) == _state(
         spark, tf.snapshot_path(snap))
+
+
+def _data(root):
+    """{relative path: bytes} of the visible data files under ``root``."""
+    return {rel: data for rel, data in _files(root).items()
+            if not any(seg.startswith(("_", ".")) for seg in rel.split(os.sep))}
+
+
+def _assert_manifests_readable(tf):
+    """Every registered pointer manifest's files sit in current/ or the
+    archive, and the archive holds no sidecars its GC would never see."""
+    for stamp in tf.snapshots():
+        with open(tf.manifest_path(stamp)) as fh:
+            files = json.load(fh)["files"]
+        for rel in files:
+            assert os.path.exists(os.path.join(tf.current_path, rel)) or \
+                os.path.exists(os.path.join(tf.archive_path, rel)), (stamp, rel)
+    assert not [e for e in os.listdir(tf.archive_path) if e.startswith("_")]
+
+
+def test_timefly_pointer_restore_every_crash_point(spark, tmp_path, arm):
+    # renaming the wanted files in and then the trimmed ones out leaves
+    # current/ holding both sets when a rename between them fails
+    template = str(tmp_path / "template")
+    tf = TimeFly(spark, template, snapshot_mode="pointer")
+    tf.new()
+
+    def write(lo, hi):
+        Writer(spark, tf.current_path, partition_by=["p"]).write(
+            spark.range(lo, hi).withColumn("p", F.col("id") % 2).coalesce(1))
+
+    write(0, 3)
+    first = tf.add_snapshot()
+    write(3, 7)
+    target = tf.add_snapshot()
+    tf.load_snapshot(first)  # parks the second write in the archive
+    write(7, 12)
+    sig = os.path.join("_signatures", "minhash", "s.txt")
+    _build(tf.current_path, {sig: "live"})
+    before = _data(tf.current_path)
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(template, clean)
+    steps = arm(0)
+    TimeFly(spark, clean, snapshot_mode="pointer").load_snapshot(target)
+    n_steps = steps["n"]
+    arm(None)
+    expected = _data(os.path.join(clean, "current"))
+    assert expected != before and n_steps >= 5
+
+    seen = set()
+    for k in range(1, n_steps + 1):
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(template, root)
+        tf = TimeFly(spark, root, snapshot_mode="pointer")
+        arm(k)
+        with pytest.raises(OSError, match="injected crash"):
+            tf.load_snapshot(target)
+        arm(None)
+        tf.ops.recover(tf.current_path)
+        got = _data(tf.current_path)
+        assert got in (before, expected), (k, sorted(got))
+        seen.add("after" if got == expected else "before")
+        _assert_manifests_readable(tf)
+        tf.load_snapshot(target)
+        assert _data(tf.current_path) == expected, k
+        _assert_manifests_readable(tf)
+        # the sidecar hashed the replaced content: it never survives
+        assert not os.path.exists(os.path.join(tf.current_path, sig)), k
+    assert seen == {"before", "after"}
+    assert _state(spark, tf.current_path) == _state(
+        spark, os.path.join(clean, "current"))
+    assert tf.read(first).count() == 3 and tf.read(target).count() == 7
+
+
+def _split(root):
+    """(root data outside current/ and snapshot/, current/ data)."""
+    inside = {}
+    outside = {}
+    for rel, data in _data(root).items():
+        head, _, rest = rel.partition(os.sep)
+        if head == "current":
+            inside[rest] = data
+        elif head != "snapshot":
+            outside[rel] = data
+    return outside, inside
+
+
+def test_timefly_create_current_every_crash_point(spark, tmp_path, arm):
+    # a per-file move loop strands part of the data in the root, and the
+    # retry (add_snapshot) skips the migration because current/ exists
+    template = str(tmp_path / "template")
+    spark.range(10).withColumn("p", F.col("id") % 2).repartition(3).write \
+        .partitionBy("p").parquet(template)
+    TimeFly(spark, template).new()
+    files, _ = _split(template)
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(template, clean)
+    steps = arm(0)
+    TimeFly(spark, clean).create_current()
+    n_steps = steps["n"]
+    arm(None)
+    assert _split(clean) == ({}, files)
+    assert n_steps >= len(files) + 2
+
+    seen = set()
+    for k in range(1, n_steps + 1):
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(template, root)
+        tf = TimeFly(spark, root)
+        arm(k)
+        with pytest.raises(OSError, match="injected crash"):
+            tf.create_current()
+        arm(None)
+        tf.ops.recover(tf.current_path)
+        got = _split(root)
+        assert got in ((files, {}), ({}, files)), (k, got)
+        seen.add("after" if got == ({}, files) else "before")
+        stamp = tf.add_snapshot()  # the next mutation is the retry
+        assert _split(root) == ({}, files), k
+        assert _data(tf.snapshot_path(stamp)) == files, k
+    assert seen == {"before", "after"}
+    assert tf.read().count() == 10
+
+
+def test_timefly_add_snapshot_explicit_stamp_every_crash_point(
+    spark, tmp_path, arm
+):
+    # a crash after the copy lands at snapshot/<ts> makes every retry
+    # with the same stamp raise FileExistsError
+    template = str(tmp_path / "template")
+    spark.range(5).coalesce(1).write.parquet(template)
+    tf = TimeFly(spark, template)
+    tf.new()
+    tf.create_current()
+    expected = _data(tf.current_path)
+    when = dt.datetime(2024, 1, 1)
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(template, clean)
+    steps = arm(0)
+    stamp = TimeFly(spark, clean).add_snapshot(when)
+    n_steps = steps["n"]
+    arm(None)
+    assert stamp == "20240101_000000" and n_steps >= 2
+
+    for k in range(1, n_steps + 1):
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(template, root)
+        tf = TimeFly(spark, root)
+        arm(k)
+        with pytest.raises(OSError, match="injected crash"):
+            tf.add_snapshot(when)
+        arm(None)
+        snap = tf.snapshot_path(stamp)
+        assert not os.path.exists(snap) or _data(snap) == expected, k
+        assert tf.add_snapshot(when) == stamp
+        assert tf.snapshots() == [stamp], k
+        assert _data(snap) == expected, k
+        left = sorted(e for e in os.listdir(os.path.join(root, "snapshot"))
+                      if not e.endswith(".crc"))
+        assert left == [stamp], k
+    with pytest.raises(FileExistsError):
+        tf.add_snapshot(when)  # a registered stamp still refuses
+
+
+def test_normalize_filenames_crash_at_every_rename_converges(
+    spark, tmp_path, arm
+):
+    # one atomic rename per file needs no journal: after a crash every
+    # file is readable under its old or new name, and a rerun with the
+    # same stamp finishes the scheme without renaming onto a taken name
+    from pydala_spark.dataset.maintain import normalize_filenames
+
+    template = str(tmp_path / "template")
+    spark.range(20).withColumn("p", F.col("id") % 2).repartition(3).write \
+        .partitionBy("p").parquet(template)
+    rows = _state(spark, template)
+    payload = sorted(_data(template).values())
+    stamp = "20260814_120000000"
+    scheme = re.compile(rf"^data-{stamp}-\d{{6}}\.parquet$")
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(template, clean)
+    steps = arm(0, ("rename",))
+    normalize_filenames(spark, clean, timestamp=stamp)
+    n_steps = steps["n"]
+    arm(None)
+    assert n_steps == len(payload) >= 3
+
+    for k in range(1, n_steps + 1):
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(template, root)
+        arm(k, ("rename",))
+        with pytest.raises(OSError, match="injected crash"):
+            normalize_filenames(spark, root, timestamp=stamp)
+        arm(None)
+        res = normalize_filenames(spark, root, timestamp=stamp)
+        assert res == {"n_renamed": n_steps - k + 1, "n_skipped": k - 1}, k
+        got = _data(root)
+        assert all(scheme.match(os.path.basename(rel)) for rel in got), k
+        assert sorted(got.values()) == payload, k
+        assert _state(spark, root) == rows, k

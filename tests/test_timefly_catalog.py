@@ -381,6 +381,29 @@ def test_timefly_pointer_restore_chain_and_gc(spark, tmp_path):
     assert leftover == []  # unreferenced archive files collected
 
 
+def test_timefly_pointer_restore_after_mixed_copy_restore(spark, tmp_path):
+    # a pointer-mode restore of a COPY snapshot parks current/ in the
+    # archive and brings same-named copies back in; a later pointer
+    # restore that trims one of them must park it over the archive's
+    # copy (a plain rename onto an existing file fails)
+    base = str(tmp_path / "ptr_mixed")
+    _write(spark, base, [1, 2, 3])
+    tf = TimeFly(spark, base, snapshot_mode="pointer")
+    tf.new()
+    tf.create_current()
+    first = tf.add_snapshot(TS(2024, 1, 1, 12, 0, 0))
+    Writer(spark, tf.current_path).write(spark.createDataFrame([Row(id=4)], "id long"))
+    copy = TimeFly(spark, base).add_snapshot(TS(2024, 2, 1, 12, 0, 0))
+    Writer(spark, tf.current_path).write(spark.createDataFrame([Row(id=5)], "id long"))
+    tf.load_snapshot(copy)
+    assert tf.read().count() == 4
+    tf.load_snapshot(first)
+    assert sorted(r.id for r in tf.read().collect()) == [1, 2, 3]
+    assert [tf.read(s).count() for s in tf.snapshots()] == [3, 4, 5, 4]
+    archive = os.path.join(base, "snapshot", "archive")
+    assert not [e for e in os.listdir(archive) if e.startswith("_")]
+
+
 def test_timefly_pointer_partitioned(spark, tmp_path):
     # pointer manifests carry partition-dir-relative paths; as-of reads
     # keep hive partition columns via basePath, and restores rename whole

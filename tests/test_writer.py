@@ -347,7 +347,9 @@ def test_single_file_feather_bridge_hard_row_guard(
 
     import pyarrow.feather as pf
 
-    monkeypatch.setenv("SPARK_GRAFT_FEATHER_BRIDGE_MAX_ROWS", "10")
+    from pydala_spark.dataset import writer as writer_mod
+
+    monkeypatch.setattr(writer_mod, "FEATHER_BRIDGE_MAX_ROWS", 10)
     target = str(tmp_path / "guarded.feather")
     w = Writer(spark, target, format="feather")
     with pytest.raises(ValueError, match="write_feather_dataset"):
