@@ -182,11 +182,8 @@ class Datalake(LakeSweepsMixin):
         # dataset may live on a different FileSystem (s3a path in a
         # local-rooted lake) and the root-bound fs throws 'Wrong FS'
         po = PathOps(self.spark, base)
-        # snapshot-managed datasets expose their live data (same redirect
-        # as load(); reading the root would mix snapshots into the scan)
-        current = posixpath.join(base, "current")
-        data_path = current if po.is_dir(current) else base
-        ds = Dataset(self.spark, data_path, format=format, name=name, **kwargs)
+        ds = Dataset(self.spark, self._data_path(base, po), format=format,
+                     name=name, **kwargs)
         self.datasets[name] = ds
         # ledgered commit, not blob read-modify-write: two concurrent
         # add_dataset calls can no longer lose each other's entry
@@ -237,6 +234,15 @@ class Datalake(LakeSweepsMixin):
                         po.rename(src, dst)
         return known
 
+    def _data_path(self, base: str, po: PathOps | None = None) -> str:
+        """A dataset's live data: the TimeFly ``current/`` tree of a
+        snapshot-managed dataset (reading the base would mix snapshots
+        into the scan), else the base itself. ``po`` probes instead of
+        the lake-root PathOps (a dataset outside the root may live on
+        another FileSystem)."""
+        current = posixpath.join(base, "current")
+        return current if (po or self._po).is_dir(current) else base
+
     def _dataset_format(self, base: str) -> str:
         """Format recorded in the dataset's sidecar (JSON or reference
         TOML), defaulting to parquet."""
@@ -263,10 +269,7 @@ class Datalake(LakeSweepsMixin):
         abort loading the rest of the lake), and each reads with the
         format its sidecar records."""
         for name, base in self.discover().items():
-            # snapshot-managed datasets expose their live data
-            current = posixpath.join(base, "current")
-            data_path = current if self._po.is_dir(current) else base
-            ds = Dataset(self.spark, data_path, name=name,
+            ds = Dataset(self.spark, self._data_path(base), name=name,
                          format=self._dataset_format(base))
             self.datasets[name] = ds
             if register_views and ds._dataset_has_files():
@@ -307,8 +310,7 @@ class Datalake(LakeSweepsMixin):
             t.name.lower() for t in self.spark.catalog.listTables() if t.isTemporary
         }
         for name, base in self.discover().items():
-            current = posixpath.join(base, "current")
-            data_path = current if self._po.is_dir(current) else base
+            data_path = self._data_path(base)
             fmt = self._dataset_format(base)
             if fmt != "parquet":
                 results[name] = {"skipped": f"format {fmt}"}

@@ -1,44 +1,30 @@
-"""Lake-global sweeps: the maintenance / dedup / ANN methods of
-:class:`~pydala_spark.catalog.Datalake`, split out of ``catalog.py``
-(round 11, VERDICT r10 #5 follow-through: the core lake — manifest
-ledger, discovery, registration, compaction — reads in one screenful
-again, and the sweep orchestration lives in a file whose only concern
-is the (full | all-fresh | partial) night state machines).
+"""The lake sweeps: the maintenance, dedup and ANN methods of
+:class:`~pydala_spark.catalog.Datalake`, mixed in from
+:class:`LakeSweepsMixin`.
 
-Contents (one method per lake-global operation, each with its own
-scale/soundness docstring):
+Each sweep runs one night through
+:class:`~pydala_spark.sweeps.SweepNight`, which lists the lake, loads
+and validates the prior summary, pools and guards the per-dataset
+calls, decides fresh / partial / full for the lake-global sweeps, lands
+their verdict tables and seals the summary. What a method here keeps is
+its own work:
 
-- :meth:`LakeSweepsMixin.decontaminate` — benchmark decontamination
-  sweep (n-gram / winnowing / embedding) with sidecar reuse.
-- :meth:`LakeSweepsMixin.semantic_dedup` — per-dataset and
-  cross-dataset SemDeDup sweeps (full / all-fresh / cell-partial
-  nights, doc-level de-cliffed delta).
-- :meth:`LakeSweepsMixin.span_dedup_report` — lake-global span
-  (paragraph) duplication report with the token-synced ``_df`` /
-  ``_contrib`` partial-incremental state.
-- :meth:`LakeSweepsMixin.signatures_report` — sidecar freshness audit.
-- :meth:`LakeSweepsMixin.prep_sweep` — ingest-time prep (signatures,
-  quality, scrub) with per-dataset overrides.
-- :meth:`LakeSweepsMixin.neardup_dedup` — cross-dataset MinHash/LSH
-  near-dup sweep with the persisted ``_pairs`` edge set and
-  partial-incremental banded reuse.
-- :meth:`LakeSweepsMixin.ann_maintain` — ANN index nightly lifecycle
-  (tombstone removal → idempotent append → stats / recall gates).
+- its per-dataset function ``(name, base) -> (entry, payload)``;
+- for the three lake-global sweeps (:meth:`LakeSweepsMixin.neardup_dedup`,
+  :meth:`LakeSweepsMixin.span_dedup_report` and cross-dataset
+  :meth:`LakeSweepsMixin.semantic_dedup`), its verdict function: the
+  partial night when the prior makes one legal, else the full night;
+- steps only it needs, such as the span sweep's ``_df`` / ``_contrib``
+  token commit or the near-dup sweep's edge-balloon check, in its
+  ``finish`` callable.
 
-The shared three-mode selection rules (prior validity, per-dataset
-provable freshness, the all-fresh gate, carry-over row-count
-integrity) live in :mod:`pydala_spark.sweeps` — round 12 (VERDICT r11
-#3) moved the repeated night scaffolding there (``NightGate``,
-``fresh_summary``, the ``_token.json`` protocol, the summary writer),
-and round 13 (VERDICT r12 #3) finished the extraction: the per-dataset
-guard/pool/report-root/union/reuse/writeback/seal choreography AND the
-three partial-night engines (``semantic_cross_partial``,
-``span_partial_night``, ``neardup_partial_ctx`` +
-``neardup_pairs_night``) are all in ``sweeps.py`` now, so each sweep
-method here is mode dispatch + its unique joins. The algorithmic cores
-live in ``operators/`` (``dedup.lsh_candidate_pairs_delta``,
-``similarity.semantic_partial_verdicts``, ``ann``). This module is the
-orchestration seam between them and the lake's artifacts.
+The per-dataset sweeps (:meth:`LakeSweepsMixin.decontaminate`,
+per-dataset :meth:`LakeSweepsMixin.semantic_dedup` and
+:meth:`LakeSweepsMixin.prep_sweep`) reuse a dataset's prior entry when
+its verified content marker is unchanged;
+:meth:`LakeSweepsMixin.signatures_report` only reports and writes no
+summary. :meth:`LakeSweepsMixin.ann_maintain` maintains one index and
+does not sweep. The algorithmic cores live in ``operators/``.
 """
 
 from __future__ import annotations
@@ -50,72 +36,51 @@ from pyspark.sql import functions as F
 
 from pydala_spark.dataset.reader import Dataset
 from pydala_spark.sweeps import (
-    NightGate,
+    LAKE_SEP,
     SkipSweep,
+    SweepNight,
     content_marker,
-    fresh_summary,
-    commit_verdicts,
     edge_balloon_warning,
     frame_marker,
-    guard_dataset,
-    load_prior_summary,
     neardup_pairs_night,
     neardup_partial_ctx,
-    pooled,
     read_token,
-    rep_base_for,
     reuse_if_fresh,
-    seal_summary,
     semantic_cross_partial,
+    sidecar_entry,
     sig_path,
     span_partial_night,
     union_all,
-    update_report_entries,
     write_token,
 )
 from pydala_spark.utils.errors import ConfigError
 from pydala_spark.utils.pathops import strip_scheme
 
-#: round-13 hoist: the skip exception and the module helpers live in
-#: sweeps.py now (session-free, one home for the shared sweep
-#: machinery); the old private names stay bound for in-module call
-#: sites and any external pin.
-_SkipSweep = SkipSweep
-_sig_path = sig_path
-_pooled = pooled
-_frame_marker = frame_marker
-_edge_balloon_warning = edge_balloon_warning
-
-
-
-
-
 
 class LakeSweepsMixin:
     """Sweep methods mixed into :class:`~pydala_spark.catalog.Datalake`
     (which provides ``self.spark``, ``self._po``, ``self.root``,
-    ``self.discover``, ``self._rel``, ``self._dataset_format``)."""
+    ``self.discover``, ``self._data_path``, ``self._dataset_format``)."""
 
     def _swept_frame(self, name: str, base: str, cols) -> tuple:
-        """Resolve + load one dataset for a sweep (round 12, VERDICT
-        r11 #3 — the preamble every per-dataset phase repeated):
-        prefer the TimeFly ``current/`` tree, require data files and
-        every column in ``cols``, and return ``(df, data_path)``.
-        Raises :class:`_SkipSweep` with the summary reason otherwise;
-        any other failure propagates to the caller's per-dataset
-        error containment (the ``maintain`` rule)."""
-        current = posixpath.join(base, "current")
-        data_path = current if self._po.is_dir(current) else base
+        """Resolve + load one dataset for a sweep: prefer the TimeFly
+        ``current/`` tree, require data files and every column in
+        ``cols``, and return ``(df, data_path)``. Raises
+        :class:`~pydala_spark.sweeps.SkipSweep` with the summary reason
+        otherwise; any other failure becomes the dataset's error
+        entry."""
+        data_path = self._data_path(base)
         ds = Dataset(
             self.spark, data_path, name=name,
             format=self._dataset_format(base),
         )
         if not ds._dataset_has_files():
-            raise _SkipSweep("no data files")
+            raise SkipSweep("no data files")
         df = ds.load()
         if any(c not in df.columns for c in cols):
-            raise _SkipSweep(f"no ({', '.join(cols)}) columns")
+            raise SkipSweep(f"no ({', '.join(cols)}) columns")
         return df, data_path
+
 
     def _sidecar_frame(
         self, df, data_path: str, kind: str, expect: dict,
@@ -123,7 +88,7 @@ class LakeSweepsMixin:
         mat_kwargs: dict,
     ) -> tuple:
         """The sidecar read-or-materialize dance every sidecar-served
-        sweep shares (round 12, VERDICT r11 #3): read ``kind`` pinned
+        sweep shares: read ``kind`` pinned
         to ``expect`` (marker-verified against the live ``df`` when
         ``verify``); on ANY read failure — absent, param-mismatched,
         stale — pay the hashing once via ``materialize_signatures(...,
@@ -155,37 +120,6 @@ class LakeSweepsMixin:
             )
             frame, params = _read()
             return frame, params, f"{type(exc).__name__}"
-
-    def _codebook_cells(
-        self, df, data_path: str, cb, cb_path: str, id_col: str,
-        vec_col: str, n_centroids: int, seed: int, verify: bool,
-        materialize: bool, signatures_path: str | None,
-    ) -> tuple:
-        """Pin the lake codebook (training it on the FIRST eligible
-        dataset and persisting BEFORE any assignment, so a crash
-        between training and sidecar writes can't strand cells under
-        an unrecorded codebook) and serve the dataset's sha-pinned
-        ``embedding_cells`` sidecar — the block both semantic sweep
-        modes open with (round-13 dedup). Returns
-        ``(cb, cells, params, materialized)``."""
-        from pydala_spark.operators.ann import (
-            codebook_sha,
-            kmeans_centroids,
-            save_codebook,
-        )
-
-        if cb is None:
-            cb = kmeans_centroids(
-                df, vec_col=vec_col, n_centroids=n_centroids, seed=seed)
-            save_codebook(self.spark, cb, cb_path)
-        cells, params, materialized = self._sidecar_frame(
-            df, data_path, "embedding_cells",
-            {"codebook_sha": codebook_sha(cb),
-             "id_col": id_col, "vec_col": vec_col},
-            verify, materialize, signatures_path,
-            dict(id_col=id_col, vec_col=vec_col, centroids=cb),
-        )
-        return cb, cells, params, materialized
 
     def decontaminate(
         self,
@@ -301,106 +235,86 @@ class LakeSweepsMixin:
                 f"decontaminate: unknown mode {mode!r} "
                 "(expected 'winnowing', 'embedding' or 'ngram')"
             )
-        expect = {"k": k, "window": window,
-                  "id_col": id_col, "text_col": text_col}
-        rep_base = rep_base_for(self.root, report_dir, "_decontamination")
         if incremental and mode != "winnowing":
             raise ConfigError(
                 "decontaminate: incremental=True is winnowing-mode only "
                 "— the embedding/ngram modes are sidecar-less, so there "
                 "is no recorded marker to prove a dataset unchanged"
             )
-        config = {"mode": mode, "min_hits": min_hits, "k": k,
-                  "window": window, "id_col": id_col, "text_col": text_col}
-        bench_markers = None
-        prior = None
-        if mode == "winnowing":
-            bench_markers = {
-                bname: _frame_marker(bdf, id_col, F.octet_length(text_col))
-                for bname, bdf in benchmarks.items()
-            }
-        if incremental:
-            # benchmarks or sweep config moved -> nothing is provably
-            # fresh; fall back to the full sweep (sweeps module)
-            prior = load_prior_summary(
-                self._po, rep_base,
-                {"_config": config, "_benchmarks": bench_markers})
+        pin = {"k": k, "window": window,
+               "id_col": id_col, "text_col": text_col}
+        expect: dict = {}
         bench_fps = {}
         if mode == "winnowing":
+            # benchmarks or sweep config moved -> nothing is provably
+            # fresh; both also seed the next night's decision
+            expect = {
+                "_config": {"mode": mode, "min_hits": min_hits, "k": k,
+                            "window": window, "id_col": id_col,
+                            "text_col": text_col},
+                "_benchmarks": {
+                    bname: frame_marker(bdf, id_col,
+                                        F.octet_length(text_col))
+                    for bname, bdf in benchmarks.items()
+                },
+            }
             bench_fps = {
                 bname: winnowing_fingerprints(
                     bdf, id_col, text_col, k=k, window=window
                 )
                 for bname, bdf in benchmarks.items()
             }
-        @guard_dataset()
-        def _sweep_one(name: str, base: str) -> dict:
+        night = SweepNight(self, report_dir, "_decontamination")
+
+        def _sweep_one(name: str, base: str) -> tuple:
             need_col = vec_col if mode == "embedding" else text_col
             df, data_path = self._swept_frame(
                 name, base, (id_col, need_col))
-
+            entry: dict = {}
             if mode == "embedding":
                 # one broadcast left-semi vector scan per benchmark
                 # — no hashing pass to amortize, hence no sidecar
-                entry: dict = {}
-                report_rows = union_all(
-                    semantic_contamination(
-                        df, bdf, id_col=id_col, vec_col=vec_col,
-                        threshold=threshold, block_bits=block_bits,
-                        dim=dim, n_probes=n_probes,
-                    ).select(F.lit(bname).alias("benchmark"), "id")
-                    for bname, bdf in benchmarks.items()
-                )
-                bench_names = benchmarks
+                hits = {bname: semantic_contamination(
+                    df, bdf, id_col=id_col, vec_col=vec_col,
+                    threshold=threshold, block_bits=block_bits,
+                    dim=dim, n_probes=n_probes,
+                ).select("id") for bname, bdf in benchmarks.items()}
             elif mode == "ngram":
                 # exact shingle overlap — sidecar-less by design
                 # (the shingle universe outweighs the corpus)
-                entry = {}
-                report_rows = union_all(
-                    contamination_hits(
-                        df, bdf, id_col, text_col=text_col,
-                        shingle_size=shingle_size, min_hits=min_hits,
-                        shingle_mode=shingle_mode,
-                    ).select(
-                        F.lit(bname).alias("benchmark"), "id", "n_hits"
-                    )
-                    for bname, bdf in benchmarks.items()
-                )
-                bench_names = benchmarks
+                hits = {bname: contamination_hits(
+                    df, bdf, id_col, text_col=text_col,
+                    shingle_size=shingle_size, min_hits=min_hits,
+                    shingle_mode=shingle_mode,
+                ).select("id", "n_hits") for bname, bdf in benchmarks.items()}
             else:
                 # absent/param-mismatched/stale sidecar pays the
                 # hashing ONCE inside the shared dance; every later
                 # sweep reads it
-                fps, _params, materialized = self._sidecar_frame(
-                    df, data_path, "winnowing", expect, verify,
-                    materialize, _sig_path(signatures_root, name),
+                fps, params, materialized = self._sidecar_frame(
+                    df, data_path, "winnowing", pin, verify,
+                    materialize, sig_path(signatures_root, name),
                     dict(id_col=id_col, text_col=text_col,
                          winnowing_k=k, winnowing_window=window),
                 )
-                marker = content_marker(_params)
+                entry = sidecar_entry(materialized, params)
                 if incremental and not materialized:
                     # VERIFIED marker identical to the one recorded at
                     # the last sweep, same benchmarks, same config —
                     # the prior verdict is provably current
                     reused = reuse_if_fresh(
-                        prior, name, marker, "contaminated")
+                        night.prior, name, entry.get("marker"),
+                        "contaminated")
                     if reused is not None:
-                        return reused
-                entry = {"sidecar": "materialized" if materialized
-                         else "reused"}
-                if marker is not None:
-                    entry["marker"] = marker
-                report_rows = union_all(
-                    winnowing_contamination(
-                        fps, bfp, id_col, min_hits=min_hits,
-                        precomputed_fps=True,
-                    ).select(
-                        F.lit(bname).alias("benchmark"), "id", "n_hits"
-                    )
-                    for bname, bfp in bench_fps.items()
-                )
-                bench_names = bench_fps
-            target = posixpath.join(rep_base, name)
+                        return reused, None
+                hits = {bname: winnowing_contamination(
+                    fps, bfp, id_col, min_hits=min_hits,
+                    precomputed_fps=True,
+                ).select("id", "n_hits") for bname, bfp in bench_fps.items()}
+            report_rows = union_all(
+                frame.select(F.lit(bname).alias("benchmark"), "*")
+                for bname, frame in hits.items())
+            target = posixpath.join(night.rep_base, name)
             report_rows.write.mode("overwrite").parquet(target)
             counts = {
                 r["benchmark"]: int(r["n"])
@@ -411,24 +325,14 @@ class LakeSweepsMixin:
             entry.update({
                 "report": target,
                 "contaminated": {
-                    bname: counts.get(bname, 0) for bname in bench_names
+                    bname: counts.get(bname, 0) for bname in hits
                 },
             })
-            return entry
+            return entry, None
 
-        items = list(self.discover().items())
-        # datasets are independent here (unlike neardup_dedup's global
-        # clustering), so their jobs ride the shared pool scaffold
-        results = dict(zip(
-            (name for name, _ in items),
-            _pooled(items, _sweep_one, max_concurrency),
-        ))
-        # winnowing seeds the NEXT sweep's incremental skip decision
-        return seal_summary(
-            self._po, rep_base, results,
-            **({"_benchmarks": bench_markers, "_config": config}
-               if mode == "winnowing" else {}),
-        )
+        return night.run(_sweep_one, expect=expect,
+                         incremental=incremental,
+                         max_concurrency=max_concurrency)
 
     def semantic_dedup(
         self,
@@ -530,243 +434,154 @@ class LakeSweepsMixin:
         that fixed per-job overheads dominate.
         Summaries carry ``"_sweep_mode"``; a config or codebook-sha
         change discards the prior and runs full."""
-        from pydala_spark.operators.ann import codebook_sha, load_codebook
+        from pydala_spark.operators.ann import (
+            codebook_sha,
+            kmeans_centroids,
+            load_codebook,
+            save_codebook,
+        )
         from pydala_spark.operators.similarity import semantic_dedup
 
         cb_path = (
             strip_scheme(codebook_path) if codebook_path
             else posixpath.join(self.root, "_codebooks", "semantic_dedup.json")
         )
-        rep_base = rep_base_for(self.root, report_dir, "_semantic_dedup")
         cb = None
         if self._po.exists(cb_path):
             cb = load_codebook(self.spark, cb_path)
+
+        def _codebook() -> dict:
+            # a lake with zero vectors never trains a codebook: sha None
+            return {"path": cb_path,
+                    "sha": codebook_sha(cb) if cb is not None else None}
+
         config = {"threshold": threshold, "score_col": score_col,
                   "id_col": id_col, "vec_col": vec_col}
-        prior = None
-        if incremental and not cross_dataset:
-            # cross mode loads/validates its own prior against the
-            # CROSS config below — loading here too would be a
-            # redundant summary read discarded immediately
-            prior = load_prior_summary(
-                self._po, rep_base, {"_config": config})
-            # cb None matches a prior sha of None (a zero-vector lake
-            # never trains a codebook — same carve-out as cross mode)
-            if prior is not None and (
-                    (prior.get("_codebook") or {}).get("sha")
-                    != (codebook_sha(cb) if cb is not None else None)):
-                prior = None  # codebook moved — full sweep
+        if cross_dataset:
+            # cross summaries are NOT a valid incremental seed for the
+            # per-dataset mode (different verdict semantics)
+            config["cross_dataset"] = True
+        # a config or codebook move discards the prior — full sweep
+        expect = {"_config": config, "_codebook": _codebook()}
+        night = SweepNight(self, report_dir, "_semantic_dedup")
+
+        def _cells(name: str, base: str) -> tuple:
+            nonlocal cb
+            df, data_path = self._swept_frame(
+                name, base, (id_col, vec_col))
+            if cb is None:
+                # the FIRST eligible dataset trains the lake codebook,
+                # persisted BEFORE any assignment so a crash between
+                # training and sidecar writes can't strand cells under
+                # an unrecorded codebook
+                cb = kmeans_centroids(
+                    df, vec_col=vec_col, n_centroids=n_centroids,
+                    seed=seed)
+                save_codebook(self.spark, cb, cb_path)
+            cells, params, materialized = self._sidecar_frame(
+                df, data_path, "embedding_cells",
+                {"codebook_sha": codebook_sha(cb),
+                 "id_col": id_col, "vec_col": vec_col},
+                verify, materialize, sig_path(signatures_root, name),
+                dict(id_col=id_col, vec_col=vec_col, centroids=cb),
+            )
+            scored = bool(score_col) and score_col in df.columns
+            # the (id, vec) marker is blind to the score column, and
+            # scores pick the keeper (a re-run quality classifier
+            # rewrites them in place): ONE narrow (id, score) aggregate,
+            # paid only when incremental is on
+            entry = sidecar_entry(
+                materialized, params, scored=scored,
+                score_marker=frame_marker(
+                    df, id_col, F.col(score_col).cast("double"))
+                if incremental and scored else None)
+            return df, cells, params, entry
 
         if cross_dataset:
-            #: same unambiguous-id separator as neardup_dedup
-            sep = "\x1f"
-            cfg_cross = {**config, "cross_dataset": True}
-            # cross-mode incremental (round 10): sound BECAUSE a
-            # SemDeDup verdict is a pure function of its CELL's full
-            # membership (pairs never cross cells, no caps, no
-            # transitive clustering — operators/similarity.py) — so
-            # the partial unit is the cell, and prior verdicts of
-            # cells no changed doc entered or left are exactly
-            # tonight's. Prior summaries are re-checked against the
-            # CROSS config + pinned codebook sha (the per-dataset
-            # prior loaded above answers different semantics).
-            prior = None
-            if incremental:
-                prior = load_prior_summary(
-                    self._po, rep_base, {"_config": cfg_cross})
-                # a lake with zero vectors never trains a codebook —
-                # cb None with a prior sha of None is a MATCH (the
-                # all-fresh zero-vector carve-out), not a move
-                if prior is not None and (
-                        (prior.get("_codebook") or {}).get("sha")
-                        != (codebook_sha(cb) if cb is not None
-                            else None)):
-                    prior = None  # codebook moved — full sweep
+            target = posixpath.join(night.rep_base, "_verdicts")
 
-            @guard_dataset(pad=2)
-            def _prep_cross(name: str, base: str):
-                nonlocal cb
-                df, data_path = self._swept_frame(
-                    name, base, (id_col, vec_col))
-                cb, cells, _p, materialized = self._codebook_cells(
-                    df, data_path, cb, cb_path, id_col, vec_col,
-                    n_centroids, seed, verify, materialize,
-                    _sig_path(signatures_root, name))
-                scored = bool(score_col) and score_col in df.columns
+            def _prep_cross(name: str, base: str) -> tuple:
+                df, cells, _params, entry = _cells(name, base)
                 doc = F.col(id_col).cast("string")
                 vecs = df.select(
                     F.lit(name).alias("__ds"),
                     doc.alias("__doc"),
-                    F.concat_ws(sep, F.lit(name), doc).alias("__lid"),
+                    F.concat_ws(LAKE_SEP, F.lit(name), doc).alias("__lid"),
                     F.col(vec_col).alias("__vec"),
-                    (F.col(score_col).cast("double") if scored
+                    (F.col(score_col).cast("double") if entry["scored"]
                      else F.lit(None).cast("double")).alias("__score"),
                 )
                 cl = cells.select(
                     F.concat_ws(
-                        sep, F.lit(name), F.col("id").cast("string")
+                        LAKE_SEP, F.lit(name), F.col("id").cast("string")
                     ).alias("id"),
                     "cell", "norm",
                 )
-                entry = {"sidecar": ("materialized" if materialized
-                                     else "reused"),
-                         "scored": scored}
-                m = content_marker(_p)
-                if m is not None:
-                    entry["marker"] = m
-                if incremental and scored:
-                    # the (id, vec) marker is blind to the score
-                    # column, and scores pick the keeper — same
-                    # rule as the per-dataset mode and neardup
-                    entry["score_marker"] = _frame_marker(
-                        df, id_col, F.col(score_col).cast("double")
-                    )
-                return entry, vecs, cl
+                return entry, (vecs, cl)
 
-            items = list(self.discover().items())
-            results: dict[str, dict] = {}
-            # codebook pins serially first (the determinism rule)
-            prepped = _pooled(items, _prep_cross, max_concurrency,
-                              serial_while=lambda: cb is None)
-            tagged_names: set[str] = set()
-            for (name, _), (entry, vecs, _cl) in zip(items, prepped):
-                results[name] = entry
-                if vecs is not None:
-                    tagged_names.add(name)
-            union_v = union_all(v for _e, v, _c in prepped)
-            union_c = union_all(c for _e, _v, c in prepped)
-            target = posixpath.join(rep_base, "_verdicts")
-            partial_unchanged = None
-            gate = None
-            if incremental and prior is not None:
-                # the shared night facts: freshness map, completed-
-                # prior set, lazily-verified row-count integrity
-                # (sweeps.NightGate). The integrity counts gate BOTH
-                # fast paths here: a fresh night must not report paths
-                # into lost partitions, and the partial night consumes
-                # prior rows of unchanged datasets (untouched-cell
-                # carry) AND of changed/removed ones (touched_before —
-                # their vacated cells must re-verdict).
-                gate = NightGate(self.spark, self._po, results, prior,
-                                 "n_vectors", target, tagged_names)
-                # the span sweep's carve-out (ADVICE r10): a prior
-                # sweep that legitimately produced no verdict table
-                # (every dataset skipped / zero vectors) must not be
-                # barred from the all-fresh path forever — require the
-                # row counts only when the prior summary recorded
-                # vectors
-                prior_had_vectors = (prior.get("_lake") or {}).get(
-                    "n_vectors", 0) > 0
-                if gate.all_fresh(require_counts=prior_had_vectors):
-                    # ALL-FRESH: the prior lake-global verdict is
-                    # provably current — skip the pair join wholesale
-                    return fresh_summary(
-                        self._po, rep_base, results, prior,
-                        "lake unchanged since last sweep — "
-                        "verdict reused",
-                        {"n_vectors": 0, "n_dropped": 0}, cfg_cross,
-                        {"_codebook": {
-                            "path": cb_path,
-                            "sha": codebook_sha(cb) if cb is not None
-                            else None}},
-                    )
-                unchanged = gate.unchanged
-                # an UNCHANGED dataset with a short partition demotes
-                # to changed (its docs recompute through the full leg);
-                # a short CHANGED/REMOVED dataset kills the partial
-                # night entirely — its prior rows seed touched_before,
-                # and a lost row could hide a vacated cell whose
-                # previously-dropped survivors must revive
-                if not (gate.prior_counted - unchanged <= gate.intact):
-                    unchanged = set()
-                else:
-                    # fresh_map already guarantees unchanged ⊆
-                    # prior_counted (the completion-key rule)
-                    unchanged &= gate.intact
-                if unchanged and self._po.is_dir(target):
-                    partial_unchanged = sorted(unchanged)
-            lake_stats = {"n_vectors": 0, "n_dropped": 0}
-            sweep_mode = "full"
-            if union_v is not None:
+            def _verdicts() -> tuple:
+                # cross-mode incremental is sound BECAUSE a SemDeDup
+                # verdict is a pure function of its CELL's full
+                # membership (pairs never cross cells, no caps, no
+                # transitive clustering): the partial unit is the cell
+                union_v, union_c = night.union
                 meta = union_v.select(
                     F.col("__lid").alias("id"), "__ds", "__doc")
-                verdicts = None
-                if partial_unchanged is not None:
-                    # PARTIAL night (round 10; relocated verbatim to
-                    # sweeps.semantic_cross_partial in round 13)
-                    verdicts = semantic_cross_partial(
-                        self.spark,
-                        union_v=union_v, union_c=union_c, meta=meta,
-                        target=target, sep=sep,
-                        tagged_names=tagged_names,
-                        partial_unchanged=partial_unchanged,
-                        prior_counted=gate.prior_counted,
-                        partial_max_cell_fraction=(
-                            partial_max_cell_fraction),
-                        codebook_rows=int(cb.shape[0]),
-                        threshold=threshold,
-                    )
-                if verdicts is not None:
-                    sweep_mode = "partial"
-                else:
-                    verdicts = semantic_dedup(
-                        union_v, id_col="__lid", vec_col="__vec",
-                        threshold=threshold, score_col="__score",
-                        cells=union_c,
-                    ).join(meta, "id").select(
-                        F.col("__ds").alias("dataset"),
-                        F.col("__doc").alias("id"),
-                        "cell", "kept",
-                    )
-                written = commit_verdicts(
-                    self.spark, self._po, verdicts, target,
-                    staged=sweep_mode == "partial")
-                update_report_entries(
-                    results, written, target,
-                    [F.count("*").alias("n"),
-                     F.count_if(~F.col("kept")).alias("nd")],
-                    {"n_vectors": "n", "n_dropped": "nd"})
-                tot = written.agg(
-                    F.count("*").alias("n"),
-                    F.count_if(~F.col("kept")).alias("nd"),
-                ).collect()[0]
-                lake_stats = {"n_vectors": int(tot["n"]),
-                              "n_dropped": int(tot["nd"])}
-            # cross summaries are NOT a valid incremental seed for the
-            # per-dataset mode (different verdict semantics)
-            return seal_summary(
-                self._po, rep_base, results,
-                _lake=lake_stats,
-                _codebook={"path": cb_path,
-                           "sha": codebook_sha(cb) if cb is not None
-                           else None},
-                _config=cfg_cross,
-                _sweep_mode=sweep_mode,
+                gate = night.gate
+                if gate is not None:
+                    # an UNCHANGED dataset with a short partition
+                    # demotes to changed (its docs recompute through
+                    # the full leg); a short CHANGED/REMOVED dataset
+                    # kills the partial night entirely — its prior rows
+                    # seed touched_before, and a lost row could hide a
+                    # vacated cell whose dropped survivors must revive
+                    unchanged = gate.unchanged
+                    if not (gate.prior_counted - unchanged <= gate.intact):
+                        unchanged = set()
+                    else:
+                        unchanged &= gate.intact
+                    if unchanged and self._po.is_dir(target):
+                        merged = semantic_cross_partial(
+                            self.spark,
+                            union_v=union_v, union_c=union_c, meta=meta,
+                            target=target,
+                            tagged_names=night.tagged,
+                            partial_unchanged=sorted(unchanged),
+                            prior_counted=gate.prior_counted,
+                            partial_max_cell_fraction=(
+                                partial_max_cell_fraction),
+                            codebook_rows=int(cb.shape[0]),
+                            threshold=threshold,
+                        )
+                        if merged is not None:
+                            return merged, "partial"
+                return semantic_dedup(
+                    union_v, id_col="__lid", vec_col="__vec",
+                    threshold=threshold, score_col="__score",
+                    cells=union_c,
+                ).join(meta, "id").select(
+                    F.col("__ds").alias("dataset"),
+                    F.col("__doc").alias("id"),
+                    "cell", "kept",
+                ), "full"
+
+            # the codebook pins serially first (the determinism rule)
+            return night.run_global(
+                _prep_cross, _verdicts,
+                counts={"n_vectors": F.count("*"),
+                        "n_dropped": F.count_if(~F.col("kept"))},
+                target=target,
+                fresh_msg="lake unchanged since last sweep — verdict reused",
+                expect=expect, incremental=incremental,
+                max_concurrency=max_concurrency,
+                serial_while=lambda: cb is None,
+                finish=lambda: {"_codebook": _codebook()},
             )
 
-        @guard_dataset()
-        def _sweep_one(name: str, base: str) -> dict:
-            nonlocal cb
-            df, data_path = self._swept_frame(
-                name, base, (id_col, vec_col))
-            cb, cells, params, materialized = self._codebook_cells(
-                df, data_path, cb, cb_path, id_col, vec_col,
-                n_centroids, seed, verify, materialize,
-                _sig_path(signatures_root, name))
-            marker = content_marker(params)
-            scored = bool(score_col) and score_col in df.columns
-            score_marker = None
-            if incremental and scored:
-                # the content marker covers (id, vec) only — score
-                # VALUES rewritten in place (a re-run classifier)
-                # change the keeper without moving it, so the score
-                # column gets its own marker (ONE narrow (id, score)
-                # aggregate, paid only when incremental is on — the
-                # round-9 neardup_dedup rule)
-                score_marker = _frame_marker(
-                    df, id_col, F.col(score_col).cast("double")
-                )
-            if incremental and not materialized:
+        def _sweep_one(name: str, base: str) -> tuple:
+            df, cells, params, entry = _cells(name, base)
+            scored = entry["scored"]
+            if incremental and entry["sidecar"] == "reused":
                 # verified marker unchanged since the recorded sweep
                 # under the same codebook + config — verdict current.
                 # A score column ADDED/removed since the last sweep
@@ -774,13 +589,13 @@ class LakeSweepsMixin:
                 # scoring applicability must match — and so must the
                 # score values themselves.
                 reused = reuse_if_fresh(
-                    prior, name, marker, "n_dropped",
+                    night.prior, name, entry.get("marker"), "n_dropped",
                     (("scored", scored),)
-                    + ((("score_marker", score_marker),)
+                    + ((("score_marker", entry.get("score_marker")),)
                        if scored else ()),
                 )
                 if reused is not None:
-                    return reused
+                    return reused, None
             # record whether scoring actually applied — a dataset
             # missing the score column silently falling back to
             # smallest-id would otherwise be indistinguishable from
@@ -791,39 +606,24 @@ class LakeSweepsMixin:
                 score_col=score_col if scored else None,
                 cells=cells, params=params,
             )
-            target = posixpath.join(rep_base, name)
+            target = posixpath.join(night.rep_base, name)
             verdict.write.mode("overwrite").parquet(target)
             counts = self.spark.read.parquet(target).agg(
                 F.count("*").alias("n"),
                 F.count_if(~F.col("kept")).alias("n_dropped"),
             ).collect()[0]
-            return {
-                "sidecar": "materialized" if materialized else "reused",
-                "report": target,
-                "n_vectors": int(counts["n"]),
-                "n_dropped": int(counts["n_dropped"]),
-                "scored": scored,
-                **({"marker": marker} if marker is not None else {}),
-                **({"score_marker": score_marker}
-                   if score_marker is not None else {}),
-            }
+            entry.update(report=target, n_vectors=int(counts["n"]),
+                         n_dropped=int(counts["n_dropped"]))
+            return entry, None
 
-        items = list(self.discover().items())
         # the lake codebook must be PINNED before pooling — and by the
         # same dataset the serial path would pick (determinism) — so
         # sweep serially until it exists, then pool the rest
-        results = dict(zip(
-            (name for name, _ in items),
-            _pooled(items, _sweep_one, max_concurrency,
-                    serial_while=lambda: cb is None),
-        ))
-        return seal_summary(
-            self._po, rep_base, results,
-            _codebook={"path": cb_path,
-                       "sha": codebook_sha(cb) if cb is not None
-                       else None},
-            _config=config,
-        )
+        return night.run(_sweep_one, expect=expect,
+                         incremental=incremental,
+                         max_concurrency=max_concurrency,
+                         serial_while=lambda: cb is None,
+                         finish=lambda: {"_codebook": _codebook()})
 
     def span_dedup_report(
         self,
@@ -908,267 +708,198 @@ class LakeSweepsMixin:
         ``_df`` rewrite replaces the fp-keyed shuffle of every
         position row, and run-grouping pays only for re-evaluated
         docs."""
-        from pydala_spark.operators.dedup import duplicate_spans
+        import uuid as _uuid
 
-        expect = {"k": span_k, "window": span_window,
-                  "id_col": id_col, "text_col": text_col}
-        rep_base = rep_base_for(self.root, report_dir, "_span_dedup")
+        from pydala_spark.operators.dedup import duplicate_spans, span_runs
+
+        pin = {"k": span_k, "window": span_window,
+               "id_col": id_col, "text_col": text_col}
         config = {"span_k": span_k, "span_window": span_window,
                   "min_span": min_span, "min_df": min_df,
                   "id_col": id_col, "text_col": text_col}
-        prior = None
-        if incremental:
-            # sweep knobs moved -> prior nulled (sweeps module)
-            prior = load_prior_summary(
-                self._po, rep_base, {"_config": config})
-        sep = "\x1f"
+        night = SweepNight(self, report_dir, "_span_dedup")
+        df_path = posixpath.join(night.rep_base, "_df")
+        contrib_path = posixpath.join(night.rep_base, "_contrib")
+        target = posixpath.join(night.rep_base, "_spans")
+        #: the token tonight's _df/_contrib commit under, and the staged
+        #: _df rewrite of a partial night (set by _verdicts)
+        token = swap_stage = None
 
-        @guard_dataset(pad=2)
-        def _prep_one(name: str, base: str):
+        def _prep_one(name: str, base: str) -> tuple:
             df, data_path = self._swept_frame(
                 name, base, (id_col, text_col))
             # the engine's most expensive hashing pass is paid once
             # inside the shared dance; every later sweep reads
-            # positions
+            # positions (the pin makes their k/window this sweep's)
             fps, params, materialized = self._sidecar_frame(
-                df, data_path, "spans", expect, verify, materialize,
-                _sig_path(signatures_root, name),
+                df, data_path, "spans", pin, verify, materialize,
+                sig_path(signatures_root, name),
                 dict(id_col=id_col, text_col=text_col,
                      span_k=span_k, span_window=span_window),
             )
             tagged = fps.select(
                 F.concat_ws(
-                    sep, F.lit(name), F.col("id").cast("string")
+                    LAKE_SEP, F.lit(name), F.col("id").cast("string")
                 ).alias("id"),
                 "fp", "pos", "len",
             )
-            entry = {"sidecar": ("materialized" if materialized
-                                 else "reused")}
-            m = content_marker(params)
-            if m is not None:
-                entry["marker"] = m
-            return entry, tagged, params
+            return sidecar_entry(materialized, params), (tagged,)
 
-        items = list(self.discover().items())
-        results: dict[str, dict] = {}
-        prepped = _pooled(items, _prep_one, max_concurrency)
-        for (name, _), (entry, _tagged, _params) in zip(items, prepped):
-            results[name] = entry
-        union = union_all(t for _e, t, _p in prepped)
-        sidecar_params = next(
-            (p for _e, t, p in prepped if t is not None), None)
-        df_path = posixpath.join(rep_base, "_df")
-        contrib_path = posixpath.join(rep_base, "_contrib")
-        target = posixpath.join(rep_base, "_spans")
-
-        partial_unchanged = None
-        tagged_names = {n for n, e in results.items()
-                        if isinstance(e, dict) and "sidecar" in e}
-        if incremental and prior is not None:
-            # the shared night facts (sweeps.NightGate; the span sweep
-            # is unscored, so the scored freshness clauses pass
-            # vacuously on both sides). Row-count integrity (round-11
-            # review finds) verifies the spans partitions actually hold
-            # the recorded rows before either fast path trusts them —
-            # metadata-only (partition column).
-            gate = NightGate(self.spark, self._po, results, prior,
-                             "n_spans", target, tagged_names)
-            prior_had_spans = (prior.get("_lake") or {}).get(
-                "n_spans", 0) > 0
-            # require the row counts only when the prior produced spans
-            # (a clean lake legitimately has no table)
-            if gate.all_fresh(require_counts=prior_had_spans):
-                # ALL-FRESH: the prior report is provably current —
-                # skip the lake-global union/df/run-grouping jobs
-                extra = {"_artifacts": prior.get("_artifacts")}
-                if prior.get("_state") is not None:
-                    extra["_state"] = prior["_state"]
-                return fresh_summary(
-                    self._po, rep_base, results, prior,
-                    "lake unchanged since last sweep — report reused",
-                    {"n_spans": 0, "n_docs": 0, "chars_flagged": 0},
-                    config, extra,
-                )
-            # PARTIAL-night preconditions (round 10): some datasets
-            # provably unchanged, and the df/contrib artifacts from the
-            # prior sweep present AND token-matched with the summary —
-            # a crash between artifact writes must degrade to a full
-            # rebuild, never to a double-adjusted df
-            unchanged = gate.unchanged
-            if prior_had_spans:
-                # the partial night carries unchanged datasets' SPANS
-                # verbatim for non-re-evaluated docs — demote any
-                # dataset whose partition lost rows (its docs
-                # re-evaluate through the full span pass); changed
-                # datasets' prior spans are never consumed (the df
-                # adjusts from _contrib), so no whole-night kill here
-                unchanged &= gate.intact
-
-            def _bytes_ok() -> bool:
-                # artifact-bytes integrity (round-11 review class):
-                # the token proves the commit completed, not that
-                # every part-file survived since — a lost _df/_contrib
-                # file would yield a silently wrong Δ. The _state byte
-                # totals recorded at commit give a zero-job listing
-                # check; priors without _state (pre-round-11) skip it.
-                # Called LAST in the and-chain so the common
-                # no-partial night never pays the two listings.
-                st = prior.get("_state") or {}
-                return all(
-                    key not in st
-                    or int(st[key]) == sum(
-                        sz for _, sz in self._po.list_files(path))
-                    for key, path in (("df_bytes", df_path),
-                                      ("contrib_bytes", contrib_path)))
-
-            tok = prior.get("_artifacts")
-            if (unchanged
-                    and tok is not None
-                    and read_token(self._po, df_path) == tok
-                    and read_token(self._po, contrib_path) == tok
-                    and (not prior_had_spans
-                         or self._po.is_dir(target))
-                    and _bytes_ok()):
-                partial_unchanged = sorted(unchanged)
-        lake_stats = {"n_spans": 0, "n_docs": 0, "chars_flagged": 0}
-        sweep_mode = "full"
-        new_token = None
-        swap_stage = None
-        if union is not None:
-            import uuid as _uuid
-
-            kk = int(sidecar_params["k"])
-            ww = int(sidecar_params["window"])
-            pos = union.select(
-                "id", F.col("len").alias("__len"), "fp", "pos")
+        def _ds_of(c):
             # names cannot contain the separator, so the FIRST field
             # is always the dataset
-            def _ds_of(c):
-                return F.split_part(c, F.lit(sep), F.lit(1))
+            return F.split_part(c, F.lit(LAKE_SEP), F.lit(1))
 
-            from pydala_spark.operators.dedup import span_runs
+        def _verdicts() -> tuple:
+            nonlocal token, swap_stage
+            (union,) = night.union
+            pos = union.select(
+                "id", F.col("len").alias("__len"), "fp", "pos")
+            gate, prior = night.gate, night.prior
+            spans, mode = None, "full"
+            if gate is not None:
+                # PARTIAL-night preconditions: some datasets provably
+                # unchanged, and the df/contrib artifacts present AND
+                # token-matched with the summary — a crash between
+                # artifact writes must degrade to a full rebuild, never
+                # to a double-adjusted df
+                prior_had_spans = (prior.get("_lake") or {}).get(
+                    "n_spans", 0) > 0
+                unchanged = gate.unchanged
+                if prior_had_spans:
+                    # unchanged datasets' SPANS carry verbatim for
+                    # non-re-evaluated docs — demote any dataset whose
+                    # partition lost rows; changed datasets' prior
+                    # spans are never consumed (the df adjusts from
+                    # _contrib)
+                    unchanged &= gate.intact
 
-            spans = None
-            if partial_unchanged is not None:
-                # PARTIAL night (round 10; relocated verbatim to
-                # sweeps.span_partial_night in round 13); spans=None
-                # means a guard refused and the FULL sweep runs below
-                spans, sweep_mode, new_token, swap_stage = (
-                    span_partial_night(
+                def _bytes_ok() -> bool:
+                    # the token proves the commit completed, not that
+                    # every part-file survived since — a lost file
+                    # would yield a silently wrong Δ. The _state byte
+                    # totals give a zero-job listing check; called LAST
+                    # so the common no-partial night never lists
+                    st = prior.get("_state") or {}
+                    return all(
+                        key not in st
+                        or int(st[key]) == sum(
+                            sz for _, sz in self._po.list_files(path))
+                        for key, path in (("df_bytes", df_path),
+                                          ("contrib_bytes", contrib_path)))
+
+                tok = prior.get("_artifacts")
+                if (unchanged
+                        and tok is not None
+                        and read_token(self._po, df_path) == tok
+                        and read_token(self._po, contrib_path) == tok
+                        and (not prior_had_spans
+                             or self._po.is_dir(target))
+                        and _bytes_ok()):
+                    # spans=None means a guard refused: full sweep below
+                    spans, mode, token, swap_stage = span_partial_night(
                         self.spark, self._po,
-                        pos=pos, sep=sep,
-                        tagged_names=tagged_names,
-                        partial_unchanged=partial_unchanged,
+                        pos=pos,
+                        tagged_names=night.tagged,
+                        partial_unchanged=sorted(unchanged),
                         prior_counted=gate.prior_counted,
                         prior_token=tok,
                         df_path=df_path, contrib_path=contrib_path,
                         target=target, min_df=min_df,
-                        kk=kk, ww=ww, min_span=min_span,
+                        kk=span_k, ww=span_window, min_span=min_span,
                     )
-                )
-            if spans is None:
-                # FULL global sweep
-                if incremental:
-                    # persist the artifacts the next partial night
-                    # adjusts: per-dataset contributions + the lake df
-                    # table (df = Σ contributions — exact, because
-                    # lake-qualified ids are dataset-disjoint). Derived
-                    # from written parquet, so nothing computes twice.
-                    new_token = _uuid.uuid4().hex
-                    contrib = (pos.select(
-                        _ds_of(F.col("id")).alias("dataset"),
-                        "fp", "id")
-                        .groupBy("dataset", "fp")
-                        .agg(F.count_distinct("id").alias("n")))
-                    contrib.write.mode("overwrite").partitionBy(
-                        "dataset").parquet(contrib_path)
-                    (self.spark.read.parquet(contrib_path)
-                     .groupBy("fp").agg(F.sum("n").alias("df"))
-                     .write.mode("overwrite").parquet(df_path))
-                    dup = (self.spark.read.parquet(df_path)
-                           .where(F.col("df") >= min_df).select("fp"))
-                    spans = span_runs(
-                        pos.join(dup, "fp"), kk, ww, min_span,
-                    ).localCheckpoint(eager=True)
-                else:
-                    # spans output is tiny (flagged ranges only) — the
-                    # eager cut means the heavy df-count pipeline runs
-                    # ONCE for the emptiness probe, write and stats
-                    spans = duplicate_spans(
-                        union, "id", min_span=min_span, min_df=min_df,
-                        fingerprints=union, params=sidecar_params,
-                    ).localCheckpoint(eager=True)
-        if union is not None and not spans.isEmpty():
-            # names cannot contain the separator, so the FIRST field is
-            # always the dataset; the doc id is everything after it
-            # (substring, not split_part — a doc id may contain any char)
-            ds_col = F.split_part(F.col("id"), F.lit(sep), F.lit(1))
+            if spans is None and incremental:
+                # persist the artifacts the next partial night adjusts:
+                # per-dataset contributions + the lake df table (df = Σ
+                # contributions — exact, because lake-qualified ids are
+                # dataset-disjoint). Derived from written parquet, so
+                # nothing computes twice.
+                token = _uuid.uuid4().hex
+                (pos.select(_ds_of(F.col("id")).alias("dataset"),
+                            "fp", "id")
+                 .groupBy("dataset", "fp")
+                 .agg(F.count_distinct("id").alias("n"))
+                 .write.mode("overwrite").partitionBy("dataset")
+                 .parquet(contrib_path))
+                (self.spark.read.parquet(contrib_path)
+                 .groupBy("fp").agg(F.sum("n").alias("df"))
+                 .write.mode("overwrite").parquet(df_path))
+                dup = (self.spark.read.parquet(df_path)
+                       .where(F.col("df") >= min_df).select("fp"))
+                spans = span_runs(
+                    pos.join(dup, "fp"), span_k, span_window, min_span,
+                ).localCheckpoint(eager=True)
+            elif spans is None:
+                # spans output is tiny (flagged ranges only) — the
+                # eager cut means the heavy df-count pipeline runs
+                # ONCE for the emptiness probe, write and stats
+                spans = duplicate_spans(
+                    union, "id", k=span_k, window=span_window,
+                    min_span=min_span, min_df=min_df,
+                    fingerprints=union,
+                ).localCheckpoint(eager=True)
+            if spans.isEmpty():
+                # ZERO spans: a prior table must GO in every mode (a
+                # stale table after an empty FULL sweep would be
+                # resurrected by a later partial night's carry-over,
+                # and any reader would disagree with the zero counts)
+                if self._po.is_dir(target):
+                    self._po.delete(target)
+                return None, mode
+            # the doc id is everything after the dataset (substring,
+            # not split_part — a doc id may contain any char)
+            ds_col = _ds_of(F.col("id"))
             doc = F.col("id").substr(
                 F.length(ds_col) + F.lit(2), F.length(F.col("id")))
-            out_rows = spans.select(
+            return spans.select(
                 ds_col.alias("dataset"), doc.alias("id"),
                 "span_start", "span_end",
-            )
-            # partial: the carried rows were READ from the table this
-            # replaces — commit_verdicts stages + swaps
-            written = commit_verdicts(
-                self.spark, self._po, out_rows, target,
-                staged=sweep_mode == "partial")
-            update_report_entries(
-                results, written, target,
-                [F.count("*").alias("n"),
-                 F.count_distinct("id").alias("nd"),
-                 F.sum(F.col("span_end") - F.col("span_start")
-                       + F.lit(1)).alias("ch")],
-                {"n_spans": "n", "n_docs": "nd", "chars_flagged": "ch"})
-            tot = written.agg(
-                F.count("*").alias("n"),
-                F.count_distinct("id").alias("nd"),
-                F.sum(F.col("span_end") - F.col("span_start")
-                      + F.lit(1)).alias("ch"),
-            ).collect()[0]
-            lake_stats = {"n_spans": int(tot["n"] or 0),
-                          "n_docs": int(tot["nd"] or 0),
-                          "chars_flagged": int(tot["ch"] or 0)}
-        elif union is not None and self._po.is_dir(target):
-            # the sweep produced ZERO spans but a prior table exists —
-            # it must GO in every mode (a stale table after an empty
-            # FULL sweep would be resurrected verbatim by a later
-            # partial night's carry-over, breaking full-sweep
-            # equivalence; and any consumer reading it would disagree
-            # with the summary's zero counts)
-            self._po.delete(target)
-        if union is not None and incremental and new_token is not None:
+            ), mode
+
+        def _finish() -> dict:
+            if night.mode == "fresh":
+                extra = {"_artifacts": night.prior.get("_artifacts")}
+                if night.prior.get("_state") is not None:
+                    extra["_state"] = night.prior["_state"]
+                return extra
+            # datasets that swept but flagged no spans (the clean-lake
+            # case too) still get the zero counts a cron expects
+            for name in night.tagged:
+                if "n_spans" not in night.results[name]:
+                    night.results[name].update(
+                        n_spans=0, n_docs=0, chars_flagged=0)
+            if token is None:
+                return {}
             # commit the df/contrib artifacts AFTER the spans table:
-            # the summary (written below, last) carries the token that
-            # blesses them; any crash in between reads as a mismatch
-            # and the next night rebuilds full
+            # the summary (sealed last) carries the token that blesses
+            # them; any crash in between reads as a mismatch and the
+            # next night rebuilds full
             if swap_stage is not None:
                 self._po.commit_stage(df_path, swap_stage)
-            write_token(self._po, df_path, new_token)
-            write_token(self._po, contrib_path, new_token)
-            results["_artifacts"] = new_token
-            # lifecycle reporting (VERDICT r10 #3): the persisted
-            # partial-state footprint, so a cron reader sees growth
-            # without listing the report dir. Vacuum story: these are
+            write_token(self._po, df_path, token)
+            write_token(self._po, contrib_path, token)
+            # the persisted partial-state footprint, so a cron reader
+            # sees growth without listing the report dir. These are
             # pure caches — delete them (or the token) and the next
             # night regenerates from a full sweep.
-            results["_state"] = {
+            return {"_artifacts": token, "_state": {
                 "df_bytes": sum(
                     sz for _, sz in self._po.list_files(df_path)),
                 "contrib_bytes": sum(
                     sz for _, sz in self._po.list_files(contrib_path)),
-            }
-        # datasets that swept but produced no spans (including the
-        # clean-lake case) still get the zero counts a cron expects
-        for name in results:
-            if "sidecar" in results[name] and "n_spans" not in results[name]:
-                results[name].update(
-                    {"n_spans": 0, "n_docs": 0, "chars_flagged": 0})
-        # _config seeds the NEXT sweep's all-fresh fast-path decision
-        return seal_summary(
-            self._po, rep_base, results,
-            _lake=lake_stats, _sweep_mode=sweep_mode, _config=config,
+            }}
+
+        return night.run_global(
+            _prep_one, _verdicts,
+            counts={"n_spans": F.count("*"),
+                    "n_docs": F.count_distinct("id"),
+                    "chars_flagged": F.sum(
+                        F.col("span_end") - F.col("span_start")
+                        + F.lit(1))},
+            target=target,
+            fresh_msg="lake unchanged since last sweep — report reused",
+            expect={"_config": config}, incremental=incremental,
+            max_concurrency=max_concurrency, finish=_finish,
         )
 
     def signatures_report(
@@ -1195,51 +926,42 @@ class LakeSweepsMixin:
         )
 
         kinds = ("winnowing", "minhash", "spans", "embedding_cells")
-        sig_root = (strip_scheme(signatures_root).rstrip("/")
-                    if signatures_root else None)
-        results: dict[str, dict] = {}
-        for name, base in self.discover().items():
-            current = posixpath.join(base, "current")
-            data_path = current if self._po.is_dir(current) else base
-            sp = posixpath.join(sig_root, name) if sig_root else None
+
+        def _report_one(name: str, base: str) -> tuple:
+            data_path = self._data_path(base)
+            sp = sig_path(signatures_root, name)
             sig_base = posixpath.join(sp or data_path, SIGNATURES_DIR)
             entry: dict = {"sidecars": {}}
-            try:
-                df = None
-                for kind in kinds:
-                    pj = posixpath.join(sig_base, kind, "_params.json")
-                    if not self._po.exists(pj):
-                        continue
-                    params = _json.loads(self._po.read_text(pj))
-                    info: dict = {
-                        "params": {k: v for k, v in params.items()
-                                   if not k.startswith("content_")},
-                        "marker": (
-                            {"rows": params["content_rows"],
-                             "xor": params["content_xor"]}
-                            if "content_rows" in params
-                            else None  # predates markers: re-materialize
-                        ),
-                    }
-                    if verify:
-                        if df is None:
-                            fmt = self._dataset_format(base)
-                            df = Dataset(self.spark, data_path,
-                                         name=name, format=fmt).load()
-                        try:
-                            read_signatures(
-                                self.spark, data_path, kind,
-                                verify_against=df, signatures_path=sp,
-                            )
-                            info["fresh"] = True
-                        except Exception as exc:
-                            info["fresh"] = False
-                            info["stale_reason"] = str(exc)[:300]
-                    entry["sidecars"][kind] = info
-            except Exception as exc:  # one bad dataset must not kill it
-                entry["error"] = f"{type(exc).__name__}: {exc}"[:500]
-            results[name] = entry
-        return results
+            df = None
+            for kind in kinds:
+                pj = posixpath.join(sig_base, kind, "_params.json")
+                if not self._po.exists(pj):
+                    continue
+                params = _json.loads(self._po.read_text(pj))
+                info: dict = {
+                    "params": {k: v for k, v in params.items()
+                               if not k.startswith("content_")},
+                    # None: predates markers, re-materialize
+                    "marker": content_marker(params),
+                }
+                if verify:
+                    if df is None:
+                        df = Dataset(
+                            self.spark, data_path, name=name,
+                            format=self._dataset_format(base)).load()
+                    try:
+                        read_signatures(
+                            self.spark, data_path, kind,
+                            verify_against=df, signatures_path=sp,
+                        )
+                        info["fresh"] = True
+                    except Exception as exc:
+                        info["fresh"] = False
+                        info["stale_reason"] = str(exc)[:300]
+                entry["sidecars"][kind] = info
+            return entry, None
+
+        return SweepNight(self).run(_report_one)
 
     def prep_sweep(
         self,
@@ -1373,6 +1095,8 @@ class LakeSweepsMixin:
         import inspect
         import json as _json
 
+        from pydala_spark.dataset.maintain import materialize_signatures
+        from pydala_spark.operators.ann import codebook_sha, load_codebook
         from pydala_spark.operators.pipeline import prep_documents
 
         allowed = set(inspect.signature(prep_documents).parameters) - {
@@ -1386,6 +1110,7 @@ class LakeSweepsMixin:
                 f"prep_sweep: unknown prep_documents knob(s) {bad} — "
                 f"valid: {sorted(allowed)}"
             )
+        night = SweepNight(self, report_dir, "_prep")
         overrides = {k: dict(v) for k, v in (overrides or {}).items()}
         if overrides:
             # override hygiene fails the whole sweep up front, same as
@@ -1393,7 +1118,7 @@ class LakeSweepsMixin:
             # is a typo'd cron table, and an unknown knob inside an
             # override would otherwise surface as a per-dataset error
             # every night
-            known = set(self.discover())
+            known = {name for name, _ in night.items}
             bad_ds = sorted(set(overrides) - known)
             if bad_ds:
                 raise ConfigError(
@@ -1409,15 +1134,8 @@ class LakeSweepsMixin:
                         f"{sorted(allowed)}"
                     )
         cb = None
-        cb_sha = None
         if codebook_path is not None:
-            from pydala_spark.operators.ann import (
-                codebook_sha as _cb_sha,
-                load_codebook,
-            )
-
             cb = load_codebook(self.spark, strip_scheme(codebook_path))
-            cb_sha = _cb_sha(cb)
             prep_kwargs.setdefault("semantic_centroids", cb)
         text_kinds = {"minhash", "winnowing", "spans"}
         read_kinds = text_kinds | (
@@ -1438,11 +1156,21 @@ class LakeSweepsMixin:
                 f"— valid: {sorted(text_kinds)} (cells for the cleaned "
                 "lake belong to a semantic_dedup sweep over it)"
             )
-        # the sidecars' recorded hashing params must be the ones each
-        # dataset's EFFECTIVE prep knobs imply — same pinning map as
-        # the pipeline CLI (cli.py _expect_map). A per-pkw derivation
-        # because overrides can move the hashing knobs per dataset.
+        if "embedding_cells" in signatures and not (
+                prep_kwargs.get("vec_col")
+                or any(ov.get("vec_col") for ov in overrides.values())):
+            raise ConfigError(
+                "prep_sweep: signatures=('embedding_cells',) requires "
+                "the vec_col prep knob (base config or a per-dataset "
+                "override) — the cells block the embedding column the "
+                "semantic stage reads"
+            )
+
         def _derived(pkw: dict) -> tuple:
+            # the sidecars' recorded hashing params must be the ones
+            # each dataset's EFFECTIVE prep knobs imply — same pinning
+            # map as the pipeline CLI (cli.py _expect_map); per pkw
+            # because overrides can move the hashing knobs per dataset
             sh_mode = pkw.get("near_dup_shingle_mode", "word")
             eff_shingle = (pkw.get("near_dup_shingle_size")
                            or (7 if sh_mode == "char" else 3))
@@ -1451,14 +1179,8 @@ class LakeSweepsMixin:
             # (and materialize) cells under THAT codebook's sha, or the
             # sha refusal would error that dataset every night
             eff_cb = pkw.get("semantic_centroids")
-            if eff_cb is not None:
-                from pydala_spark.operators.ann import (
-                    codebook_sha as _cd_sha,
-                )
-
-                eff_sha = _cd_sha(eff_cb)
-            else:
-                eff_sha = cb_sha
+            if eff_cb is None:
+                eff_cb = cb
             sig_expect = {
                 "minhash": {
                     "id_col": id_col, "text_col": text_col,
@@ -1479,7 +1201,8 @@ class LakeSweepsMixin:
                 "embedding_cells": {
                     "id_col": id_col,
                     "vec_col": pkw.get("vec_col"),
-                    "codebook_sha": eff_sha,
+                    "codebook_sha": (codebook_sha(eff_cb)
+                                     if eff_cb is not None else None),
                 },
             }
             # an embedding-reading config (semantic stage, embedding
@@ -1492,9 +1215,7 @@ class LakeSweepsMixin:
                 or pkw.get("decontaminate_mode") == "embedding"
             ) else None
             # the one hashing-kwargs bundle every materialize call in
-            # this sweep passes (round-13 dedup of three verbatim
-            # copies) — id_col/text_col ride along since every site
-            # passed those too
+            # this sweep passes
             hash_kw = dict(
                 id_col=id_col, text_col=text_col,
                 n_hashes=sig_expect["minhash"]["n_hashes"],
@@ -1506,283 +1227,225 @@ class LakeSweepsMixin:
                 span_k=sig_expect["spans"]["k"],
                 span_window=sig_expect["spans"]["window"],
             )
-            return sh_mode, eff_shingle, sig_expect, vec_needed, hash_kw
+            return sig_expect, vec_needed, hash_kw
 
-        if "embedding_cells" in signatures and not (
-                prep_kwargs.get("vec_col")
-                or any(ov.get("vec_col") for ov in overrides.values())):
-            raise ConfigError(
-                "prep_sweep: signatures=('embedding_cells',) requires "
-                "the vec_col prep knob (base config or a per-dataset "
-                "override) — the cells block the embedding column the "
-                "semantic stage reads"
-            )
-
-        def _canon_cfg(d: dict) -> dict:
-            # canonical, JSON-stable echo of a per-dataset override:
-            # numpy codebooks stringify SUMMARIZED at real sizes, so
-            # record the sha (the identity that matters) — the same
-            # hole the base-config echo closes below
+        def _canon(d: dict) -> dict:
+            # canonical, JSON-stable echo of a config: numpy codebooks
+            # stringify SUMMARIZED ("...") at real sizes, so two
+            # different codebooks could echo identically and wrongly
+            # satisfy the incremental config match — record the sha,
+            # the identity that matters (a codebook_path load and a
+            # directly-passed array alike)
             out = dict(sorted(d.items()))
             if out.get("semantic_centroids") is not None:
-                from pydala_spark.operators.ann import (
-                    codebook_sha as _co_sha,
-                )
-
                 out["semantic_centroids"] = (
-                    f"codebook:{_co_sha(out['semantic_centroids'])}")
+                    f"codebook:{codebook_sha(out['semantic_centroids'])}")
             return _json.loads(_json.dumps(out, default=str))
+
         dest_base = strip_scheme(dest_root).rstrip("/")
-        rep_base = rep_base_for(self.root, report_dir, "_prep")
-        config = {
-            "dest_root": dest_base, "id_col": id_col,
-            "text_col": text_col, "dest_format": dest_format,
-            "mode": mode, "benchmark": benchmark is not None,
-            **{k: v for k, v in sorted(prep_kwargs.items())},
+        # cleaning config or benchmark moved — yesterday's copies
+        # answered a different question
+        expect = {
+            "_config": _canon({
+                "dest_root": dest_base, "id_col": id_col,
+                "text_col": text_col, "dest_format": dest_format,
+                "mode": mode, "benchmark": benchmark is not None,
+                **prep_kwargs,
+            }),
+            "_benchmark": (
+                frame_marker(benchmark, id_col, F.octet_length(text_col))
+                if (incremental and benchmark is not None) else None),
         }
-        if prep_kwargs.get("semantic_centroids") is not None:
-            # a numpy codebook stringifies SUMMARIZED ("...") at real
-            # sizes, so two different codebooks could echo identically
-            # and wrongly satisfy the incremental config match — record
-            # the sha, which is exactly the identity that matters.
-            # Covers BOTH the codebook_path load and a directly-passed
-            # array (the same hole either way).
-            from pydala_spark.operators.ann import (
-                codebook_sha as _cc_sha,
-            )
 
-            config["semantic_centroids"] = (
-                f"codebook:{_cc_sha(prep_kwargs['semantic_centroids'])}"
-            )
-        bench_marker = (
-            _frame_marker(benchmark, id_col, F.octet_length(text_col))
-            if (incremental and benchmark is not None) else None
-        )
-        prior = None
-        if incremental:
-            # cleaning config or benchmark moved — yesterday's copies
-            # answered a different question (sweeps module; the config
-            # canonicalizes through JSON because codebook values
-            # stringify, and the prior side is already parsed JSON)
-            prior = load_prior_summary(
-                self._po, rep_base,
-                {"_config": _json.loads(
-                    _json.dumps(config, default=str)),
-                 "_benchmark": bench_marker})
-
-        def _prep_one(name: str, base: str) -> dict:
+        def _prep_one(name: str, base: str) -> tuple:
             ov = overrides.get(name) or {}
             pkw = {**prep_kwargs, **ov}
-            canon_over = _canon_cfg(ov)
-            _sh, _esh, sig_expect, vec_needed, hash_kw = _derived(pkw)
-            try:
-                df, data_path = self._swept_frame(
-                    name, base, (id_col, text_col))
-                if vec_needed and vec_needed not in df.columns:
-                    return {"skipped": f"no ({vec_needed}) column — "
-                            "config reads embeddings"}
-                marker = None
-                if incremental:
-                    marker = _frame_marker(
-                        df, id_col, F.octet_length(text_col))
-                    pe = (prior or {}).get(name)
-                    if (isinstance(pe, dict)
-                            and pe.get("marker") == marker
-                            and "n_out" in pe
-                            # a changed per-dataset override must
-                            # invalidate exactly this dataset (the
-                            # base config compares sweep-wide above)
-                            and (pe.get("config") or {}) == canon_over
-                            # the cleaned copy must still EXIST
-                            # (ADVICE r9): an out-of-band deletion of
-                            # the training copies would otherwise be
-                            # reported "fresh" with a dest pointing at
-                            # nothing until the marker moved
-                            and self._po.is_dir(pe.get("dest", ""))):
-                        # corpus unchanged since the recorded sweep,
-                        # same config + benchmark — yesterday's cleaned
-                        # copy IS today's answer. If this run asks for
-                        # output signatures the prior didn't record,
-                        # sign the KEPT copy (no re-clean needed).
-                        entry = {**pe, "fresh": "unchanged since last "
-                                 "sweep — cleaned copy kept"}
-                        want = sorted(sign_outputs)
-                        if want and pe.get("signed") != want:
-                            from pydala_spark.dataset.maintain import (
-                                materialize_signatures,
-                            )
-
-                            materialize_signatures(
-                                self.spark,
-                                self.spark.read.format(dest_format)
-                                .load(pe["dest"]),
-                                pe["dest"],
-                                kinds=tuple(sign_outputs), **hash_kw,
-                            )
-                            entry["signed"] = want
-                        return entry
-                sidecar_status: dict = {}
-                extra: dict = {}
-                for kind in signatures:
-                    # cells-skip gate (ADVICE r10): skip only when the
-                    # EFFECTIVE config actually removed the embedding
-                    # column (a text-only override), not merely because
-                    # no stage tonight consumes it — base configs with
-                    # vec_col set but semantic_dedup off legitimately
-                    # materialize cells for a later semantic_dedup
-                    # sweep over the sources.
-                    if kind == "embedding_cells" and not pkw.get(
-                            "vec_col"):
-                        sidecar_status[kind] = (
-                            "skipped (no vec_col in effective config)")
-                        continue
-                    if (kind == "embedding_cells"
-                            and vec_needed is None
-                            and pkw["vec_col"] not in df.columns):
-                        # with a semantic stage on, a missing column
-                        # already skipped the whole dataset above; with
-                        # it off, only the cells sidecar is impossible
-                        # — record why instead of erroring nightly
-                        sidecar_status[kind] = (
-                            f"skipped (no ({pkw['vec_col']}) column)")
-                        continue
-                    mat_kw = dict(hash_kw)
-                    if kind == "embedding_cells":
-                        import numpy as _np
-
-                        eff_cb = pkw.get("semantic_centroids")
-                        mat_kw.update(
-                            # the EFFECTIVE codebook — an override
-                            # may have swapped it for this dataset,
-                            # and the cells must pin to the one the
-                            # semantic stage will actually assign
-                            centroids=(
-                                _np.asarray(eff_cb)
-                                if eff_cb is not None else cb),
-                            vec_col=pkw["vec_col"],
+            canon_over = _canon(ov)
+            sig_expect, vec_needed, hash_kw = _derived(pkw)
+            df, data_path = self._swept_frame(
+                name, base, (id_col, text_col))
+            if vec_needed and vec_needed not in df.columns:
+                raise SkipSweep(
+                    f"no ({vec_needed}) column — config reads embeddings")
+            marker = None
+            if incremental:
+                marker = frame_marker(
+                    df, id_col, F.octet_length(text_col))
+                pe = (night.prior or {}).get(name)
+                if (isinstance(pe, dict)
+                        and pe.get("marker") == marker
+                        and "n_out" in pe
+                        # a changed per-dataset override must
+                        # invalidate exactly this dataset (the base
+                        # config compares sweep-wide)
+                        and (pe.get("config") or {}) == canon_over
+                        # the cleaned copy must still EXIST: an
+                        # out-of-band deletion of the training copies
+                        # would otherwise be reported "fresh" with a
+                        # dest pointing at nothing
+                        and self._po.is_dir(pe.get("dest", ""))):
+                    # corpus unchanged since the recorded sweep, same
+                    # config + benchmark — yesterday's cleaned copy IS
+                    # today's answer. If this run asks for output
+                    # signatures the prior didn't record, sign the KEPT
+                    # copy (no re-clean needed).
+                    entry = {**pe, "fresh": "unchanged since last "
+                             "sweep — cleaned copy kept"}
+                    want = sorted(sign_outputs)
+                    if want and pe.get("signed") != want:
+                        materialize_signatures(
+                            self.spark,
+                            self.spark.read.format(dest_format)
+                            .load(pe["dest"]),
+                            pe["dest"],
+                            kinds=tuple(sign_outputs), **hash_kw,
                         )
-                    frame, _params, materialized = self._sidecar_frame(
-                        df, data_path, kind, sig_expect[kind], verify,
-                        materialize, _sig_path(signatures_root, name),
-                        mat_kw,
-                    )
+                        entry["signed"] = want
+                    return entry, None
+            sidecar_status: dict = {}
+            extra: dict = {}
+            for kind in signatures:
+                # cells-skip gate: skip only when the EFFECTIVE config
+                # actually removed the embedding column (a text-only
+                # override), not merely because no stage tonight
+                # consumes it — base configs with vec_col set but
+                # semantic_dedup off legitimately materialize cells for
+                # a later semantic_dedup sweep over the sources.
+                if kind == "embedding_cells" and not pkw.get("vec_col"):
                     sidecar_status[kind] = (
-                        "materialized" if materialized else "reused")
-                    if kind == "minhash":
-                        extra["precomputed_minhash"] = frame
-                    elif kind == "spans":
-                        # (frame, params): the recorded k/window drive
-                        # the span-boundary math inside prep_documents
-                        extra["precomputed_spans"] = (frame, _params)
-                    elif kind == "embedding_cells":
-                        # (frame, params): the recorded codebook_sha
-                        # refuses cells from a retrained codebook.
-                        # Fed to the pipeline only when a semantic
-                        # stage consumes it — prep_documents refuses
-                        # precomputed_cells without semantic_dedup
-                        # (pipeline.py), and the vec_col-without-
-                        # semantic shape materializes cells purely as
-                        # a sidecar for a later sweep
-                        if vec_needed is not None:
-                            extra["precomputed_cells"] = (frame, _params)
-                    else:
-                        extra["precomputed_fps"] = frame
-                stages: dict = {} if stage_counts else None
-                out = prep_documents(
-                    df, id_col=id_col, text_col=text_col,
-                    benchmark=benchmark, stage_frames=stages,
-                    **extra, **pkw,
+                        "skipped (no vec_col in effective config)")
+                    continue
+                if (kind == "embedding_cells"
+                        and vec_needed is None
+                        and pkw["vec_col"] not in df.columns):
+                    # with a semantic stage on, a missing column
+                    # already skipped the whole dataset above; with it
+                    # off, only the cells sidecar is impossible —
+                    # record why instead of erroring nightly
+                    sidecar_status[kind] = (
+                        f"skipped (no ({pkw['vec_col']}) column)")
+                    continue
+                mat_kw = dict(hash_kw)
+                if kind == "embedding_cells":
+                    import numpy as _np
+
+                    eff_cb = pkw.get("semantic_centroids")
+                    mat_kw.update(
+                        # the EFFECTIVE codebook — an override may have
+                        # swapped it for this dataset, and the cells
+                        # must pin to the one the semantic stage will
+                        # actually assign
+                        centroids=(
+                            _np.asarray(eff_cb)
+                            if eff_cb is not None else cb),
+                        vec_col=pkw["vec_col"],
+                    )
+                frame, params, materialized = self._sidecar_frame(
+                    df, data_path, kind, sig_expect[kind], verify,
+                    materialize, sig_path(signatures_root, name),
+                    mat_kw,
                 )
-                dest = posixpath.join(dest_base, name)
-                # under mode="append" the post-write count below is
-                # cumulative across runs (ADVICE r9) — snapshot the
-                # pre-write count so n_out reports THIS run's output
-                # (parquet counts are cheap: footer row-counts only)
-                n_pre = 0
-                if mode == "append" and self._po.is_dir(dest):
-                    try:
-                        n_pre = (self.spark.read.format(dest_format)
-                                 .load(dest).count())
-                    except Exception:
-                        n_pre = 0
-                counts: dict = {}
-                if stage_counts:
-                    # the CLI --report economy: persist each stage just
-                    # before its count, release it once the next stage
-                    # built on top — every stage computes once and the
-                    # write reuses the last cached subtree
-                    live: list = []
-                    try:
-                        prev = None
-                        for stage, frame in stages.items():
-                            frame.persist()
-                            live.append(frame)
-                            counts[stage] = frame.count()
-                            if prev is not None:
-                                prev.unpersist()
-                                live.remove(prev)
-                            prev = frame
-                        out.write.format(dest_format).mode(mode).save(dest)
-                    finally:
-                        for frame in live:
-                            frame.unpersist()
+                sidecar_status[kind] = (
+                    "materialized" if materialized else "reused")
+                if kind == "minhash":
+                    extra["precomputed_minhash"] = frame
+                elif kind == "spans":
+                    # (frame, params): the recorded k/window drive
+                    # the span-boundary math inside prep_documents
+                    extra["precomputed_spans"] = (frame, params)
+                elif kind == "embedding_cells":
+                    # (frame, params): the recorded codebook_sha
+                    # refuses cells from a retrained codebook. Fed to
+                    # the pipeline only when a semantic stage consumes
+                    # it — prep_documents refuses precomputed_cells
+                    # without semantic_dedup, and the
+                    # vec_col-without-semantic shape materializes cells
+                    # purely as a sidecar for a later sweep
+                    if vec_needed is not None:
+                        extra["precomputed_cells"] = (frame, params)
                 else:
+                    extra["precomputed_fps"] = frame
+            stages: dict = {} if stage_counts else None
+            out = prep_documents(
+                df, id_col=id_col, text_col=text_col,
+                benchmark=benchmark, stage_frames=stages,
+                **extra, **pkw,
+            )
+            dest = posixpath.join(dest_base, name)
+            # under mode="append" the post-write count below is
+            # cumulative across runs — snapshot the pre-write count so
+            # n_out reports THIS run's output (parquet counts are
+            # cheap: footer row-counts only)
+            n_pre = 0
+            if mode == "append" and self._po.is_dir(dest):
+                try:
+                    n_pre = (self.spark.read.format(dest_format)
+                             .load(dest).count())
+                except Exception:
+                    n_pre = 0
+            counts: dict = {}
+            if stage_counts:
+                # the CLI --report economy: persist each stage just
+                # before its count, release it once the next stage
+                # built on top — every stage computes once and the
+                # write reuses the last cached subtree
+                live: list = []
+                try:
+                    prev = None
+                    for stage, frame in stages.items():
+                        frame.persist()
+                        live.append(frame)
+                        counts[stage] = frame.count()
+                        if prev is not None:
+                            prev.unpersist()
+                            live.remove(prev)
+                        prev = frame
                     out.write.format(dest_format).mode(mode).save(dest)
-                # count the WRITTEN output — re-counting the lazy plan
-                # would re-run the whole pipeline a second time
-                cleaned = self.spark.read.format(dest_format).load(dest)
-                n_total = cleaned.count()
-                n_out = n_total - n_pre
-                n_in = (
-                    counts["input"] if stage_counts and "input" in counts
-                    # the incremental marker aggregate already counted
-                    # the corpus — don't pay a second full scan for it
-                    else marker["rows"] if marker is not None
-                    else df.count()
+                finally:
+                    for frame in live:
+                        frame.unpersist()
+            else:
+                out.write.format(dest_format).mode(mode).save(dest)
+            # count the WRITTEN output — re-counting the lazy plan
+            # would re-run the whole pipeline a second time
+            cleaned = self.spark.read.format(dest_format).load(dest)
+            n_total = cleaned.count()
+            n_in = (
+                counts["input"] if stage_counts and "input" in counts
+                # the incremental marker aggregate already counted
+                # the corpus — don't pay a second full scan for it
+                else marker["rows"] if marker is not None
+                else df.count()
+            )
+            entry = {"dest": dest, "n_in": int(n_in),
+                     "n_out": int(n_total - n_pre)}
+            if mode == "append":
+                entry["n_total"] = int(n_total)
+            if ov:
+                # echo the EFFECTIVE per-dataset delta into the
+                # summary — both for the operator reading it and for
+                # the incremental compare above
+                entry["config"] = canon_over
+            if sign_outputs:
+                # the cleaned copy's ingest moment: hash the POST-clean
+                # text once so every later sweep over the training
+                # copies starts sidecar-served
+                materialize_signatures(
+                    self.spark, cleaned, dest,
+                    kinds=tuple(sign_outputs), **hash_kw,
                 )
-                entry = {"dest": dest, "n_in": int(n_in),
-                         "n_out": int(n_out)}
-                if mode == "append":
-                    entry["n_total"] = int(n_total)
-                if ov:
-                    # echo the EFFECTIVE per-dataset delta into the
-                    # summary — both for the operator reading it and
-                    # for the incremental compare above
-                    entry["config"] = canon_over
-                if sign_outputs:
-                    # the cleaned copy's ingest moment: hash the
-                    # POST-clean text once so every later sweep over
-                    # the training copies starts sidecar-served
-                    from pydala_spark.dataset.maintain import (
-                        materialize_signatures,
-                    )
+                entry["signed"] = sorted(sign_outputs)
+            if stage_counts:
+                entry["stages"] = counts
+            if sidecar_status:
+                entry["sidecars"] = sidecar_status
+            if marker is not None:
+                entry["marker"] = marker
+            return entry, None
 
-                    materialize_signatures(
-                        self.spark, cleaned, dest,
-                        kinds=tuple(sign_outputs), **hash_kw,
-                    )
-                    entry["signed"] = sorted(sign_outputs)
-                if stage_counts:
-                    entry["stages"] = counts
-                if sidecar_status:
-                    entry["sidecars"] = sidecar_status
-                if marker is not None:
-                    entry["marker"] = marker
-                return entry
-            except _SkipSweep as sk:
-                return {"skipped": str(sk)}
-            except Exception as exc:  # one bad dataset must not kill it
-                return {"error": f"{type(exc).__name__}: {exc}"[:500]}
-
-        items = list(self.discover().items())
-        results = dict(zip(
-            (name for name, _ in items),
-            _pooled(items, _prep_one, max_concurrency),
-        ))
-        return seal_summary(
-            self._po, rep_base, results,
-            _config=config, _benchmark=bench_marker,
-        )
+        return night.run(_prep_one, expect=expect,
+                         incremental=incremental,
+                         max_concurrency=max_concurrency)
 
     def neardup_dedup(
         self,
@@ -1899,12 +1562,11 @@ class LakeSweepsMixin:
                 f"neardup_dedup: n_bands={n_bands} must divide "
                 f"n_hashes={n_hashes}"
             )
-        expect = {
+        pin = {
             "id_col": id_col, "text_col": text_col, "n_hashes": n_hashes,
             "shingle_size": shingle_size, "seed": seed,
             "shingle_mode": shingle_mode,
         }
-        rep_base = rep_base_for(self.root, report_dir, "_neardup")
         config = {
             "n_hashes": n_hashes, "n_bands": n_bands,
             "shingle_size": shingle_size, "shingle_mode": shingle_mode,
@@ -1912,29 +1574,25 @@ class LakeSweepsMixin:
             "score_col": score_col, "id_col": id_col,
             "text_col": text_col,
         }
-        prior = None
-        if incremental:
-            # sweep knobs moved -> prior nulled: the prior verdict
-            # answered a different question (sweeps.load_prior_summary)
-            prior = load_prior_summary(
-                self._po, rep_base, {"_config": config})
-        #: \x1f (unit separator) cannot appear in a manifest dataset
-        #: name, so lake-qualified ids split back unambiguously
-        sep = "\x1f"
-        @guard_dataset(pad=2)
-        def _prep_one(name: str, base: str):
-            """-> (entry, tagged_signatures | None, scores | None) — the
+        night = SweepNight(self, report_dir, "_neardup")
+        rep_base = night.rep_base
+        #: the pairs night's outputs the next night's partial path needs
+        overcap_keys: list = []
+        n_edges = pairs_token = None
+
+        def _prep_one(name: str, base: str) -> tuple:
+            """-> (entry, (tagged signatures, scores | None)) — the
             per-dataset sidecar phase, independent across datasets (the
-            GLOBAL clustering below is not, which is why only this
-            phase rides the max_concurrency pool)."""
+            GLOBAL clustering is not, which is why only this phase
+            rides the max_concurrency pool)."""
             df, data_path = self._swept_frame(
                 name, base, (id_col, text_col))
             # absent, param-mismatched or stale sidecar pays the
             # shingle hashing ONCE inside the shared dance; every
             # later sweep reads
-            sigs, _params, materialized = self._sidecar_frame(
-                df, data_path, "minhash", expect, verify,
-                materialize, _sig_path(signatures_root, name),
+            sigs, params, materialized = self._sidecar_frame(
+                df, data_path, "minhash", pin, verify,
+                materialize, sig_path(signatures_root, name),
                 dict(id_col=id_col, text_col=text_col,
                      n_hashes=n_hashes, shingle_size=shingle_size,
                      seed=seed, shingle_mode=shingle_mode),
@@ -1947,7 +1605,7 @@ class LakeSweepsMixin:
             tagged = sigs.select(
                 F.lit(name).alias("__ds"),
                 doc.alias("__doc"),
-                F.concat_ws(sep, F.lit(name), doc).alias("__lid"),
+                F.concat_ws(LAKE_SEP, F.lit(name), doc).alias("__lid"),
                 *mh_cols,
             )
             scored = bool(score_col) and score_col in df.columns
@@ -1958,112 +1616,42 @@ class LakeSweepsMixin:
                 F.col(id_col).cast("string").alias("__doc"),
                 F.col(score_col).cast("double").alias("__score"),
             ) if scored else None
-            entry = {
-                "sidecar": "materialized" if materialized else "reused",
-                "scored": scored,
-            }
-            m = content_marker(_params)
-            if m is not None:
-                entry["marker"] = m
-            if incremental and scored:
-                # the text marker is blind to the score column —
-                # scores drive keeper selection, so a re-scored
-                # corpus with unchanged text must still break the
-                # all-fresh fast path. ONE extra narrow (id, score)
-                # aggregate, paid only when incremental is on.
-                entry["score_marker"] = _frame_marker(
-                    df, id_col, F.col(score_col).cast("double")
+            # the text marker is blind to the score column — scores
+            # drive keeper selection, so a re-scored corpus with
+            # unchanged text must still break the all-fresh fast path.
+            # ONE extra narrow (id, score) aggregate, paid only when
+            # incremental is on.
+            entry = sidecar_entry(
+                materialized, params, scored=scored,
+                score_marker=frame_marker(
+                    df, id_col, F.col(score_col).cast("double"))
+                if incremental and scored else None)
+            return entry, (tagged, sc)
+
+        def _verdicts() -> tuple:
+            nonlocal overcap_keys, n_edges, pairs_token
+            union, scores = night.union
+            # PARTIAL: prior edges between two UNCHANGED datasets are
+            # still exactly the full sweep's (an unchanged doc's band
+            # hashes cannot move), so only buckets touched by changed
+            # docs re-pair; any cap-status transition falls back to
+            # the full sweep inside the delta call. The partial path
+            # rewrites the verdict table from the union + edge set,
+            # never carrying prior verdict rows.
+            partial_ctx = None
+            if night.gate is not None:
+                partial_ctx = neardup_partial_ctx(
+                    self._po, rep_base=rep_base, prior=night.prior,
+                    unchanged=night.gate.unchanged,
+                    tagged_names=night.tagged, results=night.results,
+                    n_bands=n_bands,
                 )
-            return entry, tagged, sc
-
-        items = list(self.discover().items())
-        results: dict[str, dict] = {}
-        prepped = _pooled(items, _prep_one, max_concurrency)
-        tagged_names: set[str] = set()
-        for (name, _), (entry, tagged, _sc) in zip(items, prepped):
-            results[name] = entry
-            if tagged is not None:
-                tagged_names.add(name)
-        union = union_all(t for _e, t, _s in prepped)
-        scores = union_all(s for _e, _t, s in prepped)
-
-        #: set below when a prior edge set makes the delta path legal:
-        #: (unchanged dataset names, prior over-cap bucket keys)
-        partial_ctx = None
-        if incremental and prior is not None:
-            # the shared night facts (sweeps.NightGate): per-dataset
-            # provable freshness, the completed-prior set, and the
-            # lazily-verified row-count integrity — which here gates
-            # ONLY the all-fresh path (round-11 review find: a bare
-            # is_dir reported "fresh" over a lost PARTITION forever).
-            # The partial path needs no such check: it rewrites the
-            # verdict table from the union + edge set, never carrying
-            # prior verdict rows. The zero-output carve-out (a lake
-            # where every dataset is skipped never writes _verdicts)
-            # falls out of the empty-set equality inside all_fresh.
-            gate = NightGate(
-                self.spark, self._po, results, prior, "n_docs",
-                posixpath.join(rep_base, "_verdicts"), tagged_names)
-            if gate.all_fresh():
-                # ALL-FRESH: the prior verdict is provably current —
-                # skip the union/LSH/CC jobs and the verdict rewrite
-                extra = {
-                    "_overcap": prior.get("_overcap"),
-                    "_edges": prior.get("_edges"),
-                    "_artifacts": prior.get("_artifacts"),
-                }
-                if prior.get("_state") is not None:
-                    # carry the footprint, but judge the balloon
-                    # against TONIGHT's knob (an operator raising the
-                    # threshold must see the warning clear)
-                    st = dict(prior["_state"])
-                    st.pop("balloon_warning", None)
-                    total_docs = sum(
-                        {**prior[n], **results[n]}.get("n_docs", 0)
-                        for n in results)
-                    warn = _edge_balloon_warning(
-                        int(st.get("pairs_rows", 0)), total_docs,
-                        edge_warn_multiple)
-                    if warn:
-                        st["balloon_warning"] = warn
-                    extra["_state"] = st
-                return fresh_summary(
-                    self._po, rep_base, results, prior,
-                    "lake unchanged since last sweep — verdict reused",
-                    {"n_clusters": 0, "n_cross_dataset_clusters": 0},
-                    config, extra,
-                )
-            # PARTIAL-INCREMENTAL (round 10, VERDICT r9 #5): K of N
-            # datasets changed. Prior edges between two UNCHANGED
-            # datasets are still exactly the full sweep's (an unchanged
-            # doc's band hashes cannot move), so only buckets touched
-            # by changed docs need pairing — the delta path in
-            # lsh_candidate_pairs_delta. Legal only when the prior run
-            # persisted its edge set + over-cap keys under THIS config
-            # (config mismatch already nulled `prior` above); any
-            # cap-status transition falls back to the full sweep
-            # inside the delta call. Unchanged == provably-fresh AND
-            # contributing signatures; everything else (changed,
-            # added, removed, newly-skipped, errored) is handled by
-            # dropping its prior edges and/or re-pairing its buckets.
-            partial_ctx = neardup_partial_ctx(
-                self._po, rep_base=rep_base, prior=prior,
-                unchanged=gate.unchanged, tagged_names=tagged_names,
-                results=results, n_bands=n_bands,
-            )
-
-        lake_stats = {"n_clusters": 0, "n_cross_dataset_clusters": 0}
-        sweep_mode = "full"
-        overcap_keys: list = []
-        n_edges = None
-        new_pairs_token = None
-        if union is not None:
-            (pairs, sweep_mode, overcap_keys, n_edges,
-             new_pairs_token) = neardup_pairs_night(
+            (pairs, mode, overcap_keys, n_edges,
+             pairs_token) = neardup_pairs_night(
                 self.spark, self._po,
-                union=union, sep=sep, rep_base=rep_base,
-                prior_edges=(prior or {}).get("_edges"),
-                partial_ctx=partial_ctx, tagged_names=tagged_names,
+                union=union, rep_base=rep_base,
+                prior_edges=(night.prior or {}).get("_edges"),
+                partial_ctx=partial_ctx, tagged_names=night.tagged,
                 n_bands=n_bands, max_bucket_size=max_bucket_size,
                 incremental=incremental,
             )
@@ -2103,7 +1691,7 @@ class LakeSweepsMixin:
                 F.col("__ds").alias("rep_dataset"),
                 F.col("__doc").alias("rep_id"),
             )
-            verdict = ranked.join(
+            return ranked.join(
                 reps, ranked["cluster"] == F.col("__rcl"), "left"
             ).select(
                 F.col("__ds").alias("dataset"),
@@ -2111,69 +1699,76 @@ class LakeSweepsMixin:
                 "cluster",
                 (F.col("__rk") == 1).alias("kept"),
                 "rep_dataset", "rep_id",
-            )
-            target = posixpath.join(rep_base, "_verdicts")
-            written = commit_verdicts(
-                self.spark, self._po, verdict, target)
-            update_report_entries(
-                results, written, target,
-                [F.count("*").alias("n"),
-                 F.count_if(~F.col("kept")).alias("nd"),
-                 F.count_if(
-                     ~F.col("kept")
-                     & (F.col("rep_dataset") != F.col("dataset"))
-                 ).alias("nx")],
-                {"n_docs": "n", "n_dropped": "nd",
-                 "n_cross_dropped": "nx"})
+            ), mode
+
+        def _clusters(written) -> dict:
+            # lake-level cluster stats are not per-dataset sums
+            if written is None:
+                return {"n_clusters": 0, "n_cross_dataset_clusters": 0}
             cl = written.where(F.col("cluster").isNotNull()).groupBy(
                 "cluster").agg(
                 F.count_distinct("dataset").alias("nds")).agg(
                 F.count("*").alias("n"),
                 F.count_if(F.col("nds") > 1).alias("nx"),
             ).collect()[0]
-            lake_stats = {
-                "n_clusters": int(cl["n"] or 0),
-                "n_cross_dataset_clusters": int(cl["nx"] or 0),
-            }
-        results["_lake"] = lake_stats
-        # seed the NEXT sweep's all-fresh fast-path decision
-        results["_config"] = config
-        results["_sweep_mode"] = sweep_mode
-        if incremental:
-            # the next night's PARTIAL fast-path inputs: edge count
-            # (proves the edge set landed) + over-cap bucket keys (the
-            # cap-transition tripwire). Invalidation rule: a config or
-            # hashing-param change nulls `prior` up top, so a stale
-            # edge set can never pair under new knobs — full re-band.
-            results["_edges"] = n_edges
-            results["_overcap"] = [list(x) for x in overcap_keys]
-            # echoes _pairs/_token.json (ADVICE r10 commit-token guard)
-            results["_artifacts"] = new_pairs_token
-            # lifecycle reporting (VERDICT r10 #3): persisted edge-set
-            # footprint + a viral-night balloon tripwire. The edge set
-            # is normally orders below corpus size (pairs only within
-            # same-band buckets), but a boilerplate-heavy ingest can
-            # quadratically balloon it — warn past edge_warn_multiple
-            # × corpus docs so the operator caps buckets
-            # (max_bucket_size) or vacuums. Vacuum story: _pairs is a
-            # pure cache — delete it (or its _token.json) and the next
-            # night regenerates it from a full sweep.
-            if n_edges is not None:
-                total_docs = sum(
-                    e.get("n_docs", 0) for e in results.values()
-                    if isinstance(e, dict))
-                state: dict = {
+            return {"n_clusters": int(cl["n"] or 0),
+                    "n_cross_dataset_clusters": int(cl["nx"] or 0)}
+
+        def _finish() -> dict:
+            # the next night's PARTIAL inputs: edge count (proves the
+            # edge set landed), over-cap bucket keys (the cap-transition
+            # tripwire) and the _pairs commit token. A fresh night
+            # carries the prior's.
+            if not incremental:
+                return {}
+            prior = night.prior
+            if night.mode == "fresh":
+                extra = {k: prior.get(k)
+                         for k in ("_overcap", "_edges", "_artifacts")}
+                state = (dict(prior["_state"])
+                         if prior.get("_state") is not None else None)
+                entries = [{**prior[n], **e}
+                           for n, e in night.results.items()]
+            else:
+                extra = {"_edges": n_edges,
+                         "_overcap": [list(x) for x in overcap_keys],
+                         "_artifacts": pairs_token}
+                state = None if n_edges is None else {
                     "pairs_rows": n_edges,
                     "pairs_bytes": sum(
                         sz for _, sz in self._po.list_files(
                             posixpath.join(rep_base, "_pairs"))),
                 }
-                warn = _edge_balloon_warning(
-                    n_edges, total_docs, edge_warn_multiple)
+                entries = night.results.values()
+            if state is not None:
+                # lifecycle reporting: the persisted edge-set footprint
+                # plus a viral-night balloon tripwire, judged against
+                # TONIGHT's knob (raising it must clear the warning).
+                # _pairs is a pure cache — delete it (or its token) and
+                # the next night regenerates it from a full sweep.
+                state.pop("balloon_warning", None)
+                warn = edge_balloon_warning(
+                    int(state.get("pairs_rows", 0)),
+                    sum(e.get("n_docs", 0) for e in entries),
+                    edge_warn_multiple)
                 if warn:
                     state["balloon_warning"] = warn
-                results["_state"] = state
-        return seal_summary(self._po, rep_base, results)
+                extra["_state"] = state
+            return extra
+
+        return night.run_global(
+            _prep_one, _verdicts,
+            counts={"n_docs": F.count("*"),
+                    "n_dropped": F.count_if(~F.col("kept")),
+                    "n_cross_dropped": F.count_if(
+                        ~F.col("kept")
+                        & (F.col("rep_dataset") != F.col("dataset")))},
+            target=posixpath.join(rep_base, "_verdicts"),
+            fresh_msg="lake unchanged since last sweep — verdict reused",
+            expect={"_config": config}, incremental=incremental,
+            max_concurrency=max_concurrency, finish=_finish,
+            lake_stats=_clusters,
+        )
 
     def ann_maintain(
         self,
@@ -2257,13 +1852,9 @@ class LakeSweepsMixin:
 
             def _resolve(ref: str) -> DataFrame:
                 if ref in bases:
-                    base = bases[ref]
-                    current = posixpath.join(base, "current")
-                    data_path = (current if self._po.is_dir(current)
-                                 else base)
                     return Dataset(
-                        self.spark, data_path, name=ref,
-                        format=self._dataset_format(base),
+                        self.spark, self._data_path(bases[ref]), name=ref,
+                        format=self._dataset_format(bases[ref]),
                     ).load()
                 return self.spark.read.parquet(strip_scheme(ref))
 
@@ -2322,4 +1913,3 @@ class LakeSweepsMixin:
         except Exception as exc:  # contained like every sweep entry
             entry["error"] = f"{type(exc).__name__}: {exc}"[:500]
         return {"index": entry}
-

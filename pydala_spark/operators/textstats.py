@@ -355,13 +355,6 @@ def lang_scores(col: str | Column) -> dict[str, Column]:
     return {lang: stopword_hits(col, words) for lang, words in STOPWORDS.items()}
 
 
-def _isin_pred(words: list[str]):
-    """One-arg membership lambda for ``F.filter`` (a default-arg closure
-    would read as the (element, index) two-arg form)."""
-    lits = [F.lit(w) for w in words]
-    return lambda t: t.isin(*lits)
-
-
 def predict_lang(col: str | Column, default: str = "other") -> Column:
     """Two-stage language ID, pure column algebra (codegen-friendly,
     oracle-exact):

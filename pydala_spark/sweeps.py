@@ -1,60 +1,45 @@
-"""Shared state-machine helpers for the lake-global incremental sweeps.
+"""One sweep night for every lake sweep, and the rules it runs on.
 
-The three partial-incremental sweeps (`Datalake.neardup_dedup`,
-`Datalake.span_dedup_report`, `Datalake.semantic_dedup(cross_dataset=
-True)`) run the same three-mode night: **full** (rebuild everything),
-**fresh** (the lake is provably unchanged — reuse the prior verdict
-wholesale), or **partial** (K of N datasets changed — reuse the
-unchanged bulk, recompute the delta). Round 11 (VERDICT r10 #5)
-extracts the mode-selection rules they share so `catalog_sweeps.py` holds
-orchestration only and the invalidation logic is testable in one place:
+Every ``LakeSweepsMixin`` sweep (``pydala_spark/catalog_sweeps.py``)
+runs one night through :class:`SweepNight`, which owns every step
+the sweeps share:
 
-- :func:`load_prior_summary` — the prior-validity rule: a prior
-  summary seeds tonight's incremental decisions ONLY if every pinned
-  key (sweep config, benchmark markers, ...) matches; anything moved
-  means yesterday's verdict answered a different question, so the
-  sweep falls back to full.
-- :func:`sweep_fresh_map` — the per-dataset provable-freshness rule
-  (identical across the three sweeps modulo the completion-proof key).
-- :func:`lake_unchanged` — the all-fresh gate over that map.
+- list the lake once (``discover()``, discovery order is report order);
+- on an incremental night, load the prior ``_summary.json`` and keep it
+  only when every pinned key (``expect``: sweep config, benchmark
+  markers, the lake codebook) still matches (:func:`load_prior_summary`);
+- run the family's per-dataset function over every dataset, pooled when
+  ``max_concurrency`` allows (:func:`pooled`) and guarded: a
+  :class:`SkipSweep` becomes a ``{"skipped": reason}`` entry, any other
+  exception an ``{"error": ...}`` entry, and the sweep lives;
+- seal the summary: the per-dataset entries, the pinned keys and the
+  family's own ``_``-keys (:func:`seal_summary`).
 
-Round 12 (VERDICT r11 #3) hoists the remaining shared night
-scaffolding here so each sweep body is mode dispatch + its unique
-joins:
+A lake-global sweep (cross-dataset semantic dedup, span report, near-dup
+clusters) also hands :class:`SweepNight` the night between those steps
+(:meth:`SweepNight.run_global`): it unions the per-dataset payloads,
+builds the :class:`NightGate` freshness facts, reuses the prior verdict
+wholesale when the lake is provably unchanged (:func:`fresh_summary`),
+else lands the family's verdict table (:func:`commit_verdicts`, staged
+on a partial night), writes each dataset's counts back
+(:func:`update_report_entries`) and sums them into ``_lake``.
 
-- :class:`NightGate` — the freshness map, completed-prior set, lazy
-  row-count integrity and the ``all_fresh`` / ``unchanged`` facts,
-  computed once per incremental night.
-- :func:`fresh_summary` — the ALL-FRESH night's summary assembly
-  (prior entries carried over + tonight's sidecar facts + the
-  sweep-specific artifact echoes) and persist.
-- :func:`read_token` / :func:`write_token` — the ``_token.json``
-  commit-token protocol artifact tables ride.
-- :func:`write_summary` / :func:`content_marker` — the canonical
-  summary serialization and the sidecar marker-entry rule.
+A family supplies only its own work:
 
-Round 13 (VERDICT r12 #3) finishes the extraction — the remaining
-shared choreography (per-dataset guard, pooling, report roots, unions,
-verdict-reuse, verdict writeback + count assembly, summary sealing)
-and the three sweep-specific PARTIAL-night engines move here verbatim:
+- a per-dataset function ``(name, base) -> (entry, payload)``: the
+  summary entry, plus for a lake-global sweep a tuple of frames the
+  night unions position by position (``None`` when the dataset sits
+  the global phase out);
+- for a lake-global sweep, a verdict function returning ``(frame,
+  mode)``: its partial night when the gate makes one legal, else its
+  full night; the partial-night engines it calls live here too
+  (:func:`semantic_cross_partial`, :func:`span_partial_night`,
+  :func:`neardup_partial_ctx` + :func:`neardup_pairs_night`);
+- a ``finish`` callable returning its sweep-level ``_``-keys, run after
+  the verdicts land and before the summary is sealed.
 
-- :class:`SkipSweep` / :func:`guard_dataset` — the one-bad-dataset
-  rule (skip with reason / error entry, sweep lives).
-- :func:`pooled` / :func:`sig_path` / :func:`frame_marker` /
-  :func:`edge_balloon_warning` — the module-level helpers the sweeps
-  share.
-- :func:`rep_base_for` / :func:`union_all` / :func:`reuse_if_fresh` /
-  :func:`seal_summary` / :func:`commit_verdicts` /
-  :func:`update_report_entries` — prologue/epilogue choreography.
-- :func:`semantic_cross_partial` / :func:`span_partial_night` /
-  :func:`neardup_partial_ctx` / :func:`neardup_pairs_night` — the
-  partial-night engines, relocated with explicit inputs so each sweep
-  method body is mode dispatch + its unique joins.
-
-No behavior change at any extraction: these bodies are verbatim moves;
-the sweep-specific carve-outs (verdict-table existence, byte checks,
-size guards, demotion rules) stay at the call sites where their
-artifacts live.
+Every helper here is session-free or takes the session as an argument,
+so ``tests/test_sweeps.py`` pins the rules without Spark.
 """
 
 from __future__ import annotations
@@ -63,31 +48,153 @@ import json
 import posixpath
 
 
+#: joins a dataset name and a doc id into a lake-qualified id; the unit
+#: separator cannot appear in a manifest dataset name, so the FIRST
+#: field is always the dataset
+LAKE_SEP = "\x1f"
+
+
 class SkipSweep(Exception):
     """A dataset sitting a sweep out with a recorded reason (missing
-    columns, unreadable, ...) — caught by :func:`guard_dataset` and
-    turned into a ``{"skipped": reason}`` entry instead of an error."""
+    columns, no data files, ...): the night records it as a
+    ``{"skipped": reason}`` entry instead of an error."""
 
 
-def guard_dataset(pad: int = 0):
-    """Decorator for per-dataset sweep callables: the one-bad-dataset
-    rule every sweep applies verbatim (round 13 hoist) — a
-    :class:`SkipSweep` becomes a ``skipped`` entry, any other exception
-    becomes an ``error`` entry, and the sweep lives. ``pad`` appends
-    that many ``None`` payload slots so tuple-returning prep callables
-    keep their shape on the failure paths."""
-    def wrap(fn):
-        def run(*args, **kwargs):
+class SweepNight:
+    """One sweep night over a lake (see the module docstring).
+    ``lake`` provides ``spark``, ``_po``, ``root`` and ``discover()``.
+    The summary lands at ``<report_dir>`` or
+    ``<lake root>/<default_name>``; without ``default_name`` the night
+    writes no summary (a pure report such as ``signatures_report``).
+
+    The attributes are the night's state, read by the family's
+    closures: ``items`` (``(name, base)`` in discovery order),
+    ``prior`` (the validated prior summary or ``None``), ``results``
+    (the per-dataset entries), ``tagged`` (datasets that returned a
+    payload), ``union`` (the payloads unioned position by position),
+    ``gate`` (the :class:`NightGate` of an incremental lake-global
+    night), ``mode`` (``full`` / ``fresh`` / ``partial``) and
+    ``written`` (the landed verdict table)."""
+
+    def __init__(self, lake, report_dir: str | None = None,
+                 default_name: str | None = None):
+        self.spark, self.po = lake.spark, lake._po
+        self.rep_base = (rep_base_for(lake.root, report_dir, default_name)
+                         if default_name else None)
+        self.items = list(lake.discover().items())
+        self.prior: dict | None = None
+        self.results: dict[str, dict] = {}
+        self.tagged: set[str] = set()
+        self.union: tuple | None = None
+        self.gate: NightGate | None = None
+        self.mode = "full"
+        self.written = None
+
+    def run(self, per_dataset, *, expect: dict | None = None,
+            incremental: bool = False, max_concurrency: int = 1,
+            serial_while=None, finish=dict) -> dict:
+        """A night of independent per-dataset sweeps: guard and pool
+        ``per_dataset`` over the lake, then seal the summary with the
+        ``expect`` pins and ``finish()``'s keys. Returns the summary."""
+        expect = expect or {}
+        self._sweep(per_dataset, expect, incremental, max_concurrency,
+                    serial_while)
+        if self.rep_base is None:
+            return self.results
+        return seal_summary(self.po, self.rep_base, self.results,
+                            **{**expect, **finish()})
+
+    def run_global(self, per_dataset, verdicts, *, counts: dict,
+                   target: str, fresh_msg: str, expect: dict,
+                   incremental: bool, max_concurrency: int,
+                   serial_while=None, finish=dict,
+                   lake_stats=None) -> dict:
+        """A lake-global night. ``counts`` maps each per-dataset count
+        to its aggregate over the ``dataset=``-partitioned verdict
+        table at ``target``; the first one is the completion key (an
+        entry carrying it proves the prior night finished that
+        dataset). ``_lake`` is the sum of the per-dataset counts unless
+        ``lake_stats(written)`` computes it (``written`` is ``None``
+        when nothing landed). ``verdicts()`` runs only when some
+        dataset contributed; a ``None`` frame lands nothing.
+        ``expect["_config"]`` is the config a fresh night echoes."""
+        self._sweep(per_dataset, expect, incremental, max_concurrency,
+                    serial_while)
+        key = next(iter(counts))
+        if self.prior is not None:
+            self.gate = NightGate(self.spark, self.po, self.results,
+                                  self.prior, key, target, self.tagged)
+            # a prior that landed no rows (every dataset skipped, or
+            # nothing flagged) has no table to verify, and must not be
+            # barred from the fresh path forever
+            wrote = any(int(self.prior[n][key]) > 0
+                        for n in self.gate.prior_counted)
+            if self.gate.all_fresh(require_counts=wrote):
+                self.mode = "fresh"
+                return fresh_summary(
+                    self.po, self.rep_base, self.results, self.prior,
+                    fresh_msg, self._lake(counts, lake_stats),
+                    expect["_config"], {**expect, **finish()})
+        if self.union is not None:
+            frame, self.mode = verdicts()
+            if frame is not None:
+                # a partial night's frame reads the table it replaces
+                self.written = commit_verdicts(
+                    self.spark, self.po, frame, target,
+                    staged=self.mode == "partial")
+                update_report_entries(self.results, self.written, target,
+                                      counts)
+        return seal_summary(
+            self.po, self.rep_base, self.results,
+            _lake=self._lake(counts, lake_stats), _sweep_mode=self.mode,
+            **{**expect, **finish()})
+
+    def _sweep(self, per_dataset, expect, incremental, max_concurrency,
+               serial_while) -> None:
+        if incremental:
+            self.prior = load_prior_summary(self.po, self.rep_base,
+                                            expect)
+
+        def guarded(name: str, base: str) -> tuple:
             try:
-                return fn(*args, **kwargs)
+                return per_dataset(name, base)
             except SkipSweep as sk:
-                entry = {"skipped": str(sk)}
-                return (entry, *([None] * pad)) if pad else entry
-            except Exception as exc:
-                entry = {"error": f"{type(exc).__name__}: {exc}"[:500]}
-                return (entry, *([None] * pad)) if pad else entry
-        return run
-    return wrap
+                return {"skipped": str(sk)}, None
+            except Exception as exc:  # one bad dataset must not kill it
+                return {"error": f"{type(exc).__name__}: {exc}"[:500]}, None
+
+        payloads = []
+        outs = pooled(self.items, guarded, max_concurrency, serial_while)
+        for (name, _), (entry, payload) in zip(self.items, outs):
+            self.results[name] = entry
+            if payload is not None:
+                self.tagged.add(name)
+                payloads.append(payload)
+        if payloads:
+            self.union = tuple(union_all(p[i] for p in payloads)
+                               for i in range(len(payloads[0])))
+
+    def _lake(self, counts: dict, lake_stats) -> dict:
+        if lake_stats is not None:
+            return lake_stats(self.written)
+        return {k: sum(int(e.get(k, 0)) for e in self.results.values())
+                for k in counts}
+
+
+def sidecar_entry(materialized, params: dict,
+                  score_marker: dict | None = None, **extra) -> dict:
+    """The summary entry of a sidecar-served dataset: whether tonight
+    ``materialized`` or ``reused`` the sidecar, its content marker
+    (:func:`content_marker`), the score marker of a scored dataset and
+    any ``extra`` fields."""
+    entry = {"sidecar": "materialized" if materialized else "reused",
+             **extra}
+    marker = content_marker(params)
+    if marker is not None:
+        entry["marker"] = marker
+    if score_marker is not None:
+        entry["score_marker"] = score_marker
+    return entry
 
 
 def rep_base_for(root: str, report_dir: str | None, default_name: str) -> str:
@@ -212,8 +319,7 @@ def fresh_summary(
 
 class NightGate:
     """The shared incremental-night facts a lake-global sweep dispatches
-    its (full | fresh | partial) mode on, computed once per night
-    (round 12, VERDICT r11 #3 — hoisted off the five sweep bodies):
+    its (full | fresh | partial) mode on, computed once per night:
 
     - ``fresh_map`` — per-dataset provable freshness
       (:func:`sweep_fresh_map`).
@@ -347,7 +453,7 @@ def lake_unchanged(results: dict, prior: dict, fresh: dict) -> bool:
 
 def dataset_report_counts(spark, path: str) -> dict[str, int] | None:
     """Count-by-dataset over a ``dataset=``-partitioned report table —
-    the carry-over integrity primitive (round-11 review find): a commit
+    the carry-over integrity primitive: a commit
     token proves a write COMPLETED, not that every file survived since,
     so partial/fresh nights verify the rows they are about to trust
     against the prior summary's recorded counts. Metadata-priced: the
@@ -390,7 +496,6 @@ def semantic_cross_partial(
     union_c,
     meta,
     target: str,
-    sep: str,
     tagged_names: set,
     partial_unchanged: list,
     prior_counted: set,
@@ -398,20 +503,18 @@ def semantic_cross_partial(
     codebook_rows: int,
     threshold: float,
 ):
-    """The cross-dataset SemDeDup sweep's PARTIAL night (round 10;
-    round-13 verbatim relocation out of ``catalog_sweeps.semantic_dedup``
-    so the method body is mode dispatch + its unique joins). Recomputes
+    """The cross-dataset SemDeDup sweep's PARTIAL night. Recomputes
     verdicts for TOUCHED cells only and returns the merged verdict
     table for the caller to stage + swap into ``target`` (it READS the
     table it replaces), or ``None`` when a guard (touched-cell fraction,
     2M-id broadcast) refused — correctness never depends on taking the
-    partial path. See the call site for the artifact layout and the
-    soundness contract (a SemDeDup verdict is a pure function of its
-    cell's full membership)."""
+    partial path. See ``Datalake.semantic_dedup`` for the artifact
+    layout and the soundness contract (a SemDeDup verdict is a pure
+    function of its cell's full membership)."""
     from pyspark.sql import functions as F
 
     merged = None
-    # PARTIAL (round 10): recompute verdicts only for
+    # PARTIAL: recompute verdicts only for
     # TOUCHED cells — cells any changed doc lives in
     # now, plus cells changed/removed docs lived in
     # before (from the prior verdict table's pruned
@@ -430,7 +533,7 @@ def semantic_cross_partial(
     pv = spark.read.parquet(target)
     touched_now = (
         union_c.where(
-            F.substring_index(F.col("id"), sep, 1)
+            F.substring_index(F.col("id"), LAKE_SEP, 1)
             .isin(changed_names)).select("cell")
         if changed_names else None)
     touched_before = (
@@ -438,15 +541,11 @@ def semantic_cross_partial(
                  .isin(prior_not_unchanged))
         .select("cell")
         if prior_not_unchanged else None)
-    parts = [t for t in (touched_now, touched_before)
-             if t is not None]
-    if parts:
-        touched = parts[0]
-        for t in parts[1:]:
-            touched = touched.unionByName(t)
+    touched = union_all((touched_now, touched_before))
+    if touched is not None:
         touched = touched.distinct().localCheckpoint(
             eager=True)
-        # touched-fraction guard (round 10, measured):
+        # touched-fraction guard (measured):
         # the cell-partial's economy is
         # touched/codebook — a changed dataset whose
         # docs span most cells makes the partial path
@@ -465,8 +564,7 @@ def semantic_cross_partial(
         if frac_ok and sub_ids.count() <= 2_000_000:
             cells_sub = sub_ids.localCheckpoint(
                 eager=True)
-            # de-cliffed pair join (round 11, VERDICT
-            # r10 #2): tonight's touched-cell verdicts
+            # de-cliffed pair join: tonight's touched-cell verdicts
             # decompose at DOC level so a spanning
             # ingest stays delta-sized — the
             # decomposition + its soundness contract
@@ -501,14 +599,14 @@ def semantic_cross_partial(
                       "cell", "left_semi")
                 .select(
                     F.concat_ws(
-                        sep, "dataset",
+                        LAKE_SEP, "dataset",
                         "id").alias("id"),
                     "kept")
                 .localCheckpoint(eager=True))
             vnew = semantic_partial_verdicts(
                 sub_base, o_prior,
                 is_changed=F.substring_index(
-                    F.col("id"), sep, 1)
+                    F.col("id"), LAKE_SEP, 1)
                 .isin(changed_names),
                 threshold=threshold, scored=True)
             new_rows = vnew.join(meta, "id").select(
@@ -540,7 +638,6 @@ def span_partial_night(
     po,
     *,
     pos,
-    sep: str,
     tagged_names: set,
     partial_unchanged: list,
     prior_counted: set,
@@ -553,12 +650,12 @@ def span_partial_night(
     ww: int,
     min_span: int,
 ):
-    """The span sweep's PARTIAL night (round 10; round-13 verbatim
-    relocation out of ``catalog_sweeps.span_dedup_report``): span df is
+    """The span sweep's PARTIAL night: span df is
     additive per fingerprint over the dataset-disjoint lake-qualified
     ids, so the prior contribution/df tables adjust with a broadcast
     delta and only docs whose flag set could have moved re-group. See
-    the call site for the artifact layout and the token protocol.
+    ``Datalake.span_dedup_report`` for the artifact layout and the
+    token protocol.
 
     Returns ``(spans, sweep_mode, new_token, swap_stage)`` —
     ``spans=None`` means a guard refused (delta or flip-hit set past
@@ -573,14 +670,14 @@ def span_partial_night(
     from pydala_spark.utils.pathops import escape_partition_value
 
     def _ds_of(c):
-        return F.split_part(c, F.lit(sep), F.lit(1))
+        return F.split_part(c, F.lit(LAKE_SEP), F.lit(1))
 
     tok = prior_token
     spans = None
     sweep_mode = "full"
     new_token = None
     swap_stage = None
-    # PARTIAL (round 10): span df is ADDITIVE over the
+    # PARTIAL: span df is ADDITIVE over the
     # dataset-disjoint lake-qualified ids, so the prior
     # per-dataset contribution tables + the prior df table
     # adjust with a delta instead of re-aggregating the
@@ -706,15 +803,10 @@ def span_partial_night(
                 F.broadcast(hit_ids), "id", "left_semi"))
         dup_new = dup_src.where(
             F.col("df") >= min_df).select("fp")
-        if re_parts:
-            re_rows = re_parts[0]
-            for p in re_parts[1:]:
-                re_rows = re_rows.unionByName(p)
-            new_spans = span_runs(
-                re_rows.join(dup_new, "fp"),
-                kk, ww, min_span)
-        else:
-            new_spans = None
+        re_rows = union_all(re_parts)
+        new_spans = (span_runs(re_rows.join(dup_new, "fp"),
+                               kk, ww, min_span)
+                     if re_rows is not None else None)
         # carry prior spans of unchanged datasets' docs
         # that were NOT re-evaluated, re-qualified so the
         # shared writer below re-splits them uniformly
@@ -725,7 +817,7 @@ def span_partial_night(
                           .isin(partial_unchanged)))
             pvs = pvs.withColumn(
                 "__qid",
-                F.concat_ws(sep, F.col("dataset"),
+                F.concat_ws(LAKE_SEP, F.col("dataset"),
                             F.col("id")))
             if hit_ids is not None:
                 pvs = pvs.join(
@@ -735,13 +827,8 @@ def span_partial_night(
             carried = pvs.select(
                 F.col("__qid").alias("id"),
                 "span_start", "span_end")
-        if new_spans is not None and carried is not None:
-            spans = new_spans.unionByName(carried)
-        elif new_spans is not None:
-            spans = new_spans
-        elif carried is not None:
-            spans = carried
-        else:
+        spans = union_all((new_spans, carried))
+        if spans is None:
             spans = spark.createDataFrame(
                 [], "id string, span_start long, "
                     "span_end long")
@@ -790,7 +877,6 @@ def neardup_pairs_night(
     po,
     *,
     union,
-    sep: str,
     rep_base: str,
     prior_edges,
     partial_ctx,
@@ -799,14 +885,14 @@ def neardup_pairs_night(
     max_bucket_size,
     incremental: bool,
 ):
-    """The neardup sweep's candidate-pair phase (round-13 verbatim
-    relocation out of ``catalog_sweeps.neardup_dedup``): delta-banding
+    """The neardup sweep's candidate-pair phase: delta-banding
     against the persisted ``_pairs`` edge set when ``partial_ctx``
     makes it legal (edge-count integrity re-verified here), else the
     full banding path (checkpointed once when the cap needs two
     outputs), plus the incremental persist + commit token. Returns
     ``(pairs, sweep_mode, overcap_keys, n_edges, new_pairs_token)``;
-    see the call site for the artifact layout and the token protocol."""
+    see ``Datalake.neardup_dedup`` for the artifact layout and the token
+    protocol."""
     import uuid as _uuid
 
     from pyspark.sql import functions as F
@@ -823,7 +909,7 @@ def neardup_pairs_night(
     pairs = None
     prior_pairs = None
     if partial_ctx is not None:
-        # edge-set integrity (round-11 review class): the token
+        # edge-set integrity: the token
         # proves the COMMIT completed, not that every part-file
         # survived since — a lost file would silently drop
         # unchanged-unchanged edges. One metadata-only parquet
@@ -840,16 +926,16 @@ def neardup_pairs_night(
     if partial_ctx is not None and prior_pairs is not None:
         unchanged_names, prior_oc = partial_ctx
         pp_unchanged = prior_pairs.where(
-            F.substring_index(F.col("id_a"), sep, 1)
+            F.substring_index(F.col("id_a"), LAKE_SEP, 1)
             .isin(unchanged_names)
-            & F.substring_index(F.col("id_b"), sep, 1)
+            & F.substring_index(F.col("id_b"), LAKE_SEP, 1)
             .isin(unchanged_names)
         )
         changed_names = sorted(tagged_names - set(unchanged_names))
         pairs = lsh_candidate_pairs_delta(
             union, "__lid",
             is_changed=F.substring_index(
-                F.col("__lid"), sep, 1).isin(changed_names),
+                F.col("__lid"), LAKE_SEP, 1).isin(changed_names),
             prior_pairs_unchanged=pp_unchanged,
             prior_overcap=prior_oc,
             n_bands=n_bands,
@@ -896,13 +982,12 @@ def neardup_pairs_night(
         n_edges = pairs.count()
         pairs.write.mode("overwrite").parquet(
             posixpath.join(rep_base, "_pairs"))
-        # commit token (ADVICE r10): written AFTER the parquet,
-        # echoed as _artifacts in the summary below. Underscore
-        # prefix ⇒ Spark's parquet reader ignores it. A crash
-        # anywhere between here and the summary write leaves
-        # token ≠ _artifacts and the next night takes the full
-        # path instead of pairing against a stale over-cap list.
-        import uuid as _uuid
+        # commit token: written AFTER the parquet, echoed as
+        # _artifacts in the summary. Underscore prefix ⇒ Spark's
+        # parquet reader ignores it. A crash anywhere between here
+        # and the summary write leaves token ≠ _artifacts and the next
+        # night takes the full path instead of pairing against a
+        # stale over-cap list.
         new_pairs_token = _uuid.uuid4().hex
         write_token(po, posixpath.join(rep_base, "_pairs"),
                     new_pairs_token)
@@ -935,13 +1020,13 @@ def neardup_partial_ctx(
     results: dict,
     n_bands: int,
 ):
-    """PARTIAL-INCREMENTAL legality for the neardup sweep (round 10,
-    VERDICT r9 #5; round-13 verbatim relocation): prior edges between
+    """PARTIAL-INCREMENTAL legality for the neardup sweep: prior edges
+    between
     two UNCHANGED datasets are still exactly the full sweep's (an
     unchanged doc's band hashes cannot move), so only buckets touched
     by changed docs need pairing. Legal only when the prior run
     persisted its edge set + over-cap keys under THIS config (config
-    mismatch already nulled ``prior`` at the call site).
+    mismatch already nulled ``prior`` when it was loaded).
 
     Returns ``(sorted unchanged names, prior over-cap keys)`` when the
     delta path is legal, else ``None`` (full sweep):
@@ -953,7 +1038,7 @@ def neardup_partial_ctx(
       (~100 MB broadcast) or when any changed dataset's row count is
       unknown. Savings-wise a big delta gains little anyway;
       correctness never depends on taking the partial path.
-    - commit-token guard (ADVICE r10): the ``_pairs`` edge set and the
+    - commit-token guard: the ``_pairs`` edge set and the
       summary's ``_overcap`` list are written ~seconds apart (the
       heavy verdict write sits between them). A crash in that window
       leaves a NEW edge set against a STALE over-cap list — the next
@@ -999,8 +1084,8 @@ def sig_path(signatures_root: str | None, name: str) -> str | None:
 
 
 def pooled(items, fn, max_concurrency: int, serial_while=None):
-    """The per-dataset pooling scaffold every sweep shares (round 12,
-    VERDICT r11 #3): run ``fn(name, base)`` over ``items``, from a
+    """The per-dataset pooling scaffold every sweep night runs on:
+    run ``fn(name, base)`` over ``items``, from a
     thread pool when ``max_concurrency`` allows (Spark's scheduler
     interleaves concurrent jobs; per-dataset faults stay contained in
     ``fn`` exactly as in the serial path). ``serial_while`` keeps the
@@ -1044,7 +1129,7 @@ def frame_marker(frame, id_col: str, content) -> dict:
 def edge_balloon_warning(
     n_edges: int, total_docs: int, multiple: float
 ) -> str | None:
-    """Viral-night tripwire (VERDICT r10 #3): the persisted neardup
+    """Viral-night tripwire: the persisted neardup
     edge set is normally orders below corpus size, but a
     boilerplate-heavy ingest pairs quadratically inside its bucket —
     warn when it exceeds ``multiple`` × the corpus doc count."""
@@ -1060,18 +1145,19 @@ def edge_balloon_warning(
 
 
 def update_report_entries(
-    results: dict, written, target: str, aggs: list, fields: dict
+    results: dict, written, target: str, counts: dict
 ) -> None:
-    """Per-dataset count writeback every lake-global sweep does after
-    landing its verdict table: groupBy(dataset) over the written rows,
-    update each dataset's summary entry with its report partition path
-    + the int-cast ``fields`` ({entry_key: agg_alias})."""
+    """Write each dataset's counts back after a verdict table lands:
+    one groupBy(dataset) over the written rows, then each dataset's
+    entry gets its report partition path and the int-cast ``counts``
+    (``{entry_key: aggregate column}``)."""
     from pydala_spark.utils.pathops import escape_partition_value
 
+    aggs = [col.alias(k) for k, col in counts.items()]
     for r in written.groupBy("dataset").agg(*aggs).collect():
         results[r["dataset"]].update({
             "report": posixpath.join(
                 target,
                 "dataset=" + escape_partition_value(r["dataset"])),
-            **{k: int(r[v]) for k, v in fields.items()},
+            **{k: int(r[k]) for k in counts},
         })

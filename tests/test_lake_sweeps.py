@@ -1623,3 +1623,22 @@ def test_datalake_span_dedup_report(spark, tmp_path):
     assert all(again[n]["sidecar"] == "reused" for n in uniq)
     assert again["_lake"] == res["_lake"]
 
+
+
+def test_span_lake_n_docs_sums_colliding_doc_ids(spark, tmp_path):
+    # doc ids are unique within a dataset, not across the lake: two
+    # datasets each holding doc 1 with the same banner flag two docs,
+    # so the lake's n_docs is the sum of the per-dataset counts
+    banner = ("Shared banner text that repeats verbatim across both "
+              "crawl dumps and must be flagged as duplicated content. ")
+    root = str(tmp_path / "collide")
+    lake = Datalake(spark, root)
+    for n, tail in (("a", "alpha bravo charlie delta echo foxtrot"),
+                    ("b", "zebra umbrella xylophone quartz jigsaw")):
+        spark.createDataFrame([(1, banner + tail)], ["doc_id", "text"]) \
+            .write.parquet(os.path.join(root, n))
+        lake.add_dataset(n)
+    res = lake.span_dedup_report(min_df=2, min_span=50)
+    assert res["a"]["n_docs"] == 1 and res["b"]["n_docs"] == 1
+    assert res["_lake"]["n_docs"] == 2
+    assert res["_lake"]["n_spans"] == res["a"]["n_spans"] + res["b"]["n_spans"]

@@ -218,34 +218,189 @@ def test_night_gate_laziness_and_rules():
     assert gate2.unchanged == set()  # fresh but not contributing
 
 
-# ---- round-13 hoists: guard / prologue / epilogue / partial-ctx ----
+# ---- SweepNight, its prologue / epilogue helpers, partial-ctx ----
 
 
-def test_guard_dataset_skip_error_and_pad():
-    from pydala_spark.sweeps import SkipSweep, guard_dataset
+class FakeLake:
+    """The slice of a Datalake a SweepNight reads."""
 
-    @guard_dataset()
-    def plain(name, base):
+    def __init__(self, names):
+        self.spark = None
+        self._po = FakePO()
+        self.root = "/lake"
+        self._names = names
+
+    def discover(self):
+        return {n: f"/lake/{n}" for n in self._names}
+
+
+def test_night_guards_skip_and_error():
+    from pydala_spark.sweeps import SkipSweep, SweepNight
+
+    def one(name, base):
         if name == "skipme":
             raise SkipSweep("no (text) columns")
         if name == "boom":
             raise ValueError("x" * 600)
-        return {"ok": name}
+        return {"ok": base}, None
 
-    assert plain("a", "/b") == {"ok": "a"}
-    assert plain("skipme", "/b") == {"skipped": "no (text) columns"}
-    err = plain("boom", "/b")
-    assert err["error"].startswith("ValueError:")
-    assert len(err["error"]) <= 500  # the 500-char truncation rule
+    lake = FakeLake(["a", "skipme", "boom"])
+    out = SweepNight(lake, None, "_rep").run(one)
+    assert out["a"] == {"ok": "/lake/a"}
+    assert out["skipme"] == {"skipped": "no (text) columns"}
+    assert out["boom"]["error"].startswith("ValueError:")
+    assert len(out["boom"]["error"]) == 500  # the 500-char cut
+    stored = json.loads(lake._po.files["/lake/_rep/_summary.json"])
+    assert stored == out
+    # no default_name: a pure report, no summary written
+    lake2 = FakeLake(["a"])
+    assert SweepNight(lake2).run(one) == {"a": {"ok": "/lake/a"}}
+    assert lake2._po.files == {}
 
-    @guard_dataset(pad=2)
-    def tupled(name, base):
-        if name == "skipme":
-            raise SkipSweep("reason")
-        return {"ok": 1}, "payload", "more"
 
-    assert tupled("a", "/b") == ({"ok": 1}, "payload", "more")
-    assert tupled("skipme", "/b") == ({"skipped": "reason"}, None, None)
+def test_night_pool_order_and_serial_head():
+    import threading
+    import time
+
+    from pydala_spark.sweeps import SweepNight
+
+    names = [f"d{i}" for i in range(6)]
+    events: list = []
+    lock = threading.Lock()
+    pinned = {"by": None}
+
+    def one(name, base):
+        with lock:
+            events.append(("start", name))
+        # later datasets finish first under the pool
+        time.sleep(0.02 * (6 - int(name[1:])))
+        if pinned["by"] is None:
+            pinned["by"] = name
+        with lock:
+            events.append(("end", name))
+        return {"n": int(name[1:])}, None
+
+    out = SweepNight(FakeLake(names), None, "_rep").run(
+        one, max_concurrency=4,
+        serial_while=lambda: pinned["by"] is None)
+    # entries come back in discover() order, whatever finished first
+    assert list(out) == names
+    assert [out[n]["n"] for n in names] == list(range(6))
+    # the head ran alone: d0 ended before any other dataset started
+    assert events[:2] == [("start", "d0"), ("end", "d0")]
+    assert pinned["by"] == "d0"
+    # and the rest did overlap under the pool
+    starts = [i for i, e in enumerate(events) if e[0] == "start"]
+    first_end_after = min(i for i, e in enumerate(events)
+                          if e[0] == "end" and i > 1)
+    assert sum(1 for i in starts if i < first_end_after) > 2
+
+
+class FakeCol:
+    def __init__(self, name=None):
+        self.name = name
+
+    def alias(self, name):
+        return FakeCol(name)
+
+
+class FakeTable:
+    """A written verdict table: ``{dataset: {count: value}}``."""
+
+    def __init__(self, counts):
+        self.counts = counts
+
+    def groupBy(self, col):
+        assert col == "dataset"
+        return self
+
+    def agg(self, *cols):
+        self.aliases = [c.name for c in cols]
+        return self
+
+    def collect(self):
+        return [{"dataset": ds, **{a: row[a] for a in self.aliases}}
+                for ds, row in self.counts.items()]
+
+
+class FakeFrame:
+    """A verdict frame whose write only logs the target."""
+
+    def __init__(self, log):
+        self.log = log
+
+    @property
+    def write(self):
+        frame = self
+
+        class W:
+            def mode(self, m):
+                return self
+
+            def partitionBy(self, c):
+                return self
+
+            def parquet(self, path):
+                frame.log.append(("write", path))
+
+        return W()
+
+
+class FakeSpark:
+    def __init__(self, table):
+        self.table = table
+
+        class R:
+            def parquet(_self, path):
+                return table
+
+        self.read = R()
+
+
+def test_night_lake_is_sum_of_dataset_counts():
+    from pydala_spark.sweeps import SweepNight
+
+    # two datasets each holding doc "1": per-dataset counts add up
+    # (a whole-table distinct count would collapse the shared id)
+    table = FakeTable({"da": {"n_spans": 2, "n_docs": 1},
+                       "db": {"n_spans": 3, "n_docs": 1}})
+    log: list = []
+    lake = FakeLake(["da", "db", "dc"])
+    lake.spark = FakeSpark(table)
+
+    class Part:
+        def __init__(self, names):
+            self.names = names
+
+        def unionByName(self, other):
+            return Part(self.names + other.names)
+
+    def one(name, base):
+        if name == "dc":
+            return {"skipped": "no rows"}, None
+        return {"sidecar": "materialized"}, (Part([name]),)
+
+    night = SweepNight(lake, None, "_rep")
+
+    def verdicts():
+        # the payloads arrive unioned in discovery order
+        assert night.union[0].names == ["da", "db"]
+        return FakeFrame(log), "full"
+
+    out = night.run_global(
+        one, verdicts,
+        counts={"n_spans": FakeCol(), "n_docs": FakeCol()},
+        target="/lake/_rep/_spans", fresh_msg="reused",
+        expect={"_config": {"k": 1}}, incremental=False,
+        max_concurrency=1, finish=lambda: {"_extra": 1})
+    assert log == [("write", "/lake/_rep/_spans")]
+    assert night.tagged == {"da", "db"}
+    assert out["da"]["n_docs"] == 1 and out["db"]["n_spans"] == 3
+    assert out["da"]["report"] == "/lake/_rep/_spans/dataset=da"
+    assert out["_lake"] == {"n_spans": 5, "n_docs": 2}
+    assert out["_sweep_mode"] == "full"
+    assert out["_config"] == {"k": 1} and out["_extra"] == 1
+    assert "n_docs" not in out["dc"]
 
 
 def test_rep_base_for_and_union_all_and_seal():
