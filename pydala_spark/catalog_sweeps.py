@@ -839,13 +839,7 @@ class LakeSweepsMixin:
                     fingerprints=union,
                 ).localCheckpoint(eager=True)
             if spans.isEmpty():
-                # ZERO spans: a prior table must GO in every mode (a
-                # stale table after an empty FULL sweep would be
-                # resurrected by a later partial night's carry-over,
-                # and any reader would disagree with the zero counts)
-                if self._po.is_dir(target):
-                    self._po.delete(target)
-                return None, mode
+                return None, mode  # the night removes the prior table
             # the doc id is everything after the dataset (substring,
             # not split_part — a doc id may contain any char)
             ds_col = _ds_of(F.col("id"))
@@ -1092,18 +1086,21 @@ class LakeSweepsMixin:
         sees (id, text length), so same-length in-place edits — and
         changes to NON-text columns a custom config might read — are
         invisible; run a periodic full sweep if those apply."""
-        import inspect
         import json as _json
 
         from pydala_spark.dataset.maintain import materialize_signatures
         from pydala_spark.operators.ann import codebook_sha, load_codebook
-        from pydala_spark.operators.pipeline import prep_documents
+        from pydala_spark.operators.pipeline import (
+            PREP_KNOBS,
+            SIDECAR_PARAMS,
+            count_stages,
+            effective_knobs,
+            prep_documents,
+            sidecar_kwargs,
+        )
 
-        allowed = set(inspect.signature(prep_documents).parameters) - {
-            "df", "benchmark", "stage_frames", "id_col", "text_col",
-            "precomputed_minhash", "precomputed_fps", "precomputed_spans",
-            "precomputed_cells",
-        }
+        # id_col / text_col are this sweep's own parameters
+        allowed = PREP_KNOBS - {"id_col", "text_col"}
         bad = sorted(set(prep_kwargs) - allowed)
         if bad:
             raise ConfigError(
@@ -1167,13 +1164,17 @@ class LakeSweepsMixin:
             )
 
         def _derived(pkw: dict) -> tuple:
-            # the sidecars' recorded hashing params must be the ones
-            # each dataset's EFFECTIVE prep knobs imply — same pinning
-            # map as the pipeline CLI (cli.py _expect_map); per pkw
-            # because overrides can move the hashing knobs per dataset
-            sh_mode = pkw.get("near_dup_shingle_mode", "word")
-            eff_shingle = (pkw.get("near_dup_shingle_size")
-                           or (7 if sh_mode == "char" else 3))
+            # the sidecars' recorded params must be the EFFECTIVE values
+            # of each dataset's prep knobs; per pkw because overrides
+            # can move the hashing knobs per dataset
+            eff = effective_knobs(pkw)
+            sig_expect = {
+                kind: {"id_col": id_col,
+                       **({} if kind == "embedding_cells"
+                          else {"text_col": text_col}),
+                       **{rec: eff[knob] for rec, knob in pins.items()}}
+                for kind, pins in SIDECAR_PARAMS.items()
+            }
             # the cells pin follows the EFFECTIVE codebook: an override
             # that swaps semantic_centroids for one dataset must expect
             # (and materialize) cells under THAT codebook's sha, or the
@@ -1181,51 +1182,24 @@ class LakeSweepsMixin:
             eff_cb = pkw.get("semantic_centroids")
             if eff_cb is None:
                 eff_cb = cb
-            sig_expect = {
-                "minhash": {
-                    "id_col": id_col, "text_col": text_col,
-                    "n_hashes": pkw.get("n_hashes", 8),
-                    "seed": pkw.get("near_dup_seed", 0),
-                    "shingle_mode": sh_mode, "shingle_size": eff_shingle,
-                },
-                "winnowing": {
-                    "id_col": id_col, "text_col": text_col,
-                    "k": pkw.get("winnowing_k", 8),
-                    "window": pkw.get("winnowing_window", 4),
-                },
-                "spans": {
-                    "id_col": id_col, "text_col": text_col,
-                    "k": pkw.get("span_k", 20),
-                    "window": pkw.get("span_window", 8),
-                },
-                "embedding_cells": {
-                    "id_col": id_col,
-                    "vec_col": pkw.get("vec_col"),
-                    "codebook_sha": (codebook_sha(eff_cb)
-                                     if eff_cb is not None else None),
-                },
-            }
+            sig_expect["embedding_cells"]["codebook_sha"] = (
+                codebook_sha(eff_cb) if eff_cb is not None else None)
             # an embedding-reading config (semantic stage, embedding
             # decontamination) makes vec_col part of the dataset
             # QUALIFICATION: a text-only dataset must SKIP with a
             # reason, not error every night and defeat the cron's exit
             # code + incremental economy
-            vec_needed = pkw.get("vec_col") if (
-                pkw.get("semantic_dedup")
-                or pkw.get("decontaminate_mode") == "embedding"
+            vec_needed = eff["vec_col"] if (
+                eff["semantic_dedup"]
+                or eff["decontaminate_mode"] == "embedding"
             ) else None
             # the one hashing-kwargs bundle every materialize call in
-            # this sweep passes
+            # this sweep passes (the minhash pins are materialize's
+            # own kwarg names)
             hash_kw = dict(
-                id_col=id_col, text_col=text_col,
-                n_hashes=sig_expect["minhash"]["n_hashes"],
-                shingle_size=eff_shingle,
-                seed=sig_expect["minhash"]["seed"],
-                shingle_mode=sh_mode,
-                winnowing_k=sig_expect["winnowing"]["k"],
-                winnowing_window=sig_expect["winnowing"]["window"],
-                span_k=sig_expect["spans"]["k"],
-                span_window=sig_expect["spans"]["window"],
+                sig_expect["minhash"],
+                **{k: eff[k] for k in ("winnowing_k", "winnowing_window",
+                                       "span_k", "span_window")},
             )
             return sig_expect, vec_needed, hash_kw
 
@@ -1347,24 +1321,13 @@ class LakeSweepsMixin:
                 )
                 sidecar_status[kind] = (
                     "materialized" if materialized else "reused")
-                if kind == "minhash":
-                    extra["precomputed_minhash"] = frame
-                elif kind == "spans":
-                    # (frame, params): the recorded k/window drive
-                    # the span-boundary math inside prep_documents
-                    extra["precomputed_spans"] = (frame, params)
-                elif kind == "embedding_cells":
-                    # (frame, params): the recorded codebook_sha
-                    # refuses cells from a retrained codebook. Fed to
-                    # the pipeline only when a semantic stage consumes
-                    # it — prep_documents refuses precomputed_cells
-                    # without semantic_dedup, and the
-                    # vec_col-without-semantic shape materializes cells
-                    # purely as a sidecar for a later sweep
-                    if vec_needed is not None:
-                        extra["precomputed_cells"] = (frame, params)
-                else:
-                    extra["precomputed_fps"] = frame
+                # cells feed the pipeline only when a stage reads
+                # embeddings — prep_documents refuses precomputed_cells
+                # without semantic_dedup, and the vec_col-without-
+                # semantic shape materializes cells purely as a sidecar
+                # for a later sweep
+                if kind != "embedding_cells" or vec_needed is not None:
+                    extra.update(sidecar_kwargs(kind, frame, params))
             stages: dict = {} if stage_counts else None
             out = prep_documents(
                 df, id_col=id_col, text_col=text_col,
@@ -1383,29 +1346,9 @@ class LakeSweepsMixin:
                              .load(dest).count())
                 except Exception:
                     n_pre = 0
-            counts: dict = {}
-            if stage_counts:
-                # the CLI --report economy: persist each stage just
-                # before its count, release it once the next stage
-                # built on top — every stage computes once and the
-                # write reuses the last cached subtree
-                live: list = []
-                try:
-                    prev = None
-                    for stage, frame in stages.items():
-                        frame.persist()
-                        live.append(frame)
-                        counts[stage] = frame.count()
-                        if prev is not None:
-                            prev.unpersist()
-                            live.remove(prev)
-                        prev = frame
-                    out.write.format(dest_format).mode(mode).save(dest)
-                finally:
-                    for frame in live:
-                        frame.unpersist()
-            else:
-                out.write.format(dest_format).mode(mode).save(dest)
+            counts = dict(count_stages(
+                stages or {},
+                lambda: out.write.format(dest_format).mode(mode).save(dest)))
             # count the WRITTEN output — re-counting the lazy plan
             # would re-run the whole pipeline a second time
             cleaned = self.spark.read.format(dest_format).load(dest)

@@ -27,6 +27,12 @@ Two invocation styles, both per subcommand:
           --partition-by l_returnflag --sort-by l_orderkey
       python -m pydala_spark.cli timefly add --path /lake/ds
 
+Every sweep subcommand (``decontaminate``, ``semantic-dedup``,
+``neardup-dedup``, ``signatures``) is a one-section cron run: its flags
+become the section's keys and the same runner (:func:`_run_section`)
+calls the ``Datalake`` method, so flags, cron keys and exit codes cannot
+drift apart.
+
 Everything delegates to the library operators
 (:class:`~pydala_spark.dataset.repartition.Repartition`,
 :class:`~pydala_spark.dataset.timefly.TimeFly`) — the CLI only parses.
@@ -38,24 +44,50 @@ import argparse
 import sys
 
 
-def _load_toml_config(path: str, section: str) -> dict:
-    """Read ``[section]`` from a TOML config, mapping the reference's
-    ``"None"`` string sentinel to real nulls (NestedDictReplacer
-    parity, reference scripts/repartition.py:8-11)."""
+def _none(v):
+    """Map the reference's ``"None"`` string sentinel to real nulls,
+    recursively (NestedDictReplacer parity, reference
+    scripts/repartition.py:8-11)."""
+    if isinstance(v, dict):
+        return {k: _none(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_none(x) for x in v]
+    return None if v == "None" else v
+
+
+def _read_toml(path: str) -> dict:
     import tomllib
 
     with open(path, "rb") as f:
-        raw = tomllib.load(f)
-    table = raw.get(section, raw)  # flat files work too
+        return _none(tomllib.load(f))
 
-    def _none(v):
-        if isinstance(v, dict):
-            return {k: _none(x) for k, x in v.items()}
-        if isinstance(v, list):
-            return [_none(x) for x in v]
-        return None if v == "None" else v
 
-    return {k: _none(v) for k, v in table.items()}
+def _load_toml_config(path: str, section: str) -> dict:
+    """Read ``[section]`` from a TOML config (a flat file works too),
+    ``"None"`` strings as nulls."""
+    raw = _read_toml(path)
+    return raw.get(section, raw)
+
+
+def _config_opts(args, section: str, valid, flags) -> dict | None:
+    """The options of a config-parity subcommand: ``[section]`` of
+    ``args.config`` (``None`` after a usage message when it holds a key
+    outside ``valid``), overridden by every flag in ``flags`` the
+    command line set."""
+    opts: dict = {}
+    if args.config:
+        opts = _load_toml_config(args.config, section)
+        unknown = sorted(set(opts) - set(valid))
+        if unknown:
+            # a clean exit-2 diagnosis beats the raw TypeError a splat
+            # into the operator would raise (r5 review)
+            print(f"{section}: unknown config key(s) {unknown} — valid "
+                  f"keys: {sorted(valid)}", file=sys.stderr)
+            return None
+    for key in flags:
+        if getattr(args, key) is not None:
+            opts[key] = getattr(args, key)
+    return opts
 
 
 def _csv(value):
@@ -74,7 +106,7 @@ def _session(args):
     )
 
 
-#: flag-backed option names (read off args in the loop below); the
+#: flag-backed option names (read off args by _config_opts); the
 #: config whitelist derives from this ONE tuple plus the two
 #: boolean-only keys, so the lists cannot desynchronize (r5 review)
 _REPARTITION_FLAG_KEYS = (
@@ -85,23 +117,10 @@ _REPARTITION_KEYS = set(_REPARTITION_FLAG_KEYS) | {"distinct", "with_snapshot"}
 
 
 def _cmd_repartition(args) -> int:
-    opts: dict = {}
-    if args.config:
-        opts.update(_load_toml_config(args.config, "repartition"))
-        unknown = sorted(set(opts) - _REPARTITION_KEYS)
-        if unknown:
-            # a clean exit-2 diagnosis beats the raw TypeError a splat
-            # into Repartition(**opts) would raise (r5 review)
-            print(
-                f"repartition: unknown config key(s) {unknown} — "
-                f"valid keys: {sorted(_REPARTITION_KEYS)}",
-                file=sys.stderr,
-            )
-            return 2
-    for key in _REPARTITION_FLAG_KEYS:
-        v = getattr(args, key)
-        if v is not None:
-            opts[key] = v
+    opts = _config_opts(args, "repartition", _REPARTITION_KEYS,
+                        _REPARTITION_FLAG_KEYS)
+    if opts is None:
+        return 2
     if args.distinct:
         opts["distinct"] = True
     if args.no_snapshot:
@@ -128,23 +147,10 @@ def _cmd_repartition(args) -> int:
 
 
 def _cmd_timefly(args) -> int:
-    opts: dict = {}
-    if args.config:
-        opts.update(_load_toml_config(args.config, "timefly"))
-        unknown = sorted(set(opts) - {"path", "ts", "snapshot_mode"})
-        if unknown:
-            print(
-                f"timefly: unknown config key(s) {unknown} — valid keys: "
-                "['path', 'snapshot_mode', 'ts']",
-                file=sys.stderr,
-            )
-            return 2
-    if args.path is not None:
-        opts["path"] = args.path
-    if args.ts is not None:
-        opts["ts"] = args.ts
-    if args.snapshot_mode is not None:
-        opts["snapshot_mode"] = args.snapshot_mode
+    keys = ("path", "ts", "snapshot_mode")
+    opts = _config_opts(args, "timefly", keys, keys)
+    if opts is None:
+        return 2
     path = opts.get("path")
     if not path:
         print("timefly: --path (or config key 'path') is required",
@@ -185,8 +191,7 @@ def _cmd_timefly(args) -> int:
 
 
 #: CLI-level keys for the pipeline subcommand (IO wiring); the cleaning
-#: knobs themselves are whitelisted against prep_documents' signature at
-#: run time so the two can never desynchronize
+#: knobs are prep_documents' own (operators.pipeline.PREP_KNOBS)
 _PIPELINE_IO_KEYS = (
     "source", "dest", "source_format", "dest_format",
     "benchmark", "benchmark_format", "mode", "report",
@@ -194,40 +199,25 @@ _PIPELINE_IO_KEYS = (
 )
 
 
-def _pipeline_prep_keys() -> set:
-    import inspect
-
-    from pydala_spark.operators.pipeline import prep_documents
-
-    params = set(inspect.signature(prep_documents).parameters)
-    # frames / hooks are not expressible in a TOML config
-    return params - {"df", "benchmark", "stage_frames",
-                     "precomputed_minhash", "precomputed_fps",
-                     "precomputed_spans", "precomputed_cells"}
-
-
 def _cmd_pipeline(args) -> int:
     """The third thing a production cron runs beside repartition and
     timefly: the cleaning pipeline itself — ``[pipeline]`` TOML keys map
     onto :func:`~pydala_spark.operators.pipeline.prep_documents` kwargs
     plus source/dest/benchmark IO wiring."""
-    prep_keys = _pipeline_prep_keys()
-    opts: dict = {}
-    if args.config:
-        opts.update(_load_toml_config(args.config, "pipeline"))
-        unknown = sorted(set(opts) - set(_PIPELINE_IO_KEYS) - prep_keys)
-        if unknown:
-            print(
-                f"pipeline: unknown config key(s) {unknown} — valid keys: "
-                f"{sorted(set(_PIPELINE_IO_KEYS) | prep_keys)}",
-                file=sys.stderr,
-            )
-            return 2
-    for key in ("source", "dest", "benchmark", "min_quality",
-                "shard_tokens"):
-        v = getattr(args, key)
-        if v is not None:
-            opts[key] = v
+    from pydala_spark.operators.pipeline import (
+        PREP_KNOBS,
+        SIDECAR_KWARGS,
+        SIDECAR_PARAMS,
+        count_stages,
+        prep_documents,
+        sidecar_kwargs,
+    )
+
+    opts = _config_opts(
+        args, "pipeline", set(_PIPELINE_IO_KEYS) | PREP_KNOBS,
+        ("source", "dest", "benchmark", "min_quality", "shard_tokens"))
+    if opts is None:
+        return 2
     if args.report:
         opts["report"] = True
     source = opts.pop("source", None)
@@ -246,8 +236,6 @@ def _cmd_pipeline(args) -> int:
     sig_path = opts.pop("signatures_path", None) or source
     sig_verify = bool(opts.pop("signatures_verify", True))
 
-    from pydala_spark.operators.pipeline import prep_documents
-
     spark = _session(args)
     df = spark.read.format(src_fmt).load(source)
     bench = (
@@ -265,81 +253,28 @@ def _cmd_pipeline(args) -> int:
         from pydala_spark.dataset.maintain import read_signatures
 
         verify = df if sig_verify else None
-        _expect_map = {
-            "minhash": {"n_hashes": "n_hashes",
-                        "seed": "near_dup_seed",
-                        "shingle_mode": "near_dup_shingle_mode",
-                        "shingle_size": "near_dup_shingle_size"},
-            "winnowing": {"k": "winnowing_k", "window": "winnowing_window"},
-            # the sidecar's recorded k/window DRIVE the span math via
-            # params=; pinning config-set values here turns a config/
-            # sidecar contradiction into a loud error instead of a
-            # silent override
-            "spans": {"k": "span_k", "window": "span_window"},
-            # the recorded vec_col must be the one the semantic stage
-            # reads — cells assigned from a different embedding column
-            # would block-dedup the wrong space
-            "embedding_cells": {"vec_col": "vec_col"},
-        }
         for kind in sig_kinds:
-            if kind not in ("spans", "minhash", "winnowing",
-                            "embedding_cells"):
-                print(
-                    f"pipeline: unknown signatures kind {kind!r} — valid: "
-                    "spans, minhash, winnowing, embedding_cells",
-                    file=sys.stderr,
-                )
+            if kind not in SIDECAR_KWARGS:
+                print(f"pipeline: unknown signatures kind {kind!r} — "
+                      f"valid: {', '.join(SIDECAR_KWARGS)}",
+                      file=sys.stderr)
                 return 2
-            expect = {
-                rec: opts[opt]
-                for rec, opt in _expect_map.get(kind, {}).items()
-                if opt in opts
-            } or None
+            expect = {rec: opts[knob]
+                      for rec, knob in SIDECAR_PARAMS[kind].items()
+                      if knob in opts} or None
             frame, params = read_signatures(
                 spark, sig_path, kind, expect=expect, verify_against=verify
             )
-            if kind == "spans":
-                # (frame, params) tuple: the recorded k/window drive the
-                # span-boundary math inside prep_documents
-                opts["precomputed_spans"] = (frame, params)
-            elif kind == "minhash":
-                opts["precomputed_minhash"] = frame
-            elif kind == "embedding_cells":
-                # (frame, params) tuple: the recorded codebook_sha then
-                # refuses cells assigned under a retrained codebook
-                opts["precomputed_cells"] = (frame, params)
-            else:
-                opts["precomputed_fps"] = frame
-    if report:
-        # ONE lazy program serves both the per-stage counts and the
-        # final write (round-6 advice: the old spelling ran the whole
-        # pipeline twice). Each stage frame is persisted just before its
-        # count and released once the next stage's count has built on
-        # top of it — every stage computes exactly once, at most two
-        # stage caches are live at any moment, and the write reuses the
-        # last cached stage's plan subtree instead of re-running the
-        # lineage from the scan.
-        stages: dict = {}
-        out = prep_documents(df, benchmark=bench, stage_frames=stages,
-                             **opts)
-        live: list = []  # currently-persisted frames; finally drains ALL
-        try:
-            prev = None
-            for stage, frame in stages.items():
-                frame.persist()
-                live.append(frame)
-                print(f"{stage}: {frame.count()}")
-                if prev is not None:
-                    prev.unpersist()
-                    live.remove(prev)
-                prev = frame
-            out.write.format(dest_fmt).mode(mode).save(dest)
-        finally:
-            for frame in live:
-                frame.unpersist()
-    else:
-        out = prep_documents(df, benchmark=bench, **opts)
-        out.write.format(dest_fmt).mode(mode).save(dest)
+            opts.update(sidecar_kwargs(kind, frame, params))
+    # ONE lazy program serves both the per-stage counts and the final
+    # write (round-6 advice: the old spelling ran the whole pipeline
+    # twice)
+    stages = {} if report else None
+    out = prep_documents(df, benchmark=bench, stage_frames=stages, **opts)
+    for stage, n in count_stages(
+            stages or {},
+            lambda: out.write.format(dest_fmt).mode(mode).save(dest)):
+        print(f"{stage}: {n}")
     print(f"pipeline: wrote {dest}")
     return 0
 
@@ -360,121 +295,6 @@ def _cmd_profile(args) -> int:
     row = corpus_profile(df, text_col=args.text_col).collect()[0]
     print(json.dumps(row.asDict(), default=float))
     return 0
-
-
-def _cmd_decontaminate(args) -> int:
-    """Lake-wide benchmark-decontamination sweep
-    (catalog.Datalake.decontaminate) — serves every dataset from its
-    signature sidecar (materializing/refreshing as needed), writes
-    per-dataset hit reports + a lake summary, prints the summary."""
-    if not args.root or not args.benchmark:
-        print("decontaminate: --root and --benchmark are required",
-              file=sys.stderr)
-        return 2
-    import json
-
-    from pydala_spark.catalog import Datalake
-
-    spark = _session(args)
-    benchmarks = {}
-    for spec in args.benchmark:
-        name, _, path = spec.rpartition("=")
-        if not name:
-            name, path = "benchmark", spec
-        benchmarks[name] = spark.read.format(
-            args.format or "parquet"
-        ).load(path)
-    results = Datalake(spark, args.root).decontaminate(
-        benchmarks,
-        id_col=args.id_col, text_col=args.text_col,
-        min_hits=args.min_hits,
-        materialize=not args.no_materialize,
-        verify=not args.no_verify,
-        report_dir=args.report_dir,
-        mode=args.mode, vec_col=args.vec_col,
-        threshold=args.threshold, block_bits=args.block_bits,
-        dim=args.dim, n_probes=args.n_probes,
-        shingle_size=args.shingle_size, shingle_mode=args.shingle_mode,
-        signatures_root=args.signatures_root,
-        incremental=args.incremental,
-        max_concurrency=args.max_concurrency,
-    )
-    print(json.dumps(results, indent=2, sort_keys=True, default=str))
-    flagged = [
-        n for n, r in results.items()
-        if any(v > 0 for v in r.get("contaminated", {}).values())
-    ]
-    return 1 if any("error" in r for r in results.values()) else (
-        3 if flagged and args.fail_on_hits else 0
-    )
-
-
-def _cmd_semantic_dedup(args) -> int:
-    """Lake-wide SemDeDup sweep (catalog.Datalake.semantic_dedup) —
-    cells-sidecar served under the lake-pinned codebook, per-dataset
-    (id, cell, kept) reports + summary, printed as JSON."""
-    if not args.root:
-        print("semantic-dedup: --root is required", file=sys.stderr)
-        return 2
-    import json
-
-    from pydala_spark.catalog import Datalake
-
-    spark = _session(args)
-    results = Datalake(spark, args.root).semantic_dedup(
-        id_col=args.id_col, vec_col=args.vec_col,
-        threshold=args.threshold, n_centroids=args.n_centroids,
-        codebook_path=args.codebook, score_col=args.score_col,
-        materialize=not args.no_materialize,
-        verify=not args.no_verify,
-        report_dir=args.report_dir,
-        signatures_root=args.signatures_root,
-        incremental=args.incremental,
-        max_concurrency=args.max_concurrency,
-        cross_dataset=args.cross_dataset,
-        partial_max_cell_fraction=args.partial_max_cell_fraction,
-    )
-    print(json.dumps(results, indent=2, sort_keys=True, default=str))
-    dropped = [n for n, r in results.items()
-               if r.get("n_dropped", 0) > 0]
-    return 1 if any(
-        "error" in r for r in results.values() if isinstance(r, dict)
-    ) else (3 if dropped and args.fail_on_dups else 0)
-
-
-def _cmd_neardup_dedup(args) -> int:
-    """Lake-wide cross-dataset text near-dup sweep
-    (catalog.Datalake.neardup_dedup) — minhash-sidecar served, LSH +
-    connected components across every dataset, per-dataset verdict
-    partitions + summary, printed as JSON."""
-    if not args.root:
-        print("neardup-dedup: --root is required", file=sys.stderr)
-        return 2
-    import json
-
-    from pydala_spark.catalog import Datalake
-
-    spark = _session(args)
-    results = Datalake(spark, args.root).neardup_dedup(
-        id_col=args.id_col, text_col=args.text_col,
-        n_hashes=args.n_hashes, n_bands=args.n_bands,
-        shingle_size=args.shingle_size, shingle_mode=args.shingle_mode,
-        seed=args.seed, max_bucket_size=args.max_bucket_size,
-        score_col=args.score_col,
-        materialize=not args.no_materialize,
-        verify=not args.no_verify,
-        report_dir=args.report_dir,
-        signatures_root=args.signatures_root,
-        incremental=args.incremental,
-        max_concurrency=args.max_concurrency,
-        edge_warn_multiple=args.edge_warn_multiple,
-    )
-    print(json.dumps(results, indent=2, sort_keys=True, default=str))
-    dropped = [n for n, r in results.items()
-               if isinstance(r, dict) and r.get("n_dropped", 0) > 0]
-    return 1 if any(
-        "error" in r for r in results.values() if isinstance(r, dict)
-    ) else (3 if dropped and args.fail_on_dups else 0)
 
 
 def _cmd_ann(args) -> int:
@@ -554,36 +374,6 @@ def _cmd_ann(args) -> int:
     return 0
 
 
-def _cmd_signatures(args) -> int:
-    """Sidecar-freshness dashboard (catalog.Datalake.signatures_report)
-    — which datasets the next sweep serves from sidecars and which pay
-    re-hashing; --verify re-checks every marker against live data.
-    Exit 3 with --fail-on-stale when anything is stale or pre-marker."""
-    if not args.root:
-        print("signatures: --root is required", file=sys.stderr)
-        return 2
-    import json
-
-    from pydala_spark.catalog import Datalake
-
-    spark = _session(args)
-    results = Datalake(spark, args.root).signatures_report(
-        verify=args.verify, signatures_root=args.signatures_root,
-    )
-    print(json.dumps(results, indent=2, sort_keys=True, default=str))
-    if any("error" in r for r in results.values()):
-        return 1
-    if args.fail_on_stale:
-        stale = any(
-            info.get("fresh") is False or info.get("marker") is None
-            for r in results.values()
-            for info in r.get("sidecars", {}).values()
-        )
-        if stale:
-            return 3
-    return 0
-
-
 #: sweep sections a cron config may carry, in execution order; each
 #: maps onto the same-named Datalake method, kwargs whitelisted against
 #: its signature at run time so the lists can never desynchronize
@@ -597,43 +387,153 @@ _CRON_SECTIONS = ("maintain", "prep_sweep", "decontaminate",
                   "signatures_report", "ann_maintain")
 
 
-def _cmd_cron(args) -> int:
-    """ONE config file = the whole lake-maintenance cron: run any of
-    ``[decontaminate]`` / ``[semantic_dedup]`` / ``[neardup_dedup]``
-    tables — plus ``[maintain]`` (lake-wide compaction, run first) —
-    against one lake root in order, printing a combined summary
-    — the config-parity calling convention the repartition / timefly /
-    pipeline subcommands already use (a production crontab holds one
-    line, not three). Section keys are the Datalake method's kwargs
-    (whitelisted against its signature); ``[decontaminate]`` takes
-    ``benchmark = ["name=path", ...]`` specs like the flag form, plus
-    ``fail_on_hits``; the dedup sections take ``fail_on_dups``;
-    ``[ann_maintain]`` (round 10) runs the nightly index sequence —
-    append new vectors, health stats, optional measured recall — with
-    ``fail_imbalance`` / ``fail_recall`` as its alert thresholds. Exit:
-    2 on a method-level :class:`ConfigError` (fix the TOML; remaining
-    sections are not attempted), 1 on any per-dataset error OR a
-    mid-sweep runtime exception (recorded against the section, the
-    remaining sections still run), else 3 when a fail_on_* or ann
-    alert tripped, else 0."""
-    import inspect
-    import json
-    import tomllib
+#: the sweep subcommands, each a one-section cron run of this section
+_SWEEP_COMMANDS = {"decontaminate": "decontaminate",
+                   "semantic-dedup": "semantic_dedup",
+                   "neardup-dedup": "neardup_dedup",
+                   "signatures": "signatures_report"}
 
-    from pydala_spark.catalog import Datalake
+
+def _run_section(lake, section: str, opts: dict) -> tuple[dict | None, int]:
+    """Run ONE lake job — the ``section`` Datalake method with ``opts``
+    (a cron table, or a sweep subcommand's flags) — and return
+    ``(results, exit code)``. Keys are the method's kwargs (checked
+    against its signature; ``[prep_sweep]`` takes prep_documents' knobs
+    too); ``[decontaminate]`` takes ``benchmark = ["name=path", ...]``
+    specs and ``[prep_sweep]`` one ``benchmark`` path, both read as
+    ``benchmark_format`` (default parquet); ``fail_on_hits`` /
+    ``fail_on_dups`` / ``fail_on_stale`` arm the alert exit. Exit: 2 on
+    a config refusal — a bad key, or a method-level
+    :class:`ConfigError` (results ``None``); 1 on any per-dataset
+    error OR a mid-sweep runtime exception (results
+    ``{"error": ...}``); else 3 when an alert tripped (a fail_on_*
+    finding, or any ``[ann_maintain]`` threshold — its
+    ``fail_imbalance`` / ``fail_recall`` ARE the fail knobs), else
+    0."""
+    import inspect
+
+    from pydala_spark.operators.pipeline import PREP_KNOBS
     from pydala_spark.utils.errors import ConfigError
 
-    with open(args.config, "rb") as f:
-        raw = tomllib.load(f)
+    opts = dict(opts)
+    # a list, not a generator: every alert key must leave opts
+    fail_on = any([opts.pop(k, False) for k in (
+        "fail_on_hits", "fail_on_dups", "fail_on_stale")])
+    method = getattr(lake, section)
+    valid = set(inspect.signature(method).parameters) - {"benchmarks"}
+    if section == "prep_sweep":
+        # the section's knobs pass through **prep_kwargs; surface
+        # prep_documents' own knobs so a typo'd cleaning knob still
+        # fails the config check, not 500 per-dataset errors
+        valid = (valid - {"prep_kwargs"}) | PREP_KNOBS
+    bad = sorted(set(opts) - valid - {"benchmark", "benchmark_format"})
+    if bad:
+        print(f"cron: unknown [{section}] key(s) {bad} — valid: "
+              f"{sorted(valid)}", file=sys.stderr)
+        return None, 2
+    if section == "prep_sweep" and not opts.get("dest_root"):
+        print("cron: [prep_sweep] needs dest_root = \"<cleaned-copies "
+              "root, OUTSIDE the lake root>\"", file=sys.stderr)
+        return None, 2
+    if section == "decontaminate" and not opts.get("benchmark"):
+        print("cron: [decontaminate] needs benchmark = "
+              "[\"name=path\", ...]", file=sys.stderr)
+        return None, 2
+    if section == "ann_maintain" and not (
+            opts.get("index_path") and opts.get("source")):
+        print("cron: [ann_maintain] needs index_path = \"<persisted IVFADC "
+              "index>\" and source = \"<lake embeddings dataset name (or "
+              "path)>\"", file=sys.stderr)
+        return None, 2
+    call_args = []
+    if section in ("prep_sweep", "decontaminate"):
+        read = lake.spark.read.format(
+            opts.pop("benchmark_format", None) or "parquet").load
+        bench = opts.pop("benchmark", None)
+        if section == "decontaminate":  # [name=]path specs
+            specs = [str(spec).rpartition("=") for spec in bench]
+            call_args = [{name or "benchmark": read(path)
+                          for name, _, path in specs}]
+        elif bench:
+            opts["benchmark"] = read(bench)
+    try:
+        results = method(*call_args, **opts)
+    except ConfigError as exc:
+        # a method-level config refusal (ann_maintain's inert
+        # fail_recall, neardup's non-dividing n_bands, ...) is a CONFIG
+        # error: the documented exit-2 path, not a traceback. ONLY the
+        # typed ConfigError takes this path (ADVICE r10): a genuine
+        # runtime ValueError from mid-sweep driver-side code (numpy,
+        # sidecar parsing) is a per-section FAILURE, not a config typo
+        print(f"cron: [{section}] {exc}", file=sys.stderr)
+        return None, 2
+    except Exception as exc:  # noqa: BLE001 — cron containment
+        print(f"cron: [{section}] failed: {type(exc).__name__}: {exc}",
+              file=sys.stderr)
+        return {"error": f"{type(exc).__name__}: {exc}"[:500]}, 1
+    entries = [r for r in results.values() if isinstance(r, dict)]
+    if any("error" in r for r in entries):
+        return results, 1
+    if section == "ann_maintain":
+        tripped = any(r.get("tripped") for r in entries)
+    elif section == "signatures_report":
+        tripped = fail_on and any(
+            info.get("fresh") is False or info.get("marker") is None
+            for r in entries for info in r.get("sidecars", {}).values())
+    else:
+        tripped = fail_on and any(
+            r.get("n_dropped", 0) > 0
+            or any(v > 0 for v in r.get("contaminated", {}).values())
+            for r in entries)
+    return results, 3 if tripped else 0
 
-    def _none(v):
-        if isinstance(v, dict):
-            return {k: _none(x) for k, x in v.items()}
-        if isinstance(v, list):
-            return [_none(x) for x in v]
-        return None if v == "None" else v
 
-    raw = {k: _none(v) for k, v in raw.items()}
+def _cmd_sweep(args) -> int:
+    """A sweep subcommand: its flags become the opts of a one-section
+    cron run (:func:`_run_section`), whose results print as JSON."""
+    import json
+
+    from pydala_spark.catalog import Datalake
+
+    opts = dict(vars(args))
+    for key in ("master", "shuffle_partitions", "command", "func"):
+        del opts[key]
+    missing = [f"--{k}" for k in ("root", "benchmark")
+               if k in opts and not opts[k]]
+    if missing:
+        print(f"{args.command}: {' and '.join(missing)} required",
+              file=sys.stderr)
+        return 2
+    for flag, key in (("no_materialize", "materialize"),
+                      ("no_verify", "verify")):
+        if flag in opts:
+            opts[key] = not opts.pop(flag)
+    for flag, key in (("codebook", "codebook_path"),
+                      ("format", "benchmark_format")):
+        if flag in opts:
+            opts[key] = opts.pop(flag)
+    lake = Datalake(_session(args), opts.pop("root"))
+    results, rc = _run_section(lake, _SWEEP_COMMANDS[args.command], opts)
+    if results is not None:
+        print(json.dumps(results, indent=2, sort_keys=True, default=str))
+    return rc
+
+
+def _cmd_cron(args) -> int:
+    """ONE config file = the whole lake-maintenance cron: run every
+    ``_CRON_SECTIONS`` table it holds against one lake root, in that
+    order, each through :func:`_run_section`, printing a combined
+    summary — the config-parity calling convention the repartition /
+    timefly / pipeline subcommands already use (a production crontab
+    holds one line, not three). Exit: 2 on a config refusal (fix the
+    TOML; remaining sections are not attempted, the sections that ran
+    still print), 1 when any section failed (the remaining sections
+    still run), else 3 when any alert tripped, else 0."""
+    import json
+
+    from pydala_spark.catalog import Datalake
+
+    raw = _read_toml(args.config)
     root = args.root or raw.get("root")
     if not root:
         print("cron: --root (or top-level config key 'root') is required",
@@ -650,118 +550,19 @@ def _cmd_cron(args) -> int:
               f"{['root', *_CRON_SECTIONS]}", file=sys.stderr)
         return 2
 
-    spark = _session(args)
-    lake = Datalake(spark, root)
+    lake = Datalake(_session(args), root)
     combined: dict = {}
     rc = 0
     for section in sections:
-        opts = dict(raw[section])
-        fail_on = bool(opts.pop("fail_on_hits", False)
-                       or opts.pop("fail_on_dups", False))
-        method = getattr(lake, section)
-        valid = set(inspect.signature(method).parameters) - {"benchmarks"}
-        if section == "prep_sweep":
-            # the section's knobs pass through **prep_kwargs; surface
-            # prep_documents' own signature so a typo'd cleaning knob
-            # still fails the config check, not 500 per-dataset errors
-            valid -= {"prep_kwargs"}
-            valid |= _pipeline_prep_keys()
-        bad = sorted(set(opts) - valid
-                     - {"benchmark", "benchmark_format", "fail_on_stale"})
-        if bad:
-            print(f"cron: unknown [{section}] key(s) {bad} — valid: "
-                  f"{sorted(valid)}", file=sys.stderr)
-            return 2
-        call_args = []
-        if section == "prep_sweep":
-            if not opts.get("dest_root"):
-                print("cron: [prep_sweep] needs dest_root = "
-                      "\"<cleaned-copies root, OUTSIDE the lake root>\"",
-                      file=sys.stderr)
-                return 2
-            bpath = opts.pop("benchmark", None)
-            fmt = opts.pop("benchmark_format", None) or "parquet"
-            if bpath:
-                opts["benchmark"] = spark.read.format(fmt).load(bpath)
-        if section == "ann_maintain":
-            if not (opts.get("index_path") and opts.get("source")):
-                print("cron: [ann_maintain] needs index_path = "
-                      "\"<persisted IVFADC index>\" and source = "
-                      "\"<lake embeddings dataset name (or path)>\"",
-                      file=sys.stderr)
-                return 2
-        if section == "decontaminate":
-            specs = opts.pop("benchmark", None) or []
-            if not specs:
-                print("cron: [decontaminate] needs benchmark = "
-                      "[\"name=path\", ...]", file=sys.stderr)
-                return 2
-            fmt = opts.pop("benchmark_format", None) or "parquet"
-            benchmarks = {}
-            for spec in specs:
-                name, _, path = str(spec).rpartition("=")
-                if not name:
-                    name, path = "benchmark", spec
-                benchmarks[name] = spark.read.format(fmt).load(path)
-            call_args = [benchmarks]
-        if section == "signatures_report":
-            fail_on = bool(opts.pop("fail_on_stale", False)) or fail_on
-        try:
-            results = method(*call_args, **opts)
-        except ConfigError as exc:
-            # a method-level config refusal (ann_maintain's inert
-            # fail_recall, neardup's non-dividing n_bands, ...) is a
-            # CONFIG error: route it through the documented exit-2
-            # path instead of crashing the cron with a traceback and
-            # losing the sections that already ran. ONLY the typed
-            # ConfigError takes this path (ADVICE r10): a genuine
-            # runtime ValueError from mid-sweep driver-side code
-            # (numpy, sidecar parsing) is a per-section FAILURE, not
-            # a config typo
-            print(f"cron: [{section}] {exc}", file=sys.stderr)
+        results, src = _run_section(lake, section, raw[section])
+        if src == 2:
             if combined:
                 print(json.dumps(combined, indent=2, sort_keys=True,
                                  default=str))
             return 2
-        except Exception as exc:  # noqa: BLE001 — cron containment
-            # runtime failure mid-sweep: record it against THIS
-            # section (exit 1, same contract as a per-dataset error)
-            # and keep running the remaining sections
-            combined[section] = {
-                "error": f"{type(exc).__name__}: {exc}"[:500]}
-            print(f"cron: [{section}] failed: "
-                  f"{type(exc).__name__}: {exc}", file=sys.stderr)
-            rc = 1
-            continue
         combined[section] = results
-        if any(isinstance(r, dict) and "error" in r
-               for r in results.values()):
-            rc = 1
-        elif rc == 0 and section == "ann_maintain":
-            # the thresholds ARE the fail knobs here (fail_imbalance /
-            # fail_recall in the section): any fired alert -> exit 3,
-            # the same contract the fail_on_* sections follow
-            if any(isinstance(r, dict) and r.get("tripped")
-                   for r in results.values()):
-                rc = 3
-        elif rc == 0 and fail_on and section == "signatures_report":
-            stale = any(
-                info.get("fresh") is False or info.get("marker") is None
-                for r in results.values()
-                for info in r.get("sidecars", {}).values()
-            )
-            if stale:
-                rc = 3
-        elif rc == 0 and fail_on:
-            tripped = any(
-                isinstance(r, dict) and (
-                    r.get("n_dropped", 0) > 0
-                    or any(v > 0 for v in r.get("contaminated", {}).values())
-                )
-                for r in results.values()
-            )
-            if tripped:
-                rc = 3
+        # a failure outranks an alert
+        rc = 1 if 1 in (rc, src) else max(rc, src)
     print(json.dumps(combined, indent=2, sort_keys=True, default=str))
     return rc
 
@@ -837,10 +638,39 @@ def build_parser() -> argparse.ArgumentParser:
     pf.add_argument("--text-col", dest="text_col", default="text")
     pf.set_defaults(func=_cmd_profile)
 
-    dc = sub.add_parser("decontaminate", help="lake-wide benchmark-"
-                        "decontamination sweep served from signature "
-                        "sidecars (per-dataset reports + summary)")
-    dc.add_argument("--root", default=None, help="lake root directory")
+    # flags the sweep subcommands share, one dest, default and meaning
+    # each: every sweep subcommand is a one-section cron run (_cmd_sweep)
+    lake = argparse.ArgumentParser(add_help=False)
+    lake.add_argument("--root", default=None, help="lake root directory")
+    lake.add_argument("--signatures-root", dest="signatures_root",
+                      default=None, help="host signature sidecars at "
+                      "<root>/<dataset> instead of next to the data "
+                      "(read-only lakes)")
+    served = argparse.ArgumentParser(add_help=False, parents=[lake])
+    served.add_argument("--report-dir", dest="report_dir", default=None)
+    served.add_argument("--no-materialize", action="store_true",
+                        help="fail datasets without a fresh sidecar "
+                        "instead of computing it")
+    served.add_argument("--incremental", action="store_true",
+                        help="reuse the previous summary's verdicts for "
+                        "what the verified content markers prove "
+                        "unchanged")
+    served.add_argument("--max-concurrency", dest="max_concurrency",
+                        type=int, default=4, help="sweep N datasets' "
+                        "independent jobs concurrently (thread pool)")
+    served.add_argument("--no-verify", action="store_true",
+                        help="skip the sidecar content-marker check")
+    dedup = argparse.ArgumentParser(add_help=False, parents=[served])
+    dedup.add_argument("--score-col", dest="score_col", default=None,
+                       help="keep the best-scored member of each group")
+    dedup.add_argument("--fail-on-dups", dest="fail_on_dups",
+                       action="store_true",
+                       help="exit 3 when any dataset has near-duplicates")
+
+    dc = sub.add_parser("decontaminate", parents=[served],
+                        help="lake-wide benchmark-decontamination sweep "
+                        "served from signature sidecars (per-dataset "
+                        "reports + summary)")
     dc.add_argument("--benchmark", action="append", default=None,
                     help="benchmark dataset as [name=]path "
                     "(repeatable)")
@@ -848,23 +678,6 @@ def build_parser() -> argparse.ArgumentParser:
     dc.add_argument("--id-col", dest="id_col", default="doc_id")
     dc.add_argument("--text-col", dest="text_col", default="text")
     dc.add_argument("--min-hits", dest="min_hits", type=int, default=2)
-    dc.add_argument("--report-dir", dest="report_dir", default=None)
-    dc.add_argument("--signatures-root", dest="signatures_root",
-                    default=None, help="host signature sidecars at "
-                    "<root>/<dataset> instead of next to the data "
-                    "(read-only lakes)")
-    dc.add_argument("--no-materialize", action="store_true",
-                    help="fail datasets without a fresh sidecar instead "
-                    "of hashing them")
-    dc.add_argument("--max-concurrency", dest="max_concurrency",
-                    type=int, default=4, help="sweep N datasets' "
-                    "independent jobs concurrently (thread pool)")
-    dc.add_argument("--incremental", action="store_true",
-                    help="skip datasets whose verified content "
-                    "marker matches the previous summary (reuse "
-                    "their reports)")
-    dc.add_argument("--no-verify", action="store_true",
-                    help="skip the sidecar content-marker check")
     dc.add_argument("--fail-on-hits", dest="fail_on_hits",
                     action="store_true",
                     help="exit 3 when any dataset has contaminated docs")
@@ -886,12 +699,12 @@ def build_parser() -> argparse.ArgumentParser:
                     "embedding benchmarks (requires --dim)")
     dc.add_argument("--dim", type=int, default=None)
     dc.add_argument("--n-probes", dest="n_probes", type=int, default=1)
-    dc.set_defaults(func=_cmd_decontaminate)
+    dc.set_defaults(func=_cmd_sweep)
 
-    sd = sub.add_parser("semantic-dedup", help="lake-wide SemDeDup "
-                        "sweep served from embedding_cells sidecars "
-                        "under the lake-pinned codebook")
-    sd.add_argument("--root", default=None, help="lake root directory")
+    sd = sub.add_parser("semantic-dedup", parents=[dedup],
+                        help="lake-wide SemDeDup sweep served from "
+                        "embedding_cells sidecars under the lake-pinned "
+                        "codebook")
     sd.add_argument("--id-col", dest="id_col", default="vec_id")
     sd.add_argument("--vec-col", dest="vec_col", default="embedding")
     sd.add_argument("--threshold", type=float, default=0.9,
@@ -902,20 +715,6 @@ def build_parser() -> argparse.ArgumentParser:
     sd.add_argument("--codebook", default=None,
                     help="pinned codebook JSON (default "
                     "<root>/_codebooks/semantic_dedup.json)")
-    sd.add_argument("--score-col", dest="score_col", default=None,
-                    help="keep the best-scored member of each group")
-    sd.add_argument("--report-dir", dest="report_dir", default=None)
-    sd.add_argument("--signatures-root", dest="signatures_root",
-                    default=None, help="host signature sidecars at "
-                    "<root>/<dataset> instead of next to the data "
-                    "(read-only lakes)")
-    sd.add_argument("--no-materialize", action="store_true",
-                    help="fail datasets without a fresh cells sidecar "
-                    "instead of assigning them")
-    sd.add_argument("--incremental", action="store_true",
-                    help="skip datasets whose verified content "
-                    "marker matches the previous summary (reuse "
-                    "their reports)")
     sd.add_argument("--cross-dataset", dest="cross_dataset",
                     action="store_true",
                     help="ONE lake-global sweep over the unioned cell "
@@ -929,20 +728,12 @@ def build_parser() -> argparse.ArgumentParser:
                     "under this fraction of the codebook (default "
                     "1.0 = off since the round-11 doc-level partial "
                     "is delta-sized even with every cell touched)")
-    sd.add_argument("--max-concurrency", dest="max_concurrency",
-                    type=int, default=4, help="sweep N datasets' "
-                    "independent jobs concurrently (thread pool)")
-    sd.add_argument("--no-verify", action="store_true",
-                    help="skip the sidecar content-marker check")
-    sd.add_argument("--fail-on-dups", dest="fail_on_dups",
-                    action="store_true",
-                    help="exit 3 when any dataset has near-duplicates")
-    sd.set_defaults(func=_cmd_semantic_dedup)
+    sd.set_defaults(func=_cmd_sweep)
 
-    nd = sub.add_parser("neardup-dedup", help="lake-wide cross-dataset "
-                        "text near-dup sweep served from minhash "
-                        "sidecars (LSH + connected components)")
-    nd.add_argument("--root", default=None, help="lake root directory")
+    nd = sub.add_parser("neardup-dedup", parents=[dedup],
+                        help="lake-wide cross-dataset text near-dup sweep "
+                        "served from minhash sidecars (LSH + connected "
+                        "components)")
     nd.add_argument("--id-col", dest="id_col", default="doc_id")
     nd.add_argument("--text-col", dest="text_col", default="text")
     nd.add_argument("--n-hashes", dest="n_hashes", type=int, default=8)
@@ -956,37 +747,13 @@ def build_parser() -> argparse.ArgumentParser:
                     type=int, default=256,
                     help="drop viral LSH buckets larger than this "
                     "(route them through exact dedup instead)")
-    nd.add_argument("--score-col", dest="score_col", default=None,
-                    help="keep the best-scored member of each cluster")
-    nd.add_argument("--report-dir", dest="report_dir", default=None)
-    nd.add_argument("--signatures-root", dest="signatures_root",
-                    default=None, help="host signature sidecars at "
-                    "<root>/<dataset> instead of next to the data "
-                    "(read-only lakes)")
-    nd.add_argument("--no-materialize", action="store_true",
-                    help="fail datasets without a fresh minhash sidecar "
-                    "instead of hashing them")
-    nd.add_argument("--incremental", action="store_true",
-                    help="ALL-FRESH fast path: when every dataset's "
-                    "verified marker (and score marker) matches the "
-                    "previous summary under the same config, reuse the "
-                    "prior verdict wholesale; any change falls back to "
-                    "the full lake-global sweep")
-    nd.add_argument("--max-concurrency", dest="max_concurrency",
-                    type=int, default=4, help="sweep N datasets' "
-                    "independent jobs concurrently (thread pool)")
     nd.add_argument("--edge-warn-multiple", dest="edge_warn_multiple",
                     type=float, default=4.0,
                     help="incremental: add a balloon_warning to the "
                     "summary's _state when the persisted edge set "
                     "exceeds this multiple of the corpus doc count "
                     "(viral-duplicate night tripwire)")
-    nd.add_argument("--no-verify", action="store_true",
-                    help="skip the sidecar content-marker check")
-    nd.add_argument("--fail-on-dups", dest="fail_on_dups",
-                    action="store_true",
-                    help="exit 3 when any dataset has near-duplicates")
-    nd.set_defaults(func=_cmd_neardup_dedup)
+    nd.set_defaults(func=_cmd_sweep)
 
     cr = sub.add_parser("cron", help="run the lake-maintenance sweeps "
                         "([maintain]/[prep_sweep]/[decontaminate]/"
@@ -1041,20 +808,18 @@ def build_parser() -> argparse.ArgumentParser:
                     help="eval: exit 3 when recall@k drops below this")
     an.set_defaults(func=_cmd_ann)
 
-    sg = sub.add_parser("signatures", help="sidecar-freshness dashboard "
-                        "— which datasets the next sweep serves from "
-                        "sidecars and which re-hash")
-    sg.add_argument("--root", default=None, help="lake root directory")
+    sg = sub.add_parser("signatures", parents=[lake],
+                        help="sidecar-freshness dashboard — which "
+                        "datasets the next sweep serves from sidecars "
+                        "and which re-hash")
     sg.add_argument("--verify", action="store_true",
                     help="re-check every marker against live data "
                     "(one narrow aggregate per dataset)")
-    sg.add_argument("--signatures-root", dest="signatures_root",
-                    default=None, help="out-of-place sidecar layout")
     sg.add_argument("--fail-on-stale", dest="fail_on_stale",
                     action="store_true",
                     help="exit 3 when any sidecar is stale or predates "
                     "content markers")
-    sg.set_defaults(func=_cmd_signatures)
+    sg.set_defaults(func=_cmd_sweep)
     return ap
 
 

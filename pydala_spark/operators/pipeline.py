@@ -22,6 +22,8 @@ dataset/maintain.py:materialize_signatures) instead of re-hashing text.
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -716,14 +718,88 @@ def prep_documents(
     return out
 
 
+#: the ``prep_documents`` kwarg each signature sidecar kind feeds; spans
+#: and cells go as ``(frame, params)`` so the recorded params drive the
+#: stage (span k/window; the cells' codebook sha refuses a retrained
+#: codebook)
+SIDECAR_KWARGS = {
+    "spans": "precomputed_spans",
+    "minhash": "precomputed_minhash",
+    "winnowing": "precomputed_fps",
+    "embedding_cells": "precomputed_cells",
+}
+
+#: each sidecar kind's recorded params and the ``prep_documents`` knob
+#: that sets each: a sidecar serves a run only when they agree
+SIDECAR_PARAMS = {
+    "minhash": {"n_hashes": "n_hashes", "seed": "near_dup_seed",
+                "shingle_mode": "near_dup_shingle_mode",
+                "shingle_size": "near_dup_shingle_size"},
+    "winnowing": {"k": "winnowing_k", "window": "winnowing_window"},
+    "spans": {"k": "span_k", "window": "span_window"},
+    # cells assigned from another embedding column would block-dedup
+    # the wrong space
+    "embedding_cells": {"vec_col": "vec_col"},
+}
+
+_PARAMS = inspect.signature(prep_documents).parameters
+
+#: the ``prep_documents`` knobs a config file can express (frames and
+#: hooks cannot)
+PREP_KNOBS = frozenset(_PARAMS) - {
+    "df", "benchmark", "stage_frames", *SIDECAR_KWARGS.values()}
+
+
+def sidecar_kwargs(kind: str, frame: DataFrame, params: dict) -> dict:
+    """The ``prep_documents`` kwarg that feeds a ``kind`` sidecar read
+    as ``(frame, params)``."""
+    if kind in ("spans", "embedding_cells"):
+        return {SIDECAR_KWARGS[kind]: (frame, params)}
+    return {SIDECAR_KWARGS[kind]: frame}
+
+
+def effective_knobs(knobs: dict) -> dict:
+    """Every knob's value in a ``prep_documents(**knobs)`` run: its
+    defaults under ``knobs``, with the near-dup shingle size the MinHash
+    stage derives when none is set (3 words, 7 chars)."""
+    eff = {k: p.default for k, p in _PARAMS.items()
+           if p.default is not p.empty}
+    eff.update(knobs)
+    eff["near_dup_shingle_size"] = eff["near_dup_shingle_size"] or (
+        7 if eff["near_dup_shingle_mode"] == "char" else 3)
+    return eff
+
+
+def count_stages(stages: dict, write=None):
+    """Yield ``(stage, survivor count)`` for each ``stage_frames`` entry
+    of one ``prep_documents`` run, then call ``write()``. Each stage is
+    persisted just before its count and released once the next stage
+    has been counted, so every stage computes once, at most two stage
+    caches are live, and the write reuses the last cached stage instead
+    of re-running the lineage from the scan."""
+    live: list = []
+    try:
+        for stage, frame in stages.items():
+            frame.persist()
+            live.append(frame)
+            yield stage, frame.count()
+            if len(live) > 1:
+                live.pop(0).unpersist()
+        if write is not None:
+            write()
+    finally:
+        for frame in live:
+            frame.unpersist()
+
+
 def pipeline_report(df: DataFrame, **prep_kwargs) -> dict[str, int]:
     """Per-stage survivor counts for a :func:`prep_documents` run — the
     "where did my corpus go" diagnostic every production cleaning job
     needs when a config change suddenly halves the output. Runs the SAME
     lazy program (stage frames come from prep_documents itself, so the
     numbers cannot drift from the real pipeline); cost is one count
-    action per enabled stage, so use it on a sample or during tuning,
-    not inside the hot ingest path."""
+    action per enabled stage (:func:`count_stages`), so use it on a
+    sample or during tuning, not inside the hot ingest path."""
     if "stage_frames" in prep_kwargs:
         raise ValueError(
             "pipeline_report owns the stage_frames parameter — pass only "
@@ -732,4 +808,4 @@ def pipeline_report(df: DataFrame, **prep_kwargs) -> dict[str, int]:
         )
     stages: dict[str, DataFrame] = {}
     prep_documents(df, stage_frames=stages, **prep_kwargs)
-    return {name: frame.count() for name, frame in stages.items()}
+    return dict(count_stages(stages))

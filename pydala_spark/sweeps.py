@@ -116,7 +116,8 @@ class SweepNight:
         dataset). ``_lake`` is the sum of the per-dataset counts unless
         ``lake_stats(written)`` computes it (``written`` is ``None``
         when nothing landed). ``verdicts()`` runs only when some
-        dataset contributed; a ``None`` frame lands nothing.
+        dataset contributed; a ``None`` frame lands nothing, and a
+        night that lands nothing removes the table at ``target``.
         ``expect["_config"]`` is the config a fresh night echoes."""
         self._sweep(per_dataset, expect, incremental, max_concurrency,
                     serial_while)
@@ -135,15 +136,21 @@ class SweepNight:
                     self.po, self.rep_base, self.results, self.prior,
                     fresh_msg, self._lake(counts, lake_stats),
                     expect["_config"], {**expect, **finish()})
+        frame = None
         if self.union is not None:
             frame, self.mode = verdicts()
-            if frame is not None:
-                # a partial night's frame reads the table it replaces
-                self.written = commit_verdicts(
-                    self.spark, self.po, frame, target,
-                    staged=self.mode == "partial")
-                update_report_entries(self.results, self.written, target,
-                                      counts)
+        if frame is not None:
+            # a partial night's frame reads the table it replaces
+            self.written = commit_verdicts(
+                self.spark, self.po, frame, target,
+                staged=self.mode == "partial")
+            update_report_entries(self.results, self.written, target,
+                                  counts)
+        elif self.po.is_dir(target):
+            # the previous night's table must GO: readers would
+            # disagree with tonight's zero counts, and a later partial
+            # night would carry its rows over
+            self.po.delete(target)
         return seal_summary(
             self.po, self.rep_base, self.results,
             _lake=self._lake(counts, lake_stats), _sweep_mode=self.mode,

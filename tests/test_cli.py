@@ -280,3 +280,201 @@ def test_cli_ann_remove(spark, tmp_path, capsys):
     assert main(["ann", "remove", "--index", idx, "--source", ids]) == 0
     assert json.loads(capsys.readouterr().out)["removed"] == 0
     assert main(["ann", "remove", "--index", idx]) == 2
+
+
+def test_cli_sweep_flags_map_to_method_kwargs(spark, tmp_path, monkeypatch,
+                                             capsys):
+    # every sweep subcommand's flag -> Datalake kwarg mapping, pinned
+    # exactly for the default flags and for every flag set, plus the
+    # exit code each canned result drives (the methods are fakes: no
+    # lake work runs)
+    import functools
+    import json
+
+    from pyspark.sql import DataFrame
+
+    from pydala_spark.catalog import Datalake
+
+    root = str(tmp_path / "lake")
+    bench_pq = str(tmp_path / "bench_pq")
+    bench_js = str(tmp_path / "bench_js")
+    rows = spark.createDataFrame([(0, "leak")], ["doc_id", "text"])
+    rows.write.parquet(bench_pq)
+    rows.write.json(bench_js)
+    calls: list = []
+    canned: dict = {}
+
+    for name in ("decontaminate", "semantic_dedup", "neardup_dedup",
+                 "signatures_report"):
+        orig = getattr(Datalake, name)
+
+        def fake(self, *args, _name=name, **kwargs):
+            calls.append((_name, args, kwargs))
+            return canned[_name]
+
+        # wraps keeps the real signature visible to inspect
+        monkeypatch.setattr(Datalake, name, functools.wraps(orig)(fake))
+
+    def run(argv, method, result):
+        calls.clear()
+        canned[method] = result
+        rc = main(["--master", "local[2]", *argv])
+        out = capsys.readouterr().out
+        if calls:
+            assert json.loads(out) == result
+        return rc
+
+    # -- decontaminate --
+    clean = {"docs": {"contaminated": {"evalset": 0}}}
+    hit = {"docs": {"contaminated": {"evalset": 1}}}
+    broken = {"docs": {"error": "ValueError: x"},
+              "more": {"contaminated": {"evalset": 1}}}
+    assert run(["decontaminate", "--root", root,
+                "--benchmark", f"evalset={bench_pq}"],
+               "decontaminate", hit) == 0
+    (name, args, kwargs), = calls
+    assert name == "decontaminate" and len(args) == 1
+    assert list(args[0]) == ["evalset"]
+    assert isinstance(args[0]["evalset"], DataFrame)
+    assert kwargs == {
+        "id_col": "doc_id", "text_col": "text", "min_hits": 2,
+        "materialize": True, "verify": True, "report_dir": None,
+        "mode": "winnowing", "vec_col": "embedding", "threshold": 0.9,
+        "block_bits": None, "dim": None, "n_probes": 1,
+        "shingle_size": 3, "shingle_mode": "word",
+        "signatures_root": None, "incremental": False,
+        "max_concurrency": 4,
+    }
+    full = ["decontaminate", "--root", root,
+            "--benchmark", f"a={bench_js}", "--benchmark", bench_js,
+            "--format", "json", "--id-col", "id", "--text-col", "body",
+            "--min-hits", "5", "--report-dir", "/rep",
+            "--signatures-root", "/sig", "--no-materialize",
+            "--max-concurrency", "2", "--incremental", "--no-verify",
+            "--fail-on-hits", "--mode", "embedding",
+            "--shingle-size", "5", "--shingle-mode", "char",
+            "--vec-col", "vec", "--threshold", "0.5",
+            "--block-bits", "8", "--dim", "16", "--n-probes", "3"]
+    assert run(full, "decontaminate", hit) == 3
+    (_, args, kwargs), = calls
+    assert list(args[0]) == ["a", "benchmark"]
+    assert args[0]["a"].columns == ["doc_id", "text"]
+    assert kwargs == {
+        "id_col": "id", "text_col": "body", "min_hits": 5,
+        "materialize": False, "verify": False, "report_dir": "/rep",
+        "mode": "embedding", "vec_col": "vec", "threshold": 0.5,
+        "block_bits": 8, "dim": 16, "n_probes": 3,
+        "shingle_size": 5, "shingle_mode": "char",
+        "signatures_root": "/sig", "incremental": True,
+        "max_concurrency": 2,
+    }
+    assert run(full, "decontaminate", clean) == 0
+    assert run(full, "decontaminate", broken) == 1
+    assert run(["decontaminate", "--root", root], "decontaminate",
+               hit) == 2
+    assert run(["decontaminate", "--benchmark", bench_pq],
+               "decontaminate", hit) == 2
+    assert calls == []
+
+    # -- semantic-dedup --
+    dups = {"embs": {"n_dropped": 2}, "_codebook": {"path": "/cb"}}
+    nodup = {"embs": {"n_dropped": 0}}
+    broken = {"embs": {"error": "ValueError: x"}, "x": {"n_dropped": 1}}
+    assert run(["semantic-dedup", "--root", root], "semantic_dedup",
+               dups) == 0
+    (name, args, kwargs), = calls
+    assert name == "semantic_dedup" and args == ()
+    assert kwargs == {
+        "id_col": "vec_id", "vec_col": "embedding", "threshold": 0.9,
+        "n_centroids": 16, "codebook_path": None, "score_col": None,
+        "materialize": True, "verify": True, "report_dir": None,
+        "signatures_root": None, "incremental": False,
+        "max_concurrency": 4, "cross_dataset": False,
+        "partial_max_cell_fraction": 1.0,
+    }
+    full = ["semantic-dedup", "--root", root, "--id-col", "id",
+            "--vec-col", "vec", "--threshold", "0.5",
+            "--n-centroids", "4", "--codebook", "/cb.json",
+            "--score-col", "q", "--report-dir", "/rep",
+            "--signatures-root", "/sig", "--no-materialize",
+            "--incremental", "--cross-dataset",
+            "--partial-max-cell-fraction", "0.25",
+            "--max-concurrency", "1", "--no-verify", "--fail-on-dups"]
+    assert run(full, "semantic_dedup", dups) == 3
+    (_, args, kwargs), = calls
+    assert kwargs == {
+        "id_col": "id", "vec_col": "vec", "threshold": 0.5,
+        "n_centroids": 4, "codebook_path": "/cb.json", "score_col": "q",
+        "materialize": False, "verify": False, "report_dir": "/rep",
+        "signatures_root": "/sig", "incremental": True,
+        "max_concurrency": 1, "cross_dataset": True,
+        "partial_max_cell_fraction": 0.25,
+    }
+    assert run(full, "semantic_dedup", nodup) == 0
+    assert run(full, "semantic_dedup", broken) == 1
+    assert run(["semantic-dedup"], "semantic_dedup", dups) == 2
+    assert calls == []
+
+    # -- neardup-dedup --
+    dups = {"a": {"n_dropped": 1}, "_lake": {"n_clusters": 1},
+            "_sweep_mode": "full"}
+    nodup = {"a": {"n_dropped": 0}, "_sweep_mode": "full"}
+    broken = {"a": {"error": "ValueError: x"}, "b": {"n_dropped": 1}}
+    assert run(["neardup-dedup", "--root", root], "neardup_dedup",
+               dups) == 0
+    (name, args, kwargs), = calls
+    assert name == "neardup_dedup" and args == ()
+    assert kwargs == {
+        "id_col": "doc_id", "text_col": "text", "n_hashes": 8,
+        "n_bands": 4, "shingle_size": 3, "shingle_mode": "word",
+        "seed": 0, "max_bucket_size": 256, "score_col": None,
+        "materialize": True, "verify": True, "report_dir": None,
+        "signatures_root": None, "incremental": False,
+        "max_concurrency": 4, "edge_warn_multiple": 4.0,
+    }
+    full = ["neardup-dedup", "--root", root, "--id-col", "id",
+            "--text-col", "body", "--n-hashes", "16", "--n-bands", "8",
+            "--shingle-size", "7", "--shingle-mode", "char",
+            "--seed", "3", "--max-bucket-size", "64",
+            "--score-col", "q", "--report-dir", "/rep",
+            "--signatures-root", "/sig", "--no-materialize",
+            "--incremental", "--max-concurrency", "2",
+            "--edge-warn-multiple", "9.5", "--no-verify",
+            "--fail-on-dups"]
+    assert run(full, "neardup_dedup", dups) == 3
+    (_, args, kwargs), = calls
+    assert kwargs == {
+        "id_col": "id", "text_col": "body", "n_hashes": 16,
+        "n_bands": 8, "shingle_size": 7, "shingle_mode": "char",
+        "seed": 3, "max_bucket_size": 64, "score_col": "q",
+        "materialize": False, "verify": False, "report_dir": "/rep",
+        "signatures_root": "/sig", "incremental": True,
+        "max_concurrency": 2, "edge_warn_multiple": 9.5,
+    }
+    assert run(full, "neardup_dedup", nodup) == 0
+    assert run(full, "neardup_dedup", broken) == 1
+    assert run(["neardup-dedup"], "neardup_dedup", dups) == 2
+    assert calls == []
+
+    # -- signatures --
+    fresh = {"docs": {"sidecars": {"minhash": {
+        "fresh": True, "marker": {"rows": 1, "xor": 2}}}}}
+    stale = {"docs": {"sidecars": {"minhash": {
+        "fresh": False, "marker": {"rows": 1, "xor": 2}}}}}
+    premarker = {"docs": {"sidecars": {"minhash": {"marker": None}}}}
+    broken = {"docs": {"error": "ValueError: x"}}
+    assert run(["signatures", "--root", root], "signatures_report",
+               stale) == 0
+    (name, args, kwargs), = calls
+    assert name == "signatures_report" and args == ()
+    assert kwargs == {"verify": False, "signatures_root": None}
+    full = ["signatures", "--root", root, "--verify",
+            "--signatures-root", "/sig", "--fail-on-stale"]
+    assert run(full, "signatures_report", stale) == 3
+    (_, args, kwargs), = calls
+    assert kwargs == {"verify": True, "signatures_root": "/sig"}
+    assert run(full, "signatures_report", premarker) == 3
+    assert run(full, "signatures_report", fresh) == 0
+    assert run(full, "signatures_report", broken) == 1
+    assert run(["signatures"], "signatures_report", fresh) == 2
+    assert calls == []

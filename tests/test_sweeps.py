@@ -36,6 +36,9 @@ class FakePO:
     def recover(self, path: str) -> None:
         pass  # no interrupted commit pending in the fake
 
+    def delete(self, path: str) -> None:
+        self.dirs.discard(path)
+
 
 def test_load_prior_summary_rules():
     good = {"_config": {"k": 1}, "da": {"n_docs": 2}}
@@ -401,6 +404,49 @@ def test_night_lake_is_sum_of_dataset_counts():
     assert out["_sweep_mode"] == "full"
     assert out["_config"] == {"k": 1} and out["_extra"] == 1
     assert "n_docs" not in out["dc"]
+
+
+def test_night_landing_nothing_removes_stale_verdict_table():
+    # a non-fresh night that lands no frame must not leave the previous
+    # night's verdict table behind while its summary reports zero (the
+    # remove_dataset night: every remaining dataset skips)
+    from pydala_spark.sweeps import SweepNight
+
+    target = "/lake/_rep/_verdicts"
+    lake = FakeLake(["da", "db"])
+    lake._po.dirs.add(target)
+    called: list = []
+
+    def skip_all(name, base):
+        return {"skipped": "no rows"}, None
+
+    def verdicts():
+        called.append(1)
+        return None, "full"
+
+    night = SweepNight(lake, None, "_rep")
+    out = night.run_global(
+        skip_all, verdicts, counts={"n_docs": FakeCol()}, target=target,
+        fresh_msg="reused", expect={"_config": {}}, incremental=False,
+        max_concurrency=1)
+    assert called == []  # nothing contributed: no verdict phase
+    assert target not in lake._po.dirs
+    assert out["_lake"] == {"n_docs": 0}
+    assert out["_sweep_mode"] == "full"
+
+    # a contributing night whose verdict builder lands nothing too
+    class Part:
+        def unionByName(self, other):
+            return self
+
+    lake2 = FakeLake(["da"])
+    lake2._po.dirs.add(target)
+    SweepNight(lake2, None, "_rep").run_global(
+        lambda name, base: ({"sidecar": "reused"}, (Part(),)), verdicts,
+        counts={"n_docs": FakeCol()}, target=target, fresh_msg="reused",
+        expect={"_config": {}}, incremental=False, max_concurrency=1)
+    assert called == [1]
+    assert target not in lake2._po.dirs
 
 
 def test_rep_base_for_and_union_all_and_seal():
