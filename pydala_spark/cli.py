@@ -426,7 +426,9 @@ def _run_section(lake, section: str, opts: dict) -> tuple[dict | None, int]:
         # prep_documents' own knobs so a typo'd cleaning knob still
         # fails the config check, not 500 per-dataset errors
         valid = (valid - {"prep_kwargs"}) | PREP_KNOBS
-    bad = sorted(set(opts) - valid - {"benchmark", "benchmark_format"})
+    if section in ("prep_sweep", "decontaminate"):
+        valid |= {"benchmark", "benchmark_format"}
+    bad = sorted(set(opts) - valid)
     if bad:
         print(f"cron: unknown [{section}] key(s) {bad} — valid: "
               f"{sorted(valid)}", file=sys.stderr)

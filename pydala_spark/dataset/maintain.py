@@ -21,6 +21,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pydala_spark.dataset.writer import write_frame
 from pydala_spark.session import configure_session
 
 
@@ -54,52 +55,79 @@ def bucketize(
     return table_name
 
 
-def _open_rewrite(spark: SparkSession, path: str, swap: str, suffix: str):
-    """Shared head of compact/recluster: resolve the live directory (a
-    generational dataset's active generation), finish any crashed commit
-    there, list its files and name the stage (the next generation, or a
-    ``suffix`` sibling for ``PathOps.commit_stage``)."""
-    from pydala_spark.dataset import generations
-    from pydala_spark.utils.pathops import PathOps, strip_scheme
+class _Rewrite:
+    """The one rewrite step of every in-place dataset rewrite: ``compact``,
+    ``recluster``, ``Writer`` upsert (``Writer.write`` opens every call
+    here), ``Writer.unify_schema`` and in-place ``Repartition.run``.
 
-    if swap not in ("rename", "generation"):
-        raise ValueError("swap must be 'rename' or 'generation'")
-    configure_session(spark)
-    base = strip_scheme(path).rstrip("/")
-    local = strip_scheme(generations.resolve(spark, base)).rstrip("/")
-    ops = PathOps(spark, local)
-    ops.recover(local)
-    files = ops.data_files(local)
-    if not files:
-        raise FileNotFoundError(f"no data files under {path}")
-    if swap == "generation":
-        stage = posixpath.join(base, generations.next_generation(spark, base))
-    else:
-        stage = local + suffix
-    return base, local, ops, files, stage
+    Opening resolves the live directory (a generational dataset's active
+    generation), finishes any crashed commit there (``PathOps.recover``),
+    lists its data files ONCE (``files`` and their relative ``rels``) and
+    names the stage: the next ``gen-NNNNNN/`` for ``swap="generation"``,
+    else the ``suffix`` sibling. The caller writes the stage, then
+    :meth:`commit` swaps it in and refreshes Spark's cached listings.
+    """
 
+    def __init__(self, spark: SparkSession, path: str, suffix: str,
+                 swap: str = "rename"):
+        from pydala_spark.dataset import generations
+        from pydala_spark.utils.pathops import PathOps, strip_scheme
 
-def _commit_rewrite(spark, swap, base, local, ops, stage, rels, keep_previous):
-    """Swap a staged compact/recluster output in; returns the live dir.
-    ``generation`` is ONE pointer PUT; source + input_files let it carry
-    forward any append that landed after the listing (generations.py
-    concurrency contract)."""
-    from pydala_spark.dataset import generations
+        if swap not in ("rename", "generation"):
+            raise ValueError("swap must be 'rename' or 'generation'")
+        self.spark, self.swap = configure_session(spark), swap
+        self.base = strip_scheme(path).rstrip("/")
+        self.local = strip_scheme(generations.resolve(spark, self.base)).rstrip("/")
+        self.ops = PathOps(spark, self.local)
+        self.ops.recover(self.local)
+        self.files = self.ops.data_files(self.local)
+        self.rels = [p[len(self.local):].lstrip("/") for p, _ in self.files]
+        if swap == "generation":
+            self.stage = posixpath.join(
+                self.base, generations.next_generation(spark, self.base))
+        else:
+            self.stage = self.local + suffix
 
-    if swap == "rename":
-        ops.commit_stage(local, stage)
-        final = local
-    else:
-        generations.commit(
-            spark, base, posixpath.basename(stage), keep_previous=keep_previous,
-            source=(generations.ROOT_GEN if local == base
-                    else posixpath.basename(local)),
-            input_files=rels,
-        )
-        final = stage
-    spark.catalog.refreshByPath(base)
-    spark.catalog.refreshByPath(final)
-    return final
+    def read(self, format: str) -> DataFrame:
+        """The EXPLICIT listed files, not the directory: an append that
+        lands between the listing and Spark's own directory scan would
+        otherwise be swept into the rewrite while staying absent from the
+        generation commit's ``input_files`` — carried forward as a
+        straggler AND rewritten, duplicating its rows. csv is read as
+        strings, so the rewrite keeps its text."""
+        from pydala_spark import sources
+
+        if not self.files:
+            raise FileNotFoundError(f"no data files under {self.base}")
+        return sources.read(self.spark, [p for p, _ in self.files], format,
+                            base_path=self.local, infer_schema=False)
+
+    def commit(self, entries: list[str] | None = None, park: str | None = None,
+               keep_previous: int = 1) -> str:
+        """Swap the written stage in; returns the live directory.
+        ``rename`` runs ``PathOps.commit_stage`` (``entries``: the
+        target-relative dirs to replace, e.g. an upsert's touched
+        partitions; ``park``: where replaced files go, e.g. the TimeFly
+        archive). ``generation`` is ONE pointer PUT; the listed files let
+        it carry forward any append that landed after the listing
+        (generations.py concurrency contract)."""
+        from pydala_spark.dataset import generations
+
+        if self.swap == "rename":
+            self.ops.commit_stage(self.local, self.stage, entries=entries, park=park)
+            final = self.local
+        else:
+            generations.commit(
+                self.spark, self.base, posixpath.basename(self.stage),
+                keep_previous=keep_previous,
+                source=(generations.ROOT_GEN if self.local == self.base
+                        else posixpath.basename(self.local)),
+                input_files=self.rels,
+            )
+            final = self.stage
+        self.spark.catalog.refreshByPath(self.base)
+        self.spark.catalog.refreshByPath(final)
+        return final
 
 
 def compact(
@@ -127,35 +155,21 @@ def compact(
     ``PathOps.commit_stage``; ``swap="generation"`` writes the next
     ``gen-NNNNNN/`` and commits one pointer object — the object-store
     path (``dataset/generations.py``), keeping ``keep_previous``
-    generations for in-flight readers.
+    generations for in-flight readers. Both go through :class:`_Rewrite`.
     """
     from pydala_spark.schema import infer_partitioning
 
-    base, local, ops, files, tmp = _open_rewrite(spark, path, swap, "__compacting")
-    total_bytes = sum(sz for _, sz in files)
+    rw = _Rewrite(spark, path, "__compacting", swap)
+    df = rw.read(format)
+    total_bytes = sum(sz for _, sz in rw.files)
     target_bytes = target_file_mb * 1024 * 1024
     n_files = max(1, math.ceil(total_bytes / target_bytes))
-    rels = [p[len(local):].lstrip("/") for p, _ in files]
-    part_cols = infer_partitioning(rels) or []
-
-    reader = spark.read.format(format)
-    if format == "csv":
-        # Writer/Dataset write and read csv with headers; reading without
-        # would ingest header lines as rows and re-write headerless —
-        # silent corruption on the very next read
-        reader = reader.option("header", True).option("inferSchema", True)
-    # read the EXPLICIT listed files, not the directory: an append that
-    # lands between the listing above and Spark's own directory scan
-    # would otherwise be swept into the rewrite while staying absent
-    # from input_files — commit() would then carry it forward as a
-    # straggler AND it would be in the compacted output, duplicating
-    # its rows. basePath keeps hive partition-column derivation intact.
-    df = reader.option("basePath", local).load([p for p, _ in files])
+    part_cols = infer_partitioning(rw.rels) or []
     if part_cols:
         # per-partition chunk counts from on-disk bytes (metadata already
         # in hand from the file listing — no extra Spark job)
         per_part_bytes: dict[tuple, int] = {}
-        for rel, (_, sz) in zip(rels, files):
+        for rel, (_, sz) in zip(rw.rels, rw.files):
             segs = rel.split("/")[:-1]
             kv = dict(s.split("=", 1) for s in segs if "=" in s)
             # key is always full-arity over the inferred partition
@@ -191,20 +205,12 @@ def compact(
         )
     else:
         shuffled = df.repartition(n_files)
-    if format in ("csv", "json") and compression == "zstd":
-        compression = "gzip"  # mirror Writer: hadoop text codecs lack zstd
-    writer = shuffled.write.format(format).mode("overwrite").option(
-        "compression", compression
-    )
-    if format == "csv":
-        writer = writer.option("header", True)
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.save(tmp)
-    final = _commit_rewrite(spark, swap, base, local, ops, tmp, rels, keep_previous)
+    write_frame(shuffled, rw.stage, format, compression=compression,
+                partition_by=part_cols)
+    final = rw.commit(keep_previous=keep_previous)
     return {
-        "files_before": len(files),
-        "files_after": len(ops.data_files(final)),
+        "files_before": len(rw.files),
+        "files_after": len(rw.ops.data_files(final)),
         "bytes": total_bytes,
         "partition_cols": part_cols,
     }
@@ -289,10 +295,7 @@ def zorder_write(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    writer = out.write.format(format).mode("overwrite")
-    if format == "parquet":
-        writer = writer.option("compression", compression)
-    writer.save(path)
+    write_frame(out, path, format, compression=compression)
     return {"n_files": n_files, "bits": bits, "cols": list(cols)}
 
 
@@ -310,20 +313,17 @@ def recluster(
     dataset: read, cluster on the Morton curve over ``cols``, stage, and
     swap — ``swap="rename"`` (``PathOps.commit_stage``) or
     ``swap="generation"`` (object-store-safe pointer commit, see
-    :func:`compact`). The periodic-maintenance form of
-    :func:`zorder_write` — a streaming sink accretes arrival-ordered
-    files; reclustering restores multi-column min/max pruning without
-    taking the dataset offline longer than the swap.
+    :func:`compact`), through :class:`_Rewrite`. The periodic-maintenance
+    form of :func:`zorder_write` — a streaming sink accretes
+    arrival-ordered files; reclustering restores multi-column min/max
+    pruning without taking the dataset offline longer than the swap.
     """
-    base, local, ops, files, tmp = _open_rewrite(spark, path, swap, "__reclustering")
-    rels = [p[len(local):].lstrip("/") for p, _ in files]
-    # explicit file list == input_files, so a concurrent append can only
-    # be a straggler (carried forward by commit), never double-counted
-    df = spark.read.option("basePath", local).parquet(*[p for p, _ in files])
+    rw = _Rewrite(spark, path, "__reclustering", swap)
     stats = zorder_write(
-        spark, df, tmp, cols, n_files=n_files, bits=bits, compression=compression
+        spark, rw.read("parquet"), rw.stage, cols, n_files=n_files, bits=bits,
+        compression=compression,
     )
-    _commit_rewrite(spark, swap, base, local, ops, tmp, rels, keep_previous)
+    rw.commit(keep_previous=keep_previous)
     return stats
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pydala_spark import schema as schema_mod
+from pydala_spark import sources
 from pydala_spark.session import configure_session
 
 
@@ -147,7 +148,7 @@ class Dataset:
         schema, _ = schema_mod.get_unified_schema(self.fragment_schemas)
         return schema
 
-    def _directory_partition_read(self) -> DataFrame:
+    def _directory_partition_read(self, pinned) -> DataFrame:
         """Directory-flavor (non-hive) partitioned read: bare-value dirs
         ``base/val1/val2/file.parquet`` with column NAMES supplied by the
         caller — reference passes them straight to pyarrow
@@ -166,30 +167,19 @@ class Dataset:
         ``+``, ``&``... stay literal there), and a mismatch would silently
         fill the partition columns with wrong segments.
         """
-        reader = self.spark.read
-        pinned = (
-            schema_mod.arrow_schema_to_spark(self._pinned_schema)
-            if self._pinned_schema is not None
-            else None
-        )
-        if pinned is not None:
-            # partition columns come from the path, not the footers
-            data_fields = [f for f in pinned.fields if f.name not in self.partitioning]
-            from pyspark.sql.types import StructType
-
-            reader = reader.schema(StructType(data_fields))
-        reader = reader.option("recursiveFileLookup", "true")
-        if self.format == "parquet":
-            df = reader.option("mergeSchema", "true").parquet(self.path)
-        elif self.format == "csv":
-            opts = {"header": True, **self._csv_options}
-            if self._pinned_schema is None:
-                opts.setdefault("inferSchema", True)
-            df = reader.options(**opts).csv(self.path)
-        else:
+        if self.format not in ("parquet", "csv"):
             raise ValueError(
                 f"directory partitioning unsupported for format {self.format!r}"
             )
+        data_schema = None
+        if pinned is not None:
+            # partition columns come from the path, not the footers
+            from pyspark.sql.types import StructType
+
+            data_schema = StructType(
+                [f for f in pinned.fields if f.name not in self.partitioning]
+            )
+        df = self._read(data_schema, recursiveFileLookup=True)
         # end-anchoring requires every file to sit at EXACTLY
         # base/<n partition dirs>/file — a stray deeper OR shallower
         # layout would silently shift which segment becomes which
@@ -236,26 +226,21 @@ class Dataset:
         return df
 
     def _base_read(self) -> DataFrame:
+        pinned = (
+            schema_mod.arrow_schema_to_spark(self._pinned_schema)
+            if self._pinned_schema is not None
+            else None
+        )
         if isinstance(self.partitioning, (list, tuple)) and self.partitioning:
-            return self._directory_partition_read()
-        reader = self.spark.read
-        if self._pinned_schema is not None:
-            reader = reader.schema(schema_mod.arrow_schema_to_spark(self._pinned_schema))
-        if self.format == "parquet":
-            return reader.option("mergeSchema", "true").parquet(self.path)
+            return self._directory_partition_read(pinned)
+        return self._read(pinned)
+
+    def _read(self, schema, **options) -> DataFrame:
+        """The dataset directory through :func:`pydala_spark.sources.read`
+        (format -> reader options); ``csv_options`` apply to csv only."""
         if self.format == "csv":
-            opts = {"header": True, **self._csv_options}
-            if self._pinned_schema is None:
-                opts.setdefault("inferSchema", True)
-            return reader.options(**opts).csv(self.path)
-        if self.format == "json":
-            return reader.json(self.path)
-        if self.format == "orc":
-            # ORC is Spark-native (vectorized reader, predicate pushdown,
-            # zstd) — beyond the reference's format set but free to
-            # support through the same dispatch
-            return reader.option("mergeSchema", "true").orc(self.path)
-        raise ValueError(f"unsupported format {self.format!r}")
+            options.update(self._csv_options)
+        return sources.read(self.spark, self.path, self.format, schema=schema, **options)
 
     def _unified_read(self) -> DataFrame:
         """Mixed-schema read: group fragments by physical schema, read each
@@ -285,7 +270,7 @@ class Dataset:
             # though explicit file paths are given — without it the
             # partition columns (directory names, absent from footers)
             # would silently vanish from the unified read
-            part = self.spark.read.option("basePath", self.path).parquet(*paths)
+            part = sources.read(self.spark, paths, "parquet", base_path=self.path)
             cols = [
                 F.col(f.name).cast(f.dataType).alias(f.name)
                 if f.name in part.columns

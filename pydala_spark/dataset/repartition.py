@@ -85,27 +85,36 @@ class Repartition:
             )
         return df
 
+    def _write(self, df: DataFrame, path: str, mode: str) -> None:
+        Writer(
+            self.spark,
+            path,
+            format=self.dest_format,
+            mode=mode,
+            partition_by=self.partition_by,
+            compression=self.compression,
+            max_records_per_file=self.max_records_per_file,
+        ).write(df)
+
     def run(self) -> None:
         """Execute the rewrite. In-place rewrites stage into a temp dir
-        (Spark cannot overwrite its own input) swapped in by
-        ``PathOps.commit_stage``, optionally preceded by a TimeFly
+        (Spark cannot overwrite its own input) swapped in by the rewrite
+        step (``maintain._Rewrite``), optionally preceded by a TimeFly
         snapshot — mirroring the reference's guarded in-place overwrite
         + auto pre-snapshot (repartition.py:148-194)."""
         import posixpath
 
-        from pydala_spark.dataset import generations
-        from pydala_spark.utils.pathops import PathOps, strip_scheme
+        if not self.in_place:
+            self._write(self.read(), self.dest_path, self.mode)
+            return
+        from pydala_spark.dataset.maintain import SIGNATURES_DIR, _Rewrite
 
         # a generation-pointer dataset rewrites INSIDE its active
         # generation (matching the Dataset read below), keeping the
         # pointer layout intact instead of flattening it
-        local = strip_scheme(
-            generations.resolve(self.spark, self.source_path)
-        ).rstrip("/")
-        ops = PathOps(self.spark, local)
-        if self.in_place:
-            ops.recover(local)
-        if self.in_place and ops.is_dir(posixpath.join(local, "current")):
+        rw = _Rewrite(self.spark, self.source_path, "__repartition_tmp")
+        local, ops = rw.local, rw.ops
+        if ops.is_dir(posixpath.join(local, "current")):
             # rewriting a TimeFly ROOT in place would delete current/ and
             # strand the snapshot layout — regardless of with_snapshot.
             # Checked BEFORE the read (the read of a root fails with its
@@ -115,21 +124,10 @@ class Repartition:
                 "in-place Repartition at its current/ subdirectory"
             )
         df = self.read()
-        if not self.in_place:
-            Writer(
-                self.spark,
-                self.dest_path,
-                format=self.dest_format,
-                mode=self.mode,
-                partition_by=self.partition_by,
-                compression=self.compression,
-                max_records_per_file=self.max_records_per_file,
-            ).write(df)
-            return
+        parent = posixpath.dirname(local)
         if self.with_snapshot:
             from pydala_spark.dataset.timefly import TimeFly
 
-            parent = posixpath.dirname(local)
             if posixpath.basename(local) == "current" and any(
                 ops.exists(posixpath.join(parent, side))
                 for side in ("_dataset.json", "_dataset.toml")
@@ -139,32 +137,17 @@ class Repartition:
                 # never exists, silently skipping the advertised snapshot)
                 TimeFly(self.spark, parent, format=self.source_format).add_snapshot()
 
-        tmp = local + "__repartition_tmp"
-        Writer(
-            self.spark,
-            tmp,
-            format=self.dest_format,
-            mode="overwrite",
-            partition_by=self.partition_by,
-            compression=self.compression,
-            max_records_per_file=self.max_records_per_file,
-        ).write(df)
+        self._write(df, rw.stage, "overwrite")
         # pointer manifests referencing this current/ need the old files
         # parked in the snapshot archive (delete_snapshot's GC reclaims)
-        snap_dir = posixpath.join(posixpath.dirname(local), "snapshot")
+        snap_dir = posixpath.join(parent, "snapshot")
         has_manifests = posixpath.basename(local) == "current" and any(
             e.endswith(".manifest.json") for e in ops.list_dir(snap_dir)
         )
-        ops.commit_stage(
-            local, tmp,
-            park=posixpath.join(snap_dir, "archive") if has_manifests else None,
-        )
+        rw.commit(park=posixpath.join(snap_dir, "archive") if has_manifests else None)
         if self.distinct:
             # the rewrite REMOVED rows — any surviving signature sidecar
             # is stale (pure repartition/sort preserves content and keeps
             # its sidecars valid; distinct is the one content-changing
             # knob on this path). Same unsigned-write rule as Writer (r8).
-            from pydala_spark.dataset.maintain import SIGNATURES_DIR
-
             ops.delete(posixpath.join(local, SIGNATURES_DIR))
-        self.spark.catalog.refreshByPath(self.source_path)

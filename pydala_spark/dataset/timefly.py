@@ -39,6 +39,7 @@ import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pydala_spark import sources
 from pydala_spark.session import configure_session
 from pydala_spark.utils.pathops import COMMIT_JOURNAL, PathOps, strip_scheme
 
@@ -562,20 +563,8 @@ class TimeFly:
                         f"empty); first: {missing[0]!r}" if missing else
                         f"pointer snapshot {key} lists no files"
                     )
-                reader = self.spark.read
-                if self.format == "csv":
-                    # Writer writes csv WITH headers; reading without
-                    # would ingest header lines as rows under _c0.._cn
-                    # (same rule as maintain.compact / Dataset)
-                    reader = reader.option("header", True).option(
-                        "inferSchema", True
-                    )
-                elif self.format == "parquet":
-                    reader = reader.option("mergeSchema", True)
                 parts = [
-                    reader.option("basePath", base)
-                    .format(self.format)
-                    .load(files)
+                    sources.read(self.spark, files, self.format, base_path=base)
                     for base, files in (
                         (self.current_path, in_cur),
                         (self.archive_path, in_arc),

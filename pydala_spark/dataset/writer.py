@@ -17,10 +17,11 @@ Reference parity (SURVEY.md §2.2):
 - schema-unification rewrite (writer.py:529-571)
 
 Scale: every mode is a single distributed write; the delta diff is a
-shuffled anti-join (or set subtract) whose existing-side scan is pruned by
-the datetime window — at 100 TB, keep datasets partitioned by a time
-column so the window prunes partitions, and the diff only touches the
-overlapping slice.
+shuffled anti-join (or set subtract) whose existing-side scan is filtered
+by the datetime window. The window prunes partitions only when the
+dataset is partitioned by the datetime column itself; a ``time_bucket``
+layout partitions on the derived ``bucket``, so the diff still lists and
+scans every partition (parquet min/max skips row groups outside it).
 """
 
 from __future__ import annotations
@@ -183,6 +184,40 @@ def tables_diff(
     return incoming.subtract(aligned)
 
 
+def write_frame(
+    df: DataFrame,
+    path: str,
+    format: str = "parquet",
+    mode: str = "overwrite",
+    compression: str = "zstd",
+    partition_by: Sequence[str] | None = None,
+    max_records_per_file: int | None = None,
+) -> None:
+    """Write ``df`` as the data files of a dataset: the one place that
+    turns a dataset format into a ``DataFrameWriter``. ``mode`` is a
+    Spark save mode, or ``"overwrite_partitions"`` for a dynamic
+    partition overwrite. csv is written with a header (every reader
+    expects one); zstd is parquet/orc-native and the hadoop text codecs
+    lack it, so csv/json degrade it to gzip (still transparent on read)
+    rather than silently writing uncompressed text."""
+    format = format.lower()
+    if format not in ("parquet", "orc", "csv", "json"):
+        raise ValueError(f"unsupported write format {format!r}")
+    if format in ("csv", "json") and compression == "zstd":
+        compression = "gzip"
+    writer = df.write.format(format).option("compression", compression)
+    if mode == "overwrite_partitions":
+        mode = "overwrite"
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    if format == "csv":
+        writer = writer.option("header", True)
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.mode(mode).save(path)
+
+
 class Writer:
     """Partitioned dataset writer.
 
@@ -259,10 +294,6 @@ class Writer:
         if isinstance(data, str):
             # read the source in THIS writer's format (a csv writer fed
             # a csv dataset path must not scan it as parquet)
-            if self.format in ("feather", "ipc", "arrow"):
-                from pydala_spark.sources import read as _bridge_read
-
-                return _bridge_read(self.spark, data, format="feather")
             from pydala_spark.dataset.reader import Dataset
 
             return Dataset(self.spark, data, format=self.format).load()
@@ -277,31 +308,6 @@ class Writer:
             pass
         # pandas / polars / anything createDataFrame understands
         return self.spark.createDataFrame(data)
-
-    def _existing_partitioning(self) -> list[str] | None:
-        """Hive partition columns of the existing dataset, from file paths
-        (schema.infer_partitioning — reference timefly.py:105-112).
-        Listed through the Hadoop FileSystem, so this works on any scheme
-        the Spark conf resolves (s3a/gs/abfs/...), not just local POSIX."""
-        from pydala_spark.schema import infer_partitioning
-        from pydala_spark.utils.pathops import PathOps, strip_scheme
-
-        ops = PathOps(self.spark, self.path)
-        base = strip_scheme(self.path).rstrip("/")
-        rels = [
-            p[len(base):].lstrip("/")
-            for p, _ in ops.data_files(self.path)
-            if p.startswith(base)
-        ]
-        return infer_partitioning(rels)
-
-    def _dataset_exists(self) -> bool:
-        from pydala_spark.utils.pathops import PathOps
-
-        ops = PathOps(self.spark, self.path)
-        if ops.is_file(self.path):  # single-file target (feather bridge)
-            return True
-        return bool(ops.data_files(self.path))
 
     # -- the write ------------------------------------------------------------
 
@@ -331,13 +337,14 @@ class Writer:
         reference's half-open default drops them (writer.py:196-200 +
         :227-240). Explicit ``end_time`` keeps half-open semantics.
         """
-        from pydala_spark.dataset import generations
-        from pydala_spark.utils.pathops import PathOps
+        from pydala_spark.dataset.maintain import _Rewrite
 
-        # follow any generation advance since construction (one probe)
-        self.path = generations.resolve(self.spark, self._orig_path)
-        # finish a crashed staged rewrite before landing anything (one probe)
-        PathOps(self.spark, self.path).recover(self.path)
+        # the rewrite step's head: follow any generation advance since
+        # construction, finish a crashed staged rewrite, and list the data
+        # files ONCE — existence, the directory-flavor depth check,
+        # inherited partitioning and an upsert all read this listing
+        rw = _Rewrite(self.spark, self._orig_path, "__upserting")
+        self.path = rw.local
         df = self._coerce(data)
         if transform_func is not None:
             df = transform_func(df, **(transform_func_kwargs or {}))
@@ -359,7 +366,7 @@ class Writer:
         if time_bucket and not datetime_column:
             raise TypeError("datetime_column must be set when time_bucket is used")
 
-        exists = self._dataset_exists()
+        exists = bool(rw.files)
         if (
             self.partition_flavor == "directory"
             and exists
@@ -373,15 +380,7 @@ class Writer:
             # bare-value layouts carry no column names, so nothing can be
             # inherited: a flat append onto a depth>0 directory layout
             # would land files the partition parser mis-reads. Fail loud.
-            from pydala_spark.utils.pathops import PathOps, strip_scheme
-
-            ops = PathOps(self.spark, self.path)
-            base = strip_scheme(self.path).rstrip("/")
-            if any(
-                "/" in p[len(base):].lstrip("/")
-                for p, _ in ops.data_files(self.path)
-                if p.startswith(base)
-            ):
+            if any("/" in rel for rel in rw.rels):
                 raise ValueError(
                     "partition_flavor='directory' dataset has a partitioned "
                     "layout but no partition_by was given — bare-value dirs "
@@ -414,7 +413,7 @@ class Writer:
                     "path keys on hive col=value directories"
                 )
             if exists:
-                self._upsert(df, delta_subset)
+                self._upsert(df, delta_subset, rw)
                 # the early return skips the ride-along block below, and
                 # an upsert REPLACES rows — any existing sidecar is now
                 # stale (the ctor guard already rejects signatures= with
@@ -451,7 +450,7 @@ class Writer:
                 return
         try:
             self._write_resolved(
-                df, mode, spark_mode, exists, datetime_column, time_bucket
+                df, mode, spark_mode, rw.rels, datetime_column, time_bucket
             )
             if self.signatures:
                 # inside the try: delta mode's diff frame is still
@@ -582,10 +581,11 @@ class Writer:
         df: DataFrame,
         mode: str,
         spark_mode: str,
-        exists: bool,
+        rels: list[str],
         datetime_column: str | None,
         time_bucket: str | None,
     ) -> None:
+        from pydala_spark.schema import infer_partitioning
 
         # derive the time bucket BEFORE the inheritance gate: a repeat
         # append to a time-bucketed dataset inherits ['bucket'] from the
@@ -593,7 +593,7 @@ class Writer:
         if time_bucket:
             df = df.withColumn("bucket", bucket_column(datetime_column, time_bucket))
         partition_cols = list(self.partition_by)
-        if not partition_cols and exists and (
+        if not partition_cols and rels and (
             spark_mode == "append" or mode == "overwrite_partitions"
         ):
             # Inherit the existing hive layout: appending flat files into a
@@ -601,7 +601,7 @@ class Writer:
             # partition discovery silently ignores them on read; and a
             # dynamic partition overwrite without partitionBy degrades to a
             # full-dataset overwrite (silent loss of absent partitions).
-            inherited = self._existing_partitioning()
+            inherited = infer_partitioning(rels)
             if inherited:
                 missing = [c for c in inherited if c not in df.columns]
                 if missing:
@@ -629,29 +629,13 @@ class Writer:
             self._write_feather(df, spark_mode)
             return
 
-        compression = self.compression
-        if self.format in ("csv", "json") and compression == "zstd":
-            # zstd is parquet/feather-native; the hadoop text codecs don't
-            # ship it — degrade to gzip (still transparent on read) rather
-            # than silently writing uncompressed text
-            compression = "gzip"
-        writer = df.write.mode(spark_mode).option("compression", compression)
-        if mode == "overwrite_partitions":
-            writer = writer.option("partitionOverwriteMode", "dynamic")
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        if self.format == "parquet":
-            writer.parquet(self.path)
-        elif self.format == "csv":
-            writer.option("header", True).csv(self.path)
-        elif self.format == "json":
-            writer.json(self.path)
-        elif self.format == "orc":
-            writer.orc(self.path)
-        else:
-            raise ValueError(f"unsupported write format {self.format!r}")
+        write_frame(
+            df, self.path, self.format,
+            mode="overwrite_partitions" if mode == "overwrite_partitions" else spark_mode,
+            compression=self.compression,
+            partition_by=partition_cols,
+            max_records_per_file=self.max_records_per_file,
+        )
 
     def _write_feather(self, df: DataFrame, spark_mode: str) -> None:
         """Feather/IPC write. A path ending in .feather/.ipc/.arrow is a
@@ -727,7 +711,7 @@ class Writer:
         os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
         pf.write_feather(table, local, compression=comp)
 
-    def _upsert(self, df: DataFrame, keys: Sequence[str]) -> None:
+    def _upsert(self, df: DataFrame, keys: Sequence[str], rw) -> None:
         """Update-or-insert by key: incoming rows replace existing rows
         with the same (null-safe) key tuple; everything else survives.
 
@@ -736,9 +720,10 @@ class Writer:
         distinct partition tuples come to the driver (small: it's the
         partition count, not rows), prune the existing read (partition
         pruning keeps it a metadata operation), and name the directories
-        to swap. The rewrite stages into a sibling directory and swaps
-        the touched partition directories in through
-        ``PathOps.commit_stage`` (crash-safe; a retry converges). An
+        to swap. ``rw`` is the write's open rewrite step
+        (:class:`~pydala_spark.dataset.maintain._Rewrite`): the merge
+        stages into its sibling directory and commits the touched
+        partition directories (crash-safe; a retry converges). An
         unpartitioned dataset is read, merged and swapped whole.
 
         The upsert key should align with the partition key at scale: an
@@ -747,7 +732,7 @@ class Writer:
         limitation of partition-pruned upserts.
         """
         from pydala_spark.dataset.reader import Dataset
-        from pydala_spark.utils.pathops import PathOps, strip_scheme
+        from pydala_spark.schema import infer_partitioning
 
         if self.format in ("feather", "ipc", "arrow"):
             raise ValueError("mode='upsert' is not supported for the feather bridge")
@@ -755,9 +740,7 @@ class Writer:
         if missing:
             raise ValueError(f"upsert keys missing from incoming data: {missing}")
 
-        local = strip_scheme(self.path).rstrip("/")
-        ops = PathOps(self.spark, local)
-        part_cols = list(self.partition_by) or (self._existing_partitioning() or [])
+        part_cols = list(self.partition_by) or (infer_partitioning(rw.rels) or [])
         existing = Dataset(self.spark, self.path, format=self.format).load()
 
         touched_dirs: list[str] | None = None
@@ -792,19 +775,12 @@ class Writer:
         survivors = _null_safe_anti_join(existing, df, keys)
         merged = survivors.unionByName(df.select(*survivors.columns))
 
-        tmp = local + "__upserting"
-        writer = merged.write.mode("overwrite").format(self.format)
-        if self.format in ("parquet", "orc"):
-            writer = writer.option("compression", self.compression)
-        elif self.format == "csv":
-            writer = writer.option("header", True)
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.save(tmp)
-        ops.commit_stage(local, tmp, entries=touched_dirs)
-        self.spark.catalog.refreshByPath(local)
+        write_frame(
+            merged, rw.stage, self.format, compression=self.compression,
+            partition_by=part_cols,
+            max_records_per_file=self.max_records_per_file,
+        )
+        rw.commit(entries=touched_dirs)
 
     def _delta_diff(
         self,
@@ -814,15 +790,9 @@ class Writer:
         start_time,
         end_time,
     ) -> DataFrame:
-        if self.format in ("feather", "ipc", "arrow"):
-            # Dataset has no feather reader; the driver-side bridge does
-            from pydala_spark.sources import read as _bridge_read
+        from pydala_spark.dataset.reader import Dataset
 
-            existing = _bridge_read(self.spark, self.path, format="feather")
-        else:
-            from pydala_spark.dataset.reader import Dataset
-
-            existing = Dataset(self.spark, self.path, format=self.format).load()
+        existing = Dataset(self.spark, self.path, format=self.format).load()
         if "bucket" in existing.columns and "bucket" not in df.columns:
             existing = existing.drop("bucket")
         incoming = df
@@ -840,7 +810,10 @@ class Writer:
             )
             window = (F.col(datetime_column) >= lo) & upper
             incoming = incoming.where(window)
-            existing = existing.where(window)  # prunes partitions at scale
+            # parquet min/max skips row groups outside the window; it
+            # prunes no partition, since a time_bucket layout partitions
+            # on the derived ``bucket``, not on ``datetime_column``
+            existing = existing.where(window)
         return tables_diff(incoming, existing, subset=delta_subset)
 
     # -- maintenance: schema-unification rewrite (writer.py:529-571) ----------
@@ -854,37 +827,34 @@ class Writer:
         projection and the rewrite preserves the partition layout —
         otherwise a partitioned mixed-schema dataset would lose its
         partition-column values permanently. Writes aside, then swaps in
-        through ``PathOps.commit_stage`` (sidecars stay in place).
+        through the rewrite step (sidecars stay in place). The read is
+        ``Dataset.load``'s, whose grouped read casts conflicting column
+        types to the unified ones.
         """
         from pydala_spark import schema as schema_mod
+        from pydala_spark.dataset.maintain import _Rewrite
         from pydala_spark.dataset.reader import Dataset
-        from pydala_spark.utils.pathops import PathOps, strip_scheme
 
         if self.format != "parquet":
             raise ValueError(
                 f"unify_schema supports parquet datasets only, not {self.format!r}"
             )
-        local = strip_scheme(self.path).rstrip("/")
-        ops = PathOps(self.spark, local)
-        ops.recover(local)
+        rw = _Rewrite(self.spark, self._orig_path, "__unify_tmp")
+        self.path = rw.local
         unified, equal = schema_mod.unified_dataset_schema(self.path)
         if equal:
             return False
         if sort_columns:
             unified = schema_mod.sort_schema(unified)
-        part_cols = self._existing_partitioning() or []
+        part_cols = schema_mod.infer_partitioning(rw.rels) or []
         df = Dataset(self.spark, self.path, format=self.format).load()
         footer_names = [f.name for f in unified]
         names = footer_names + [c for c in part_cols if c not in footer_names]
-        df = df.select(*names)
-        tmp = local + "__unify_tmp"
-        writer = df.write.mode("overwrite").option("compression", self.compression)
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(tmp)
-        ops.commit_stage(local, tmp)
-        # drop cached file listings that still name the replaced parts
-        self.spark.catalog.refreshByPath(self.path)
+        write_frame(
+            df.select(*names), rw.stage, compression=self.compression,
+            partition_by=part_cols,
+        )
+        rw.commit()
         return True
 
 

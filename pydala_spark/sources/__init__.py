@@ -39,15 +39,24 @@ TEST_TABLES = (
 
 def read(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     format: str = "parquet",
     schema=None,
+    base_path: str | None = None,
+    infer_schema: bool = True,
     **options,
 ) -> DataFrame:
-    """Format-dispatched read (reference reader.py:257-290).
+    """Format-dispatched read (reference reader.py:257-290): the one
+    place that turns a dataset format into reader options.
 
-    parquet/csv/json are distributed Spark reads; feather/ipc/arrow go
-    through pyarrow on the driver (small-data bridge).
+    parquet/orc/csv/json are distributed Spark reads. parquet and orc
+    merge every file's footer schema, so a column only some files carry
+    is kept. csv is read with its header, typed by inference unless a
+    ``schema`` is given or ``infer_schema=False`` (rewrites read it as
+    strings, so the text round-trips). ``path`` may be an explicit file
+    list; ``base_path`` then keeps hive partition discovery. Feather/
+    ipc/arrow go through pyarrow: a directory distributed, a single file
+    on the driver (small-data bridge).
     """
     format = format.lower()
     if format in ("feather", "ipc", "arrow"):
@@ -62,10 +71,14 @@ def read(
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    if format == "csv":
+    if format in ("parquet", "orc"):
+        options.setdefault("mergeSchema", True)
+    elif format == "csv":
         options.setdefault("header", True)
-        if schema is None:
+        if schema is None and infer_schema:
             options.setdefault("inferSchema", True)
+    if base_path is not None:
+        options["basePath"] = base_path
     return reader.format(format).options(**options).load(path)
 
 

@@ -86,8 +86,8 @@ def incremental_append(
             f"(partition_by={list(writer.partition_by)}); drop one of the two"
         )
     if compact_every and writer.format not in ("parquet", "csv", "json", "orc"):
-        # compact() reads via spark.read.format(...); feather has no
-        # Spark datasource and would kill the stream on the Nth batch
+        # compact() reads and rewrites through Spark datasources only;
+        # feather has none and would kill the stream on the Nth batch
         raise ValueError(
             f"compact_every is not supported for format={writer.format!r} "
             "(no Spark datasource to re-read it with)"

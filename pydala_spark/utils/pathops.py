@@ -8,13 +8,17 @@ gs://, abfs://, ...), so they go through ``FileSystem.get`` via
 operations: cost scales with file counts, not bytes, except
 ``copy_tree`` (TimeFly's copy-on-snapshot backend), a real byte copy.
 
-Every in-place rewrite (upsert, compact/recluster, unify_schema,
-Repartition, the sweeps' staged tables) and every TimeFly move into or
-out of ``current/`` (copy and pointer restore, ``create_current``)
-commits through ONE journaled step, :meth:`PathOps.commit_stage`; after
-a crash at any step, :meth:`PathOps.recover` (run by the next mutation
-of that target) leaves it reading as exactly its before or after state.
-That needs atomic renames (local, HDFS). Off the step, and why:
+Every in-place rewrite and every TimeFly move into or out of
+``current/`` (copy and pointer restore, ``create_current``) commits
+through ONE journaled step, :meth:`PathOps.commit_stage`; after a crash
+at any step, :meth:`PathOps.recover` (run by the next mutation of that
+target) leaves it reading as exactly its before or after state. That
+needs atomic renames (local, HDFS). The five in-place dataset rewrites
+(``compact``, ``recluster``, the ``Writer`` upsert,
+``Writer.unify_schema`` and in-place ``Repartition``) reach it through
+one rewrite step, ``dataset.maintain._Rewrite``, which alone calls it
+for dataset data; the sweeps' staged tables and the TimeFly moves call
+it directly. Off the step, and why:
 
 - ``swap="generation"``: on object stores rename is copy+delete, so it
   commits one pointer PUT instead.

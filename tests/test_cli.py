@@ -478,3 +478,38 @@ def test_cli_sweep_flags_map_to_method_kwargs(spark, tmp_path, monkeypatch,
     assert run(full, "signatures_report", broken) == 1
     assert run(["signatures"], "signatures_report", fresh) == 2
     assert calls == []
+
+
+def test_run_section_benchmark_keys_only_where_read(capsys):
+    # benchmark / benchmark_format are read by [decontaminate] and
+    # [prep_sweep] only: anywhere else they are unknown keys (exit 2),
+    # not a TypeError from the method (exit 1). Stub lake, no Spark.
+    import types
+
+    from pydala_spark.cli import _run_section
+
+    calls = []
+
+    class StubLake:
+        spark = types.SimpleNamespace(read=types.SimpleNamespace(
+            format=lambda fmt: types.SimpleNamespace(
+                load=lambda path: (fmt, path))))
+
+        def neardup_dedup(self, id_col="doc_id", max_concurrency=4):
+            calls.append(("neardup_dedup", id_col))
+            return {}
+
+        def decontaminate(self, benchmarks, id_col="doc_id"):
+            calls.append(("decontaminate", benchmarks))
+            return {"docs": {"contaminated": {"ev": 1}}}
+
+    lake = StubLake()
+    for key in ("benchmark_format", "benchmark"):
+        assert _run_section(lake, "neardup_dedup", {key: "json"}) == (None, 2)
+        assert f"unknown [neardup_dedup] key(s) ['{key}']" in \
+            capsys.readouterr().err
+    assert calls == []
+    results, rc = _run_section(lake, "decontaminate", {
+        "benchmark": ["ev=/bench"], "benchmark_format": "json"})
+    assert rc == 0 and results == {"docs": {"contaminated": {"ev": 1}}}
+    assert calls == [("decontaminate", {"ev": ("json", "/bench")})]

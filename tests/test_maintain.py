@@ -1,6 +1,7 @@
 import os
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from pydala_spark.dataset.maintain import compact, zorder_value, zorder_write
@@ -58,19 +59,70 @@ def test_compact_unpartitioned(spark, sf_dir, tmp_path):
     assert spark.read.parquet(path).count() == 25
 
 
+def _csv_text(root):
+    """(header lines, sorted data lines) of the csv files under ``root``."""
+    import gzip
+
+    headers, rows = set(), []
+    for f in _data_files(root):
+        with (gzip.open if f.endswith(".gz") else open)(f, "rt") as fh:
+            lines = fh.read().splitlines()
+        if lines:
+            headers.add(lines[0])
+            rows += lines[1:]
+    return headers, sorted(rows)
+
+
 def test_compact_csv_keeps_headers(spark, tmp_path):
     from pydala_spark.dataset.reader import Dataset
     from pydala_spark.dataset.writer import Writer
 
     path = str(tmp_path / "csv_ds")
-    df = spark.createDataFrame([(i, f"n{i}") for i in range(20)], ["id", "name"])
+    df = spark.createDataFrame(
+        [(i, f"n{i}", f"{i:03d}", "1.50") for i in range(20)],
+        ["id", "name", "code", "price"],
+    )
     Writer(spark, path, format="csv").write(df.repartition(4))
+    text = _csv_text(path)
+    assert "007" in {row.split(",")[2] for row in text[1]}
     compact(spark, path, format="csv")
+    # the rewrite keeps the raw text: 007 stays 007, 1.50 stays 1.50
+    assert _csv_text(path) == text
     back = Dataset(spark, path, format="csv").load()
     # header lines were not ingested as rows, and the rewrite kept headers
     assert back.count() == 20
-    assert set(back.columns) == {"id", "name"}
+    assert set(back.columns) == {"id", "name", "code", "price"}
     assert back.where("CAST(id AS INT) IS NULL").count() == 0
+
+
+@pytest.mark.parametrize("op", ["compact", "recluster"])
+@pytest.mark.parametrize("b_first", [False, True])
+def test_rewrite_keeps_column_some_files_lack(spark, tmp_path, op, b_first):
+    # two files, one of them carrying an extra column b: the rewrite
+    # must keep b and its values whichever file the listing puts first
+    # (fixed names, so each case lists in the same order every run, and
+    # the two cases swap which name carries b)
+    import pyarrow as pa
+
+    from pydala_spark.dataset.maintain import recluster
+    from pydala_spark.dataset.reader import Dataset
+
+    root = tmp_path / "ds"
+    root.mkdir()
+    narrow = pa.table({"a": list(range(5))})
+    wide = pa.table({"a": list(range(5, 10)), "b": [f"b{i}" for i in range(5, 10)]})
+    for name, table in zip(("part-0.parquet", "part-1.parquet"),
+                           (wide, narrow) if b_first else (narrow, wide)):
+        pq.write_table(table, root / name)
+    path = str(root)
+    if op == "compact":
+        compact(spark, path)
+    else:
+        recluster(spark, path, ["a"], n_files=1)
+    back = Dataset(spark, path).load()
+    assert sorted(back.columns) == ["a", "b"]
+    assert sorted(map(tuple, back.select("a", "b").collect())) == [
+        (i, f"b{i}" if i >= 5 else None) for i in range(10)]
 
 
 def test_recluster_in_place(spark, tmp_path):

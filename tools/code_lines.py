@@ -3,15 +3,17 @@
 comments nor docstrings (module, class and function docstrings, found
 with ``ast``; comments and blank lines found with ``tokenize``).
 Prints one ``<path> <code lines> <physical lines>`` row per file and a
-total row.
+total row. A directory argument counts every ``.py`` file under it.
 
     python tools/code_lines.py pydala_spark/catalog_sweeps.py pydala_spark/sweeps.py
+    python tools/code_lines.py pydala_spark
 """
 
 from __future__ import annotations
 
 import ast
 import io
+import os
 import sys
 import tokenize
 
@@ -36,9 +38,24 @@ def code_lines(src: str) -> int:
     return len(code - docs)
 
 
+def python_files(paths: list[str]) -> list[str]:
+    """``paths`` with each directory replaced by its ``.py`` files,
+    sorted, recursively."""
+    out = []
+    for path in paths:
+        if not os.path.isdir(path):
+            out.append(path)
+            continue
+        for dirpath, dirs, files in os.walk(path):
+            dirs.sort()
+            out += [os.path.join(dirpath, f) for f in sorted(files)
+                    if f.endswith(".py")]
+    return out
+
+
 def main(paths: list[str]) -> int:
     total_code = total_lines = 0
-    for path in paths:
+    for path in python_files(paths):
         with open(path) as f:
             src = f.read()
         n_code, n_lines = code_lines(src), len(src.splitlines())
