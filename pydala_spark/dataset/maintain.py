@@ -64,7 +64,9 @@ class _Rewrite:
     generation), finishes any crashed commit there (``PathOps.recover``),
     lists its data files ONCE (``files`` and their relative ``rels``) and
     names the stage: the next ``gen-NNNNNN/`` for ``swap="generation"``,
-    else the ``suffix`` sibling. The caller writes the stage, then
+    else the ``suffix`` sibling. Every rewrite reads its input from that
+    listing (:meth:`read`; the ``Writer`` delta diff too), never by
+    reopening the dataset. The caller writes the stage, then
     :meth:`commit` swaps it in and refreshes Spark's cached listings.
     """
 
@@ -88,19 +90,24 @@ class _Rewrite:
         else:
             self.stage = self.local + suffix
 
-    def read(self, format: str) -> DataFrame:
+    def read(self, format: str, infer_schema: bool = False) -> DataFrame:
         """The EXPLICIT listed files, not the directory: an append that
         lands between the listing and Spark's own directory scan would
         otherwise be swept into the rewrite while staying absent from the
         generation commit's ``input_files`` — carried forward as a
-        straggler AND rewritten, duplicating its rows. csv is read as
-        strings, so the rewrite keeps its text."""
+        straggler AND rewritten, duplicating its rows. Read through
+        :func:`pydala_spark.sources.read`, so conflicting footer schemas
+        are reconciled there. csv columns and hive partition values are
+        read as strings, so the rewrite keeps their text (``007``,
+        ``1.50``); ``infer_schema=True`` types them, for the ``Writer``
+        delta diff, which writes no existing row back, and in-place
+        ``Repartition``, which may change the layout and the format."""
         from pydala_spark import sources
 
         if not self.files:
             raise FileNotFoundError(f"no data files under {self.base}")
         return sources.read(self.spark, [p for p, _ in self.files], format,
-                            base_path=self.local, infer_schema=False)
+                            base_path=self.local, infer_schema=infer_schema)
 
     def commit(self, entries: list[str] | None = None, park: str | None = None,
                keep_previous: int = 1) -> str:

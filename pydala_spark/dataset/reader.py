@@ -4,7 +4,8 @@ Reference parity (SURVEY.md §2.1, §2.4):
 
 - lazy dataset scan + named registration (src/pydala/dataset/reader.py:214-255)
 - pinned schema as pa.Schema or {name: "type"} dict (reader.py:70-79)
-- unified-schema retry on mixed-schema datasets (reader.py:186-188, 228-230)
+- unified-schema retry on mixed-schema datasets (reader.py:186-188, 228-230),
+  done in ``sources.read``
 - SQL passthrough (reader.py:478-484) -> ``spark.sql`` over the view
 - drop -> distinct(subset, keep first/last, presort) -> sort pipeline
   applied at every materialization (src/pydala/dataset/base.py:118-142,
@@ -12,13 +13,15 @@ Reference parity (SURVEY.md §2.1, §2.4):
 - materializers to pandas/arrow (src/pydala/utils/table.py:8-55)
 
 Scale: the DataFrame stays lazy; filters/projections expressed downstream
-push into the parquet scan via Catalyst. Schema unification reads only
-parquet footers on the driver. When fragment schemas genuinely conflict
-(e.g. int64 vs string for one column), the dataset is read per
-schema-group and reconciled with casts + unionByName — each group is still
-a distributed scan, and the number of *distinct schemas* (not files) bounds
-the plan size. For permanent fixes, ``Writer.unify_schema`` rewrites the
-stragglers once.
+push into the parquet scan via Catalyst. The files are read by
+:func:`pydala_spark.sources.read`, the one read every in-place rewrite
+shares (a rewrite reads its input from its own listing, not through a
+``Dataset``). It holds the unified-schema fallback: when fragment schemas
+genuinely conflict (int32 vs int64, int64 vs string), the files are read
+per footer schema and reconciled with casts + unionByName — each group is
+still a distributed scan, and the number of *distinct schemas* (not files)
+bounds the plan size. For permanent fixes, ``Writer.unify_schema`` rewrites
+the stragglers once.
 """
 
 from __future__ import annotations
@@ -242,73 +245,12 @@ class Dataset:
             options.update(self._csv_options)
         return sources.read(self.spark, self.path, self.format, schema=schema, **options)
 
-    def _unified_read(self) -> DataFrame:
-        """Mixed-schema read: group fragments by physical schema, read each
-        group as one distributed scan, cast to the unified schema, and
-        unionByName (union-of-columns). This is the Spark analog of the
-        reference's ArrowInvalid -> unified-schema retry
-        (src/pydala/dataset/reader.py:186-188)."""
-        # ONE fragment discovery + footer pass serves both the
-        # unification and the per-schema grouping (the fragment_schemas
-        # property would re-list and re-read every footer a second time
-        # — twice the driver metadata latency on a many-file dataset)
-        import pyarrow.dataset as pads
-
-        dataset = pads.dataset(self.path, format="parquet", partitioning="hive")
-        frags = [(f.path, f.physical_schema) for f in dataset.get_fragments()]
-        unified, equal = schema_mod.get_unified_schema([s for _, s in frags])
-        if equal:
-            return self._base_read()
-        groups: dict[str, list[str]] = {}
-        for fpath, fschema in frags:
-            groups.setdefault(str(fschema), []).append(fpath)
-        spark_unified = schema_mod.arrow_schema_to_spark(unified)
-        footer_names = {f.name for f in spark_unified.fields}
-        out: DataFrame | None = None
-        for paths in groups.values():
-            # basePath keeps Spark's hive partition discovery active even
-            # though explicit file paths are given — without it the
-            # partition columns (directory names, absent from footers)
-            # would silently vanish from the unified read
-            part = sources.read(self.spark, paths, "parquet", base_path=self.path)
-            cols = [
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in part.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in spark_unified.fields
-            ] + [F.col(c) for c in part.columns if c not in footer_names]
-            part = part.select(*cols)
-            out = part if out is None else out.unionByName(part)
-        assert out is not None
-        return out
-
     def load(self, reload: bool = False) -> DataFrame:
-        """Lazy DataFrame over the dataset with the post-pipeline applied."""
-        if self._df is not None and not reload:
-            return self._df
-        if (
-            self.format == "parquet"
-            and self._pinned_schema is None
-            # the unified-schema retry path assumes hive layout
-            and not isinstance(self.partitioning, (list, tuple))
-        ):
-            try:
-                df = self._base_read()
-            except Exception as exc:
-                # only a schema-merge failure means "retry as a grouped
-                # unified read" — anything else (missing path, corrupt
-                # footer, permissions) must surface as-is, not as a
-                # confusing secondary error from fragment discovery
-                msg = str(exc)
-                if not any(
-                    marker in msg
-                    for marker in ("CANNOT_MERGE_SCHEMAS", "Failed to merge", "Failed merging")
-                ):
-                    raise
-                df = self._unified_read()
-        else:
-            df = self._base_read()
-        self._df = self._post_pipeline(df)
+        """Lazy DataFrame over the dataset with the post-pipeline applied.
+        Conflicting fragment schemas are reconciled inside
+        :func:`pydala_spark.sources.read`."""
+        if self._df is None or reload:
+            self._df = self._post_pipeline(self._base_read())
         return self._df
 
     # -- the drop -> distinct -> sort pipeline (base.py:118-142) -------------

@@ -67,13 +67,20 @@ class Repartition:
         self.transform_func = transform_func
         self.with_snapshot = with_snapshot
 
-    def read(self) -> DataFrame:
-        ds = Dataset(self.spark, self.source_path, format=self.source_format)
+    def read(self, rw=None) -> DataFrame:
+        """The source rows through drop -> distinct -> transform -> sort.
+        An in-place rewrite reads the listing of its open rewrite step
+        ``rw`` (``maintain._Rewrite.read``), typed like the out-of-place
+        read: the rewrite may change the layout and the format, so
+        partition values and csv columns are not kept as text."""
+        if rw is None:
+            df = Dataset(self.spark, self.source_path, format=self.source_format).load()
+        else:
+            df = rw.read(self.source_format, infer_schema=True)
         if self.drop:
-            ds.drop(self.drop)
+            df = df.drop(*self.drop)
         if self.distinct:
-            ds.distinct()
-        df = ds.load()
+            df = df.distinct()
         if self.transform_func is not None:
             df = self.transform_func(df)
         if self.sort_by:
@@ -110,7 +117,7 @@ class Repartition:
         from pydala_spark.dataset.maintain import SIGNATURES_DIR, _Rewrite
 
         # a generation-pointer dataset rewrites INSIDE its active
-        # generation (matching the Dataset read below), keeping the
+        # generation (the listing the read below uses), keeping the
         # pointer layout intact instead of flattening it
         rw = _Rewrite(self.spark, self.source_path, "__repartition_tmp")
         local, ops = rw.local, rw.ops
@@ -123,7 +130,7 @@ class Repartition:
                 f"{self.source_path} is a TimeFly dataset root; point the "
                 "in-place Repartition at its current/ subdirectory"
             )
-        df = self.read()
+        df = self.read(rw)
         parent = posixpath.dirname(local)
         if self.with_snapshot:
             from pydala_spark.dataset.timefly import TimeFly

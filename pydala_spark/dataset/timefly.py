@@ -218,7 +218,8 @@ class TimeFly:
         }
         if props["format"] == "parquet":
             props["compression"] = schema_mod.infer_compression(files[0])
-            unified, unique = schema_mod.unified_dataset_schema(self.current_path)
+            unified, unique = schema_mod.get_unified_schema(
+                sources.footer_schemas(files))
             props["schema"] = schema_mod.schema_to_dict(unified)
             props["schema_unique"] = unique
         return props
@@ -516,7 +517,9 @@ class TimeFly:
         (reference TimeFlyReader, src/pydala/dataset/reader.py:584-653).
         A pointer snapshot reads its manifest's file list wherever the
         files live — current/ and/or the restore archive (per-root
-        basePath keeps hive partition discovery working).
+        basePath keeps hive partition discovery working), through
+        :func:`pydala_spark.sources.read`, which reconciles files whose
+        footer schemas conflict.
 
         An EXACT stamp match wins before any rounding — same rule as
         :meth:`load_snapshot`: the stamp :meth:`add_snapshot` returned

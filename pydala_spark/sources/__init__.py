@@ -6,9 +6,15 @@ and registers datasets under a name in its embedded engine
 (reader.py:235-255). Here the format dispatch lands on ``spark.read`` and
 registration is a temp view.
 
-Feather/IPC has no built-in Spark reader; a DIRECTORY of part files is
-read distributed (:func:`read_feather_dataset`: parallelize the file
-list, decode task-side via pyarrow IPC — feather v2 IS Arrow IPC), while
+:func:`read` is the one read of a dataset's files — ``Dataset.load``,
+every in-place rewrite (``dataset.maintain._Rewrite.read``) and the
+TimeFly pointer read go through it — and the one place that handles
+schema drift: parquet footers Spark cannot merge are read per footer
+schema and reconciled on ``schema.get_unified_schema``.
+
+Feather/IPC has no built-in Spark reader; a DIRECTORY (or list) of part
+files is read distributed (:func:`read_feather_dataset`: parallelize the
+file list, decode task-side via pyarrow IPC — feather v2 IS Arrow IPC), while
 a single file goes through the driver-side pyarrow bridge (reference
 reads it the same single-node way, src/pydala/dataset/reader.py:118-135)
 — fine for small sidecar files.
@@ -37,6 +43,10 @@ TEST_TABLES = (
 )
 
 
+#: Spark's messages for parquet footers ``mergeSchema`` cannot merge
+_MERGE_ERRORS = ("CANNOT_MERGE_SCHEMAS", "Failed to merge", "Failed merging")
+
+
 def read(
     spark: SparkSession,
     path: str | list[str],
@@ -46,31 +56,35 @@ def read(
     infer_schema: bool = True,
     **options,
 ) -> DataFrame:
-    """Format-dispatched read (reference reader.py:257-290): the one
-    place that turns a dataset format into reader options.
+    """Format-dispatched read (reference reader.py:257-290): the one read
+    of a dataset's files. ``Dataset.load`` passes its directory; every
+    in-place rewrite (``maintain._Rewrite.read``) and the TimeFly pointer
+    read pass an explicit file list, with ``base_path`` keeping hive
+    partition discovery.
 
     parquet/orc/csv/json are distributed Spark reads. parquet and orc
     merge every file's footer schema, so a column only some files carry
-    is kept. csv is read with its header, typed by inference unless a
-    ``schema`` is given or ``infer_schema=False`` (rewrites read it as
-    strings, so the text round-trips). ``path`` may be an explicit file
-    list; ``base_path`` then keeps hive partition discovery. Feather/
-    ipc/arrow go through pyarrow: a directory distributed, a single file
-    on the driver (small-data bridge).
+    is kept. When parquet footers conflict (int32 in one file, int64 in
+    another), Spark's merge fails and the files are read per footer
+    schema, cast to ``schema.get_unified_schema`` and unioned by name
+    (:func:`_drift_read`; reference retry, reader.py:186-188). csv is
+    read with its header, typed by inference unless a ``schema`` is
+    given. ``infer_schema=False`` (the rewrite read) keeps text as text:
+    csv columns and hive partition values stay strings, so a rewrite
+    writes back ``007`` and ``1.50``, not ``7`` and ``1.5``. Feather/
+    ipc/arrow go through pyarrow: a directory or file list distributed,
+    a single file on the driver (small-data bridge).
     """
     format = format.lower()
     if format in ("feather", "ipc", "arrow"):
-        import pyarrow.feather as pf
+        if isinstance(path, str) and "://" not in path:
+            local = path.removeprefix("file:")
+            if not os.path.isdir(local):
+                import pyarrow.feather as pf
 
-        local = path.removeprefix("file:")
-        if os.path.isdir(local) or "://" in path:
-            # Writer lays out part-*.feather files — distributed read
-            return read_feather_dataset(spark, path)
-        table = pf.read_table(local)
-        return spark.createDataFrame(table.to_pandas())
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
+                return spark.createDataFrame(pf.read_table(local).to_pandas())
+        # Writer lays out part-*.feather files — distributed read
+        return read_feather_dataset(spark, path)
     if format in ("parquet", "orc"):
         options.setdefault("mergeSchema", True)
     elif format == "csv":
@@ -79,15 +93,122 @@ def read(
             options.setdefault("inferSchema", True)
     if base_path is not None:
         options["basePath"] = base_path
-    return reader.format(format).options(**options).load(path)
+    reader = spark.read.format(format).options(**options)
+    if schema is not None:
+        return reader.schema(schema).load(path)
+    base = base_path or (path if isinstance(path, str) else None)
+    try:
+        df = reader.load(path)
+    except Exception as exc:
+        # only a schema-merge failure means a per-schema read; anything
+        # else (missing path, corrupt footer) surfaces as it is
+        if format != "parquet" or not any(m in str(exc) for m in _MERGE_ERRORS):
+            raise
+        return _drift_read(spark, path, base, infer_schema, options, exc)
+    if infer_schema or base is None:
+        return df
+    # partition values as their directory text: Spark types a partition
+    # column from a user schema instead of inferring it (not from the
+    # session conf, which sweeps reading from a thread pool share)
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from pydala_spark.schema import infer_partitioning
+    from pydala_spark.utils.pathops import strip_scheme
+
+    root = strip_scheme(base).rstrip("/")
+    parts = infer_partitioning(
+        strip_scheme(p)[len(root):] for p in _listed(spark, path)) or []
+    if all(df.schema[c].dataType == StringType() for c in parts if c in df.columns):
+        return df
+    return reader.schema(StructType([
+        StructField(f.name, StringType()) if f.name in parts else f
+        for f in df.schema
+    ])).load(path)
 
 
-def read_feather_dataset(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed feather/Arrow-IPC dataset read: the part-file list is
-    a driver METADATA listing (PathOps), the Arrow schema is the
-    UNIFICATION of every file's footer schema (footer reads are
-    metadata-only — one small read per file, the same O(n_files) pass
-    the listing already made; the old driver bridge promoted schemas via
+def _listed(spark: SparkSession, path: str | list[str]) -> list[str]:
+    """The data files of a read: an explicit list as given, a directory
+    listed once (``PathOps.data_files``)."""
+    if not isinstance(path, str):
+        return list(path)
+    from pydala_spark.utils.pathops import PathOps
+
+    return [p for p, _ in PathOps(spark, path).data_files(path)]
+
+
+def _drift_read(spark, path, base, infer_schema, options, exc) -> DataFrame:
+    """Parquet files whose footers Spark cannot merge: one read per
+    footer schema, each cast to the unified schema, unioned by name.
+    Each group is still a distributed scan, and the number of distinct
+    schemas (not files) bounds the plan size. Hive partition columns
+    come through ``base`` (the directory itself for a directory read).
+    ``Writer.unify_schema`` rewrites the stragglers for good."""
+    from pydala_spark import schema as schema_mod
+
+    files = _listed(spark, path)
+    groups: dict[str, tuple] = {}
+    for f, s in zip(files, footer_schemas(files)):
+        groups.setdefault(str(s), (s, []))[1].append(f)
+    if len(groups) < 2:
+        raise exc  # one footer schema: the conflict is not between files
+    unified, _ = schema_mod.get_unified_schema(s for s, _ in groups.values())
+    fields = schema_mod.arrow_schema_to_spark(unified).fields
+    names = {f.name for f in fields}
+    out = None
+    for _, group in groups.values():
+        # base keeps hive partition discovery for an explicit file list:
+        # partition columns live in directory names, not in footers
+        part = read(spark, group, "parquet", base_path=base,
+                    infer_schema=infer_schema, **options)
+        part = part.select(*[
+            (F.col(f.name) if f.name in part.columns else F.lit(None))
+            .cast(f.dataType).alias(f.name) for f in fields
+        ], *[c for c in part.columns if c not in names])
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def footer_schemas(files: list[str], format: str = "parquet") -> list:
+    """The Arrow schema in each file's footer (parquet, or feather/
+    Arrow IPC), metadata stripped. Metadata-only: the footers are read
+    concurrently through ONE pyarrow FileSystem for the whole list — a
+    sequential per-file ``from_uri`` + round-trip loop would pay minutes
+    of driver latency on a many-thousand-part object-store dataset."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    from pydala_spark.dataset.writer import _check_pyarrow_scheme
+    from pydala_spark.utils.pathops import strip_scheme
+
+    if not files:
+        return []
+    _check_pyarrow_scheme(files[0])
+    fs, paths = pafs.LocalFileSystem(), [strip_scheme(f) for f in files]
+    if "://" in paths[0]:
+        # pyarrow spells S3 's3://'; Hadoop listings say 's3a://'
+        first = paths[0].replace("s3a://", "s3://", 1).replace("s3n://", "s3://", 1)
+        fs, p0 = pafs.FileSystem.from_uri(first)
+        cut = len(paths[0]) - len(p0)  # from_uri strips scheme://
+        paths = [p[cut:] for p in paths]
+
+    def footer(p):
+        with fs.open_input_file(p) as fh:
+            s = (pq.ParquetFile(fh).schema_arrow if format == "parquet"
+                 else pa.ipc.open_file(fh).schema)
+        return s.remove_metadata()
+
+    with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+        return list(ex.map(footer, paths))
+
+
+def read_feather_dataset(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """Distributed feather/Arrow-IPC dataset read of a directory (listed
+    once, PathOps) or an explicit part-file list: the Arrow schema is
+    the UNIFICATION of every file's footer schema (:func:`footer_schemas`
+    — the old driver bridge promoted schemas via
     ``concat_tables(promote_options="default")`` and datasets written by
     it may carry promoted-width parts), and each task decodes whole
     files via pyarrow IPC, casting any narrower part to the unified
@@ -99,48 +220,18 @@ def read_feather_dataset(spark: SparkSession, path: str) -> DataFrame:
     granularity Spark's parquet reader has for unsplittable codecs.
     """
     import pyarrow as pa
-    from pyarrow import fs as pafs
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    from pydala_spark.utils.pathops import PathOps, strip_scheme
+    from pydala_spark.utils.pathops import strip_scheme
 
-    local = strip_scheme(path).rstrip("/")
-    po = PathOps(spark, path)
     files = sorted(
-        p for p, _sz in po.data_files(local)
+        strip_scheme(p) for p in _listed(spark, path)
         if p.lower().endswith((".feather", ".ipc", ".arrow"))
     )
     if not files:
         raise FileNotFoundError(f"no feather files under {path}")
-
-    # ONE FileSystem for the whole dataset (every part shares the root)
-    # and concurrent footer reads — a sequential per-file from_uri +
-    # round-trip loop would pay minutes of driver latency on a
-    # many-thousand-part object-store dataset before the scan starts
-    from pydala_spark.dataset.writer import _check_pyarrow_scheme
-
-    _check_pyarrow_scheme(files[0])
-    if "://" in files[0]:
-        # pyarrow spells S3 's3://'; Hadoop listings say 's3a://'
-        first = files[0].replace("s3a://", "s3://", 1).replace(
-            "s3n://", "s3://", 1
-        )
-        fs0, p0 = pafs.FileSystem.from_uri(first)
-        cut = len(files[0]) - len(p0)  # from_uri strips scheme://
-        paths = [f[cut:] for f in files]
-    else:
-        fs0, paths = pafs.LocalFileSystem(), files
-
-    def _footer(pth):
-        with fs0.open_input_file(pth) as fh:
-            return pa.ipc.open_file(fh).schema
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-        schemas = list(ex.map(_footer, paths))
-    arrow_schema = pa.unify_schemas(schemas, promote_options="permissive")
-    from pyspark.sql.pandas.types import from_arrow_schema
-
+    arrow_schema = pa.unify_schemas(
+        footer_schemas(files, "feather"), promote_options="permissive")
     spark_schema = from_arrow_schema(arrow_schema)
 
     paths_df = spark.createDataFrame(

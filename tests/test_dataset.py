@@ -109,6 +109,26 @@ def test_unified_schema_read(spark, tmp_path):
     assert df.where("extra IS NULL").count() == 2
 
 
+def test_drift_read_calls_patched_unified_schema(spark, tmp_path, monkeypatch):
+    # the traced perfbench lake_ingest run times schema unification by
+    # patching pydala_spark.schema.get_unified_schema: the drift read must
+    # look it up on the module at call time, or that metric reads 0
+    import pydala_spark.schema
+
+    real, calls = pydala_spark.schema.get_unified_schema, []
+
+    def spy(schemas):
+        calls.append(1)
+        return real(schemas)
+
+    monkeypatch.setattr(pydala_spark.schema, "get_unified_schema", spy)
+    pq.write_table(pa.table({"id": pa.array([1], pa.int32())}), tmp_path / "a.parquet")
+    pq.write_table(pa.table({"id": pa.array([2], pa.int64())}), tmp_path / "b.parquet")
+    df = Dataset(spark, str(tmp_path)).load()
+    assert sorted(r.id for r in df.collect()) == [1, 2]
+    assert calls
+
+
 def test_pinned_schema_dict(spark, tmp_path):
     pq.write_table(pa.table({"id": pa.array([1, 2], pa.int32())}), tmp_path / "a.parquet")
     ds = Dataset(spark, str(tmp_path), schema={"id": "int64"})

@@ -22,11 +22,15 @@ def _data_files(root):
 def test_compact_partitioned_small_files(spark, sf_dir, tmp_path):
     path = str(tmp_path / "orders_frag")
     df = load_table(spark, sf_dir, "orders").limit(2000)
+    # a zero-padded string partition: its directory names (zone=007)
+    # must survive the rewrite, not come back re-typed as zone=7
+    df = df.withColumn(
+        "zone", F.when(F.col("o_orderkey") % 2 == 0, "007").otherwise("010"))
     # fragment: 8 files per hive partition
     (
         df.repartition(8)
         .write.mode("overwrite")
-        .partitionBy("o_orderpriority")
+        .partitionBy("o_orderpriority", "zone")
         .parquet(path)
     )
     before_files = _data_files(path)
@@ -35,7 +39,7 @@ def test_compact_partitioned_small_files(spark, sf_dir, tmp_path):
 
     stats = compact(spark, path, target_file_mb=128)
     assert stats["files_before"] == len(before_files)
-    assert stats["partition_cols"] == ["o_orderpriority"]
+    assert stats["partition_cols"] == ["o_orderpriority", "zone"]
     # one target-size chunk total -> one file per hive partition
     after_files = _data_files(path)
     assert stats["files_after"] == len(after_files)
@@ -46,6 +50,8 @@ def test_compact_partitioned_small_files(spark, sf_dir, tmp_path):
     # hive layout preserved
     assert "o_orderpriority" in out.columns
     assert any("o_orderpriority=" in f for f in after_files)
+    zones = {seg for f in after_files for seg in f.split("/") if seg.startswith("zone=")}
+    assert zones == {"zone=007", "zone=010"}
 
 
 def test_compact_unpartitioned(spark, sf_dir, tmp_path):
@@ -95,34 +101,44 @@ def test_compact_csv_keeps_headers(spark, tmp_path):
     assert back.where("CAST(id AS INT) IS NULL").count() == 0
 
 
-@pytest.mark.parametrize("op", ["compact", "recluster"])
+@pytest.mark.parametrize("op", ["compact", "recluster", "delta", "upsert"])
 @pytest.mark.parametrize("b_first", [False, True])
 def test_rewrite_keeps_column_some_files_lack(spark, tmp_path, op, b_first):
     # two files, one of them carrying an extra column b: the rewrite
     # must keep b and its values whichever file the listing puts first
     # (fixed names, so each case lists in the same order every run, and
-    # the two cases swap which name carries b)
+    # the two cases swap which name carries b). The second input also
+    # drifts: a is int32 in the narrow file and int64 in the wide one,
+    # footers Spark cannot merge. delta and upsert read the existing
+    # rows the same way (the delta lands nothing, the upsert rewrites
+    # row 0 unchanged)
     import pyarrow as pa
 
     from pydala_spark.dataset.maintain import recluster
     from pydala_spark.dataset.reader import Dataset
+    from pydala_spark.dataset.writer import Writer
 
-    root = tmp_path / "ds"
-    root.mkdir()
-    narrow = pa.table({"a": list(range(5))})
-    wide = pa.table({"a": list(range(5, 10)), "b": [f"b{i}" for i in range(5, 10)]})
-    for name, table in zip(("part-0.parquet", "part-1.parquet"),
-                           (wide, narrow) if b_first else (narrow, wide)):
-        pq.write_table(table, root / name)
-    path = str(root)
-    if op == "compact":
-        compact(spark, path)
-    else:
-        recluster(spark, path, ["a"], n_files=1)
-    back = Dataset(spark, path).load()
-    assert sorted(back.columns) == ["a", "b"]
-    assert sorted(map(tuple, back.select("a", "b").collect())) == [
-        (i, f"b{i}" if i >= 5 else None) for i in range(10)]
+    for a_type in (pa.int64(), pa.int32()):
+        root = tmp_path / f"ds_{a_type}"
+        root.mkdir()
+        narrow = pa.table({"a": pa.array(list(range(5)), a_type)})
+        wide = pa.table({"a": list(range(5, 10)),
+                         "b": [f"b{i}" for i in range(5, 10)]})
+        for name, table in zip(("part-0.parquet", "part-1.parquet"),
+                               (wide, narrow) if b_first else (narrow, wide)):
+            pq.write_table(table, root / name)
+        path = str(root)
+        if op == "compact":
+            compact(spark, path)
+        elif op == "recluster":
+            recluster(spark, path, ["a"], n_files=1)
+        else:
+            row0 = spark.createDataFrame([(0, None)], "a long, b string")
+            Writer(spark, path).write(row0, mode=op, delta_subset=["a"])
+        back = Dataset(spark, path).load()
+        assert sorted(back.columns) == ["a", "b"]
+        assert sorted(map(tuple, back.select("a", "b").collect())) == [
+            (i, f"b{i}" if i >= 5 else None) for i in range(10)]
 
 
 def test_recluster_in_place(spark, tmp_path):

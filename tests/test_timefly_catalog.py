@@ -351,6 +351,16 @@ def test_timefly_pointer_snapshots(spark, tmp_path):
     assert snap1 not in tf.snapshots()
     assert tf.read().count() == 3  # live data untouched
 
+    # a pointer snapshot over drifted files (id int64 next to an int32
+    # file) reads through the same schema-drift fallback as current/
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"id": pa.array([7], pa.int32())}),
+                   os.path.join(tf.current_path, "part-int32.parquet"))
+    drifted = tf.add_snapshot(TS(2024, 3, 1, 12, 0, 0))
+    assert sorted(r.id for r in tf.read(drifted).collect()) == [1, 2, 3, 7]
+
 
 def test_timefly_pointer_restore_chain_and_gc(spark, tmp_path):
     # A{3 rows} -> B{4} -> restore A -> restore B: every manifest stays

@@ -74,7 +74,9 @@ def test_upsert_null_safe_keys_and_validation(spark, tmp_path):
 def test_upsert_escaped_partition_values(spark, tmp_path):
     # r4 review: Spark hive-escapes partition directory names (':' ->
     # %3A, booleans lowercase); upsert must construct the SAME names or
-    # the swap silently discards the staged merge
+    # the swap silently discards the staged merge. A zero-padded string
+    # partition (code=007) must keep its directory text too, and a
+    # fractional-second timestamp (Spark writes 00:00:00.5) must match
     import datetime as dt
 
     from pydala_spark.dataset.reader import Dataset
@@ -82,20 +84,54 @@ def test_upsert_escaped_partition_values(spark, tmp_path):
     path = str(tmp_path / "ts_parts")
     t1 = dt.datetime(2024, 1, 1, 0, 0, 0)
     t2 = dt.datetime(2024, 1, 2, 12, 30, 0)
+    t3 = dt.datetime(2024, 1, 3, 8, 0, 0, 500000)
+    schema = "id long, ts timestamp, v double, flag boolean, code string"
+    parts = ["ts", "flag", "code"]
     base = spark.createDataFrame(
-        [(1, t1, 10.0, True), (2, t1, 20.0, False), (3, t2, 30.0, True)],
-        "id long, ts timestamp, v double, flag boolean",
+        [(1, t1, 10.0, True, "007"), (2, t1, 20.0, False, "010"),
+         (3, t2, 30.0, True, "007"), (5, t3, 50.0, True, "010")],
+        schema,
     )
-    Writer(spark, path, partition_by=["ts", "flag"]).write(base)
+    Writer(spark, path, partition_by=parts).write(base)
     incoming = spark.createDataFrame(
-        [(1, t1, 99.0, True), (4, t1, 40.0, True)],
-        "id long, ts timestamp, v double, flag boolean",
+        [(1, t1, 99.0, True, "007"), (4, t1, 40.0, True, "010"),
+         (5, t3, 55.0, True, "010")], schema,
     )
-    Writer(spark, path, partition_by=["ts", "flag"]).write(
+    Writer(spark, path, partition_by=parts).write(
         incoming, mode="upsert", delta_subset=["id"]
     )
     rows = {r["id"]: r["v"] for r in Dataset(spark, path).load().collect()}
-    assert rows == {1: 99.0, 2: 20.0, 3: 30.0, 4: 40.0}
+    assert rows == {1: 99.0, 2: 20.0, 3: 30.0, 4: 40.0, 5: 55.0}
+    codes = {d for _, dirs, _ in os.walk(path) for d in dirs if d.startswith("code=")}
+    assert codes == {"code=007", "code=010"}
+    assert not [e for e in os.listdir(tmp_path) if e.endswith("__upserting")]
+
+
+def test_upsert_csv_keeps_text(spark, tmp_path):
+    # the upsert rewrites every surviving row of the data it touches:
+    # they keep their csv text (001, 1.50), and a typed incoming key
+    # still matches a text key (2 replaces 002)
+    import gzip
+
+    out = str(tmp_path / "ups_csv")
+    w = Writer(spark, out, format="csv")
+    w.write(spark.createDataFrame(
+        [("1", "001", "1.50"), ("002", "7", "2.00")],
+        "k string, code string, price string",
+    ).coalesce(1))
+    w.write(
+        spark.createDataFrame([(2, "070", 9.5)], "k long, code string, price double"),
+        mode="upsert", delta_subset=["k"],
+    )
+    lines = []
+    for name in os.listdir(out):
+        if not name.startswith(("_", ".")):
+            with (gzip.open if name.endswith(".gz") else open)(
+                    os.path.join(out, name), "rt") as fh:
+                lines += fh.read().splitlines()
+    assert "k,code,price" in lines
+    assert sorted(x for x in lines if x != "k,code,price") == [
+        "1,001,1.50", "2,070,9.5"]
 
 
 def test_upsert_applies_filename_scheme(spark, tmp_path):
