@@ -56,9 +56,11 @@ def bucketize(
 
 
 class _Rewrite:
-    """The one rewrite step of every in-place dataset rewrite: ``compact``,
-    ``recluster``, ``Writer`` upsert (``Writer.write`` opens every call
-    here), ``Writer.unify_schema`` and in-place ``Repartition.run``.
+    """The one rewrite step of every write that replaces a dataset's
+    files: ``compact``, ``recluster``, ``Writer.unify_schema``, in-place
+    ``Repartition.run`` and ``Writer.write`` (it opens every call here;
+    overwrite, overwrite_partitions, upsert and directory-flavor writes
+    stage and commit through it).
 
     Opening resolves the live directory (a generational dataset's active
     generation), finishes any crashed commit there (``PathOps.recover``),

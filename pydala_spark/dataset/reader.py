@@ -438,28 +438,15 @@ class Dataset:
         return self
 
     def _dataset_has_files(self) -> bool:
-        """Data-file existence probe on ANY scheme. Remote URIs probe
-        through the Hadoop listing (one bulk call) — answering True
-        unconditionally made Datalake.load abort the whole lake on one
-        empty remote dataset (UNABLE_TO_INFER_SCHEMA from the scan)."""
-        import os
+        """Data-file existence probe on ANY scheme, through one Hadoop
+        listing that skips ``_``/``.`` sidecars, as Spark's scan does: a
+        dataset holding only a sidecar (``_signatures/``) has no data,
+        and registering it would abort ``Datalake.load`` for the whole
+        lake (UNABLE_TO_INFER_SCHEMA from the scan)."""
+        from pydala_spark.utils.pathops import PathOps
 
-        if "://" in self.path and not self.path.startswith("file:"):
-            from pydala_spark.utils.pathops import PathOps
-
-            ops = PathOps(self.spark, self.path)
-            if ops.is_file(self.path):
-                return True
-            return bool(ops.data_files(self.path))
-        local = self.path.removeprefix("file:")
-        if os.path.isfile(local):
-            return True
-        if not os.path.isdir(local):
-            return False
-        for _, _, files in os.walk(local):
-            if any(not f.startswith(("_", ".")) for f in files):
-                return True
-        return False
+        ops = PathOps(self.spark, self.path)
+        return ops.is_file(self.path) or bool(ops.data_files(self.path))
 
     def transform(self, func: Callable[[DataFrame], DataFrame]) -> DataFrame:
         """Arbitrary DataFrame->DataFrame hook (reference transform_func,

@@ -22,6 +22,15 @@ by the datetime window. The window prunes partitions only when the
 dataset is partitioned by the datetime column itself; a ``time_bucket``
 layout partitions on the derived ``bucket``, so the diff still lists and
 scans every partition (parquet min/max skips row groups outside it).
+
+Commits: appends and delta appends add files through Spark's own job
+commit. A write that replaces files (overwrite, overwrite_partitions,
+upsert) and every directory-flavor write stage beside the dataset and
+commit through the rewrite step (``maintain._Rewrite``), so a failed or
+interrupted write leaves the dataset at its before or after state, an
+overwrite may read its own target, and ``_``-prefixed sidecars
+(``_dataset.json``) survive an overwrite. The reference's overwrite
+deletes the dataset first (writer.py:210-214).
 """
 
 from __future__ import annotations
@@ -42,7 +51,7 @@ WRITE_MODES = (
 
 #: row cap for the single-file feather driver bridge (VERDICT r12 #5):
 #: ~2M narrow rows is comfortably inside a 4g driver while being far
-#: above any sidecar/interchange file; env-overridable at the use site.
+#: above any sidecar/interchange file; a fixed cap, with no override.
 FEATHER_BRIDGE_MAX_ROWS = 2_000_000
 
 #: unit aliases from the reference's batch-size grammar
@@ -121,21 +130,22 @@ def bucket_column(col: str, spec: str) -> F.Column:
     )
 
 
-def _hive_escape_partition_value(val: str | None) -> str:
-    """The directory name Spark writes for a partition value given as
-    its string form (Spark casts a partition value to string, then
-    Hive-escapes it through the shared
-    :func:`~pydala_spark.utils.pathops.escape_partition_value` table —
-    one copy, so the writer's upsert probes and the catalog's partition
-    deletes can never drift; NULL becomes the default partition). A
-    mismatch makes the upsert swap refuse the staged data
-    (``PathOps.commit_stage``'s stray-data check); correct construction
-    is what makes the swap work."""
-    from pydala_spark.utils.pathops import escape_partition_value
+def _dehive(ops, stage: str, rels: list[str]) -> list[str]:
+    """Rename the hive ``col=value`` partition dirs of the staged files
+    ``rels`` (stage-relative) to bare ``value`` dirs; returns the files'
+    new relative paths. Hive escapes ``=`` in values, so only Spark's
+    partition dirs contain one."""
+    import posixpath
 
-    if val is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    return escape_partition_value(val)
+    dirs = {posixpath.dirname(rel) for rel in rels}
+    bare = {d: "/".join(seg.split("=", 1)[-1] for seg in d.split("/"))
+            for d in dirs if "=" in d}
+    for d, to in bare.items():
+        ops.rename(posixpath.join(stage, d), posixpath.join(stage, to))
+    for top in {d.split("/")[0] for d in bare}:
+        ops.delete(posixpath.join(stage, top))  # the emptied hive tree
+    return [posixpath.join(bare.get(posixpath.dirname(rel), posixpath.dirname(rel)),
+                           posixpath.basename(rel)) for rel in rels]
 
 
 def _null_safe_anti_join(
@@ -188,20 +198,18 @@ def write_frame(
 ) -> None:
     """Write ``df`` as the data files of a dataset: the one place that
     turns a dataset format into a ``DataFrameWriter``. ``mode`` is a
-    Spark save mode, or ``"overwrite_partitions"`` for a dynamic
-    partition overwrite. csv is written with a header (every reader
-    expects one); zstd is parquet/orc-native and the hadoop text codecs
-    lack it, so csv/json degrade it to gzip (still transparent on read)
-    rather than silently writing uncompressed text."""
+    Spark save mode; a write that replaces live data overwrites a stage
+    and commits it (``maintain._Rewrite``), never the dataset itself.
+    csv is written with a header (every reader expects one); zstd is
+    parquet/orc-native and the hadoop text codecs lack it, so csv/json
+    degrade it to gzip (still transparent on read) rather than silently
+    writing uncompressed text."""
     format = format.lower()
     if format not in ("parquet", "orc", "csv", "json"):
         raise ValueError(f"unsupported write format {format!r}")
     if format in ("csv", "json") and compression == "zstd":
         compression = "gzip"
     writer = df.write.format(format).option("compression", compression)
-    if mode == "overwrite_partitions":
-        mode = "overwrite"
-        writer = writer.option("partitionOverwriteMode", "dynamic")
     if format == "csv":
         writer = writer.option("header", True)
     if max_records_per_file:
@@ -325,6 +333,19 @@ class Writer:
         shuffle-partitioned write replaces the reference's per-slice driver
         loop (writer.py:292-385).
 
+        Modes: ``append``; ``error``/``raise`` (append into a dataset
+        with no data files); ``delta`` (append only the rows not already
+        there); ``overwrite`` (replace every data file);
+        ``overwrite_partitions`` (replace the partitions the batch holds
+        rows for — a daily re-run rewrites one day, not the dataset as
+        the reference's overwrite does); ``upsert`` (replace rows by ``delta_subset`` key,
+        rewriting only the touched partitions; an empty batch is a
+        no-op). The last three, and every ``partition_flavor=
+        "directory"`` write, stage and commit through the rewrite step
+        (module docstring); a directory-flavor append must re-pass
+        ``partition_by`` (bare layouts carry no column names to
+        inherit).
+
         Delta mode divergence (documented): when the window bounds default
         to the batch min/max, the end bound is treated as *inclusive* so
         rows at exactly the max timestamp are still written — the
@@ -336,7 +357,8 @@ class Writer:
         # the rewrite step's head: follow any generation advance since
         # construction, finish a crashed staged rewrite, and list the data
         # files ONCE — existence, the directory-flavor depth check,
-        # inherited partitioning and an upsert all read this listing
+        # inherited partitioning, an upsert and whether the write
+        # replaces live files all read this listing
         rw = _Rewrite(self.spark, self._orig_path, "__upserting")
         self.path = rw.local
         df = self._coerce(data)
@@ -366,7 +388,7 @@ class Writer:
             and exists
             and not self.partition_by
             and not time_bucket
-            # a full overwrite deletes the whole layout first — nothing
+            # a full overwrite replaces the whole layout — nothing
             # to inherit, nothing to mis-read (r5 review); only modes
             # that land files NEXT TO the existing layout need the guard
             and mode not in ("error", "raise", "overwrite")
@@ -381,23 +403,11 @@ class Writer:
                     "carry no column names to inherit; pass partition_by "
                     "matching the existing directory depth"
                 )
-        spark_mode = "append"
-        if mode in ("error", "raise"):
-            if exists:
-                raise FileExistsError(
-                    f"Path '{self.path}' already exists. Use mode='overwrite' or 'append'."
-                )
-        elif mode == "overwrite":
-            spark_mode = "overwrite"
-        elif mode == "overwrite_partitions":
-            # dynamic partition overwrite: replace only the partitions
-            # present in the incoming data — the scale-friendly variant of
-            # the reference's rm-everything overwrite (writer.py:210-214):
-            # a daily re-run rewrites one day, not the dataset.
-            spark_mode = "overwrite"
-        elif mode == "delta" and exists:
-            df = self._delta_diff(df, rw, delta_subset, datetime_column, start_time, end_time)
-        elif mode == "upsert":
+        if mode in ("error", "raise") and exists:
+            raise FileExistsError(
+                f"Path '{self.path}' already exists. Use mode='overwrite' or 'append'."
+            )
+        if mode == "upsert":
             if not delta_subset:
                 raise ValueError("mode='upsert' needs delta_subset key columns")
             if self.partition_flavor == "directory":
@@ -406,50 +416,52 @@ class Writer:
                     "partition_flavor='directory' — the partition-swap "
                     "path keys on hive col=value directories"
                 )
-            if exists:
-                self._upsert(df, delta_subset, rw)
-                # the early return skips the ride-along block below, and
-                # an upsert REPLACES rows — any existing sidecar is now
-                # stale (the ctor guard already rejects signatures= with
-                # this mode, so there is never a fresh one to keep)
-                self._invalidate_signatures()
-                self._apply_filename_scheme()
-                return
-            # first write: plain append lays the dataset down
 
-        delta_cached = False
-        if skip_empty and spark_mode == "append":
-            if mode == "delta" and exists:
-                # the diff plan contains the existing-side scan + anti-
-                # join; probing it uncached would run that whole plan
-                # once for isEmpty and AGAIN for the write.
-                # localCheckpoint, NOT persist (round 8): the append
-                # below lands in the very path the diff's existing side
-                # scans, and Spark's recacheByPath then RE-EXECUTES a
-                # merely-persisted plan against the new file listing —
-                # every post-write consumer (the signature ride-along)
-                # saw an EMPTY diff and silently signed zero rows.
-                # Checkpointing truncates the lineage to a LogicalRDD
-                # with no path dependency, so the landed rows stay
-                # readable after the write. Storage is freed when the
-                # RDD is GC'd (the q_fingerprint_winnowing pattern).
-                df = df.localCheckpoint(eager=True)
-                delta_cached = True
-            if df.isEmpty():
+        # the frame to land: the input as given, the delta diff, or the
+        # merged rows of the partitions an upsert touches
+        if mode == "delta" and exists:
+            df = self._delta_diff(df, rw, delta_subset, datetime_column, start_time, end_time)
+        elif mode == "upsert":
+            if not exists:
+                mode = "append"  # first write: plain append lays the dataset down
+            else:
+                df = self._upsert(df, delta_subset, rw)
+                if df is None:
+                    return  # an empty batch replaces nothing
+        replaces = mode in ("overwrite", "overwrite_partitions", "upsert")
+        # appends add files through Spark's own job commit (a failed job
+        # leaves nothing); replacing live files, and every directory-flavor
+        # write (its hive dirs become bare ones out of sight), stages and
+        # commits through the rewrite step. A target with no data files
+        # has nothing to replace and is written directly. The feather
+        # dataset keeps its own commit (write_feather_dataset).
+        staged = self.format not in ("feather", "ipc", "arrow") and (
+            self.partition_flavor == "directory" or (exists and replaces))
+        # a frame read again after the write (the emptiness probe, the
+        # signature ride-along) is localCheckpointed, NOT persisted (round
+        # 8): the delta diff's plan scans the very files an append lands
+        # next to, and Spark's recacheByPath then RE-EXECUTES a merely-
+        # persisted plan against the new listing — the ride-along saw an
+        # EMPTY diff and signed zero rows; an overwrite's input may read
+        # the files its commit replaces. Checkpointing truncates the
+        # lineage to a LogicalRDD with no path dependency, so the landed
+        # rows stay readable after the write, and the diff runs once.
+        # Storage is freed when the RDD is GC'd.
+        reused = (skip_empty and not replaces) or bool(self.signatures)
+        checkpointed = exists and reused and mode in ("delta", "overwrite")
+        if checkpointed:
+            df = df.localCheckpoint(eager=True)
+        try:
+            if skip_empty and not replaces and df.isEmpty():
                 # empty-write gate (reference checks rel.shape[0] before
                 # every write, SURVEY §2.6 A3) — keeps delta no-ops from
                 # littering the dataset with empty part files.
-                if delta_cached:
-                    df.unpersist()
                 return
-        try:
-            self._write_resolved(
-                df, mode, spark_mode, rw.rels, datetime_column, time_bucket
-            )
+            if staged:
+                self._write_staged(df, mode, rw, datetime_column, time_bucket)
+            else:
+                self._write_resolved(df, mode, rw.rels, datetime_column, time_bucket)
             if self.signatures:
-                # inside the try: delta mode's diff frame is still
-                # persisted here, so signing the landed rows re-reads
-                # the cached diff instead of re-running the anti-join
                 from pydala_spark.dataset.maintain import (
                     materialize_signatures,
                 )
@@ -457,7 +469,7 @@ class Writer:
                 materialize_signatures(
                     self.spark, df, self.path,
                     kinds=self.signatures,
-                    mode="overwrite" if spark_mode == "overwrite" else "append",
+                    mode="overwrite" if mode == "overwrite" else "append",
                     **self.signature_kwargs,
                 )
             else:
@@ -470,10 +482,8 @@ class Writer:
                 # fresh (markers fold); this only fires on the mismatch.
                 self._invalidate_signatures()
         finally:
-            if delta_cached:
+            if checkpointed:
                 df.unpersist()
-        if self.partition_flavor == "directory":
-            self._dehive_layout(mode)
         self._apply_filename_scheme()
 
     def _invalidate_signatures(self) -> None:
@@ -494,61 +504,43 @@ class Writer:
         if po.is_dir(sig_dir):
             po.delete(sig_dir, recursive=True)
 
-    def _dehive_layout(self, mode: str) -> None:
-        """Convert the hive ``col=value/`` directories THIS write
-        produced into bare-value directories (``2024/eu/``) — the WRITE
-        side of directory-flavor partitioning (reference
-        dataset/writer.py:136-137; pyarrow DirectoryPartitioning).
-        Round 5 closes what SURVEY §7.4 had accepted as a divergence.
-
-        Invariant: an established directory-flavor dataset contains NO
-        hive dirs (every prior write dehived them), so every ``col=``
-        directory found here belongs to the current write. Metadata-only
-        cost: one listing + one rename per new file (object stores:
-        copy+delete). For ``overwrite_partitions`` the touched
-        partitions' bare dirs are cleared BEFORE the move — Spark's
-        dynamic overwrite only replaced the hive-side dirs it could see,
-        and merging into the old bare files would resurrect replaced
-        data. That clear+move is NOT journaled (unlike
-        ``PathOps.commit_stage``): a crash between the delete and the
-        last rename leaves the new files under ``col=value`` dirs that a
-        flavor reader skips until the next write's dehive pass — rerun
-        the write (idempotent: the moves resume) to heal. Appends into
-        existing bare dirs are collision-free (Spark part names embed a
-        job UUID). Reads pass ``partitioning=[...]`` to ``Dataset``;
-        appends must re-pass ``partition_by`` (bare layouts carry no
-        column names to inherit — documented flavor contract)."""
+    def _write_staged(self, df: DataFrame, mode: str, rw,
+                      datetime_column: str | None,
+                      time_bucket: str | None) -> None:
+        """Write ``df`` to the rewrite step's stage and commit it
+        (``rw``: the write's open
+        :class:`~pydala_spark.dataset.maintain._Rewrite`). One listing of
+        the stage names what the commit replaces: every visible entry
+        for an overwrite and an unpartitioned upsert, the staged
+        partition directories for overwrite_partitions and a partitioned
+        upsert (so they are the names Spark wrote), the staged files for
+        a directory-flavor append. A directory-flavor write renames its
+        hive ``col=value/`` dirs to bare ``value/`` dirs inside the stage
+        first — the WRITE side of directory-flavor partitioning
+        (reference dataset/writer.py:136-137; pyarrow
+        DirectoryPartitioning), one rename per partition. A failure
+        before the commit removes the stage and leaves the dataset as it
+        was; a crash inside it is finished by the next mutation's
+        ``recover``."""
         import posixpath
 
-        from pydala_spark.utils.pathops import PathOps, strip_scheme
-
-        ops = PathOps(self.spark, self.path)
-        base = strip_scheme(self.path).rstrip("/")
-        moves: list[tuple[str, str]] = []
-        hive_tops: set[str] = set()
-        targets: set[str] = set()
-        for p, _ in ops.data_files(self.path):
-            rel = p[len(base):].lstrip("/") if p.startswith(base) else None
-            if not rel:
-                continue
-            segs = rel.split("/")
-            dirs = segs[:-1]
-            if not any("=" in s and not s.startswith("_") for s in dirs):
-                continue
-            bare = [s.split("=", 1)[1] if "=" in s else s for s in dirs]
-            moves.append((p, posixpath.join(base, *bare, segs[-1])))
-            targets.add(posixpath.join(base, *bare))
-            hive_tops.add(next(s for s in dirs if "=" in s))
-        if not moves:
-            return
-        if mode == "overwrite_partitions":
-            for t in sorted(targets):
-                ops.delete(t)
-        for src, dst in moves:
-            ops.rename(src, dst)
-        for top in hive_tops:
-            # the now-empty hive tree (rename created the bare one)
-            ops.delete(posixpath.join(base, top))
+        try:
+            self._write_resolved(df, mode, rw.rels, datetime_column,
+                                 time_bucket, target=rw.stage)
+            rels = [p[len(rw.stage):].lstrip("/")
+                    for p, _ in rw.ops.data_files(rw.stage)]
+            if self.partition_flavor == "directory":
+                rels = _dehive(rw.ops, rw.stage, rels)
+        except BaseException:
+            rw.ops.delete(rw.stage)
+            raise
+        entries: list[str] | None = rels
+        if mode == "overwrite":
+            entries = None
+        elif mode in ("overwrite_partitions", "upsert"):
+            dirs = {posixpath.dirname(rel) for rel in rels}
+            entries = None if "" in dirs else sorted(dirs)
+        rw.commit(entries)
 
     def _apply_filename_scheme(self) -> None:
         """Opt-in reference filename compatibility (SURVEY §7.4 W2, which
@@ -574,11 +566,13 @@ class Writer:
         self,
         df: DataFrame,
         mode: str,
-        spark_mode: str,
         rels: list[str],
         datetime_column: str | None,
         time_bucket: str | None,
+        target: str | None = None,
     ) -> None:
+        """Write ``df`` with the dataset's partition columns: appended to
+        the dataset, or overwriting ``target`` (the rewrite step's stage)."""
         from pydala_spark.schema import infer_partitioning
 
         # derive the time bucket BEFORE the inheritance gate: a repeat
@@ -587,14 +581,12 @@ class Writer:
         if time_bucket:
             df = df.withColumn("bucket", bucket_column(datetime_column, time_bucket))
         partition_cols = list(self.partition_by)
-        if not partition_cols and rels and (
-            spark_mode == "append" or mode == "overwrite_partitions"
-        ):
+        if not partition_cols and rels and mode != "overwrite":
             # Inherit the existing hive layout: appending flat files into a
             # partitioned dataset would land them at the root, where Spark's
-            # partition discovery silently ignores them on read; and a
-            # dynamic partition overwrite without partitionBy degrades to a
-            # full-dataset overwrite (silent loss of absent partitions).
+            # partition discovery silently ignores them on read; and an
+            # overwrite_partitions or upsert without partitionBy would
+            # replace the whole dataset (silent loss of absent partitions).
             inherited = infer_partitioning(rels)
             if inherited:
                 missing = [c for c in inherited if c not in df.columns]
@@ -610,7 +602,7 @@ class Writer:
             raise ValueError(
                 "mode='overwrite_partitions' needs partition columns "
                 "(partition_by=, time_bucket=, or an existing hive layout to "
-                "inherit) — without partitionBy the dynamic overwrite would "
+                "inherit) — without partitionBy the partition overwrite would "
                 "silently replace the WHOLE dataset"
             )
 
@@ -620,12 +612,12 @@ class Writer:
                     "feather/IPC write is a single-file driver bridge and does "
                     "not support partitioning — use parquet for partitioned data"
                 )
-            self._write_feather(df, spark_mode)
+            self._write_feather(df, "overwrite" if mode == "overwrite" else "append")
             return
 
         write_frame(
-            df, self.path, self.format,
-            mode="overwrite_partitions" if mode == "overwrite_partitions" else spark_mode,
+            df, target or self.path, self.format,
+            mode="overwrite" if target else "append",
             compression=self.compression,
             partition_by=partition_cols,
             max_records_per_file=self.max_records_per_file,
@@ -705,25 +697,26 @@ class Writer:
         os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
         pf.write_feather(table, local, compression=comp)
 
-    def _upsert(self, df: DataFrame, keys: Sequence[str], rw) -> None:
-        """Update-or-insert by key: incoming rows replace existing rows
-        with the same (null-safe) key tuple; everything else survives.
+    def _upsert(self, df: DataFrame, keys: Sequence[str], rw) -> DataFrame | None:
+        """Update-or-insert by key: the frame that replaces what the batch
+        touches — incoming rows replace existing rows with the same
+        (null-safe) key tuple, everything else there survives. ``None``
+        for an empty batch, which replaces nothing.
 
         Scale shape: on a hive-partitioned dataset only the partitions
-        the batch TOUCHES are read, rewritten and swapped — the batch's
-        distinct partition tuples come to the driver (small: it's the
-        partition count, not rows), prune the existing read (partition
-        pruning keeps it a metadata operation), and name the directories
-        to swap. ``rw`` is the write's open rewrite step
-        (:class:`~pydala_spark.dataset.maintain._Rewrite`): the existing
-        rows are read from its listing (``rw.read``: conflicting footer
-        schemas reconciled, csv columns and partition values as text),
-        and the merge stages into its sibling directory and commits the
-        touched partition directories (crash-safe; a retry converges). An
-        unpartitioned dataset is read, merged and swapped whole. Keys
-        match across types (``001`` matches ``1``); the incoming rows
-        then take the read's column types, so surviving rows keep their
-        text and partition directories keep their names (``p=007``).
+        the batch TOUCHES are read and rewritten — the batch's distinct
+        partition tuples come to the driver (small: it's the partition
+        count, not rows) and prune the existing read (partition pruning
+        keeps it a metadata operation); ``write`` then replaces the
+        partition directories the merge staged. ``rw`` is the write's
+        open rewrite step (:class:`~pydala_spark.dataset.maintain.
+        _Rewrite`): the existing rows are read from its listing
+        (``rw.read``: conflicting footer schemas reconciled, csv columns
+        and partition values as text). An unpartitioned dataset is read,
+        merged and replaced whole. Keys match across types (``001``
+        matches ``1``); the incoming rows then take the read's column
+        types, so surviving rows keep their text and partition
+        directories keep their names (``p=007``).
 
         The upsert key should align with the partition key at scale: an
         incoming row whose key exists in an UNTOUCHED partition (key and
@@ -747,21 +740,15 @@ class Writer:
             )
         existing = rw.read(self.format)
         # the incoming rows take the read's column types, so surviving
-        # rows keep their text, and a partition value's string form is
-        # the directory name Spark writes for it
+        # rows keep their text, and a partition value keeps the string
+        # form its directory is named by
         typed = df.select(*[F.col(f.name).cast(f.dataType) for f in existing.schema])
 
-        touched_dirs: list[str] | None = None
         if part_cols:
             touched = typed.select(
                 *[F.col(c).cast("string") for c in part_cols]).distinct().collect()
-            touched_dirs = [
-                "/".join(
-                    f"{c}={_hive_escape_partition_value(r[c])}"
-                    for c in part_cols
-                )
-                for r in touched
-            ]
+            if not touched:
+                return None
             pred = None
             for r in touched:
                 clause = None
@@ -770,16 +757,11 @@ class Writer:
                     clause = t if clause is None else (clause & t)
                 pred = clause if pred is None else (pred | clause)
             existing = existing.where(pred)
+        elif df.isEmpty():
+            return None
 
         survivors = _null_safe_anti_join(existing, df, keys)
-        merged = survivors.unionByName(typed)
-
-        write_frame(
-            merged, rw.stage, self.format, compression=self.compression,
-            partition_by=part_cols,
-            max_records_per_file=self.max_records_per_file,
-        )
-        rw.commit(entries=touched_dirs)
+        return survivors.unionByName(typed)
 
     def _delta_diff(
         self,

@@ -1074,6 +1074,12 @@ def save_ivfpq_index(
         df, centroids, books, id_col, vec_col,
         residual=residual, anchors=anchors, rotation=rotation,
     )
+    if mode == "overwrite":
+        # an overwrite keeps ``_`` sidecars: drop the old codebooks first,
+        # so a crash before the new ones land fails loud on load instead
+        # of scoring the new codes with the old codebooks
+        for name in (IVF_CODEBOOK_SIDECAR, PQ_CODEBOOK_SIDECAR):
+            _ops.delete(_pp.join(path, name))
     Writer(spark, path, partition_by="cell", mode=mode).write(idx)
     import json
     import posixpath
@@ -1226,8 +1232,8 @@ def remove_from_ivfpq_index(
     """Delete vectors from a persisted IVFADC index by id (round 9) —
     the GDPR/right-to-be-forgotten path, and the other half of index
     maintenance beside :func:`append_ivfpq_index`: deletions rewrite
-    ONLY the cell partitions that actually contain the ids (dynamic
-    partition overwrite), so removing a handful of documents from a
+    ONLY the cell partitions that actually contain the ids (a staged
+    partition commit), so removing a handful of documents from a
     billion-vector index touches a handful of cell directories, not
     the index. ``ids`` is a list or a single-column DataFrame; ids are
     compared as strings (the append-path convention). Returns the
@@ -1235,16 +1241,13 @@ def remove_from_ivfpq_index(
     rewritten).
 
     Shape: one broadcast semi-join finds the affected cells, the
-    surviving rows of those cells localCheckpoint (the write replaces
-    the very files being read — same self-referential rule as the
-    append's anti-join), one dynamic-overwrite write replaces exactly
-    those partitions, and any cell emptied outright has its directory
-    deleted explicitly (dynamic overwrite can only REPLACE partitions
-    it has rows for — an emptied cell would otherwise silently keep
-    its stale files). Codebook sidecars are untouched: deletion never
+    surviving rows of those cells localCheckpoint (they are counted
+    and written from one read), one write stages them beside the
+    index, and ``PathOps.commit_stage`` replaces exactly the affected
+    cell directories — a cell emptied outright is dropped with them,
+    and a crash is finished forward by the next removal's
+    ``recover``. Codebook sidecars are untouched: deletion never
     changes the encoding."""
-    import posixpath
-
     from pydala_spark.dataset.reader import Dataset
     from pydala_spark.utils.pathops import PathOps, strip_scheme
 
@@ -1260,11 +1263,11 @@ def remove_from_ivfpq_index(
         rid = spark.createDataFrame([(x,) for x in ids], "__rid string")
     # a compacted index may live under a generation pointer
     # (maintain.compact swap="generation") — every read resolves to
-    # the active gen-NNNNNN/ dir, so the write and the emptied-cell
-    # deletes must target THAT dir too, not the bare base (a write at
-    # the base would be invisible to resolving readers and the
-    # deletion would silently do nothing)
+    # the active gen-NNNNNN/ dir, so the commit must target THAT dir
+    # too, not the bare base (a write at the base would be invisible
+    # to resolving readers and the deletion would silently do nothing)
     live = generations.resolve(spark, strip_scheme(path))
+    PathOps(spark, live).recover(live)
     idx = Dataset(spark, live).load()
     idc = id_col if id_col in idx.columns else "id"
     keyed = idx.withColumn("__k", F.col(idc).cast("string"))
@@ -1280,9 +1283,8 @@ def remove_from_ivfpq_index(
         .join(F.broadcast(rid), keyed["__k"] == rid["__rid"],
               "left_anti")
         .drop("__k")
-        # the write replaces the files this plan reads — cut the
-        # lineage first (bounded by the affected cells' size; at real
-        # deletion rates that is a handful of cells)
+        # counted and written from one read (bounded by the affected
+        # cells' size; at real deletion rates that is a handful of cells)
         .localCheckpoint(eager=True)
     )
     kept_cells = {r["cell"] for r in
@@ -1305,15 +1307,13 @@ def remove_from_ivfpq_index(
                 "entirely. Rebuild with save_ivfpq_index (or delete the "
                 "index directory) instead."
             )
-    if kept_cells:
-        (survivors.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("cell").parquet(live))
-    po = PathOps(spark, live)
-    for cell in set(affected) - kept_cells:
-        # dynamic overwrite never touches a partition it has no rows
-        # for — an emptied cell's stale directory must go explicitly
-        po.delete(posixpath.join(live, f"cell={cell}"))
+    stage = live.rstrip("/") + "__removing"
+    survivors.write.mode("overwrite").partitionBy("cell").parquet(stage)
+    # every affected cell dir is replaced by its staged survivors, or
+    # dropped when none survive
+    PathOps(spark, live).commit_stage(
+        live, stage, entries=[f"cell={c}" for c in sorted(affected)])
+    spark.catalog.refreshByPath(live)
     return int(n_removed)
 
 

@@ -853,29 +853,23 @@ def span_partial_night(
             # as a stale-but-trusted contribution table
             po.delete(posixpath.join(
                 contrib_path, "_token.json"))
+            contrib_stage = contrib_path + "_stage"
+            po.delete(contrib_stage)  # a crashed night's leftovers
             if nc is not None:
-                nc.write.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                ).partitionBy("dataset").parquet(
-                    contrib_path)
-            # stale partitions must GO for every
-            # prior-swept dataset that contributed no rows
-            # tonight — including a CHANGED dataset whose
-            # new sidecar is empty (dynamic overwrite never
-            # touches a partition it has no rows for; a
-            # survivor would double-subtract on the next
-            # delta). Partition dirs are Spark-escaped, so
-            # the delete must escape the name the same way.
-            present = ({r["dataset"] for r in
-                        nc.select("dataset").distinct()
-                        .collect()}
-                       if nc is not None else set())
-            for gone in prior_swept:
-                if gone not in present:
-                    po.delete(posixpath.join(
-                        contrib_path,
-                        "dataset="
-                        + escape_partition_value(gone)))
+                nc.write.partitionBy("dataset").parquet(contrib_stage)
+            # the staged partitions replace their old
+            # copies, and the partition of every prior-swept
+            # dataset that contributed no rows tonight GOES —
+            # including a CHANGED dataset whose new sidecar
+            # is empty (a survivor would double-subtract on
+            # the next delta). Partition dirs are Spark-
+            # escaped, so the named ones escape the same way.
+            staged = {posixpath.dirname(
+                p[len(contrib_stage):].lstrip("/"))
+                for p, _ in po.data_files(contrib_stage)}
+            po.commit_stage(contrib_path, contrib_stage, entries=sorted(
+                staged | {"dataset=" + escape_partition_value(d)
+                          for d in prior_swept}))
     return spans, sweep_mode, new_token, swap_stage
 
 

@@ -13,19 +13,24 @@ Every in-place rewrite and every TimeFly move into or out of
 through ONE journaled step, :meth:`PathOps.commit_stage`; after a crash
 at any step, :meth:`PathOps.recover` (run by the next mutation of that
 target) leaves it reading as exactly its before or after state. That
-needs atomic renames (local, HDFS). The five in-place dataset rewrites
-(``compact``, ``recluster``, the ``Writer`` upsert,
-``Writer.unify_schema`` and in-place ``Repartition``) reach it through
-one rewrite step, ``dataset.maintain._Rewrite``, which alone calls it
-for dataset data; the sweeps' staged tables and the TimeFly moves call
-it directly. Off the step, and why:
+needs atomic renames (local, HDFS). Every write that replaces a
+dataset's files reaches it through one rewrite step,
+``dataset.maintain._Rewrite``, which alone calls it for dataset data:
+``compact``, ``recluster``, ``Writer.unify_schema``, in-place
+``Repartition``, and ``Writer.write``'s overwrite, overwrite_partitions,
+upsert and every directory-flavor write (its hive dirs become bare ones
+inside the stage). The sweeps' staged tables, the IVF index's cell
+removal and the TimeFly moves call it directly. Off the step, and why:
 
+- Appends and delta appends add files through Spark's own job commit:
+  a failed job leaves nothing behind, and staging them would cost about
+  70 ms per commit on a 4-vCPU VM (``local[4]``, 3 files into a 56-file
+  dataset: listing the stage 26 ms, ``commit_stage`` 40 ms, the refresh
+  1 ms), about 5% of a perfbench ``lake_ingest`` delta commit.
 - ``swap="generation"``: on object stores rename is copy+delete, so it
   commits one pointer PUT instead.
 - The distributed feather commit: ``write_feather_dataset`` promises a
   rollback to the old data, which a forward-only replay cannot give.
-- The directory-flavor dehive: its own repair pass heals a stranded
-  layout on the next write.
 - ``normalize_filenames`` and ``Datalake.remove_dataset``'s sidecar
   rename: one atomic rename per file, so a crash leaves valid data and
   a rerun converges.

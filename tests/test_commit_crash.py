@@ -238,9 +238,9 @@ def test_commit_stage_park_as_stage_keeps_it(spark, tmp_path):
 # -- one end-to-end crash per lake op ------------------------------------------
 
 
-def _state(spark, path):
+def _state(spark, path, **read):
     """(sorted rows, (count, xxhash64 checksum)) of the dataset."""
-    df = Dataset(spark, path).load()
+    df = Dataset(spark, path, **read).load()
     cols = sorted(df.columns)
     check = df.agg(
         F.count("*"),
@@ -250,15 +250,16 @@ def _state(spark, path):
     return sorted(map(tuple, df.select(*cols).collect())), tuple(check)
 
 
-def _crash_recover_retry(spark, arm, path, op, before, after, rename_k):
+def _crash_recover_retry(spark, arm, path, op, before, after, rename_k,
+                         **read):
     arm(rename_k, ("rename",))
     with pytest.raises(OSError, match="injected crash"):
         op()
     arm(None)
     PathOps(spark, path).recover(path)
-    assert _state(spark, path) in (before, after)
+    assert _state(spark, path, **read) in (before, after)
     op()
-    assert _state(spark, path) == after
+    assert _state(spark, path, **read) == after
     leftovers = [e for e in os.listdir(os.path.dirname(path))
                  if e.startswith(os.path.basename(path) + "__")]
     assert leftovers == []
@@ -289,6 +290,53 @@ def test_upsert_crash_mid_swap_converges(spark, tmp_path, arm, partitioned):
     # and a retry that clears the stage loses the only copy of its rows
     path, before, after, op = _upsert_case(spark, tmp_path, partitioned)
     _crash_recover_retry(spark, arm, path, op, before, after, rename_k=1)
+
+
+#: (mode, partition flavor, the rename that crashes). A hive write's
+#: first rename is its commit's; a directory-flavor write first renames
+#: its two staged hive dirs to bare ones, so k=1 crashes before the
+#: commit and k=3 inside it. The directory-flavor append runs as delta:
+#: a plain append retried after its commit was finished forward would
+#: land its rows twice, by design.
+WRITE_CRASHES = [
+    ("overwrite", "hive", 1),
+    ("overwrite_partitions", "hive", 1),
+    ("delta", "directory", 1),
+    ("delta", "directory", 3),
+    ("overwrite_partitions", "directory", 1),
+    ("overwrite_partitions", "directory", 3),
+]
+
+
+@pytest.mark.parametrize("mode,flavor,rename_k", WRITE_CRASHES)
+def test_write_crash_mid_swap_converges(spark, tmp_path, arm, mode, flavor,
+                                        rename_k):
+    # a delete-then-write overwrite has no old data left to recover to,
+    # and the directory-flavor moves ran on the live dataset unjournaled
+    schema = "id long, p long, v string"
+    old = [(i, i % 3, "old") for i in range(12)]
+    batch = [(1, 1, "new"), (12, 0, "new"), (13, 1, "new")]
+    expect = {
+        "overwrite": batch,
+        "overwrite_partitions": [r for r in old if r[1] == 2] + batch,
+        "delta": old + batch[1:],
+    }[mode]
+    read = {"partitioning": ["p"]} if flavor == "directory" else {}
+
+    def writer(path):
+        return Writer(spark, path, partition_by=["p"], partition_flavor=flavor)
+
+    path, expect_path = str(tmp_path / "ds"), str(tmp_path / "expect")
+    writer(path).write(spark.createDataFrame(old, schema))
+    writer(expect_path).write(spark.createDataFrame(expect, schema))
+    _crash_recover_retry(
+        spark, arm, path,
+        lambda: writer(path).write(spark.createDataFrame(batch, schema),
+                                   mode=mode, delta_subset=["id"]),
+        _state(spark, path, **read), _state(spark, expect_path, **read),
+        rename_k=rename_k, **read)
+    if flavor == "directory":
+        assert not [e for e in os.listdir(path) if "=" in e]
 
 
 def test_compact_crash_mid_swap_converges(spark, tmp_path, arm):

@@ -865,3 +865,18 @@ def test_datalake_discovers_orc_dataset_format(spark, tmp_path):
     assert datasets["events_orc"].load().count() == 2
     assert spark.sql("SELECT COUNT(*) FROM events_orc").first()[0] == 2
 
+
+
+def test_datalake_load_skips_sidecar_only_dataset(spark, tmp_path):
+    # a dataset holding nothing but a signature sidecar has no data
+    # files: it is tracked, but must not abort loading the rest
+    root = str(tmp_path / "lake_sidecar_only")
+    lake = Datalake(spark, root)
+    _write(spark, os.path.join(root, "good"), [1, 2, 3])
+    lake.add_dataset("good")
+    spark.range(2).write.parquet(
+        os.path.join(root, "sigs", "_signatures", "winnowing"))
+    lake.add_dataset("sigs")
+    lake2 = Datalake(spark, root)
+    assert set(lake2.load()) == {"good", "sigs"}
+    assert lake2.sql("SELECT count(*) AS n FROM good").first()["n"] == 3

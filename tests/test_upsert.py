@@ -26,6 +26,11 @@ def test_upsert_unpartitioned(spark, tmp_path):
     )
     got = {r["k"]: r["v"] for r in Dataset(spark, out).load().collect()}
     assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
+    # an empty batch replaces nothing: no file is rewritten
+    files = sorted(os.listdir(out))
+    w.write(spark.createDataFrame([], "k long, v string"), mode="upsert",
+            delta_subset=["k"])
+    assert sorted(os.listdir(out)) == files
 
 
 def test_upsert_partitioned_prunes_untouched(spark, tmp_path):
@@ -49,6 +54,11 @@ def test_upsert_partitioned_prunes_untouched(spark, tmp_path):
     assert sorted(os.listdir(b_dir)) == before  # partition b untouched
     got = {r["k"]: r["v"] for r in Dataset(spark, out).load().collect()}
     assert got == {1: 1.0, 2: 22.0, 3: 3.0, 9: 9.0}
+    # an empty batch replaces nothing: no file is rewritten
+    files = sorted(f for _, _, fs in os.walk(out) for f in fs)
+    w.write(spark.createDataFrame([], "k long, g string, v double"),
+            mode="upsert", delta_subset=["k"])
+    assert sorted(f for _, _, fs in os.walk(out) for f in fs) == files
 
 
 def test_upsert_null_safe_keys_and_validation(spark, tmp_path):

@@ -456,31 +456,55 @@ def test_directory_flavor_full_overwrite_without_partition_by(spark, tmp_path):
     assert [(r["id"], r["g"]) for r in back.collect()] == [(2, "b")]
 
 
-def test_directory_flavor_dehive_heals_stranded_hive_dirs(spark, tmp_path):
-    # the documented crash-window recovery: col=value dirs stranded by an
-    # interrupted dehive are picked up and merged by the NEXT write's
-    # dehive pass (it processes every hive dir it finds, not just its own)
-    import os
-    import shutil
+def test_overwrite_failing_job_keeps_old_rows(spark, tmp_path):
+    # an overwrite stages beside the dataset: a job that fails leaves
+    # the old rows in place and no stage behind
+    out = str(tmp_path / "ow_fail")
+    rows = spark.range(10).withColumn("g", F.col("id") % 2)
+    w = Writer(spark, out, partition_by=["g"])
+    w.write(rows)
+    bad = rows.withColumn("id", F.when(F.col("id") == 7, F.raise_error(
+        F.lit("injected failure"))).otherwise(F.col("id")))
+    for mode in ("overwrite", "overwrite_partitions"):
+        with pytest.raises(Exception, match="injected failure"):
+            w.write(bad, mode=mode)
+        assert Dataset(spark, out).load().count() == 10
+        assert os.listdir(tmp_path) == ["ow_fail"]
 
-    from pydala_spark.dataset.reader import Dataset
 
-    out = str(tmp_path / "dirpart_heal")
-    schema = "id long, g string, v double"
-    w = Writer(spark, out, partition_by=["g"], partition_flavor="directory")
-    w.write(spark.createDataFrame([(1, "a", 1.0)], schema), mode="overwrite")
-    # simulate the crash: a hive dir with a data file that never moved
-    src = os.path.join(out, "a")
-    stranded = os.path.join(out, "g=a")
-    os.makedirs(stranded)
-    for f in os.listdir(src):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(src, f),
-                        os.path.join(stranded, "stranded-" + f))
-            break
-    # next write heals: the stranded file merges into the bare dir
-    w.write(spark.createDataFrame([(2, "b", 2.0)], schema), mode="append")
-    assert not any("=" in d for d in os.listdir(out))
-    back = Dataset(spark, out, partitioning=["g"]).load()
-    assert back.where("g = 'a'").count() == 2  # original + healed stranded
-    assert back.count() == 3
+@pytest.mark.parametrize("signatures", [None, ("winnowing",)])
+def test_overwrite_reads_its_own_target(spark, tmp_path, signatures):
+    # the input reads the files the commit replaces: the write reads
+    # them before the commit, and the ride-along signs what landed
+    # without reading them again
+    from pydala_spark.dataset.maintain import read_signatures
+
+    out = str(tmp_path / "ow_self")
+    Writer(spark, out).write(spark.createDataFrame(
+        [(i, f"document number {i} of the overwrite test") for i in range(10)],
+        "doc_id long, text string"))
+    Writer(spark, out, signatures=signatures).write(
+        Dataset(spark, out).load().where("doc_id < 5"), mode="overwrite")
+    got = sorted(r["doc_id"] for r in Dataset(spark, out).load().collect())
+    assert got == list(range(5))
+    if signatures:
+        fps, _ = read_signatures(spark, out, "winnowing")
+        assert {r["id"] for r in fps.collect()} == set(range(5))
+
+
+def test_overwrite_keeps_dataset_sidecar(spark, tmp_path):
+    # an overwrite replaces the data files only: the dataset's sidecar
+    # stays, so the lake still discovers the dataset
+    import json
+
+    from pydala_spark import Datalake
+
+    root = str(tmp_path / "lake")
+    out = os.path.join(root, "events")
+    Writer(spark, out).write(spark.range(10))
+    with open(os.path.join(out, "_dataset.json"), "w") as f:
+        json.dump({"dataset": {"format": "parquet"}}, f)
+    assert list(Datalake(spark, root).discover()) == ["events"]
+    Writer(spark, out).write(spark.range(3), mode="overwrite")
+    assert list(Datalake(spark, root).discover()) == ["events"]
+    assert Dataset(spark, out).load().count() == 3
