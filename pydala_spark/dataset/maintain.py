@@ -92,12 +92,15 @@ class _Rewrite:
         else:
             self.stage = self.local + suffix
 
-    def read(self, format: str, infer_schema: bool = False) -> DataFrame:
+    def read(self, format: str, infer_schema: bool = False,
+             paths: list[str] | None = None) -> DataFrame:
         """The EXPLICIT listed files, not the directory: an append that
         lands between the listing and Spark's own directory scan would
         otherwise be swept into the rewrite while staying absent from the
         generation commit's ``input_files`` — carried forward as a
-        straggler AND rewritten, duplicating its rows. Read through
+        straggler AND rewritten, duplicating its rows. ``paths`` narrows
+        the read to a subset of the listing (``compact`` reads only the
+        partitions it rewrites). Read through
         :func:`pydala_spark.sources.read`, so conflicting footer schemas
         are reconciled there. csv columns and hive partition values are
         read as strings, so the rewrite keeps their text (``007``,
@@ -108,8 +111,9 @@ class _Rewrite:
 
         if not self.files:
             raise FileNotFoundError(f"no data files under {self.base}")
-        return sources.read(self.spark, [p for p, _ in self.files], format,
-                            base_path=self.local, infer_schema=infer_schema)
+        return sources.read(self.spark, paths or [p for p, _ in self.files],
+                            format, base_path=self.local,
+                            infer_schema=infer_schema)
 
     def commit(self, entries: list[str] | None = None, park: str | None = None,
                keep_previous: int = 1) -> str:
@@ -148,81 +152,143 @@ def compact(
     swap: str = "rename",
     keep_previous: int = 1,
 ) -> dict:
-    """Rewrite a dataset's small files into ~``target_file_mb`` files,
-    preserving any hive partition layout. Returns before/after stats.
+    """Rewrite the small files of a dataset's partitions into
+    ~``target_file_mb`` files, preserving any hive partition layout.
+    Returns ``files_before``, ``files_after``, ``bytes`` (the bytes
+    rewritten) and ``partition_cols``.
 
     Streaming and delta appends accrete tiny files; at scale the scan
-    cost becomes task scheduling + footer reads, not I/O. One
-    ``repartition`` sized from the on-disk byte count fixes it. With hive
-    partition columns, hashing on them alone would collapse every
-    directory to exactly ONE file regardless of size (a 10 GB partition
-    becoming one 10 GB file); instead each partition gets a deterministic
-    salt sized from its own byte count, so big partitions split into
+    cost becomes task scheduling + footer reads, not I/O. Like Delta
+    ``OPTIMIZE`` (Armbrust et al., *Delta Lake*, VLDB 2020), only what
+    needs it is rewritten. A hive partition directory is rewritten when
+    it holds two or more files below the target and more files than the
+    ``ceil(bytes / target)`` it would be written as, so a partition that
+    is already compacted or split stays as it is. Every other partition
+    keeps its files, names and bytes: only the rewritten partitions'
+    files are read, and the commit replaces only their directories.
+    When no partition needs a rewrite, ``compact`` returns ``bytes: 0``
+    without staging, committing or running a Spark job. An unpartitioned
+    dataset, or a layout with files off the full ``col=value`` depth, is
+    one group, rewritten whole or not at all.
+
+    One ``repartition`` sized from the rewritten byte count writes the
+    output. With hive partition columns, hashing on them alone would
+    collapse every directory to exactly ONE file regardless of size (a
+    10 GB partition becoming one 10 GB file); instead each partition gets
+    a deterministic salt sized from its own byte count
+    (:func:`_chunk_salt`), so big partitions split into
     ~``target_file_mb`` files while small ones still collapse to one.
 
     ``swap="rename"`` stages into a sibling and commits it through
     ``PathOps.commit_stage``; ``swap="generation"`` writes the next
     ``gen-NNNNNN/`` and commits one pointer object — the object-store
     path (``dataset/generations.py``), keeping ``keep_previous``
-    generations for in-flight readers. Both go through :class:`_Rewrite`.
+    generations for in-flight readers. A generation must hold the whole
+    dataset, so that swap rewrites every partition on every call. Both
+    go through :class:`_Rewrite`.
     """
     from pydala_spark.schema import infer_partitioning
 
     rw = _Rewrite(spark, path, "__compacting", swap)
-    df = rw.read(format)
-    total_bytes = sum(sz for _, sz in rw.files)
+    if not rw.files:
+        raise FileNotFoundError(f"no data files under {rw.base}")
     target_bytes = target_file_mb * 1024 * 1024
-    n_files = max(1, math.ceil(total_bytes / target_bytes))
     part_cols = infer_partitioning(rw.rels) or []
+    dirs: dict[str, list[tuple[str, int]]] = {}
+    for rel, f in zip(rw.rels, rw.files):
+        dirs.setdefault(posixpath.dirname(rel), []).append(f)
+
+    def needs_rewrite(files: list[tuple[str, int]]) -> bool:
+        small = sum(sz < target_bytes for _, sz in files)
+        chunks = math.ceil(sum(sz for _, sz in files) / target_bytes)
+        return small >= 2 and len(files) > chunks
+
+    full_depth = bool(part_cols) and all(
+        len(segs) == len(part_cols)
+        and all(s.startswith(c + "=") for s, c in zip(segs, part_cols))
+        for segs in (d.split("/") for d in dirs))
+    if swap == "generation":
+        todo = list(dirs)
+    elif full_depth:
+        todo = [d for d, files in dirs.items() if needs_rewrite(files)]
+    else:
+        todo = list(dirs) if needs_rewrite(rw.files) else []
+    if not todo:
+        return {"files_before": len(rw.files), "files_after": len(rw.files),
+                "bytes": 0, "partition_cols": part_cols}
+    partial = len(todo) < len(dirs)
+    files = [f for d in todo for f in dirs[d]]
+    df = rw.read(format, paths=[p for p, _ in files] if partial else None)
+    total_bytes = sum(sz for _, sz in files)
+    n_files = max(1, math.ceil(total_bytes / target_bytes))
     if part_cols:
-        # per-partition chunk counts from on-disk bytes (metadata already
-        # in hand from the file listing — no extra Spark job)
-        per_part_bytes: dict[tuple, int] = {}
-        for rel, (_, sz) in zip(rw.rels, rw.files):
-            segs = rel.split("/")[:-1]
-            kv = dict(s.split("=", 1) for s in segs if "=" in s)
-            # key is always full-arity over the inferred partition
-            # columns (None for files at partial depth / the root), so
-            # chunk rows never mix tuple lengths
-            key = tuple(kv.get(c) for c in part_cols)
-            per_part_bytes[key] = per_part_bytes.get(key, 0) + sz
-        chunk_rows = [
-            (*key, max(1, math.ceil(b / target_bytes)))
-            for key, b in per_part_bytes.items()
-        ]
-        schema_str = ", ".join(
-            [f"`__pv_{i}` string" for i in range(len(part_cols))] + ["__n_chunks int"]
-        )
-        chunks = spark.createDataFrame(chunk_rows, schema_str)
-        cond = [
-            F.col(c).cast("string").eqNullSafe(F.col(f"__pv_{i}"))
-            for i, c in enumerate(part_cols)
-        ]
-        data_cols = [c for c in df.columns if c not in part_cols]
-        shuffled = (
-            df.join(F.broadcast(chunks), cond, "left")
-            # deterministic salt (hash of the data columns, NOT rand():
-            # rand() re-evaluates differently on task retry and can
-            # duplicate/lose rows through a shuffle)
-            .withColumn(
-                "__salt",
-                F.pmod(F.hash(*[F.col(c) for c in data_cols]),
-                       F.coalesce(F.col("__n_chunks"), F.lit(1))),
-            )
-            .repartition(n_files, *part_cols, "__salt")
-            .drop("__salt", "__n_chunks", *[f"__pv_{i}" for i in range(len(part_cols))])
-        )
+        salt = _chunk_salt(spark, df, part_cols,
+                           {d: dirs[d] for d in todo}, target_bytes)
+        shuffled = (df.withColumn("__salt", salt)
+                    .repartition(n_files, *part_cols, "__salt")
+                    .drop("__salt"))
     else:
         shuffled = df.repartition(n_files)
     write_frame(shuffled, rw.stage, format, compression=compression,
                 partition_by=part_cols)
-    final = rw.commit(keep_previous=keep_previous)
+    entries = None
+    if partial:
+        # the directories Spark wrote: a name that differs from its
+        # source (a foreign escape such as %20) is replaced too; one
+        # naming an untouched partition is refused by the stray check
+        staged = {posixpath.dirname(p[len(rw.stage):].lstrip("/"))
+                  for p, _ in rw.ops.data_files(rw.stage)}
+        entries = sorted(set(todo) | (staged - set(dirs)))
+    final = rw.commit(entries, keep_previous=keep_previous)
     return {
         "files_before": len(rw.files),
         "files_after": len(rw.ops.data_files(final)),
         "bytes": total_bytes,
         "partition_cols": part_cols,
     }
+
+
+def _chunk_salt(spark: SparkSession, df: DataFrame, part_cols: list[str],
+                dirs: dict[str, list[tuple[str, int]]],
+                target_bytes: int) -> Column:
+    """Each row's chunk within its hive partition, ``hash(data columns)
+    mod n`` for a partition of ``n = ceil(bytes / target) > 1`` chunks
+    and 0 for the rest. The lookup is literals in the plan, one ``isin``
+    per distinct ``n`` (Spark turns more than 10 values into a hash-set
+    ``InSet``), so no table is built or broadcast. It is keyed on the
+    partition values as Spark reads them from ``dirs``: unescaped
+    (``a%3Ab`` reads ``a:b``), the default partition name as NULL. The
+    hash is deterministic, NOT rand(): rand() re-evaluates differently
+    on task retry and can duplicate or lose rows through a shuffle."""
+    sizes: dict[tuple, int] = {}
+    for d, files in dirs.items():
+        kv = dict(s.split("=", 1) for s in d.split("/") if "=" in s)
+        key = tuple(kv.get(c) for c in part_cols)
+        sizes[key] = sizes.get(key, 0) + sum(sz for _, sz in files)
+    by_n: dict[int, list[tuple]] = {}
+    for key, size in sizes.items():
+        n = math.ceil(size / target_bytes)
+        if n > 1:
+            by_n.setdefault(n, []).append(key)
+    if not by_n:
+        return F.lit(0)
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    default = utils.DEFAULT_PARTITION_NAME()
+
+    def row(values: list[Column]) -> Column:
+        return F.struct(*[v.cast("string").alias(str(i))
+                          for i, v in enumerate(values)])
+
+    value = row([F.col(c) for c in part_cols])
+    digest = F.hash(*[F.col(c) for c in df.columns if c not in part_cols])
+    salt = F.lit(0)
+    for n, keys in by_n.items():
+        hit = value.isin([
+            row([F.lit(None if v in (None, default) else utils.unescapePathName(v))
+                 for v in key])
+            for key in keys])
+        salt = F.when(hit, F.pmod(digest, F.lit(n))).otherwise(salt)
+    return salt
 
 
 def zorder_value(cols: Sequence[Column], bits: int = 16) -> Column:

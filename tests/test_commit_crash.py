@@ -340,8 +340,8 @@ def test_write_crash_mid_swap_converges(spark, tmp_path, arm, mode, flavor,
 
 
 def test_compact_crash_mid_swap_converges(spark, tmp_path, arm):
-    # the second rename: a whole-directory swap has moved the dataset
-    # aside and not yet moved the compacted copy in — no dataset at all
+    # the second rename: the commit has parked the old p=0 and not yet
+    # moved its compacted copy in — p=0's rows exist only in the park
     path = str(tmp_path / "ds")
     spark.range(40).withColumn("p", F.col("id") % 2).repartition(8).write \
         .partitionBy("p").parquet(path)
@@ -350,6 +350,26 @@ def test_compact_crash_mid_swap_converges(spark, tmp_path, arm):
                          rows, rows, rename_k=2)
     part = os.listdir(os.path.join(path, "p=0"))
     assert len([f for f in part if not f.startswith(".")]) == 1  # compacted
+
+
+@pytest.mark.parametrize("rename_k", [1, 2])
+def test_partial_compact_crash_at_each_rename_converges(spark, tmp_path, arm,
+                                                        rename_k):
+    # p=0 holds one file and stays untouched; p=1 holds four and is the
+    # commit's one entry: rename 1 parks the old p=1, rename 2 moves the
+    # compacted copy in. The retry finds nothing left to rewrite
+    path = str(tmp_path / "ds")
+    rows = spark.range(40).withColumn("p", (F.col("id") >= 10).cast("int"))
+    rows.where("p = 0").coalesce(1).write.partitionBy("p").parquet(path)
+    rows.where("p = 1").repartition(4).write.mode("append") \
+        .partitionBy("p").parquet(path)
+    untouched = sorted(os.listdir(os.path.join(path, "p=0")))
+    state = _state(spark, path)
+    _crash_recover_retry(spark, arm, path, lambda: compact(spark, path),
+                         state, state, rename_k=rename_k)
+    assert sorted(os.listdir(os.path.join(path, "p=0"))) == untouched
+    part = os.listdir(os.path.join(path, "p=1"))
+    assert len([f for f in part if not f.startswith(".")]) == 1
 
 
 def test_recluster_crash_mid_swap_converges(spark, tmp_path, arm):

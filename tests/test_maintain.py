@@ -1,5 +1,6 @@
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -297,6 +298,126 @@ def test_compact_splits_large_partition(spark, tmp_path):
     assert len(small_files) == 1
     assert stats["partition_cols"] == ["part"]
     assert spark.read.parquet(path).count() == 300010
+
+
+def test_compact_splits_large_timestamp_partition(spark, tmp_path):
+    # Spark escapes a timestamp value's colons in its directory name
+    # (bucket=2024-01-11 00%3A00%3A00) and reads it back unescaped: the
+    # chunk lookup must key on the value as read, or the big partition
+    # never matches and collapses to one file
+    path = str(tmp_path / "skewed_ts")
+    big = spark.range(300000).select(
+        F.lit("2024-01-11 00:00:00").cast("timestamp").alias("bucket"),
+        F.md5(F.col("id").cast("string")).alias("payload"))
+    small = spark.range(10).select(
+        F.lit("2024-01-12 00:00:00").cast("timestamp").alias("bucket"),
+        F.md5(F.col("id").cast("string")).alias("payload"))
+    big.unionAll(small).repartition(12).write.partitionBy("bucket").parquet(path)
+    big_dir = os.path.join(path, "bucket=2024-01-11 00%3A00%3A00")
+    before = _data_files(big_dir)
+    assert len(before) == 12 and all(os.path.getsize(f) < 1 << 20 for f in before)
+    compact(spark, path, target_file_mb=1)
+    files = _data_files(path)
+    big_files = [f for f in files if f.startswith(big_dir + "/")]
+    assert 2 <= len(big_files) < 12, "oversized partition was not split"
+    assert len(files) - len(big_files) == 1
+    assert spark.read.parquet(path).count() == 300010
+
+
+def _sums(spark, path):
+    return tuple(spark.read.parquet(path).agg(
+        F.count("*"), F.sum("id"), F.sum(F.crc32("v"))).first())
+
+
+def test_compact_rewrites_only_partitions_with_small_files(
+        spark, tmp_path, monkeypatch):
+    # p=0 holds one file and keeps it, name and all; p=1 holds four
+    # small files and is compacted to one. The chunk lookup is literals
+    # in the plan, never a Python-built table
+    from pyspark.sql import SparkSession
+
+    path = str(tmp_path / "mixed")
+    rows = spark.range(40).select("id", (F.col("id") % 7).cast("string").alias("v"))
+    rows.where("id < 10").coalesce(1).write.parquet(os.path.join(path, "p=0"))
+    rows.where("id >= 10").repartition(4).write.parquet(os.path.join(path, "p=1"))
+    lone = _data_files(os.path.join(path, "p=0"))
+    small = [os.path.getsize(f) for f in _data_files(os.path.join(path, "p=1"))]
+    assert len(lone) == 1 and len(small) == 4
+    before = _sums(spark, path)
+
+    def no_table(*args, **kwargs):
+        raise AssertionError("compact built a DataFrame from Python rows")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_table)
+    stats = compact(spark, path)
+    monkeypatch.undo()
+    assert _data_files(os.path.join(path, "p=0")) == lone
+    assert len(_data_files(os.path.join(path, "p=1"))) == 1
+    assert stats["files_before"] == 5 and stats["files_after"] == 2
+    assert stats["bytes"] == sum(small)
+    assert _sums(spark, path) == before
+
+
+def test_compact_noop_runs_no_spark_job(spark, tmp_path):
+    path = str(tmp_path / "done")
+    spark.range(30).withColumn("p", F.col("id") % 3).repartition(4) \
+        .write.partitionBy("p").parquet(path)
+    assert compact(spark, path)["bytes"] > 0
+    files = sorted(_data_files(path))
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-noop", "a compact with nothing to rewrite")
+    try:
+        stats = compact(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("compact-noop")) == []
+    assert stats == {"files_before": 3, "files_after": 3, "bytes": 0,
+                     "partition_cols": ["p"]}
+    assert sorted(_data_files(path)) == files
+    assert not os.path.exists(path + "__compacting")
+
+
+@pytest.mark.parametrize("stray", ["r.parquet", "p=2/sub/r.parquet"])
+def test_compact_off_depth_layout_compacts_whole(spark, tmp_path, stray):
+    # a file off the col=value depth (at the root, or in a plain
+    # subdirectory) makes the dataset one group: p=2's lone file is
+    # rewritten along with p=1's two
+    path = tmp_path / "ragged"
+    for i, rel in enumerate(["p=1/x.parquet", "p=1/y.parquet",
+                             "p=2/z.parquet", stray]):
+        (path / rel).parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"id": list(range(i * 10, i * 10 + 5))}),
+                       path / rel)
+    before = spark.read.option("basePath", str(path)).parquet(
+        *_data_files(path)).count()
+    stats = compact(spark, str(path))
+    assert stats["bytes"] > 0 and stats["partition_cols"] == ["p"]
+    assert [os.path.basename(f) for f in _data_files(path / "p=2")] != ["z.parquet"]
+    assert len(_data_files(path / "p=1")) == 1
+    assert spark.read.parquet(str(path)).count() == before
+
+
+def test_compact_partial_replaces_renamed_partition_dir(spark, tmp_path):
+    # a hive directory escaped by another writer (pyarrow writes a space
+    # as %20) reads as 'a b' and comes back as Spark's own p=a b: the
+    # partial commit replaces both names; p=c keeps its lone file
+    import pyarrow.dataset as pads
+
+    path = tmp_path / "foreign"
+    table = pa.table({"id": list(range(12)),
+                      "p": ["a b"] * 8 + ["c"] * 4})
+    pads.write_dataset(
+        table, path, format="parquet", max_rows_per_group=4,
+        max_rows_per_file=4, partitioning=pads.partitioning(
+            pa.schema([("p", pa.string())]), flavor="hive"))
+    assert sorted(os.listdir(path)) == ["p=a%20b", "p=c"]
+    lone = os.listdir(path / "p=c")
+    compact(spark, str(path))
+    assert sorted(os.listdir(path)) == ["p=a b", "p=c"]
+    assert os.listdir(path / "p=c") == lone
+    back = spark.read.parquet(str(path))
+    assert sorted(map(tuple, back.select("id", "p").collect())) == [
+        (i, "a b" if i < 8 else "c") for i in range(12)]
 
 
 def test_zorder_write_rejects_all_null_bounds(spark):
