@@ -70,6 +70,9 @@ class _Rewrite:
     listing (:meth:`read`; the ``Writer`` delta diff too), never by
     reopening the dataset. The caller writes the stage, then
     :meth:`commit` swaps it in and refreshes Spark's cached listings.
+    The replaced files of a TimeFly ``current/`` that pointer manifests
+    reference are parked in its snapshot archive, so every rewrite
+    keeps pointer snapshots readable and restorable.
     """
 
     def __init__(self, spark: SparkSession, path: str, suffix: str,
@@ -115,24 +118,27 @@ class _Rewrite:
                             format, base_path=self.local,
                             infer_schema=infer_schema)
 
-    def commit(self, entries: list[str] | None = None, park: str | None = None,
-               keep_previous: int = 1) -> str:
+    def commit(self, entries: list[str] | None = None) -> str:
         """Swap the written stage in; returns the live directory.
         ``rename`` runs ``PathOps.commit_stage`` (``entries``: the
         target-relative dirs to replace, e.g. an upsert's touched
-        partitions; ``park``: where replaced files go, e.g. the TimeFly
-        archive). ``generation`` is ONE pointer PUT; the listed files let
-        it carry forward any append that landed after the listing
-        (generations.py concurrency contract)."""
+        partitions), parking the replaced files where
+        :func:`~pydala_spark.dataset.timefly.archive_for` says: the
+        snapshot archive of a TimeFly ``current/`` whose pointer
+        manifests may list them, else nowhere. ``generation`` is ONE
+        pointer PUT; the listed files let it carry forward any append
+        that landed after the listing (generations.py concurrency
+        contract)."""
         from pydala_spark.dataset import generations
+        from pydala_spark.dataset.timefly import archive_for
 
         if self.swap == "rename":
-            self.ops.commit_stage(self.local, self.stage, entries=entries, park=park)
+            self.ops.commit_stage(self.local, self.stage, entries=entries,
+                                  park=archive_for(self.ops, self.local))
             final = self.local
         else:
             generations.commit(
                 self.spark, self.base, posixpath.basename(self.stage),
-                keep_previous=keep_previous,
                 source=(generations.ROOT_GEN if self.local == self.base
                         else posixpath.basename(self.local)),
                 input_files=self.rels,
@@ -150,7 +156,6 @@ def compact(
     format: str = "parquet",
     compression: str = "zstd",
     swap: str = "rename",
-    keep_previous: int = 1,
 ) -> dict:
     """Rewrite the small files of a dataset's partitions into
     ~``target_file_mb`` files, preserving any hive partition layout.
@@ -169,7 +174,10 @@ def compact(
     When no partition needs a rewrite, ``compact`` returns ``bytes: 0``
     without staging, committing or running a Spark job. An unpartitioned
     dataset, or a layout with files off the full ``col=value`` depth, is
-    one group, rewritten whole or not at all.
+    one group, rewritten whole or not at all; a file with no
+    ``col=value`` directory on its path (one at the root of a
+    partitioned dataset) is left out of Spark's read, so it stays as it
+    is too.
 
     One ``repartition`` sized from the rewritten byte count writes the
     output. With hive partition columns, hashing on them alone would
@@ -182,8 +190,8 @@ def compact(
     ``swap="rename"`` stages into a sibling and commits it through
     ``PathOps.commit_stage``; ``swap="generation"`` writes the next
     ``gen-NNNNNN/`` and commits one pointer object — the object-store
-    path (``dataset/generations.py``), keeping ``keep_previous``
-    generations for in-flight readers. A generation must hold the whole
+    path (``dataset/generations.py``), keeping the previous generation
+    for in-flight readers. A generation must hold the whole
     dataset, so that swap rewrites every partition on every call. Both
     go through :class:`_Rewrite`.
     """
@@ -231,15 +239,19 @@ def compact(
         shuffled = df.repartition(n_files)
     write_frame(shuffled, rw.stage, format, compression=compression,
                 partition_by=part_cols)
+    # Spark's partition discovery leaves a file with no col=value
+    # directory on its path out of a partitioned read: never replace it
+    unread = {r for r in rw.rels if part_cols and "=" not in posixpath.dirname(r)}
     entries = None
-    if partial:
+    if partial or unread:
         # the directories Spark wrote: a name that differs from its
         # source (a foreign escape such as %20) is replaced too; one
         # naming an untouched partition is refused by the stray check
         staged = {posixpath.dirname(p[len(rw.stage):].lstrip("/"))
                   for p, _ in rw.ops.data_files(rw.stage)}
-        entries = sorted(set(todo) | (staged - set(dirs)))
-    final = rw.commit(entries, keep_previous=keep_previous)
+        entries = sorted(set(todo) | (staged - set(dirs)) if partial else
+                         {r.split("/")[0] for r in staged | set(rw.rels) - unread})
+    final = rw.commit(entries)
     return {
         "files_before": len(rw.files),
         "files_after": len(rw.ops.data_files(final)),
@@ -382,14 +394,14 @@ def recluster(
     bits: int = 10,
     compression: str = "zstd",
     swap: str = "rename",
-    keep_previous: int = 1,
 ) -> dict:
     """In-place z-order rewrite of an existing (unpartitioned parquet)
     dataset: read, cluster on the Morton curve over ``cols``, stage, and
     swap — ``swap="rename"`` (``PathOps.commit_stage``) or
-    ``swap="generation"`` (object-store-safe pointer commit, see
-    :func:`compact`), through :class:`_Rewrite`. The periodic-maintenance
-    form of :func:`zorder_write` — a streaming sink accretes
+    ``swap="generation"`` (object-store-safe pointer commit keeping the
+    previous generation, see :func:`compact`), through
+    :class:`_Rewrite`. The periodic-maintenance form of
+    :func:`zorder_write` — a streaming sink accretes
     arrival-ordered files; reclustering restores multi-column min/max
     pruning without taking the dataset offline longer than the swap.
     """
@@ -398,7 +410,7 @@ def recluster(
         spark, rw.read("parquet"), rw.stage, cols, n_files=n_files, bits=bits,
         compression=compression,
     )
-    rw.commit(keep_previous=keep_previous)
+    rw.commit()
     return stats
 
 

@@ -131,10 +131,10 @@ class Repartition:
                 "in-place Repartition at its current/ subdirectory"
             )
         df = self.read(rw)
-        parent = posixpath.dirname(local)
         if self.with_snapshot:
             from pydala_spark.dataset.timefly import TimeFly
 
+            parent = posixpath.dirname(local)
             if posixpath.basename(local) == "current" and any(
                 ops.exists(posixpath.join(parent, side))
                 for side in ("_dataset.json", "_dataset.toml")
@@ -145,13 +145,7 @@ class Repartition:
                 TimeFly(self.spark, parent, format=self.source_format).add_snapshot()
 
         self._write(df, rw.stage, "overwrite")
-        # pointer manifests referencing this current/ need the old files
-        # parked in the snapshot archive (delete_snapshot's GC reclaims)
-        snap_dir = posixpath.join(parent, "snapshot")
-        has_manifests = posixpath.basename(local) == "current" and any(
-            e.endswith(".manifest.json") for e in ops.list_dir(snap_dir)
-        )
-        rw.commit(park=posixpath.join(snap_dir, "archive") if has_manifests else None)
+        rw.commit()
         if self.distinct:
             # the rewrite REMOVED rows — any surviving signature sidecar
             # is stale (pure repartition/sort preserves content and keeps

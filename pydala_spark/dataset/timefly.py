@@ -44,6 +44,7 @@ from pydala_spark.session import configure_session
 from pydala_spark.utils.pathops import COMMIT_JOURNAL, PathOps, strip_scheme
 
 TS_FMT = "%Y%m%d_%H%M%S"
+MANIFEST_SUFFIX = ".manifest.json"
 DATA_EXTS = (".parquet", ".csv", ".json", ".feather", ".arrow", ".ipc",
              ".orc", ".csv.gz", ".json.gz")
 
@@ -60,6 +61,20 @@ def _to_ts(value: str | dt.datetime) -> dt.datetime:
     raise ValueError(f"unparseable timestamp {value!r}")
 
 
+def archive_for(ops: PathOps, live_dir: str) -> str | None:
+    """Where a rewrite of ``live_dir`` parks the files it replaces:
+    ``<base>/snapshot/archive`` when ``live_dir`` is a TimeFly
+    ``<base>/current`` that pointer manifests reference (they may list
+    those files), else ``None`` (the commit drops them). One listing of
+    ``snapshot/`` for a ``current/``, none otherwise."""
+    base, name = posixpath.split(strip_scheme(live_dir).rstrip("/"))
+    snap = posixpath.join(base, "snapshot")
+    if name == "current" and any(
+            e.endswith(MANIFEST_SUFFIX) for e in ops.list_dir(snap)):
+        return posixpath.join(snap, "archive")
+    return None
+
+
 class TimeFly:
     """Snapshot manager for one dataset rooted at ``base_path``.
 
@@ -70,18 +85,23 @@ class TimeFly:
       write pattern, but storage-amplifies by a full copy per snapshot.
     - ``snapshot_mode="pointer"``: snapshot = a manifest listing the
       data files live at snapshot time (snapshot/<ts>.manifest.json) —
-      O(file count) metadata, zero byte copies. Restoring an older
-      manifest RENAMES the files it doesn't list into a shared
-      ``snapshot/archive/`` area (still zero copies), so every other
-      manifest stays restorable: a manifest's files are resolved against
-      current/ first, then the archive. ``delete_snapshot`` garbage-
-      collects archive files no remaining manifest references. Valid
-      while writes are append-only (the Writer's default append/delta
-      modes): a rewrite that physically deletes listed files breaks the
-      pointer (read/restore raise). This is the 100 TB-shaped backend
-      (SCALE.md names copy-on-snapshot as the storage-amplification
-      bound); both kinds can coexist on one dataset and reads dispatch
-      on what exists on disk.
+      O(file count) metadata, zero byte copies. A manifest's files are
+      resolved against current/ first, then a shared
+      ``snapshot/archive/`` area. Whatever replaces files of a current/
+      that manifests reference parks the replaced files there instead
+      of deleting them (still zero copies; :func:`archive_for`): a
+      restore of an older manifest, and every in-place rewrite of the
+      package — compact, recluster, upsert, overwrite,
+      overwrite_partitions, ``unify_schema``, in-place ``Repartition``
+      (Delta Lake's rule: a removed file stays readable to older
+      versions until vacuumed). A parked file stays in the archive until
+      ``delete_snapshot`` (or :meth:`vacuum`) garbage-collects the files
+      no remaining manifest references. A listed file deleted OUTSIDE
+      the package (a plain Spark overwrite of current/) breaks the
+      pointer: read and restore raise ``FileNotFoundError``. This is the
+      100 TB-shaped backend (SCALE.md names copy-on-snapshot as the
+      storage-amplification bound); both kinds can coexist on one
+      dataset and reads dispatch on what exists on disk.
     """
 
     def __init__(
@@ -142,13 +162,14 @@ class TimeFly:
         return posixpath.join(self.base_path, "snapshot", ts)
 
     def manifest_path(self, ts: str) -> str:
-        return posixpath.join(self.base_path, "snapshot", f"{ts}.manifest.json")
+        return posixpath.join(self.base_path, "snapshot", ts + MANIFEST_SUFFIX)
 
     @property
     def archive_path(self) -> str:
-        """Shared parking area for files trimmed out of current/ by a
-        pointer restore (plain name, not ``_archive`` — Spark's file
-        index hides underscore-prefixed path components)."""
+        """Shared parking area for files replaced in current/ while
+        pointer manifests exist (:func:`archive_for`; plain name, not
+        ``_archive`` — Spark's file index hides underscore-prefixed path
+        components)."""
         return posixpath.join(self.base_path, "snapshot", "archive")
 
     def _read_snapshot_manifest(self, ts: str) -> dict | None:
@@ -393,23 +414,10 @@ class TimeFly:
 
     def load_snapshot(self, ts: str | dt.datetime) -> None:
         """Restore a snapshot into current/ (reference timefly.py:354-387).
-        The replaced current is itself snapshotted first so nothing is lost.
-
-        An exact stamp match wins before any rounding: the reference's
-        default usage is ``match='exact'`` (timefly.py:354), and routing
-        the stamp returned by :meth:`add_snapshot` through the
-        strictly-after ``resolve`` rounding would skip that snapshot (and
-        restore a later one, or silently no-op).
-        """
-        want = ts if isinstance(ts, str) else ts.strftime(TS_FMT)
-        try:
-            want = _to_ts(want).strftime(TS_FMT)
-        except ValueError:
-            pass
-        if want in self.snapshots():
-            ts_str = f"snapshot/{want}"
-        else:
-            ts_str = self.resolve(ts)
+        The replaced current is itself snapshotted first so nothing is
+        lost. The snapshot is the one :meth:`_lookup` names: an exact
+        stamp before any rounding."""
+        ts_str = self._lookup(ts)
         if ts_str == "current":
             return
         ts_key = ts_str.removeprefix("snapshot/")
@@ -421,18 +429,8 @@ class TimeFly:
             # wanted files come in from the archive, unlisted ones are
             # parked there. The replaced current is kept as a manifest
             # first; every manifest stays readable at every step.
+            cur, _, _ = self._locate(ts_key, manifest)
             want = set(manifest["files"])
-            cur = set(self._current_rel_datafiles())
-            missing = [r for r in sorted(want - cur) if not self.ops.exists(
-                posixpath.join(self.archive_path, r))]
-            if missing:
-                raise FileNotFoundError(
-                    f"pointer snapshot {ts_key} references {len(missing)} "
-                    f"file(s) in neither current/ nor the snapshot archive "
-                    f"(first: {missing[0]!r}) — the dataset was rewritten, "
-                    "not appended; pointer snapshots require append-only "
-                    "writes"
-                )
             if cur != want:
                 replaced = self._fresh_stamp(None)
                 self._write_pointer_manifest(replaced, sorted(cur))
@@ -445,15 +443,12 @@ class TimeFly:
         src = self.snapshot_path(ts_key)
         if not self.ops.is_dir(src):
             raise FileNotFoundError(f"snapshot {ts_str} not found")
-        park = None
         if self.ops.is_dir(current) and self.snapshot_mode == "pointer":
-            # keep the replaced current as a manifest whose files the
-            # commit below parks in the archive (deleting them would
-            # leave that manifest, and any older one, dangling)
+            # keep the replaced current as a manifest, whose files the
+            # commit below then parks in the archive
             replaced = self._fresh_stamp(None)
             self._write_pointer_manifest(replaced, self._current_rel_datafiles())
             self._register_snapshot(replaced)
-            park = self.archive_path
         elif self.ops.is_dir(current):
             self.add_snapshot()
         # the copy restore replaces current/ WHOLESALE, sidecars included:
@@ -462,13 +457,56 @@ class TimeFly:
         # above needs explicit invalidation). Staged, then swapped in by
         # one journaled commit: a crash leaves current/ before or after,
         # and an unjournaled leftover stage (a partial copy) is dropped.
+        # Replaced files go where every other rewrite's go: the archive
+        # while pointer manifests exist, which may list them.
         stage = posixpath.join(self.base_path, "_restoring")
         self.ops.delete(stage)
         self.ops.copy_tree(src, stage)
         entries = set(self.ops.list_dir(stage) + self.ops.list_dir(current))
         self.ops.commit_stage(current, stage,
                               entries=sorted(entries - {COMMIT_JOURNAL}),
-                              park=park)
+                              park=archive_for(self.ops, current))
+
+    def _lookup(self, ts: str | dt.datetime | None,
+                rounding: str = "earliest_after") -> str:
+        """The subpath ``ts`` names. An EXACT registered stamp wins
+        before any rounding: the reference's default usage is
+        ``match='exact'`` (timefly.py:354), and routing the stamp
+        :meth:`add_snapshot` returned through the strictly-after
+        :meth:`resolve` rounding would skip that snapshot (and read or
+        restore a later one). An unparseable string matches only as a
+        registered stamp; otherwise :meth:`resolve` raises on it."""
+        if ts is not None:
+            want = ts if isinstance(ts, str) else ts.strftime(TS_FMT)
+            try:
+                want = _to_ts(want).strftime(TS_FMT)
+            except ValueError:
+                pass
+            if want in self.snapshots():
+                return f"snapshot/{want}"
+        return self.resolve(ts, rounding)
+
+    def _locate(self, ts: str,
+                manifest: dict) -> tuple[set[str], list[str], list[str]]:
+        """Resolve pointer manifest ``ts``'s files against TWO bulk
+        listings, current/ then the archive, not one existence RPC per
+        listed file (a 100k-file manifest on an object store would pay
+        minutes of driver metadata latency). Returns current/'s data
+        files and the listed files found in current/ and in the archive
+        (all relative); raises when a listed file is in neither."""
+        cur = set(self._current_rel_datafiles())
+        arc = self.archive_path
+        archived = {p[len(arc):].lstrip("/") for p, _ in self.ops.data_files(arc)}
+        files = manifest["files"]
+        missing = [r for r in files if r not in cur and r not in archived]
+        if missing:
+            raise FileNotFoundError(
+                f"pointer snapshot {ts} references {len(missing)} file(s) in "
+                f"neither current/ nor the snapshot archive (first: "
+                f"{missing[0]!r}): they were deleted outside the package, "
+                "whose rewrites park replaced files; other writers must "
+                "keep pointer-snapshotted data append-only")
+        return cur, [r for r in files if r in cur], [r for r in files if r not in cur]
 
     def _invalidate_signatures(self) -> None:
         """A pointer restore replaces current/'s DATA files in place;
@@ -519,61 +557,25 @@ class TimeFly:
         files live — current/ and/or the restore archive (per-root
         basePath keeps hive partition discovery working), through
         :func:`pydala_spark.sources.read`, which reconciles files whose
-        footer schemas conflict.
-
-        An EXACT stamp match wins before any rounding — same rule as
-        :meth:`load_snapshot`: the stamp :meth:`add_snapshot` returned
-        would otherwise fall through the strictly-after default rounding
-        and silently read the NEXT snapshot (or current)."""
+        footer schemas conflict. The snapshot is the one :meth:`_lookup`
+        names: an exact stamp before any rounding."""
         from pydala_spark.dataset.reader import Dataset
 
-        sub = None
-        if timefly is not None:
-            want = timefly if isinstance(timefly, str) else timefly.strftime(TS_FMT)
-            try:
-                want = _to_ts(want).strftime(TS_FMT)
-            except ValueError:
-                want = None
-            if want is not None and want in self.snapshots():
-                sub = f"snapshot/{want}"
-        if sub is None:
-            sub = self.resolve(timefly, rounding)
+        sub = self._lookup(timefly, rounding)
         if sub != "current":
             key = sub.removeprefix("snapshot/")
             manifest = self._read_snapshot_manifest(key)
             if manifest is not None:
-                # resolve against TWO bulk listings, not one existence
-                # RPC per listed file (a 100k-file manifest on an object
-                # store would pay minutes of driver metadata latency
-                # before the scan even started)
-                cur_set = set(self._current_rel_datafiles())
-                arc = self.archive_path
-                arc_set = {
-                    p[len(arc):].lstrip("/") for p, _ in self.ops.data_files(arc)
-                }
-                in_cur, in_arc, missing = [], [], []
-                for r in manifest["files"]:
-                    if r in cur_set:
-                        in_cur.append(posixpath.join(self.current_path, r))
-                    elif r in arc_set:
-                        in_arc.append(posixpath.join(arc, r))
-                    else:
-                        missing.append(r)
-                if missing or not (in_cur or in_arc):
-                    raise FileNotFoundError(
-                        f"pointer snapshot {key}: {len(missing)} listed "
-                        f"file(s) not found (dataset rewritten, or snapshot "
-                        f"empty); first: {missing[0]!r}" if missing else
-                        f"pointer snapshot {key} lists no files"
-                    )
+                _, in_cur, in_arc = self._locate(key, manifest)
                 parts = [
-                    sources.read(self.spark, files, self.format, base_path=base)
-                    for base, files in (
-                        (self.current_path, in_cur),
-                        (self.archive_path, in_arc),
-                    )
-                    if files
+                    sources.read(self.spark, [posixpath.join(base, r) for r in rels],
+                                 self.format, base_path=base)
+                    for base, rels in ((self.current_path, in_cur),
+                                       (self.archive_path, in_arc))
+                    if rels
                 ]
+                if not parts:
+                    raise FileNotFoundError(f"pointer snapshot {key} lists no files")
                 df = parts[0]
                 for extra in parts[1:]:
                     df = df.unionByName(extra, allowMissingColumns=True)

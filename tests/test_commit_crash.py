@@ -251,15 +251,19 @@ def _state(spark, path, **read):
 
 
 def _crash_recover_retry(spark, arm, path, op, before, after, rename_k,
-                         **read):
+                         check=lambda: None, **read):
+    """Crash ``op`` at its ``rename_k``-th rename, recover, then retry;
+    ``check`` runs after the recovery and after the retry."""
     arm(rename_k, ("rename",))
     with pytest.raises(OSError, match="injected crash"):
         op()
     arm(None)
     PathOps(spark, path).recover(path)
     assert _state(spark, path, **read) in (before, after)
+    check()
     op()
     assert _state(spark, path, **read) == after
+    check()
     leftovers = [e for e in os.listdir(os.path.dirname(path))
                  if e.startswith(os.path.basename(path) + "__")]
     assert leftovers == []
@@ -370,6 +374,39 @@ def test_partial_compact_crash_at_each_rename_converges(spark, tmp_path, arm,
     assert sorted(os.listdir(os.path.join(path, "p=0"))) == untouched
     part = os.listdir(os.path.join(path, "p=1"))
     assert len([f for f in part if not f.startswith(".")]) == 1
+
+
+def test_partial_compact_of_pointer_current_crash_converges(spark, tmp_path,
+                                                            arm):
+    # a partial compact of a TimeFly current/ that a pointer manifest
+    # lists parks the old p=1 in the snapshot archive: a crash at each
+    # of its renames (park, then move in) recovers to a state the
+    # manifest still reads, and the retry finds nothing left to rewrite
+    rows = spark.range(40).withColumn("p", (F.col("id") >= 10).cast("int"))
+
+    def pointer_current(name):
+        tf = TimeFly(spark, str(tmp_path / name), snapshot_mode="pointer")
+        tf.new()
+        rows.where("p = 0").coalesce(1).write.partitionBy("p").parquet(
+            tf.current_path)
+        rows.where("p = 1").repartition(4).write.mode("append") \
+            .partitionBy("p").parquet(tf.current_path)
+        return tf, tf.add_snapshot()
+
+    tf, _ = pointer_current("clean")
+    steps = arm(0, ("rename",))
+    compact(spark, tf.current_path)
+    n_renames = steps["n"]
+    arm(None)
+    assert n_renames == 2
+    for k in range(1, n_renames + 1):
+        tf, snap = pointer_current(f"k{k}")
+        state = _state(spark, tf.current_path)
+        _crash_recover_retry(
+            spark, arm, tf.current_path, lambda: compact(spark, tf.current_path),
+            state, state, rename_k=k, check=lambda: _assert_manifests_readable(tf))
+        assert sorted(map(tuple, tf.read(snap).select("id", "p").collect())) \
+            == state[0]
 
 
 def test_recluster_crash_mid_swap_converges(spark, tmp_path, arm):

@@ -774,6 +774,85 @@ def test_repartition_in_place_preserves_pointer_snapshots(spark, tmp_path):
     assert sorted(r["id"] for r in tf.read(snap).collect()) == [1, 2, 3]
 
 
+REWRITES = ["compact", "recluster", "upsert", "overwrite",
+            "overwrite_partitions", "unify_schema", "repartition"]
+
+
+@pytest.mark.parametrize("rewrite", REWRITES)
+def test_pointer_snapshot_survives_every_rewrite(spark, tmp_path, rewrite):
+    # every in-place rewrite of a pointer-snapshotted current/ parks the
+    # files it replaces in the snapshot archive: the snapshot reads back
+    # and restores to exactly its rows, and once every snapshot is
+    # deleted the archive holds no data file
+    import json
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pydala_spark.dataset.maintain import compact, recluster
+
+    tf = TimeFly(spark, str(tmp_path / "ptr_rewrite"), snapshot_mode="pointer")
+    tf.new()
+    cur, schema = tf.current_path, "id long, p long, v string"
+    expected = [(i, i % 2, "old") for i in range(8)]
+    for lo in (0, 4):  # two small files in each of two partitions
+        Writer(spark, cur, partition_by=["p"]).write(
+            spark.createDataFrame(expected[lo:lo + 4], schema))
+    if rewrite == "unify_schema":  # an int32 id next to the int64 ones
+        pq.write_table(pa.table({"id": pa.array([8], pa.int32()), "v": ["old"]}),
+                       os.path.join(cur, "p=0", "drift.parquet"))
+        expected.append((8, 0, "old"))
+    expected.sort()
+    snap = tf.add_snapshot(TS(2024, 1, 1, 12, 0, 0))
+    batch = spark.createDataFrame([(1, 1, "new"), (9, 1, "new")], schema)
+    {
+        "compact": lambda: compact(spark, cur),
+        "recluster": lambda: recluster(spark, cur, ["id"], n_files=1),
+        "upsert": lambda: Writer(spark, cur).write(
+            batch, mode="upsert", delta_subset=["id"]),
+        "overwrite": lambda: Writer(spark, cur).write(batch, mode="overwrite"),
+        "overwrite_partitions": lambda: Writer(spark, cur, partition_by=["p"])
+        .write(batch, mode="overwrite_partitions"),
+        "unify_schema": lambda: Writer(spark, cur).unify_schema(),
+        "repartition": lambda: Repartition(
+            spark, cur, sort_by="id DESC", with_snapshot=False).run(),
+    }[rewrite]()
+    with open(tf.manifest_path(snap)) as fh:
+        listed = set(json.load(fh)["files"])
+    live = {str(f.relative_to(cur)) for f in Path(cur).rglob("*.parquet")}
+    assert listed - live  # the rewrite replaced listed files
+
+    def rows(df):
+        return sorted(map(tuple, df.select("id", "p", "v").collect()))
+
+    assert rows(tf.read(snap)) == expected
+    tf.load_snapshot(snap)
+    assert rows(tf.read()) == expected
+    for stamp in tf.snapshots():
+        tf.delete_snapshot(stamp)
+    assert list(Path(tf.archive_path).rglob("*.parquet")) == []
+
+
+def test_copy_restore_keeps_pointer_manifests(spark, tmp_path):
+    # a copy-mode restore replaces current/ wholesale; while a pointer
+    # manifest exists, the replaced files it lists go to the archive
+    base = str(tmp_path / "mixed_restore")
+    _write(spark, base, [1, 2, 3])
+    tf = TimeFly(spark, base)
+    tf.new()
+    tf.create_current()
+    copy = tf.add_snapshot(TS(2024, 1, 1, 12, 0, 0))
+    Writer(spark, tf.current_path).write(spark.createDataFrame([Row(id=4)], "id long"))
+    pointer = TimeFly(spark, base, snapshot_mode="pointer")
+    ptr = pointer.add_snapshot(TS(2024, 2, 1, 12, 0, 0))
+    tf.load_snapshot(copy)
+    assert sorted(r.id for r in tf.read().collect()) == [1, 2, 3]
+    assert sorted(r.id for r in tf.read(ptr).collect()) == [1, 2, 3, 4]
+    pointer.load_snapshot(ptr)
+    assert sorted(r.id for r in tf.read().collect()) == [1, 2, 3, 4]
+
+
 def test_repartition_in_place_keeps_sidecars(spark, tmp_path):
     # r4 review: underscore sidecars (e.g. the generation provenance
     # _inputs.json) survive an in-place rewrite
