@@ -8,7 +8,10 @@ discovery is a ``**/_dataset.toml`` glob (manager.py:93-96, 128-131), and
 ``remove_dataset`` drops one (manager.py:183-191). We use JSON sidecars
 (``_dataset.json`` / ``_pydala.json``) and register every dataset as a
 temp view — fixing the reference's broken multi-dataset reader
-(datalake/reader.py:65-80 references undefined variables).
+(datalake/reader.py:65-80 references undefined variables). Every method
+passes a dataset's base path on: a TimeFly base opens at its
+``current/`` in the reader or rewrite it reaches
+(:func:`pydala_spark.dataset.timefly.open_dirs`).
 
 The lake-global sweep methods (decontaminate / semantic_dedup /
 span_dedup_report / signatures_report / prep_sweep / neardup_dedup /
@@ -34,19 +37,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pydala_spark.catalog_sweeps import LakeSweepsMixin
 from pydala_spark.dataset.reader import Dataset
+from pydala_spark.dataset.timefly import CONFIG_NAMES
 from pydala_spark.session import configure_session
 from pydala_spark.utils.errors import ConfigError
 from pydala_spark.utils.pathops import PathOps, strip_scheme
 
 MANIFEST_NAME = "_pydala.json"
-DATASET_SIDECAR = "_dataset.json"
 #: reference-layout sidecars (TOML) are discovered read-only so pointing
 #: this catalog at an existing reference lake finds its datasets
 #: (manager.py:48, 93-96); writes default to JSON, and
 #: ``Datalake(sidecar_format="toml")`` mirrors every manifest write into
 #: ``_pydala.toml`` for reference tooling.
 TOML_MANIFEST_NAME = "_pydala.toml"
-TOML_DATASET_SIDECAR = "_dataset.toml"
 
 
 #: per-name manifest ledger directory: each add/remove is ONE
@@ -157,9 +159,8 @@ class Datalake(LakeSweepsMixin):
         remote-capable analog of the reference's ``**/_dataset.toml``
         fsspec glob (manager.py:93-96)."""
         found: dict[str, str] = {}
-        sidecar_names = (DATASET_SIDECAR, TOML_DATASET_SIDECAR)
         for path, _size in self._po.list_files(self.root, recursive=True):
-            if posixpath.basename(path) not in sidecar_names:
+            if posixpath.basename(path) not in CONFIG_NAMES:
                 continue
             base = posixpath.dirname(path)
             rel = self._rel(base)
@@ -178,12 +179,7 @@ class Datalake(LakeSweepsMixin):
     ) -> Dataset:
         """Track + register a dataset (manager.py:137-181)."""
         base = path or posixpath.join(self.root, name.replace(".", "/"))
-        # a PathOps bound to BASE, not the lake root: an outside-root
-        # dataset may live on a different FileSystem (s3a path in a
-        # local-rooted lake) and the root-bound fs throws 'Wrong FS'
-        po = PathOps(self.spark, base)
-        ds = Dataset(self.spark, self._data_path(base, po), format=format,
-                     name=name, **kwargs)
+        ds = Dataset(self.spark, base, format=format, name=name, **kwargs)
         self.datasets[name] = ds
         # ledgered commit, not blob read-modify-write: two concurrent
         # add_dataset calls can no longer lose each other's entry
@@ -226,7 +222,7 @@ class Datalake(LakeSweepsMixin):
             if clean:
                 po.delete(base, recursive=True)
             else:
-                for sidecar in (DATASET_SIDECAR, TOML_DATASET_SIDECAR):
+                for sidecar in CONFIG_NAMES:
                     src = posixpath.join(base, sidecar)
                     if po.exists(src):
                         dst = src + ".removed"
@@ -234,19 +230,10 @@ class Datalake(LakeSweepsMixin):
                         po.rename(src, dst)
         return known
 
-    def _data_path(self, base: str, po: PathOps | None = None) -> str:
-        """A dataset's live data: the TimeFly ``current/`` tree of a
-        snapshot-managed dataset (reading the base would mix snapshots
-        into the scan), else the base itself. ``po`` probes instead of
-        the lake-root PathOps (a dataset outside the root may live on
-        another FileSystem)."""
-        current = posixpath.join(base, "current")
-        return current if (po or self._po).is_dir(current) else base
-
     def _dataset_format(self, base: str) -> str:
         """Format recorded in the dataset's sidecar (JSON or reference
         TOML), defaulting to parquet."""
-        for sidecar in (DATASET_SIDECAR, TOML_DATASET_SIDECAR):
+        for sidecar in CONFIG_NAMES:
             p = posixpath.join(base, sidecar)
             if not self._po.exists(p):
                 continue
@@ -269,7 +256,7 @@ class Datalake(LakeSweepsMixin):
         abort loading the rest of the lake), and each reads with the
         format its sidecar records."""
         for name, base in self.discover().items():
-            ds = Dataset(self.spark, self._data_path(base), name=name,
+            ds = Dataset(self.spark, base, name=name,
                          format=self._dataset_format(base))
             self.datasets[name] = ds
             if register_views and ds._dataset_has_files():
@@ -310,14 +297,13 @@ class Datalake(LakeSweepsMixin):
             t.name.lower() for t in self.spark.catalog.listTables() if t.isTemporary
         }
         for name, base in self.discover().items():
-            data_path = self._data_path(base)
             fmt = self._dataset_format(base)
             if fmt != "parquet":
                 results[name] = {"skipped": f"format {fmt}"}
                 continue
             try:
                 results[name] = compact(
-                    self.spark, data_path, target_file_mb=target_file_mb, swap=swap
+                    self.spark, base, target_file_mb=target_file_mb, swap=swap
                 )
             except FileNotFoundError:
                 results[name] = {"skipped": "no data files"}
@@ -333,8 +319,7 @@ class Datalake(LakeSweepsMixin):
             view = name.replace(".", "_")
             if swap == "generation" and view.lower() in temp_views:
                 try:
-                    Dataset(self.spark, data_path,
-                            format=fmt, name=name).to_view(view)
+                    Dataset(self.spark, base, format=fmt, name=name).to_view(view)
                 except Exception as exc:
                     results[name]["rebind_error"] = str(exc)[:200]
         return results

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pydala_spark.dataset.reader import Dataset
+from pydala_spark.dataset.timefly import dataset_dir
 from pydala_spark.sweeps import (
     LAKE_SEP,
     SkipSweep,
@@ -60,16 +61,17 @@ from pydala_spark.utils.pathops import strip_scheme
 class LakeSweepsMixin:
     """Sweep methods mixed into :class:`~pydala_spark.catalog.Datalake`
     (which provides ``self.spark``, ``self._po``, ``self.root``,
-    ``self.discover``, ``self._data_path``, ``self._dataset_format``)."""
+    ``self.discover``, ``self._dataset_format``)."""
 
     def _swept_frame(self, name: str, base: str, cols) -> tuple:
-        """Resolve + load one dataset for a sweep: prefer the TimeFly
-        ``current/`` tree, require data files and every column in
-        ``cols``, and return ``(df, data_path)``. Raises
+        """Resolve + load one dataset for a sweep: its live directory
+        (a TimeFly base's ``current/``, where its signature sidecars
+        live), requiring data files and every column in ``cols``, and
+        return ``(df, data_path)``. Raises
         :class:`~pydala_spark.sweeps.SkipSweep` with the summary reason
         otherwise; any other failure becomes the dataset's error
         entry."""
-        data_path = self._data_path(base)
+        data_path = dataset_dir(self._po, base)
         ds = Dataset(
             self.spark, data_path, name=name,
             format=self._dataset_format(base),
@@ -922,7 +924,7 @@ class LakeSweepsMixin:
         kinds = ("winnowing", "minhash", "spans", "embedding_cells")
 
         def _report_one(name: str, base: str) -> tuple:
-            data_path = self._data_path(base)
+            data_path = dataset_dir(self._po, base)
             sp = sig_path(signatures_root, name)
             sig_base = posixpath.join(sp or data_path, SIGNATURES_DIR)
             entry: dict = {"sidecars": {}}
@@ -1796,7 +1798,7 @@ class LakeSweepsMixin:
             def _resolve(ref: str) -> DataFrame:
                 if ref in bases:
                     return Dataset(
-                        self.spark, self._data_path(bases[ref]), name=ref,
+                        self.spark, bases[ref], name=ref,
                         format=self._dataset_format(bases[ref]),
                     ).load()
                 return self.spark.read.parquet(strip_scheme(ref))

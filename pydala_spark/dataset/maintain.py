@@ -70,21 +70,25 @@ class _Rewrite:
     listing (:meth:`read`; the ``Writer`` delta diff too), never by
     reopening the dataset. The caller writes the stage, then
     :meth:`commit` swaps it in and refreshes Spark's cached listings.
-    The replaced files of a TimeFly ``current/`` that pointer manifests
-    reference are parked in its snapshot archive, so every rewrite
-    keeps pointer snapshots readable and restorable.
+    A TimeFly base opens at its ``current/``
+    (:func:`~pydala_spark.dataset.timefly.open_dirs`), so every rewrite
+    of a base rewrites ``current/`` (a generation swap puts its
+    ``gen-*`` directories and pointer there) and leaves ``snapshot/``
+    alone. The replaced files of a TimeFly ``current/`` that pointer
+    manifests reference are parked in its snapshot archive, so every
+    rewrite keeps pointer snapshots readable and restorable.
     """
 
     def __init__(self, spark: SparkSession, path: str, suffix: str,
                  swap: str = "rename"):
         from pydala_spark.dataset import generations
+        from pydala_spark.dataset.timefly import open_dirs
         from pydala_spark.utils.pathops import PathOps, strip_scheme
 
         if swap not in ("rename", "generation"):
             raise ValueError("swap must be 'rename' or 'generation'")
         self.spark, self.swap = configure_session(spark), swap
-        self.base = strip_scheme(path).rstrip("/")
-        self.local = strip_scheme(generations.resolve(spark, self.base)).rstrip("/")
+        self.base, self.local = open_dirs(spark, strip_scheme(path).rstrip("/"))
         self.ops = PathOps(spark, self.local)
         self.ops.recover(self.local)
         self.files = self.ops.data_files(self.local)
@@ -118,6 +122,16 @@ class _Rewrite:
                             format, base_path=self.local,
                             infer_schema=infer_schema)
 
+    def unread(self) -> set[str]:
+        """The listed files a read of the listing leaves out: with hive
+        partition columns, Spark's partition discovery skips every file
+        with no ``col=value`` directory on its path (one at the root)."""
+        from pydala_spark.schema import infer_partitioning
+
+        if not infer_partitioning(self.rels):
+            return set()
+        return {r for r in self.rels if "=" not in posixpath.dirname(r)}
+
     def commit(self, entries: list[str] | None = None) -> str:
         """Swap the written stage in; returns the live directory.
         ``rename`` runs ``PathOps.commit_stage`` (``entries``: the
@@ -126,9 +140,10 @@ class _Rewrite:
         :func:`~pydala_spark.dataset.timefly.archive_for` says: the
         snapshot archive of a TimeFly ``current/`` whose pointer
         manifests may list them, else nowhere. ``generation`` is ONE
-        pointer PUT; the listed files let it carry forward any append
-        that landed after the listing (generations.py concurrency
-        contract)."""
+        pointer PUT; naming only the files the read saw lets it carry
+        forward any append that landed after the listing
+        (generations.py concurrency contract) and every file the read
+        left out (:meth:`unread`)."""
         from pydala_spark.dataset import generations
         from pydala_spark.dataset.timefly import archive_for
 
@@ -141,7 +156,7 @@ class _Rewrite:
                 self.spark, self.base, posixpath.basename(self.stage),
                 source=(generations.ROOT_GEN if self.local == self.base
                         else posixpath.basename(self.local)),
-                input_files=self.rels,
+                input_files=sorted(set(self.rels) - self.unread()),
             )
             final = self.stage
         self.spark.catalog.refreshByPath(self.base)
@@ -241,7 +256,7 @@ def compact(
                 partition_by=part_cols)
     # Spark's partition discovery leaves a file with no col=value
     # directory on its path out of a partitioned read: never replace it
-    unread = {r for r in rw.rels if part_cols and "=" not in posixpath.dirname(r)}
+    unread = rw.unread()
     entries = None
     if partial or unread:
         # the directories Spark wrote: a name that differs from its
@@ -439,12 +454,11 @@ def normalize_filenames(
     import posixpath as _pp
     import re as _re
 
-    from pydala_spark.dataset import generations
+    from pydala_spark.dataset.timefly import open_dirs
     from pydala_spark.utils.pathops import PathOps, strip_scheme
 
     configure_session(spark)
-    base = strip_scheme(path).rstrip("/")
-    local = strip_scheme(generations.resolve(spark, base)).rstrip("/")
+    base, local = open_dirs(spark, strip_scheme(path).rstrip("/"))
     po = PathOps(spark, local)
     ts = timestamp or _dt.datetime.now(_dt.timezone.utc).strftime(
         "%Y%m%d_%H%M%S%f"
@@ -482,6 +496,19 @@ def normalize_filenames(
 #: hashing parameters — the same "sidecar stores the encoding so search
 #: can't mismatch it" rule the PQ codebooks follow (operators/ann.py).
 SIGNATURES_DIR = "_signatures"
+
+
+def drop_signatures(ops, live_dir: str) -> None:
+    """Delete the signature sidecars of ``live_dir`` (``ops``: the
+    caller's open :class:`~pydala_spark.utils.pathops.PathOps`). Every
+    write that changes the rows without re-signing them calls this: an
+    unsigned Writer write, a ``distinct`` in-place ``Repartition`` and a
+    TimeFly pointer restore. Stale sidecars would hand verify-less
+    consumers fingerprints of text that is gone; without them the next
+    sweep re-materializes."""
+    sig = posixpath.join(live_dir, SIGNATURES_DIR)
+    if ops.is_dir(sig):
+        ops.delete(sig)
 
 
 def materialize_signatures(

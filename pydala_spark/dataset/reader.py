@@ -77,12 +77,13 @@ class Dataset:
         csv_options: dict | None = None,
     ):
         self.spark = configure_session(spark)
-        # generation-pointer datasets (object-store-safe maintenance,
-        # dataset/generations.py) resolve to their active generation —
-        # one driver-side existence probe, transparent to everything else
-        from pydala_spark.dataset import generations
+        # a TimeFly base opens at its current/, and a generation-pointer
+        # dataset (object-store-safe maintenance, dataset/generations.py)
+        # at its active generation — driver-side existence probes,
+        # transparent to everything else
+        from pydala_spark.dataset.timefly import open_dirs
 
-        self.path = generations.resolve(self.spark, path)
+        self.path = open_dirs(self.spark, path)[1]
         self.format = format.lower()
         if isinstance(schema, dict):
             schema = schema_mod.schema_from_dict(schema)

@@ -108,47 +108,28 @@ class Repartition:
         (Spark cannot overwrite its own input) swapped in by the rewrite
         step (``maintain._Rewrite``), optionally preceded by a TimeFly
         snapshot — mirroring the reference's guarded in-place overwrite
-        + auto pre-snapshot (repartition.py:148-194)."""
-        import posixpath
-
+        + auto pre-snapshot (repartition.py:148-194). A TimeFly base, or
+        its ``current/``, is rewritten in ``current/``, and the snapshot
+        is taken at the base; ``snapshot/`` is left alone."""
         if not self.in_place:
             self._write(self.read(), self.dest_path, self.mode)
             return
-        from pydala_spark.dataset.maintain import SIGNATURES_DIR, _Rewrite
+        from pydala_spark.dataset.maintain import _Rewrite, drop_signatures
+        from pydala_spark.dataset.timefly import TimeFly, timefly_base
 
         # a generation-pointer dataset rewrites INSIDE its active
         # generation (the listing the read below uses), keeping the
         # pointer layout intact instead of flattening it
         rw = _Rewrite(self.spark, self.source_path, "__repartition_tmp")
-        local, ops = rw.local, rw.ops
-        if ops.is_dir(posixpath.join(local, "current")):
-            # rewriting a TimeFly ROOT in place would delete current/ and
-            # strand the snapshot layout — regardless of with_snapshot.
-            # Checked BEFORE the read (the read of a root fails with its
-            # own confusing schema error)
-            raise ValueError(
-                f"{self.source_path} is a TimeFly dataset root; point the "
-                "in-place Repartition at its current/ subdirectory"
-            )
         df = self.read(rw)
         if self.with_snapshot:
-            from pydala_spark.dataset.timefly import TimeFly
-
-            parent = posixpath.dirname(local)
-            if posixpath.basename(local) == "current" and any(
-                ops.exists(posixpath.join(parent, side))
-                for side in ("_dataset.json", "_dataset.toml")
-            ):
-                # the TimeFly lives at the PARENT of current/ — snapshot
-                # there (TimeFly(local) would probe local/current, which
-                # never exists, silently skipping the advertised snapshot)
-                TimeFly(self.spark, parent, format=self.source_format).add_snapshot()
+            base = timefly_base(rw.ops, rw.base)
+            if base is not None:
+                TimeFly(self.spark, base, format=self.source_format).add_snapshot()
 
         self._write(df, rw.stage, "overwrite")
         rw.commit()
         if self.distinct:
-            # the rewrite REMOVED rows — any surviving signature sidecar
-            # is stale (pure repartition/sort preserves content and keeps
-            # its sidecars valid; distinct is the one content-changing
-            # knob on this path). Same unsigned-write rule as Writer (r8).
-            ops.delete(posixpath.join(local, SIGNATURES_DIR))
+            # the one content-changing knob on this path: pure
+            # repartition/sort keeps its signature sidecars valid
+            drop_signatures(rw.ops, rw.local)

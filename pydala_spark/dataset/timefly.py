@@ -44,6 +44,12 @@ from pydala_spark.session import configure_session
 from pydala_spark.utils.pathops import COMMIT_JOURNAL, PathOps, strip_scheme
 
 TS_FMT = "%Y%m%d_%H%M%S"
+#: a TimeFly base's config (the reference's TOML is read, and written
+#: only with ``sidecar_format="toml"``); ``Datalake`` discovers datasets
+#: by these names too
+DATASET_CONFIG = "_dataset.json"
+TOML_DATASET_CONFIG = "_dataset.toml"
+CONFIG_NAMES = (DATASET_CONFIG, TOML_DATASET_CONFIG)
 MANIFEST_SUFFIX = ".manifest.json"
 DATA_EXTS = (".parquet", ".csv", ".json", ".feather", ".arrow", ".ipc",
              ".orc", ".csv.gz", ".json.gz")
@@ -61,16 +67,54 @@ def _to_ts(value: str | dt.datetime) -> dt.datetime:
     raise ValueError(f"unparseable timestamp {value!r}")
 
 
+def _has_config(ops: PathOps, base: str) -> bool:
+    return any(ops.exists(posixpath.join(base, name)) for name in CONFIG_NAMES)
+
+
+def dataset_dir(ops: PathOps, path: str) -> str:
+    """The directory that holds the live files of the dataset at
+    ``path``: ``<path>/current`` when ``path`` is a TimeFly base (it
+    holds a ``current/`` directory and a TimeFly config), else ``path``
+    unchanged. Requiring the config keeps a directory-flavor partition
+    named ``current`` from passing for the layout; before
+    :meth:`TimeFly.create_current` no ``current/`` exists, so root writes
+    still land at the root for it to migrate. One ``is_dir`` probe, plus
+    the config probe only when ``current/`` exists."""
+    base = strip_scheme(path).rstrip("/")
+    current = posixpath.join(base, "current")
+    return current if ops.is_dir(current) and _has_config(ops, base) else path
+
+
+def open_dirs(spark: SparkSession, path: str) -> tuple[str, str]:
+    """``(dataset directory, live directory)`` of ``path``, the one way
+    every reader, writer and rewrite opens a dataset: a TimeFly base
+    opens at its ``current/`` (:func:`dataset_dir`), then a generation
+    pointer there names its active generation
+    (:func:`~pydala_spark.dataset.generations.resolve`)."""
+    from pydala_spark.dataset import generations
+
+    ds_dir = dataset_dir(PathOps(spark, path), path)
+    return ds_dir, generations.resolve(spark, ds_dir)
+
+
+def timefly_base(ops: PathOps, live_dir: str) -> str | None:
+    """The TimeFly base whose ``current/`` is ``live_dir``, else
+    ``None``. Probes the config only for a directory named ``current``."""
+    base, name = posixpath.split(strip_scheme(live_dir).rstrip("/"))
+    return base if name == "current" and _has_config(ops, base) else None
+
+
 def archive_for(ops: PathOps, live_dir: str) -> str | None:
     """Where a rewrite of ``live_dir`` parks the files it replaces:
     ``<base>/snapshot/archive`` when ``live_dir`` is a TimeFly
     ``<base>/current`` that pointer manifests reference (they may list
     those files), else ``None`` (the commit drops them). One listing of
-    ``snapshot/`` for a ``current/``, none otherwise."""
-    base, name = posixpath.split(strip_scheme(live_dir).rstrip("/"))
+    ``snapshot/`` for a TimeFly ``current/``, none otherwise."""
+    base = timefly_base(ops, live_dir)
+    if base is None:
+        return None
     snap = posixpath.join(base, "snapshot")
-    if name == "current" and any(
-            e.endswith(MANIFEST_SUFFIX) for e in ops.list_dir(snap)):
+    if any(e.endswith(MANIFEST_SUFFIX) for e in ops.list_dir(snap)):
         return posixpath.join(snap, "archive")
     return None
 
@@ -102,6 +146,12 @@ class TimeFly:
       100 TB-shaped backend (SCALE.md names copy-on-snapshot as the
       storage-amplification bound); both kinds can coexist on one
       dataset and reads dispatch on what exists on disk.
+
+    Once ``current/`` exists, the base path can be passed to every
+    reader, writer and rewrite of the package (``Dataset``, ``Writer``,
+    ``compact``, ``recluster``, ``Repartition``, ``normalize_filenames``,
+    ``Datalake``): each opens it at ``current/`` (:func:`open_dirs`), so
+    none of them touches ``snapshot/``.
     """
 
     def __init__(
@@ -124,7 +174,7 @@ class TimeFly:
         #: write, so reference tooling can keep reading a migrated lake's
         #: own sidecars (reference timefly.py:50); JSON stays canonical.
         self.sidecar_format = sidecar_format
-        self.config_path = posixpath.join(self.base_path, "_dataset.json")
+        self.config_path = posixpath.join(self.base_path, DATASET_CONFIG)
         self.ops = PathOps(self.spark, self.base_path)
 
     # -- manifest --------------------------------------------------------------
@@ -135,7 +185,7 @@ class TimeFly:
         # read-only migration compat: a dataset written by the reference
         # carries a TOML sidecar (_dataset.toml, reference timefly.py:50);
         # writes stay JSON (_dataset.json)
-        toml_path = posixpath.join(self.base_path, "_dataset.toml")
+        toml_path = posixpath.join(self.base_path, TOML_DATASET_CONFIG)
         if self.ops.exists(toml_path):
             import tomllib
 
@@ -148,7 +198,7 @@ class TimeFly:
             from pydala_spark.utils import tomlout
 
             self.ops.write_text(
-                posixpath.join(self.base_path, "_dataset.toml"),
+                posixpath.join(self.base_path, TOML_DATASET_CONFIG),
                 tomlout.dumps(config),
             )
 
@@ -420,6 +470,8 @@ class TimeFly:
         ts_str = self._lookup(ts)
         if ts_str == "current":
             return
+        from pydala_spark.dataset.maintain import drop_signatures
+
         ts_key = ts_str.removeprefix("snapshot/")
         current = self.current_path
         self.ops.recover(current)
@@ -435,7 +487,9 @@ class TimeFly:
                 replaced = self._fresh_stamp(None)
                 self._write_pointer_manifest(replaced, sorted(cur))
                 self._register_snapshot(replaced)
-                self._invalidate_signatures()  # first, so a crash cannot skip it
+                # current/'s data files change in place: its signature
+                # sidecars go first, so a crash cannot skip that
+                drop_signatures(self.ops, current)
                 self.ops.commit_stage(current, self.archive_path,
                                       entries=sorted(want ^ cur),
                                       park=self.archive_path)
@@ -507,18 +561,6 @@ class TimeFly:
                 "whose rewrites park replaced files; other writers must "
                 "keep pointer-snapshotted data append-only")
         return cur, [r for r in files if r in cur], [r for r in files if r not in cur]
-
-    def _invalidate_signatures(self) -> None:
-        """A pointer restore replaces current/'s DATA files in place;
-        signature sidecars under it were hashed from the pre-restore
-        corpus and would silently serve stale fingerprints to
-        verify-less consumers — delete them so the next sweep
-        re-materializes (the Writer's unsigned-write rule, round 8)."""
-        from pydala_spark.dataset.maintain import SIGNATURES_DIR
-
-        sig = posixpath.join(self.current_path, SIGNATURES_DIR)
-        if self.ops.is_dir(sig):
-            self.ops.delete(sig)
 
     def resolve(
         self, timefly: str | dt.datetime | None, rounding: str = "earliest_after"

@@ -248,15 +248,16 @@ class Writer:
         if partition_flavor not in ("hive", "directory"):
             raise ValueError("partition_flavor must be 'hive' or 'directory'")
         self.spark = configure_session(spark)
-        # appends/overwrites on a generation-pointer dataset land inside
-        # the ACTIVE generation (dataset/generations.py) and are carried
-        # forward by the next maintenance pass; re-resolved at every
-        # write() so a long-lived Writer (streaming foreachBatch) follows
-        # generation advances made by ride-along compaction
-        from pydala_spark.dataset import generations
+        # writes to a TimeFly base land in its current/, and on a
+        # generation-pointer dataset inside the ACTIVE generation
+        # (dataset/generations.py), carried forward by the next
+        # maintenance pass; re-resolved at every write() so a long-lived
+        # Writer (streaming foreachBatch) follows generation advances
+        # made by ride-along compaction
+        from pydala_spark.dataset.timefly import open_dirs
 
         self._orig_path = path
-        self.path = generations.resolve(self.spark, path)
+        self.path = open_dirs(self.spark, path)[1]
         self.format = format.lower()
         self.mode = mode
         self.partition_by = (
@@ -473,36 +474,19 @@ class Writer:
                     **self.signature_kwargs,
                 )
             else:
-                # round 8 (r7 review): a write WITHOUT the ride-along
-                # mutates the corpus out from under any existing
-                # signature sidecars — delete them so the next consumer
-                # re-materializes (loud missing-sidecar path) instead of
-                # serving stale hashes to a reader that skipped
-                # verify_against. Ride-along writers above keep theirs
-                # fresh (markers fold); this only fires on the mismatch.
-                self._invalidate_signatures()
+                # a write WITHOUT the ride-along mutates the corpus out
+                # from under any existing signature sidecars: the next
+                # consumer re-materializes (loud missing-sidecar path)
+                # instead of serving stale hashes to a reader that
+                # skipped verify_against. Ride-along writers above keep
+                # theirs fresh (markers fold).
+                from pydala_spark.dataset.maintain import drop_signatures
+
+                drop_signatures(rw.ops, self.path)
         finally:
             if checkpointed:
                 df.unpersist()
         self._apply_filename_scheme()
-
-    def _invalidate_signatures(self) -> None:
-        """Delete any ``_signatures`` sidecars under the dataset base: a
-        write that did not carry the signature ride-along just mutated
-        the text the sidecars were hashed from, so keeping them would
-        hand every verify-less consumer silently-stale fingerprints —
-        the exact failure the content marker exists to catch, closed at
-        the source instead (r7 review item 4). The next sweep
-        re-materializes (Datalake.decontaminate does so automatically)."""
-        import posixpath
-
-        from pydala_spark.dataset.maintain import SIGNATURES_DIR
-        from pydala_spark.utils.pathops import PathOps
-
-        sig_dir = posixpath.join(self.path, SIGNATURES_DIR)
-        po = PathOps(self.spark, sig_dir)
-        if po.is_dir(sig_dir):
-            po.delete(sig_dir, recursive=True)
 
     def _write_staged(self, df: DataFrame, mode: str, rw,
                       datetime_column: str | None,

@@ -1249,9 +1249,8 @@ def remove_from_ivfpq_index(
     ``recover``. Codebook sidecars are untouched: deletion never
     changes the encoding."""
     from pydala_spark.dataset.reader import Dataset
+    from pydala_spark.dataset.timefly import open_dirs
     from pydala_spark.utils.pathops import PathOps, strip_scheme
-
-    from pydala_spark.dataset import generations
 
     if isinstance(ids, DataFrame):
         rid = ids.select(
@@ -1266,7 +1265,7 @@ def remove_from_ivfpq_index(
     # the active gen-NNNNNN/ dir, so the commit must target THAT dir
     # too, not the bare base (a write at the base would be invisible
     # to resolving readers and the deletion would silently do nothing)
-    live = generations.resolve(spark, strip_scheme(path))
+    live = open_dirs(spark, strip_scheme(path))[1]
     PathOps(spark, live).recover(live)
     idx = Dataset(spark, live).load()
     idc = id_col if id_col in idx.columns else "id"

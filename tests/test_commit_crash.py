@@ -409,6 +409,50 @@ def test_partial_compact_of_pointer_current_crash_converges(spark, tmp_path,
             == state[0]
 
 
+@pytest.mark.parametrize("op", ["compact", "overwrite"])
+def test_timefly_base_rewrite_crash_at_each_rename_converges(spark, tmp_path,
+                                                             arm, op):
+    # a rewrite given a TimeFly base commits into current/: a crash at
+    # each of its renames recovers current/ to before or after, the copy
+    # snapshot stays byte-identical, and the retry converges
+    rows = spark.range(40).withColumn("p", (F.col("id") >= 10).cast("int"))
+    batch = spark.createDataFrame([(100, 0), (101, 1)], "id long, p int")
+
+    def copy_base(name):
+        tf = TimeFly(spark, str(tmp_path / name))
+        tf.new()
+        rows.where("p = 0").coalesce(1).write.partitionBy("p").parquet(
+            tf.current_path)
+        rows.where("p = 1").repartition(4).write.mode("append") \
+            .partitionBy("p").parquet(tf.current_path)
+        snap = tf.snapshot_path(tf.add_snapshot())
+        run = {"compact": lambda: compact(spark, tf.base_path),
+               "overwrite": lambda: Writer(spark, tf.base_path).write(
+                   batch, mode="overwrite")}[op]
+        return tf, snap, run
+
+    tf, _, run = copy_base("clean")
+    steps = arm(0, ("rename",))
+    run()
+    n_renames = steps["n"]
+    arm(None)
+    after = _state(spark, tf.current_path)
+    assert n_renames >= 2
+    for k in range(1, n_renames + 1):
+        tf, snap, run = copy_base(f"k{k}")
+        frozen = _files(snap)
+
+        def check():
+            assert _files(snap) == frozen
+            assert sorted(e for e in os.listdir(tf.base_path)
+                          if not e.startswith(("_", "."))) \
+                == ["current", "snapshot"]
+
+        _crash_recover_retry(spark, arm, tf.current_path, run,
+                             _state(spark, tf.current_path), after,
+                             rename_k=k, check=check)
+
+
 def test_recluster_crash_mid_swap_converges(spark, tmp_path, arm):
     path = str(tmp_path / "ds")
     spark.range(60).withColumn("a", F.col("id") % 7).repartition(6) \

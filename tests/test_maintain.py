@@ -401,6 +401,25 @@ def test_compact_off_depth_layout_compacts_whole(spark, tmp_path, stray):
         assert (path / stray).read_bytes() == stray_bytes
 
 
+def test_generation_compact_carries_root_file_forward(spark, tmp_path):
+    # the partitioned read leaves a root file out; every generation
+    # compaction carries it into the new generation, so it outlives the
+    # retention of the generation it was listed in
+    import json
+
+    path = tmp_path / "ragged_gen"
+    for i, rel in enumerate(["p=1/x.parquet", "p=1/y.parquet",
+                             "p=2/z.parquet", "r.parquet"]):
+        (path / rel).parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"id": list(range(i * 10, i * 10 + 5))}),
+                       path / rel)
+    stray = (path / "r.parquet").read_bytes()
+    for _ in range(3):
+        compact(spark, str(path), swap="generation")
+    active = json.loads((path / "_generation.json").read_text())["active"]
+    assert (path / active / "r.parquet").read_bytes() == stray
+
+
 def test_compact_partial_replaces_renamed_partition_dir(spark, tmp_path):
     # a hive directory escaped by another writer (pyarrow writes a space
     # as %20) reads as 'a b' and comes back as Spark's own p=a b: the

@@ -142,17 +142,25 @@ def test_feather_delta_append(spark, tmp_path):
     assert sorted(r["id"] for r in back.collect()) == [1, 2, 3]
 
 
-def test_repartition_timefly_guard_and_snapshot(spark, tmp_path):
-    import pytest
+def _visible(path):
+    return sorted(e for e in os.listdir(path) if not e.startswith(("_", ".")))
 
+
+def test_repartition_timefly_guard_and_snapshot(spark, tmp_path):
     base = str(tmp_path / "tf_rp")
     _write(spark, base, [1, 2, 3])
     tf = TimeFly(spark, base)
     tf.new()
     tf.create_current()
-    # pointing at the TimeFly ROOT is refused (would strand snapshots)
-    with pytest.raises(ValueError, match="current/ subdirectory"):
-        Repartition(spark, base).run()
+    # pointing at the TimeFly ROOT rewrites current/ and snapshots first
+    snap0 = tf.add_snapshot(TS(2024, 1, 1, 12, 0, 0))
+    Repartition(spark, base).run()
+    assert sorted(r["id"] for r in tf.read().collect()) == [1, 2, 3]
+    assert len(tf.snapshots()) == 2
+    for stamp in tf.snapshots():
+        assert sorted(r["id"] for r in tf.read(stamp).collect()) == [1, 2, 3]
+    assert _visible(base) == ["current", "snapshot"]
+    assert snap0 in tf.snapshots()
     # pointing at current/ takes the advertised pre-snapshot at the PARENT
     before = len(tf.snapshots())
     Repartition(spark, tf.current_path, max_records_per_file=2).run()
@@ -959,3 +967,93 @@ def test_datalake_load_skips_sidecar_only_dataset(spark, tmp_path):
     lake2 = Datalake(spark, root)
     assert set(lake2.load()) == {"good", "sigs"}
     assert lake2.sql("SELECT count(*) AS n FROM good").first()["n"] == 3
+
+
+def _tree_bytes(root):
+    """{relative path: bytes} of every file under ``root``."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+#: every entry point given a TimeFly base; recluster is for
+#: unpartitioned datasets only
+BASE_OPS = [(op, partitioned)
+            for op in ("load", "append", "overwrite", "upsert", "compact",
+                       "recluster", "unify_schema", "repartition",
+                       "normalize_filenames")
+            for partitioned in (False, True)
+            if not (op == "recluster" and partitioned)]
+
+
+@pytest.mark.parametrize("op,partitioned", BASE_OPS)
+def test_timefly_base_opens_at_current(spark, tmp_path, op, partitioned):
+    # a TimeFly base passed to any reader, writer or rewrite opens at
+    # current/: the live rows change as the op says, the snapshot reads
+    # back exactly, and no data file lands next to current/
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pydala_spark.dataset.maintain import (
+        compact,
+        normalize_filenames,
+        recluster,
+    )
+
+    base, schema = str(tmp_path / "tf_base"), "id long, p long, v string"
+    part = ["p"] if partitioned else None
+    rows = [(i, i % 2, "old") for i in range(8)]
+    for lo in (0, 4):  # two small files per partition, written at the root
+        Writer(spark, base, partition_by=part).write(
+            spark.createDataFrame(rows[lo:lo + 4], schema))
+    tf = TimeFly(spark, base)
+    tf.new()
+    tf.create_current()
+    if op == "unify_schema":  # an int32 id next to the int64 ones
+        cols = {"id": pa.array([8], pa.int32()), "v": ["old"]}
+        if not partitioned:
+            cols["p"] = pa.array([0], pa.int64())
+        pq.write_table(pa.table(cols), os.path.join(
+            tf.current_path, "p=0" if partitioned else "", "drift.parquet"))
+        rows.append((8, 0, "old"))
+    snap = tf.add_snapshot(TS(2024, 1, 1, 12, 0, 0))
+    frozen = _tree_bytes(tf.snapshot_path(snap))
+    batch = [(1, 1, "new"), (9, 1, "new")]
+    expect = {
+        "append": rows + batch,
+        "overwrite": batch,
+        "upsert": [r for r in rows if r[0] != 1] + batch,
+    }.get(op, rows)
+
+    def tuples(df):
+        return sorted(map(tuple, df.select("id", "p", "v").collect()))
+
+    new = spark.createDataFrame(batch, schema)
+    if op == "load":
+        assert tuples(Dataset(spark, base).load()) == sorted(expect)
+    elif op in ("append", "overwrite"):
+        Writer(spark, base, partition_by=part).write(new, mode=op)
+    elif op == "upsert":
+        Writer(spark, base).write(new, mode="upsert", delta_subset=["id"])
+    elif op == "compact":
+        assert compact(spark, base)["files_after"] == (2 if partitioned else 1)
+    elif op == "recluster":
+        recluster(spark, base, ["id"], n_files=1)
+    elif op == "unify_schema":
+        assert Writer(spark, base).unify_schema()
+    elif op == "repartition":
+        Repartition(spark, base, partition_by=part, sort_by="id DESC").run()
+    else:
+        assert normalize_filenames(spark, base)["n_renamed"] > 0
+        assert {f.name.split("-")[0] for f in
+                Path(tf.current_path).rglob("*.parquet")} == {"data"}
+    assert tuples(tf.read()) == sorted(expect)
+    assert tuples(tf.read(snap)) == sorted(rows)
+    assert _tree_bytes(tf.snapshot_path(snap)) == frozen
+    assert _visible(base) == ["current", "snapshot"]
